@@ -25,10 +25,13 @@ object SparkEntry {
       KafkaShape.decodeUtf8(
         KafkaShape.fromEvents(Tables.events(spark, "/root/testdata/sf0.001"))))
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Queries.all
+  /** One entry per implemented operator from SURVEY.md §2, built once
+    * from the registry rows ([[Queries.rows]]). */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Queries.rows.map { case (n, q) => n -> q.query }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = Queries.oracles
+    * the same parquet tables, resolved on each call (see [[QuerySpec]]). */
+  def oracleSql: Map[String, String] =
+    Queries.rows.map { case (n, q) => n -> q.oracle }
 }

@@ -21,8 +21,9 @@ object Verify {
     // table would otherwise dump sidecar paths under the default tag
     graft.queries.LlmQueries.tagDataset(sfDir)
     // SPARK_GRAFT_VERIFY_ONLY=a,b re-dumps named queries only (plus the
-    // full oracle_sql.json) for targeted in-session re-checks via
-    // tools/oracle_check_only.py; the driver never sets it
+    // full oracle_sql.json) for targeted re-checks with
+    // tools/oracle_check.py's name filter; a full correctness run
+    // leaves it unset
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     SparkEntry.queries

@@ -29,7 +29,7 @@ object Tables {
     * Predicate pushdown SURVIVES the cast: Catalyst unwraps the
     * NTZ→Timestamp cast in binary comparisons under the UTC session,
     * so a ts-range filter lands in the parquet scan's PushedFilters
-    * as bounds on the NTZ column (verified via `PerfProbe pushdown`:
+    * as bounds on the NTZ column (verified in the scan plan:
     * `PushedFilters: [IsNotNull(ts), GreaterThanOrEqual(ts,...),
     * LessThan(ts,...)]`) — time-bounded event queries still prune row
     * groups/partitions at scale.

@@ -50,9 +50,9 @@ object Dedup {
     * small r also concentrates rows into few buckets per band — the
     * shape the hot-bucket cap then truncates (recall loss) — so FP
     * factor, not signature width, is the right objective.
-    * The sweep measured in PerfProbe (s=0.4 ⇒ p≈0.631, sf0.1 idle,
-    * min of 3: (4,96)→3.18 s, (5,160)→2.12, (6,256)→1.83, (7,400)→
-    * 1.69) confirms the objective empirically — runtime tracks the FP
+    * The r10 sweep (PERF_NOTES.md, r10 findings §2; s=0.4 ⇒ p≈0.631,
+    * sf0.1 idle, min of 3: (4,96)→3.18 s, (5,160)→2.12, (6,256)→1.83,
+    * (7,400)→1.69) confirms the objective empirically — runtime tracks the FP
     * factor b·pLow^r (6.0, 5.0, 4.0, 3.1), while the signature cost
     * of even r·b=1536 hashes stays under 0.5 s — which is why the
     * default width budget is 2048, not the 512 an earlier round
@@ -398,17 +398,12 @@ object Dedup {
       // rides the CHECKPOINT job via observe(), so each round stays
       // ONE pass over step — no separate convergence action (local
       // stage latency, 2 actions/round, was the CC family's measured
-      // fixture-scale tail). Toggleable for same-JVM A/B (PerfProbe
-      // ccexit).
-      val earlyExit = !sys.props.get("graft.componentMin.earlyExit")
-        .contains("false")
-      val obs = if (earlyExit)
-        Some(new org.apache.spark.sql.Observation(s"ccsum_r$round"))
-      else None
-      val observed = obs.fold(stepPlan)(o => stepPlan.observe(o,
+      // fixture-scale tail; same-JVM A/B in OPTIMIZATION_r15.md §5).
+      val obs = new org.apache.spark.sql.Observation(s"ccsum_r$round")
+      val observed = stepPlan.observe(obs,
         sum(col("comp")
           .cast(org.apache.spark.sql.types.DecimalType(38, 0)))
-          .as("s")))
+          .as("s"))
       // truncate lineage each round: without this the plan nests the
       // previous round's join tree (≈90 join nodes at iters=4) and
       // analysis/stage-DAG cost grows superlinearly in `iters` — at
@@ -419,11 +414,9 @@ object Dedup {
       // the durable equivalent; localCheckpoint is the right local
       // form.)
       val step = observed.localCheckpoint()
-      obs.foreach { o =>
-        val s = o.get.apply("s").asInstanceOf[java.math.BigDecimal]
-        converged = prevSum != null && prevSum.compareTo(s) == 0
-        prevSum = s
-      }
+      val s = obs.get.apply("s").asInstanceOf[java.math.BigDecimal]
+      converged = prevSum != null && prevSum.compareTo(s) == 0
+      prevSum = s
       labels = step
     }}
     // labels is materialized by the eager checkpoint above, so the
@@ -494,10 +487,11 @@ object Dedup {
     // codegen loop per candidate row, so verifying duplicates is
     // cheaper than deduplicating them; survivors (tiny) dedupe at the
     // end. The dims side is small per bucket, and the verify joins
-    // broadcast under AQE. Measured (tools/PerfProbe embpairs, sf0.1
+    // broadcast under AQE. Measured in r10 (same-JVM A/B, sf0.1
     // regenerated data, min of 3, with the probe-side repartition
-    // below): this self-join shape 2.9-3.2 s vs 12.4 s for the
-    // bandPairs group-unfold+distinct (embeddingPairsGrouped) —
+    // below; the "r10 embeddingPairsGrouped lesson" of
+    // OPTIMIZATION_r15.md §6): this self-join shape 2.9-3.2 s vs
+    // 12.4 s for the bandPairs group-unfold+distinct twin —
     // collect_list over the fat band explode dominates there, while
     // jaccard-style ops (narrower bands, higher thresholds) favor
     // grouping. Band-parameter sweep within the <1e-7 miss budget at
@@ -765,34 +759,6 @@ object Dedup {
         coalesce(col("n_matches"), lit(0L)).as("n_matches"),
         col("best_match_id"), col("best_jaccard"),
         (coalesce(col("n_matches"), lit(0L)) === 0).as("keep"))
-  }
-
-  /** embeddingPairs through the bandPairs group-unfold shape (one
-    * shuffle + pre-verify distinct) instead of the band self-join —
-    * kept for A/B timing (tools/PerfProbe); results identical.
-    */
-  def embeddingPairsGrouped(emb: DataFrame, idCol: String, vecCol: String,
-                            threshold: Double = 0.4,
-                            bands: Int = 96, rowsPerBand: Int = 4)
-      : DataFrame = {
-    val q = emb.select(col(idCol), quantize(col(vecCol)).as("q"))
-      .withColumn("nn", qdot(col("q"), col("q")))
-    val banded = q
-      .select(col(idCol), posexplode(
-        GraftFunctions.hyperplaneBands(col("q"), bands, rowsPerBand)))
-      .withColumnRenamed("pos", "band_idx")
-      .withColumnRenamed("col", "band_hash")
-    val cands = bandPairs(banded, idCol)
-    val sa = q.select(col(idCol).as("id_a"), col("q").as("q_a"),
-      col("nn").as("nn_a"))
-    val sb = q.select(col(idCol).as("id_b"), col("q").as("q_b"),
-      col("nn").as("nn_b"))
-    cands.join(sa, "id_a").join(sb, "id_b")
-      .withColumn("cosine", qdot(col("q_a"), col("q_b")).cast(DoubleType) /
-        sqrt(col("nn_a").cast(DoubleType) * col("nn_b").cast(DoubleType)))
-      .filter(col("cosine") >= threshold)
-      .select(col("id_a").as("vec_a"), col("id_b").as("vec_b"),
-        col("cosine"))
   }
 
   /** N2 — CONTAINMENT near-dup pairs: |A∩B| / min(|A|,|B|) ≥ t over

@@ -487,7 +487,7 @@ object Similarity {
     * fixture anchor, both scaled by nCells/32 — the same rule the
     * ivfpq_recall gate applies to its own (stricter, base-14) probe.
     * Measured at sf1 (20k vectors, 101 cells → np 26, rf 64): recall
-    * 0.924 vs in-plan exact top-5 (PqRecallProbe; the fixture
+    * 0.924 vs in-plan exact top-5 (PERF_NOTES.md r12 §13b; the fixture
     * constants this replaces measured 0.828 there — the r13 sf1-gate
     * bug class, now closed for every caller).
     */

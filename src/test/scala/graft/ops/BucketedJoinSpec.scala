@@ -61,7 +61,7 @@ class BucketedJoinSpec extends SparkSuite {
     withSQLConf(
         "spark.sql.autoBroadcastJoinThreshold" -> "-1",
         "spark.sql.adaptive.enabled" -> "false") {
-      val df = graft.queries.Queries.all("bucketed_join")(s, d)
+      val df = graft.SparkEntry.queries("bucketed_join")(s, d)
       // one exchange for the groupBy(o_orderpriority); the join itself
       // is exchange-free on the bucketed layout
       assert(exchanges(df) == 1,

@@ -188,7 +188,7 @@ class DedupComponentsSpec extends SparkSuite {
   }
 
   test("lshPlan: lowest candidate cost that meets the miss budget") {
-    // the PerfProbe sweep point: s=0.4 angular => p = 1 - acos(0.4)/pi
+    // the r10 sweep point (PERF_NOTES.md): s=0.4 => p = 1 - acos(0.4)/pi
     val p = 1.0 - math.acos(0.4) / math.Pi
     assert(math.abs(p - 0.631) < 1e-3)
     // the documented sweep magnitudes reproduce through the formula

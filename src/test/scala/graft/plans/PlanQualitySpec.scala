@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.SparkSuite
-import graft.queries.Queries
+import graft.SparkEntry
 
 /** Plan-quality gate, enforced by `sbt test` rather than the manual
   * PlanAudit tool: no registered query may plan a nested-loop or
@@ -14,7 +14,7 @@ class PlanQualitySpec extends SparkSuite {
 
   test("no registered query plans a nested-loop or cartesian join") {
     val d = "/root/testdata/sf0.001"
-    val offenders = Queries.all.toSeq.sortBy(_._1).flatMap {
+    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
         val plan = fn(spark, d).queryExecution.executedPlan.toString()
         val bnlj = plan.linesIterator
@@ -168,7 +168,7 @@ class PlanQualitySpec extends SparkSuite {
   test("registry: every degenerate-key join carries a structural bound " +
       "and no broadcast hint covers a raw fact-table scan") {
     val d = "/root/testdata/sf0.001"
-    val offenders = Queries.all.toSeq.sortBy(_._1).flatMap {
+    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
         val df = fn(spark, d)
         PlanChecks.unboundedDegenerateJoins(df)
@@ -184,7 +184,7 @@ class PlanQualitySpec extends SparkSuite {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
     val d = "/root/testdata/sf0.001"
-    val hits = Queries.all.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+    val hits = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       val plan: SparkPlan = fn(spark, d).queryExecution.sparkPlan
       val unpart = plan.collect {
         case w: WindowExec if w.partitionSpec.isEmpty => w.nodeName

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.SparkSuite
+import graft.{SparkEntry, SparkSuite}
 
 /** The order-independence claim behind the oracle strategy: every
   * oracle-visible double derives from exact integer arithmetic, so
@@ -35,7 +35,7 @@ class DeterminismSpec extends SparkSuite {
     def runAll(parts: Int): Map[String, Seq[String]] = {
       spark.conf.set("spark.sql.shuffle.partitions", parts)
       try names.map { n =>
-        n -> Queries.all(n)(spark, d).collect()
+        n -> SparkEntry.queries(n)(spark, d).collect()
           .map(_.toSeq.map {
             case dbl: Double => java.lang.Double.doubleToLongBits(dbl).toString
             case x => String.valueOf(x)

@@ -1,22 +1,26 @@
 package graft.queries
 
-import graft.SparkSuite
+import graft.{SparkEntry, SparkSuite}
 
-/** Driver-contract sanity: every oracle references a registered query,
-  * and every registered query builds an analyzable plan against the
-  * smallest fixture (schema resolution errors surface here instead of
-  * inside the driver's verify run).
+/** Driver-contract sanity: row names are unique, and every registered
+  * query builds an analyzable plan against the smallest fixture (schema
+  * resolution errors surface here instead of inside the driver's verify
+  * run). Every row carries its oracle by construction ([[QuerySpec]]).
   */
 class RegistrySpec extends SparkSuite {
 
-  test("every oracle key has a query") {
-    val orphans = Queries.oracles.keySet -- Queries.all.keySet
-    assert(orphans.isEmpty, s"oracles without queries: $orphans")
+  test("a repeated row name is rejected, not silently dropped") {
+    val row = QuerySpec("dup_row", (s, _) => s.emptyDataFrame, "SELECT 1")
+    val e = intercept[IllegalArgumentException](
+      Queries.byName(Seq(row, QuerySpec("other_row", row.query, "SELECT 2"),
+        row)))
+    assert(e.getMessage.contains("dup_row") &&
+      !e.getMessage.contains("other_row"), e.getMessage)
   }
 
   test("every query analyzes against sf0.001") {
     val d = "/root/testdata/sf0.001"
-    val failures = Queries.all.toSeq.sortBy(_._1).flatMap {
+    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
         try {
           val df = fn(spark, d)
@@ -35,7 +39,7 @@ class RegistrySpec extends SparkSuite {
     // Bench executes.
     val d = "/root/testdata/sf0.001"
     for (name <- Seq("url_canon", "approx_distinct")) {
-      val opt = Queries.all(name)(spark, d).groupBy().count()
+      val opt = SparkEntry.queries(name)(spark, d).groupBy().count()
         .queryExecution.optimizedPlan.toString
       assert(opt.contains("graft_eval_barrier") && opt.contains("xxhash64"),
         s"$name: the evaluation barrier folded out of the optimized " +
@@ -53,7 +57,7 @@ class RegistrySpec extends SparkSuite {
     // Pin: the Filter line carrying the barrier must reference only
     // attributes, never an inlined kernel call.
     val d = "/root/testdata/sf0.001"
-    val opt = Queries.all("gopher_repetition")(spark, d).groupBy().count()
+    val opt = SparkEntry.queries("gopher_repetition")(spark, d).groupBy().count()
       .queryExecution.optimizedPlan.toString
     val filterLines = opt.linesIterator
       .filter(_.contains("graft_eval_barrier")).toSeq
@@ -63,12 +67,5 @@ class RegistrySpec extends SparkSuite {
       "gopher_repetition: the barrier predicate inlines the " +
         "gopher_coverage kernel — it was pushed below the projection " +
         "and the bench over-measures the kernel once per column")
-  }
-
-  test("every query has an oracle (no rows-only checks left)") {
-    val noOracle = Queries.all.keySet -- Queries.oracles.keySet
-    assert(noOracle.isEmpty,
-      s"every query needs an oracle (ivf_topk's cell-materialization " +
-        s"pattern covers driver-trained operators): $noOracle")
   }
 }
