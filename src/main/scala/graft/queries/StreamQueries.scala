@@ -200,7 +200,7 @@ object StreamQueries {
     // commits — the reproducible-training-run read (re-run last
     // week's job against last week's store) must see EXACTLY the
     // first generation, post-rewrite, through the snapshot log and
-    // the kept .stale retirees
+    // the kept retired containers
     QuerySpec("ocf_time_travel", (s, d) => {
       val dir = graft.tools.TempDirs.create("graft_ocf_timetravel")
       val k = kafka(s, d)

@@ -56,22 +56,6 @@ object AnnIndexStore {
     ids.select(col(idCol).cast(LongType).as("vec_id")).distinct()
       .write.mode("overwrite").parquet(s"${tombsDir(dir)}/seq=$seq")
 
-  /** (frame, generation count) — the count lets [[read]] skip
-    * latest-wins resolution on a compacted store.
-    */
-  private def readSeqDirs(spark: SparkSession, base: String)
-      : (DataFrame, Int) = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(base), spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(base)
-    if (!fs.exists(p)) return (spark.emptyDataFrame, 0)
-    val seqs = fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("seq="))
-      .map(_.getPath.toString)
-    if (seqs.isEmpty) (spark.emptyDataFrame, 0)
-    else (spark.read.option("basePath", base).parquet(seqs: _*), seqs.size)
-  }
-
   /** The live index: latest-wins resolution of the posting changelog
     * against the tombstones. Row-equivalent to
     * `Similarity.ivfIndex(currentCorpus)` under the same centroids
@@ -81,28 +65,12 @@ object AnnIndexStore {
     * the steady-state serving read.
     */
   def read(spark: SparkSession, dir: String): DataFrame = {
-    val (posts, nPostSeqs) = readSeqDirs(spark, postingsDir(dir))
+    val (posts, nPostSeqs) = SeqDirs.read(spark, postingsDir(dir))
     if (nPostSeqs == 0 || posts.isEmpty) return spark.emptyDataFrame
-    val (tombs, nTombSeqs) = readSeqDirs(spark, tombsDir(dir))
-    if (nPostSeqs == 1 && nTombSeqs == 0)
-      return posts.select(col("vec_id"),
-        col("cell").cast("int").as("cell"), col("q"), col("nn"))
-    val latest = posts.groupBy(col("vec_id").as("l_id"))
-      .agg(max(col("seq")).as("l_seq"))
-    val live = posts
-      .join(broadcast(latest),
-        col("vec_id") === col("l_id") && col("seq") === col("l_seq"))
+    val (tombs, nTombSeqs) = SeqDirs.read(spark, tombsDir(dir))
     val resolved =
-      if (nTombSeqs == 0 || tombs.isEmpty) live
-      else {
-        val dmax = tombs.groupBy(col("vec_id").as("d_id"))
-          .agg(max(col("seq")).as("d_seq"))
-        live.join(broadcast(dmax), col("vec_id") === col("d_id"),
-            "left_outer")
-          // a tombstone kills every append at or below it; a later
-          // re-add (strictly higher seq) survives
-          .filter(col("d_seq").isNull || col("l_seq") > col("d_seq"))
-      }
+      if (nPostSeqs == 1 && nTombSeqs == 0) posts
+      else SeqDirs.latestWins(posts, tombs, "vec_id")
     resolved.select(col("vec_id"), col("cell").cast("int").as("cell"),
       col("q"), col("nn"))
   }
@@ -121,11 +89,7 @@ object AnnIndexStore {
       new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
     staged.write.mode("overwrite").partitionBy("cell")
       .parquet(s"${postingsDir(dir)}/seq=$compactSeq")
-    val pdir = new org.apache.hadoop.fs.Path(postingsDir(dir))
-    fs.listStatus(pdir).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("seq=") &&
-        s.getPath.getName != s"seq=$compactSeq")
-      .foreach(s => fs.delete(s.getPath, true))
+    SeqDirs.dropAllBut(fs, postingsDir(dir), compactSeq)
     val tdir = new org.apache.hadoop.fs.Path(tombsDir(dir))
     if (fs.exists(tdir)) fs.delete(tdir, true)
     staged.unpersist()

@@ -205,11 +205,10 @@ class GraftCatalog extends CatalogPlugin with ProcedureCatalog {
       override def call(in: InternalRow): java.util.Iterator[Scan] = {
         val dir = in.getString(0)
         val conf = OcfStore.driverConf()
-        val from = OcfStore.snapshotAt(dir, conf, in.getLong(1)).toSet
-        val added = OcfStore.snapshotAt(dir, conf, in.getLong(2))
-          .filterNot(from).sorted
+        val added = OcfStore.snapshotDiff(dir, conf, in.getLong(1),
+          in.getLong(2))
         val counts = OcfStore.filesAsOf(dir, conf, in.getLong(2))
-          .map { case (_, _, f) => f.name -> f.count }.toMap
+          .map { case (_, f) => f.name -> f.count }.toMap
         val schema = StructType(Seq(
           StructField("container", StringType),
           StructField("n_records", LongType)))

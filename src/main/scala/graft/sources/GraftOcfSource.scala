@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.avro.file.DataFileStream
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.util.SerializableConfiguration
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -38,7 +38,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * Scale notes: one input partition per (file, offset-range) — the
   * same parallelism contract as a Kafka topic-partition; readers
   * stream the container (no whole-file buffering). Record counts for
-  * `latestOffset` come from the commit-time `_manifest-*.ndjson`
+  * `latestOffset` come from the commit-time stats manifests
   * (exactly as brokers serve head offsets — zero container bytes
   * touched); unmanifested files fall back to BLOCK-header counting
   * (no record decode) memoized per (path, length, mtime), so
@@ -97,49 +97,69 @@ class OcfTable(options: CaseInsensitiveStringMap)
       TableCapability.BATCH_WRITE, TableCapability.STREAMING_WRITE,
       TableCapability.TRUNCATE).asJava
 
-  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder = {
+  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
+    new OcfScanBuilder(OcfReadOptions.parse(dirs, opts))
+
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
+    require(dirs.size == 1 && !OcfStore.isGlob(dirs.head),
+      s"graft-ocf writes target exactly one literal store, got $dirs")
+    new OcfWriteBuilder(dirs.head, info)
+  }
+}
+
+/** The connector's read options, parsed and validated once per scan
+  * (`OcfTable.newScanBuilder`) and carried unchanged by the scan
+  * builder, the batch scan and the micro-batch stream.
+  */
+case class OcfReadOptions(dirs: Seq[String],
+                          conf: SerializableConfiguration,
+                          maxRecordsPerTrigger: Option[Long] = None,
+                          maxBytesPerTrigger: Option[Long] = None,
+                          startLatest: Boolean = false,
+                          minPartitions: Option[Int] = None,
+                          startTsUs: Option[Long] = None,
+                          endTsUs: Option[Long] = None,
+                          asOfMillis: Option[Long] = None,
+                          containersIn: Option[Set[String]] = None)
+
+object OcfReadOptions {
+  def parse(dirs: Seq[String],
+            opts: CaseInsensitiveStringMap): OcfReadOptions = {
+    def long(k: String): Option[Long] = Option(opts.get(k)).map(_.toLong)
     val starting = Option(opts.get("startingOffsets"))
       .map(_.toLowerCase(java.util.Locale.ROOT))
       .getOrElse("earliest")
     require(starting == "earliest" || starting == "latest",
       s"graft-ocf startingOffsets must be earliest|latest, got $starting")
-    val startTs = Option(opts.get("startingTimestamp")).map(_.toLong)
+    val startTs = long("startingTimestamp")
     require(startTs.isEmpty || starting == "earliest",
       "graft-ocf: startingTimestamp and startingOffsets=latest are " +
         "mutually exclusive")
-    val endTs = Option(opts.get("endingTimestamp")).map(_.toLong)
+    val endTs = long("endingTimestamp")
     require(endTs.isEmpty || startTs.forall(_ <= endTs.get),
       "graft-ocf: startingTimestamp must be <= endingTimestamp")
     // TIME TRAVEL: `timestampAsOf` (epoch millis) pins the scan to the
     // latest committed snapshot at-or-before the timestamp — the
     // reproducible-training-run read (batch only; a stream follows
     // the head by definition)
-    val asOf = Option(opts.get("timestampAsOf")).map(_.toLong)
+    val asOf = long("timestampAsOf")
     require(asOf.isEmpty || (startTs.isEmpty && endTs.isEmpty),
       "graft-ocf: timestampAsOf (a snapshot pin) and starting/" +
         "endingTimestamp (a record-time slice) do not compose yet — " +
         "slice with a pushed timestamp filter instead")
-    // CDF seam: `containersIn` (comma-separated container names)
-    // restricts the scan to the named containers at LISTING time —
-    // the change-data-feed read (OcfMaintenance.changes) opens only
-    // the snapshot-diff containers, everything else never opens
-    val containersIn = Option(opts.get("containersIn"))
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    new OcfScanBuilder(dirs,
-      Option(opts.get("maxRecordsPerTrigger")).map(_.toLong),
+    OcfReadOptions(dirs,
       new SerializableConfiguration(OcfStore.driverConf()),
+      maxRecordsPerTrigger = long("maxRecordsPerTrigger"),
+      maxBytesPerTrigger = long("maxBytesPerTrigger"),
       startLatest = starting == "latest",
       minPartitions = Option(opts.get("minPartitions")).map(_.toInt),
-      maxBytesPerTrigger =
-        Option(opts.get("maxBytesPerTrigger")).map(_.toLong),
       startTsUs = startTs, endTsUs = endTs, asOfMillis = asOf,
-      containersIn = containersIn)
-  }
-
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
-    require(dirs.size == 1 && !dirs.head.exists("*?[{".contains(_)),
-      s"graft-ocf writes target exactly one literal store, got $dirs")
-    new OcfWriteBuilder(dirs.head, info)
+      // CDF seam: `containersIn` (comma-separated container names)
+      // restricts the scan to the named containers at LISTING time —
+      // the change-data-feed read (OcfMaintenance.changes) opens only
+      // the snapshot-diff containers, everything else never opens
+      containersIn = Option(opts.get("containersIn"))
+        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet))
   }
 }
 
@@ -152,23 +172,11 @@ class OcfTable(options: CaseInsensitiveStringMap)
   * prunes files it can prove irrelevant, Spark still re-evaluates the
   * predicate per row — exactness never depends on the stats.
   */
-class OcfScanBuilder(dirs: Seq[String], maxPerTrigger: Option[Long],
-                     conf: SerializableConfiguration,
-                     startLatest: Boolean = false,
-                     minPartitions: Option[Int] = None,
-                     maxBytesPerTrigger: Option[Long] = None,
-                     startTsUs: Option[Long] = None,
-                     endTsUs: Option[Long] = None,
-                     asOfMillis: Option[Long] = None,
-                     containersIn: Option[Set[String]] = None)
+class OcfScanBuilder(o: OcfReadOptions)
     extends ScanBuilder
     with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns
     with org.apache.spark.sql.connector.read.SupportsPushDownFilters
     with org.apache.spark.sql.connector.read.SupportsPushDownLimit {
-  def this(dir: String, maxPerTrigger: Option[Long],
-           conf: SerializableConfiguration) =
-    this(Seq(dir), maxPerTrigger, conf)
-
   private var required: StructType = OcfFormat.sparkSchema
   private var pushed: Array[Filter] = Array.empty
   private var limit: Option[Int] = None
@@ -192,29 +200,18 @@ class OcfScanBuilder(dirs: Seq[String], maxPerTrigger: Option[Long],
     * I/O bound.
     */
   override def pushLimit(n: Int): Boolean =
-    if (startTsUs.isDefined || endTsUs.isDefined)
+    if (o.startTsUs.isDefined || o.endTsUs.isDefined)
       false // the I/O cap would count pre-seek rows and starve the limit
     else { limit = Some(n); true }
   override def isPartiallyPushed(): Boolean = true
 
-  override def build(): Scan =
-    new OcfScan(dirs, maxPerTrigger, conf, required, pushed, limit,
-      startLatest, minPartitions, maxBytesPerTrigger, startTsUs, endTsUs,
-      asOfMillis, containersIn)
+  override def build(): Scan = new OcfScan(o, required, pushed, limit)
 }
 
-class OcfScan(dirs: Seq[String], maxPerTrigger: Option[Long],
-              conf: SerializableConfiguration,
+class OcfScan(o: OcfReadOptions,
               required: StructType = OcfFormat.sparkSchema,
               filters: Array[Filter] = Array.empty,
-              limit: Option[Int] = None,
-              startLatest: Boolean = false,
-              minPartitions: Option[Int] = None,
-              maxBytesPerTrigger: Option[Long] = None,
-              startTsUs: Option[Long] = None,
-              endTsUs: Option[Long] = None,
-              asOfMillis: Option[Long] = None,
-              containersIn: Option[Set[String]] = None)
+              limit: Option[Int] = None)
     extends Scan
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning
     with org.apache.spark.sql.connector.read.SupportsReportStatistics
@@ -224,7 +221,7 @@ class OcfScan(dirs: Seq[String], maxPerTrigger: Option[Long],
       : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
     OcfScanMetrics.supported
   override def description(): String =
-    s"graft-ocf scan of ${dirs.mkString(",")}, " +
+    s"graft-ocf scan of ${o.dirs.mkString(",")}, " +
       s"columns=[${required.fieldNames.mkString(",")}]" +
       (if (filters.nonEmpty) s", pushed=[${filters.mkString(",")}]" else "") +
       limit.map(n => s", limit=$n").getOrElse("")
@@ -237,22 +234,11 @@ class OcfScan(dirs: Seq[String], maxPerTrigger: Option[Long],
     * because Spark only pushes a limit with no filter in between).
     */
   private lazy val plannedFiles: Seq[(String, String, OcfLiveFile)] = {
-    val listed0 = asOfMillis match {
-      case Some(t) => OcfStore.keyedFilesAsOf(dirs, conf.value, t)
-      case None => OcfStore.keyedLiveFiles(dirs, conf.value)
-    }
     // CDF restriction: only the named containers survive the listing
-    val listed = containersIn match {
-      case Some(names) => listed0.filter { case (_, _, f) =>
-        names.contains(f.name)
-      }
-      case None => listed0
-    }
-    val kept = listed
+    val kept = OcfStore.keyedFiles(o.dirs, o.conf.value, o.asOfMillis)
       .filter { case (_, _, f) =>
-        // keep a file unless its stats PROVE no row can match; a
-        // file absent from the manifest is kept conservatively
-        f.stats.forall(st => OcfFilters.mayMatch(st, filters))
+        o.containersIn.forall(_.contains(f.name)) &&
+          OcfFilters.mayMatch(f, filters)
       }
     limit match {
       case Some(n) =>
@@ -347,17 +333,11 @@ class OcfScan(dirs: Seq[String], maxPerTrigger: Option[Long],
     runtimeFilters = fs.filter(OcfFilters.supported)
 
   override def toBatch: Batch = new Batch {
-    if (startLatest) throw new IllegalArgumentException(
+    if (o.startLatest) throw new IllegalArgumentException(
       "graft-ocf: startingOffsets=latest is not valid for batch reads " +
         "(a batch over 'from the head' is empty by definition) — the " +
         "Kafka connector rejects it the same way")
-    /** Kafka's `minPartitions` knob: a store compacted into few large
-      * containers would otherwise cap scan parallelism at the file
-      * count (one mega-container = ONE task — the inverse of the
-      * small-files problem). When the planned partition count falls
-      * short, file ranges split into ~total/minPartitions row chunks;
-      * the reader block-skips to mid-file starts, so a split costs
-      * header walking, not decode. Keyed scans are exempt: their
+    /** Keyed scans are exempt from the `minPartitions` split: their
       * partition layout IS the KeyGroupedPartitioning contract.
       */
     override def planInputPartitions(): Array[InputPartition] = {
@@ -375,18 +355,17 @@ class OcfScan(dirs: Seq[String], maxPerTrigger: Option[Long],
       // seeking, so a container committed in between can't slip in
       // half-resolved, and a boundary container is driver-scanned
       // ONCE for start and stop together
-      val needTs = startTsUs.toSeq ++ endTsUs.toSeq
+      val needTs = o.startTsUs.toSeq ++ o.endTsUs.toSeq
       val cursors: Map[Long, Map[String, Long]] =
         if (needTs.isEmpty) Map.empty
-        else OcfStore.cursorsAtTimestamps(plannedFiles, needTs, conf.value)
+        else OcfStore.cursorsAtTimestamps(plannedFiles, needTs,
+          o.conf.value)
       val seek: Map[String, Long] =
-        startTsUs.map(cursors).getOrElse(Map.empty)
+        o.startTsUs.map(cursors).getOrElse(Map.empty)
       val stop: Map[String, Long] =
-        endTsUs.map(cursors).getOrElse(Map.empty)
+        o.endTsUs.map(cursors).getOrElse(Map.empty)
       val kept = plannedFiles
-        .filter { case (_, _, f) => runtimeFilters.isEmpty ||
-          f.stats.forall(st => OcfFilters.mayMatch(st, runtimeFilters))
-        }
+        .filter { case (_, _, f) => OcfFilters.mayMatch(f, runtimeFilters) }
         .map { case (k, path, f) =>
           val end = math.min(stop.getOrElse(k, f.count), f.count)
           (k, path, f.copy(count = end),
@@ -398,38 +377,24 @@ class OcfScan(dirs: Seq[String], maxPerTrigger: Option[Long],
           OcfKeyedRange(path, start, f.count, soleKey(f).get)
             : InputPartition
         }.toArray
-      else {
-        val target = minPartitions.getOrElse(0)
-        val total = kept.map { case (_, _, f, st) => f.count - st }.sum
-        if (target <= kept.size || total <= kept.size)
-          kept.map { case (_, path, f, start) =>
-            OcfRange(path, start, f.count): InputPartition
-          }.toArray
-        else {
-          val chunk = math.max(1L, (total + target - 1) / target)
-          kept.flatMap { case (_, path, f, start) =>
-            (start until f.count by chunk).map(st =>
-              OcfRange(path, st, math.min(st + chunk, f.count))
-                : InputPartition)
-          }.toArray
-        }
-      }
+      else OcfRange.split(
+        kept.map { case (_, path, f, start) => (path, start, f.count) },
+        o.minPartitions)
     }
     override def createReaderFactory(): PartitionReaderFactory =
-      OcfReaderFactory(conf, required)
+      OcfReaderFactory(o.conf, required)
   }
 
   override def toMicroBatchStream(checkpointLocation: String)
       : MicroBatchStream = {
-    if (asOfMillis.isDefined) throw new IllegalArgumentException(
+    if (o.asOfMillis.isDefined) throw new IllegalArgumentException(
       "graft-ocf: timestampAsOf is a batch-read option — a stream " +
         "follows the live head by definition (use startingTimestamp " +
         "to begin a stream at a point in time)")
-    if (containersIn.isDefined) throw new IllegalArgumentException(
+    if (o.containersIn.isDefined) throw new IllegalArgumentException(
       "graft-ocf: containersIn is a batch-read (CDF) option — a " +
         "stream's incremental read IS its offset cursor")
-    new OcfMicroBatchStream(dirs, maxPerTrigger, conf, required, filters,
-      startLatest, maxBytesPerTrigger, minPartitions, startTsUs)
+    new OcfMicroBatchStream(o, required, filters)
   }
 }
 
@@ -474,25 +439,15 @@ object OcfOffset {
   }
 }
 
-class OcfMicroBatchStream(dirs: Seq[String], maxPerTrigger: Option[Long],
-                          conf: SerializableConfiguration,
+class OcfMicroBatchStream(o: OcfReadOptions,
                           required: StructType = OcfFormat.sparkSchema,
-                          filters: Array[Filter] = Array.empty,
-                          startLatest: Boolean = false,
-                          maxBytes: Option[Long] = None,
-                          minPartitions: Option[Int] = None,
-                          startTsUs: Option[Long] = None)
+                          filters: Array[Filter] = Array.empty)
     extends MicroBatchStream with SupportsAdmissionControl
     with org.apache.spark.sql.connector.read.streaming
       .ReportsSourceMetrics
     with org.apache.spark.sql.connector.read.streaming
       .SupportsTriggerAvailableNow
     with org.apache.spark.internal.Logging {
-  def this(dir: String, maxPerTrigger: Option[Long],
-           conf: SerializableConfiguration, required: StructType,
-           filters: Array[Filter]) =
-    this(Seq(dir), maxPerTrigger, conf, required, filters)
-
   /** Last store listing, refreshed by every keyedHeads call (i.e. by
     * each trigger's latestOffset). metrics() reuses it instead of
     * re-listing: progress reporting is per-trigger too, so against an
@@ -504,10 +459,12 @@ class OcfMicroBatchStream(dirs: Seq[String], maxPerTrigger: Option[Long],
       : Option[Seq[(String, String, OcfLiveFile)]] = None
 
   private def keyedHeads: Map[String, Long] = {
-    val live = OcfStore.keyedLiveFiles(dirs, conf.value)
+    val live = OcfStore.keyedFiles(o.dirs, o.conf.value)
     lastListing = Some(live)
-    live.map(t => t._1 -> t._3.count).toMap
+    heads(live)
   }
+  private def heads(listing: Seq[(String, String, OcfLiveFile)]) =
+    listing.map(t => t._1 -> t._3.count).toMap
 
   /** Consumer-lag observability in every StreamingQueryProgress (the
     * metrics surface Kafka's source exposes as records-behind; X6's
@@ -523,7 +480,7 @@ class OcfMicroBatchStream(dirs: Seq[String], maxPerTrigger: Option[Long],
   override def metrics(latestConsumed: java.util.Optional[Offset])
       : java.util.Map[String, String] = {
     val live = lastListing
-      .getOrElse(OcfStore.keyedLiveFiles(dirs, conf.value))
+      .getOrElse(OcfStore.keyedFiles(o.dirs, o.conf.value))
     val consumed =
       if (latestConsumed.isPresent) latestConsumed.get match {
         case o: OcfOffset => o.counts
@@ -559,15 +516,15 @@ class OcfMicroBatchStream(dirs: Seq[String], maxPerTrigger: Option[Long],
     * restart never re-snapshots and the boundary is stable.
     */
   override def initialOffset(): Offset =
-    if (startLatest) OcfOffset(keyedHeads)
-    else startTsUs match {
+    if (o.startLatest) OcfOffset(keyedHeads)
+    else o.startTsUs match {
       // Kafka's startingOffsetsByTimestamp: seed each cursor at the
       // first record at-or-after the timestamp (manifest-resolved for
       // most containers, a timestamp-only driver scan for boundary
       // ones). Checkpointed like every initialOffset — stable across
       // restart, never re-resolved.
       case Some(ts) =>
-        OcfOffset(OcfStore.cursorsAtTimestamp(dirs, ts, conf.value))
+        OcfOffset(OcfStore.cursorsAtTimestamp(o.dirs, ts, o.conf.value))
       case None => OcfOffset(Map.empty)
     }
   override def latestOffset(): Offset =
@@ -576,15 +533,14 @@ class OcfMicroBatchStream(dirs: Seq[String], maxPerTrigger: Option[Long],
   // discipline): the number it feeds — "latest known head" — is
   // per-trigger by definition, so a fresh LIST buys nothing
   override def reportLatestOffset(): Offset =
-    OcfOffset(availableNowHead.getOrElse(
-      lastListing.map(_.map(t => t._1 -> t._3.count).toMap)
-        .getOrElse(keyedHeads)))
+    OcfOffset(availableNowHead.orElse(lastListing.map(heads))
+      .getOrElse(keyedHeads))
   override def deserializeOffset(json: String): Offset =
     OcfOffset.fromJson(json)
 
   override def getDefaultReadLimit: ReadLimit = {
-    val ls = maxPerTrigger.map(n => ReadLimit.maxRows(n)).toSeq ++
-      maxBytes.map(n => ReadLimit.maxBytes(n)).toSeq
+    val ls = o.maxRecordsPerTrigger.map(n => ReadLimit.maxRows(n)).toSeq ++
+      o.maxBytesPerTrigger.map(n => ReadLimit.maxBytes(n)).toSeq
     ls match {
       case Seq() => ReadLimit.allAvailable()
       case Seq(one) => one
@@ -680,39 +636,26 @@ class OcfMicroBatchStream(dirs: Seq[String], maxPerTrigger: Option[Long],
   override def planInputPartitions(start: Offset, end: Offset)
       : Array[InputPartition] = {
     val s = start.asInstanceOf[OcfOffset].counts
-    val live = OcfStore.keyedLiveFiles(dirs, conf.value)
+    val live = OcfStore.keyedFiles(o.dirs, o.conf.value)
       .map(t => t._1 -> t).toMap
     val ranges = end.asInstanceOf[OcfOffset].counts.toSeq.sortBy(_._1)
       .flatMap { case (k, e) =>
         val from = OcfOffset.cursor(s, k)
         live.get(k) match {
           case Some((_, path, f)) =>
-            val mayMatch = filters.isEmpty ||
-              f.stats.forall(st => OcfFilters.mayMatch(st, filters))
-            if (e > from && mayMatch) Some((path, from, e))
+            if (e > from && OcfFilters.mayMatch(f, filters))
+              Some((path, from, e))
             else None
           case None => None // retired container: truncated-log replay
         }
       }
     // the batch scan's minPartitions discipline, per microbatch: a
     // trigger draining one mega-container must not run as one task
-    val target = minPartitions.getOrElse(0)
-    val total = ranges.map { case (_, f, e) => e - f }.sum
-    if (target <= ranges.size || total <= ranges.size)
-      ranges.map { case (path, f, e) =>
-        OcfRange(path, f, e): InputPartition
-      }.toArray
-    else {
-      val chunk = math.max(1L, (total + target - 1) / target)
-      ranges.flatMap { case (path, f, e) =>
-        (f until e by chunk).map(st =>
-          OcfRange(path, st, math.min(st + chunk, e)): InputPartition)
-      }.toArray
-    }
+    OcfRange.split(ranges, o.minPartitions)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    OcfReaderFactory(conf, required)
+    OcfReaderFactory(o.conf, required)
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
@@ -725,6 +668,33 @@ sealed trait OcfSlice extends InputPartition {
 }
 
 case class OcfRange(file: String, start: Long, end: Long) extends OcfSlice
+
+object OcfRange {
+  /** Kafka's `minPartitions` knob over (file, start, end) ranges: a
+    * store compacted into few large containers would otherwise cap
+    * scan parallelism at the file count (one mega-container = ONE task
+    * — the inverse of the small-files problem). When the range count
+    * falls short, ranges split into ~total/minPartitions row chunks;
+    * the reader block-skips to mid-file starts, so a split costs
+    * header walking, not decode.
+    */
+  def split(ranges: Seq[(String, Long, Long)],
+            minPartitions: Option[Int]): Array[InputPartition] = {
+    val target = minPartitions.getOrElse(0)
+    val total = ranges.map { case (_, st, e) => e - st }.sum
+    if (target <= ranges.size || total <= ranges.size)
+      ranges.map { case (path, st, e) =>
+        OcfRange(path, st, e): InputPartition
+      }.toArray
+    else {
+      val chunk = math.max(1L, (total + target - 1) / target)
+      ranges.flatMap { case (path, st, e) =>
+        (st until e by chunk).map(c =>
+          OcfRange(path, c, math.min(c + chunk, e)): InputPartition)
+      }.toArray
+    }
+  }
+}
 
 /** A slice whose container provably holds a single Kafka partition —
   * carries it as the storage partition key for shuffle-free grouping.
@@ -969,6 +939,12 @@ object OcfFilters {
     st.count == 0L || st.partitions.isEmpty ||
       filters.forall(f => mayMatchOne(st, f))
 
+  /** Keep a listed file unless its stats PROVE no row can match; a
+    * file absent from the manifest is kept conservatively.
+    */
+  def mayMatch(f: OcfLiveFile, filters: Array[Filter]): Boolean =
+    filters.isEmpty || f.stats.forall(mayMatch(_, filters))
+
   private def mayMatchOne(st: OcfFileStats, f: Filter): Boolean = f match {
     // key predicates: Bloom membership + null census. Stats without a
     // keyBloom (writer never opted in, or a pre-r10 manifest) keep the
@@ -1130,15 +1106,10 @@ case class OcfReaderFactory(conf: SerializableConfiguration,
   }
 }
 
-/** Driver-side store helpers: file listing and per-file record counts.
-  *
-  * Counts come from Avro container BLOCK headers (`getBlockCount` +
-  * `nextBlock` — no record deserialization) and are memoized per
-  * (path, length, mtime): committed containers are immutable (the V2
-  * writer renames a finished temp into place, never appends), so a
-  * cache hit is always valid and a rewritten file busts the key. The
-  * streaming engine calls latestOffset twice per trigger — with the
-  * cache the steady-state cost is one file listing.
+/** The store's owner: its on-disk layout (the only code that builds or
+  * classifies a file name), listing, per-file record counts, snapshots
+  * and timestamp seeks — everything driver-side the reader, the writer
+  * and maintenance need to know about a store directory.
   */
 object OcfStore extends org.apache.spark.internal.Logging {
   /** The session's Hadoop configuration (spark.hadoop.*, credentials).
@@ -1158,13 +1129,87 @@ object OcfStore extends org.apache.spark.internal.Logging {
   private[sources] val containerOpens =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
-  private def isManifest(name: String): Boolean =
+  // ---- the on-disk layout: every name the store writes or reads ---- //
+  // Visible names are the store's state: containers, stats manifests,
+  // snapshots (`_snapshot-<millis>-<nonce>.list`, zero-padded so
+  // lexical order is time order) and epoch markers. A batch write's
+  // names carry its queryId; a streaming epoch's carry the writer's
+  // queryId AND `-e<epochId>`. Everything a reader must ignore is
+  // dot-prefixed: staged temps (`.<name>.tmp`) and retired files
+  // (`.<name>.stale`) — crash debris once aged, collected by vacuum.
+
+  /** THE container-visibility rule — one definition for the reader
+    * listing, the rewrite witness, and the overwrite commit's retire
+    * set, so they can never drift apart.
+    */
+  def isLiveContainer(name: String): Boolean =
+    name.endsWith(".ocf") && !name.startsWith(".")
+  def isManifest(name: String): Boolean =
     !name.startsWith(".") && name.startsWith("_manifest-") &&
       name.endsWith(".ndjson")
-
-  private def isSnapshot(name: String): Boolean =
+  def isSnapshot(name: String): Boolean =
     !name.startsWith(".") && name.startsWith("_snapshot-") &&
       name.endsWith(".list")
+  def isDebris(name: String): Boolean =
+    name.startsWith(".") &&
+      (name.endsWith(".tmp") || name.endsWith(".stale"))
+  def snapshotMillis(name: String): Option[Long] =
+    name.stripPrefix("_snapshot-").take(20).toLongOption
+
+  /** (writer scope, epoch id) of an epoch marker: the id is the suffix
+    * after the last dash; the legacy un-scoped `_epoch-<id>` has scope "".
+    */
+  def epochMarker(name: String): Option[(String, Long)] =
+    if (!name.startsWith("_epoch-")) None
+    else {
+      val body = name.stripPrefix("_epoch-")
+      val cut = body.lastIndexOf('-')
+      val (writer, epoch) =
+        if (cut < 0) ("", body) else (body.take(cut), body.drop(cut + 1))
+      epoch.toLongOption.map(e => (writer, e))
+    }
+
+  /** What an attempt of writer `queryId`'s epoch installed — the orphans
+    * a replay over a partial install retires.
+    */
+  def isEpochInstall(name: String, queryId: String,
+                     epochId: Long): Boolean =
+    (isLiveContainer(name) && name.startsWith(s"part-$queryId-") &&
+      name.endsWith(s"-e$epochId.ocf")) ||
+      name == manifestName(queryId, Some(epochId))
+
+  private def epochTag(epoch: Option[Long]): String =
+    epoch.fold("")(e => s"-e$e")
+  def containerName(queryId: String, partitionId: Int,
+                    epoch: Option[Long]): String =
+    f"part-$queryId-$partitionId%05d${epochTag(epoch)}.ocf"
+  /** The task id keeps retried and speculative attempts apart. */
+  def tempName(queryId: String, partitionId: Int, taskId: Long,
+               epoch: Option[Long]): String =
+    tempOf(s"part-$queryId-$partitionId-$taskId${epochTag(epoch)}.ocf")
+  def manifestName(queryId: String, epoch: Option[Long]): String =
+    s"_manifest-$queryId${epochTag(epoch)}.ndjson"
+  /** `z` sorts after every writer manifest (queryIds are hex UUIDs), so
+    * `compactManifests`' output wins the last-by-name merge.
+    */
+  def consolidatedManifestName(millis: Long): String =
+    s"_manifest-z$millis.ndjson"
+  def tempOf(name: String): String = s".$name.tmp"
+  def retiredName(name: String): String = s".$name.stale"
+  def epochMarkerName(queryId: String, epochId: Long): String =
+    s"_epoch-$queryId-$epochId"
+  def snapshotName(millis: Long, nonce: String): String =
+    f"_snapshot-$millis%020d-$nonce.list"
+
+  /** One LIST of a store directory: its filesystem and entries (none
+    * for an absent store) — where every driver-side walk starts.
+    */
+  def list(dir: String, conf: Configuration)
+      : (FileSystem, Seq[FileStatus]) = {
+    val d = new Path(dir)
+    val fs = d.getFileSystem(conf)
+    (fs, if (fs.exists(d)) fs.listStatus(d).toSeq else Seq.empty)
+  }
 
   /** TIME TRAVEL, write side: record the store's live-container set
     * after a commit that changed it — one `_snapshot-<millis>-<nonce>
@@ -1183,9 +1228,8 @@ object OcfStore extends org.apache.spark.internal.Logging {
     if (!fs.exists(d)) return
     val names = fs.listStatus(d).map(_.getPath.getName)
       .filter(isLiveContainer).sorted
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val p = new Path(d,
-      f"_snapshot-${System.currentTimeMillis()}%020d-$nonce.list")
+    val p = new Path(d, snapshotName(System.currentTimeMillis(),
+      java.util.UUID.randomUUID().toString.take(8)))
     val out = fs.create(p, false)
     try out.write((names.mkString("\n") + "\n").getBytes("UTF-8"))
     finally out.close()
@@ -1197,22 +1241,22 @@ object OcfStore extends org.apache.spark.internal.Logging {
     */
   def listSnapshots(dir: String, conf: Configuration)
       : Seq[(Long, String, Int)] = {
-    val d = new Path(dir)
-    val fs = d.getFileSystem(conf)
-    if (!fs.exists(d)) return Seq.empty
-    fs.listStatus(d).toSeq.map(_.getPath)
-      .filter(p => isSnapshot(p.getName))
-      .flatMap { p =>
-        p.getName.stripPrefix("_snapshot-").take(20).toLongOption.map {
-          ts =>
-            val in = fs.open(p)
-            val n =
-              try scala.io.Source.fromInputStream(in, "UTF-8")
-                .getLines().count(_.trim.nonEmpty)
-              finally in.close()
-            (ts, p.getName, n)
-        }
-      }.sortBy(t => (t._1, t._2))
+    val (fs, listing) = list(dir, conf)
+    snapshots(listing).map { case (ts, p) =>
+      (ts, p.getName, readSnapshot(fs, p).size)
+    }.sortBy(t => (t._1, t._2))
+  }
+
+  /** (commit millis, path) of every snapshot in a listing. */
+  private def snapshots(listing: Seq[FileStatus]): Seq[(Long, Path)] =
+    listing.map(_.getPath).filter(p => isSnapshot(p.getName))
+      .flatMap(p => snapshotMillis(p.getName).map(ts => (ts, p)))
+
+  private def readSnapshot(fs: FileSystem, p: Path): List[String] = {
+    val in = fs.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8")
+      .getLines().map(_.trim).filter(_.nonEmpty).toList
+    finally in.close()
   }
 
   /** TIME TRAVEL, read side: the container names of the latest
@@ -1222,46 +1266,46 @@ object OcfStore extends org.apache.spark.internal.Logging {
     */
   def snapshotAt(dir: String, conf: Configuration,
                  asOfMillis: Long): Seq[String] = {
-    val d = new Path(dir)
-    val fs = d.getFileSystem(conf)
-    if (!fs.exists(d))
+    val (fs, listing) = list(dir, conf)
+    if (listing.isEmpty)
       throw new IllegalArgumentException(
         s"graft-ocf: no store at $dir to time-travel")
-    val snaps = fs.listStatus(d).map(_.getPath)
-      .filter(p => isSnapshot(p.getName))
-      .flatMap { p =>
-        p.getName.stripPrefix("_snapshot-").take(20).toLongOption
-          .map(ts => (ts, p))
-      }
-      .filter(_._1 <= asOfMillis)
+    val snaps = snapshots(listing).filter(_._1 <= asOfMillis)
     if (snaps.isEmpty)
       throw new IllegalArgumentException(
         s"graft-ocf: $dir has no snapshot at or before $asOfMillis " +
           "(the store predates snapshot logging, or the timestamp is " +
           "before its first commit)")
-    val latest = snaps.maxBy { case (ts, p) => (ts, p.getName) }._2
-    val in = fs.open(latest)
-    try scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().map(_.trim).filter(_.nonEmpty).toList
-    finally in.close()
+    readSnapshot(fs, snaps.maxBy { case (ts, p) => (ts, p.getName) }._2)
   }
 
-  /** The as-of listing twin of [[liveFiles]]: resolve each snapshot
-    * container to its current location — still live under its own
-    * name, or retired-but-kept as `.<name>.stale` (the `keepRetired`
-    * writer option; vacuum's age gate is the time-travel horizon).
+  /** CHANGE DATA FEED's container diff: the containers live in the
+    * snapshot at `toMillis` but absent from the one at `fromMillis`,
+    * sorted — the appends the store received in (from, to].
+    */
+  def snapshotDiff(dir: String, conf: Configuration, fromMillis: Long,
+                   toMillis: Long): Seq[String] = {
+    val from = snapshotAt(dir, conf, fromMillis).toSet
+    snapshotAt(dir, conf, toMillis).filterNot(from).sorted
+  }
+
+  /** The as-of listing twin of [[liveFiles]], as (full path, file):
+    * resolve each snapshot container to its current location — still
+    * live under its own name, or retired-but-kept under its retired
+    * name (the `keepRetired` writer option; vacuum's age gate is the
+    * time-travel horizon).
     * A name resolving to neither is a loud error: the data was
     * vacuumed (or retired without keepRetired) and the snapshot can
     * no longer be served.
     */
   def filesAsOf(dir: String, conf: Configuration,
-                asOfMillis: Long): Seq[(String, String, OcfLiveFile)] = {
+                asOfMillis: Long): Seq[(String, OcfLiveFile)] = {
     val d = new Path(dir)
     val fs = d.getFileSystem(conf)
     val stats = manifestStats(dir, conf)
     snapshotAt(dir, conf, asOfMillis).sorted.map { name =>
       val live = new Path(d, name)
-      val retired = new Path(d, s".$name.stale")
+      val retired = new Path(d, retiredName(name))
       val p =
         if (fs.exists(live)) live
         else if (fs.exists(retired)) retired
@@ -1269,26 +1313,41 @@ object OcfStore extends org.apache.spark.internal.Logging {
           s"graft-ocf: snapshot container $name of $dir is gone " +
             "(vacuumed, or retired without keepRetired=true) — this " +
             "timestamp is beyond the store's time-travel horizon")
-      val st = fs.getFileStatus(p)
-      val fstats = stats.get(name)
-      val n = fstats.map(_.count).getOrElse {
-        val key = (p.toString, st.getLen, st.getModificationTime)
-        countCache.computeIfAbsent(key, _ => {
-          containerOpens.incrementAndGet()
-          val s = new DataFileStream[GenericRecord](
-            fs.open(p), new GenericDatumReader[GenericRecord]())
-          try {
-            var c = 0L
-            while (s.hasNext) { c += s.getBlockCount; s.nextBlock() }
-            c
-          } finally s.close()
-        })
-      }
-      (name, p.toString, OcfLiveFile(name, n, st.getLen, fstats))
+      (p.toString, liveFile(fs, fs.getFileStatus(p), name, stats))
     }
   }
 
-  private def parseManifest(fs: org.apache.hadoop.fs.FileSystem,
+  /** A container as a listing sees it: the manifest's count when the
+    * file is manifested, else the memoized block-header count.
+    */
+  private def liveFile(fs: FileSystem, st: FileStatus, name: String,
+                       stats: Map[String, OcfFileStats]): OcfLiveFile = {
+    val fstats = stats.get(name)
+    OcfLiveFile(name, fstats.map(_.count).getOrElse(blockCount(fs, st)),
+      st.getLen, fstats)
+  }
+
+  /** Record count from Avro container BLOCK headers (no record decode)
+    * for a container the manifest does not cover, memoized per (path,
+    * length, mtime): committed containers are immutable (the V2 writer
+    * renames a finished temp into place, never appends), so a cache
+    * hit is always valid and a rewritten file busts the key.
+    */
+  private def blockCount(fs: FileSystem,
+                         st: FileStatus): Long =
+    countCache.computeIfAbsent(
+      (st.getPath.toString, st.getLen, st.getModificationTime), _ => {
+        containerOpens.incrementAndGet()
+        val s = new DataFileStream[GenericRecord](
+          fs.open(st.getPath), new GenericDatumReader[GenericRecord]())
+        try {
+          var c = 0L
+          while (s.hasNext) { c += s.getBlockCount; s.nextBlock() }
+          c
+        } finally s.close()
+      })
+
+  private def parseManifest(fs: FileSystem,
                             p: Path): Map[String, OcfFileStats] = {
     val in = fs.open(p)
     try {
@@ -1313,15 +1372,13 @@ object OcfStore extends org.apache.spark.internal.Logging {
     */
   def manifestStats(dir: String, conf: Configuration)
       : Map[String, OcfFileStats] = {
-    val d = new Path(dir)
-    val fs = d.getFileSystem(conf)
-    if (!fs.exists(d)) return Map.empty
-    manifestStatsFrom(fs, fs.listStatus(d).toSeq)
+    val (fs, listing) = list(dir, conf)
+    manifestStatsFrom(fs, listing)
   }
 
-  private def manifestStatsFrom(
-      fs: org.apache.hadoop.fs.FileSystem,
-      listing: Seq[org.apache.hadoop.fs.FileStatus])
+  private[sources] def manifestStatsFrom(
+      fs: FileSystem,
+      listing: Seq[FileStatus])
       : Map[String, OcfFileStats] =
     listing.filter(st => isManifest(st.getPath.getName))
       .sortBy(_.getPath.getName)
@@ -1333,23 +1390,13 @@ object OcfStore extends org.apache.spark.internal.Logging {
 
   /** Record count per live container. Counts come from the commit
     * manifest when present (no container bytes touched — the
-    * broker-head-offset role); unmanifested files fall back to Avro
-    * BLOCK-header counting (no record decode), memoized per (path,
-    * length, mtime): committed containers are immutable (the V2 writer
-    * renames a finished temp into place, never appends), so a cache
-    * hit is always valid and a rewritten file busts the key. The
-    * streaming engine calls latestOffset twice per trigger — with the
-    * manifest the steady-state cost is one file listing.
+    * broker-head-offset role); unmanifested files fall back to the
+    * memoized block-header count. The streaming engine calls
+    * latestOffset twice per trigger — with the manifest the
+    * steady-state cost is one file listing.
     */
   def headCounts(dir: String, conf: Configuration): Map[String, Long] =
     liveFiles(dir, conf).map(f => f.name -> f.count).toMap
-
-  /** THE container-visibility rule — one definition for the reader
-    * listing, the rewrite witness, and the overwrite commit's retire
-    * set, so they can never drift apart.
-    */
-  def isLiveContainer(name: String): Boolean =
-    name.endsWith(".ocf") && !name.startsWith(".")
 
   /** Kafka `startingOffsetsByTimestamp` for the store: per live
     * container, the cursor of the FIRST record whose timestamp is
@@ -1362,7 +1409,7 @@ object OcfStore extends org.apache.spark.internal.Logging {
     */
   def cursorsAtTimestamp(dirs: Seq[String], tsUs: Long,
                          conf: Configuration): Map[String, Long] =
-    cursorsAtTimestamps(keyedLiveFiles(dirs, conf), Seq(tsUs),
+    cursorsAtTimestamps(keyedFiles(dirs, conf), Seq(tsUs),
       conf)(tsUs)
 
   /** Several seek timestamps resolved against ONE listing: each
@@ -1468,7 +1515,7 @@ object OcfStore extends org.apache.spark.internal.Logging {
     } finally stream.close()
   }
 
-  private def isGlob(p: String): Boolean =
+  private[sources] def isGlob(p: String): Boolean =
     p.exists("*?[{".contains(_))
 
   /** Expand glob store paths (S3 — store DISCOVERY, the engine-owned
@@ -1495,38 +1542,30 @@ object OcfStore extends org.apache.spark.internal.Logging {
       }
     }.distinct.sorted
 
-  /** The multi-store listing as (stable key, full path, file). One
-    * LITERAL store keeps plain basenames as keys — existing
-    * checkpoints stay readable; several stores (or any glob, whose
-    * expansion can grow) qualify the key with its directory, so
-    * same-named containers in different stores never collide in the
-    * offset map. Keys sort in (dir, name) order either way.
+  /** The multi-store listing as (stable key, full path, file) — the
+    * live containers, or with `asOfMillis` every store's snapshot set
+    * at that timestamp. One LITERAL store keeps plain basenames as
+    * keys — existing checkpoints stay readable; several stores (or any
+    * glob, whose expansion can grow) qualify the key with its
+    * directory, so same-named containers in different stores never
+    * collide in the offset map. Keys sort in (dir, name) order either
+    * way. Glob expansion runs against the CURRENT directory listing (a
+    * store that exists now but has no snapshot that old fails loudly
+    * in filesAsOf — never a silent partial read).
     */
-  def keyedLiveFiles(dirs: Seq[String], conf: Configuration)
-      : Seq[(String, String, OcfLiveFile)] =
-    if (dirs.sizeIs == 1 && !isGlob(dirs.head))
-      liveFiles(dirs.head, conf)
-        .map(f => (f.name, s"${dirs.head}/${f.name}", f))
-    else expandDirs(dirs, conf).flatMap { d =>
-      liveFiles(d, conf).map(f => (s"$d/${f.name}", s"$d/${f.name}", f))
+  def keyedFiles(dirs: Seq[String], conf: Configuration,
+                 asOfMillis: Option[Long] = None)
+      : Seq[(String, String, OcfLiveFile)] = {
+    def files(d: String): Seq[(String, OcfLiveFile)] = asOfMillis match {
+      case Some(t) => filesAsOf(d, conf, t)
+      case None => liveFiles(d, conf).map(f => (s"$d/${f.name}", f))
     }
-
-  /** The `timestampAsOf` twin of [[keyedLiveFiles]]: every store's
-    * snapshot set at the timestamp, same key qualification. Glob
-    * expansion runs against the CURRENT directory listing (a store
-    * that exists now but has no snapshot that old fails loudly in
-    * filesAsOf — never a silent partial read).
-    */
-  def keyedFilesAsOf(dirs: Seq[String], conf: Configuration,
-                     asOfMillis: Long)
-      : Seq[(String, String, OcfLiveFile)] =
     if (dirs.sizeIs == 1 && !isGlob(dirs.head))
-      filesAsOf(dirs.head, conf, asOfMillis)
+      files(dirs.head).map { case (p, f) => (f.name, p, f) }
     else expandDirs(dirs, conf).flatMap { d =>
-      filesAsOf(d, conf, asOfMillis).map { case (_, p, f) =>
-        (s"$d/${f.name}", p, f)
-      }
+      files(d).map { case (p, f) => (s"$d/${f.name}", p, f) }
     }
+  }
 
   /** One listing's full view of the store: every live container with
     * its record count, byte length, and (when manifested) commit-time
@@ -1534,41 +1573,22 @@ object OcfStore extends org.apache.spark.internal.Logging {
     * pruning, and scan statistics. Sorted by name (= commit order).
     */
   def liveFiles(dir: String, conf: Configuration): Seq[OcfLiveFile] = {
-    val d = new Path(dir)
-    val fs = d.getFileSystem(conf)
-    if (!fs.exists(d)) return Seq.empty
-    val listing = fs.listStatus(d).toSeq
+    val (fs, listing) = list(dir, conf)
     val files = listing
       .filter(st => isLiveContainer(st.getPath.getName))
     val stats = manifestStatsFrom(fs, listing)
     // evict superseded keys for THIS dir (rewritten or vanished
     // files) so a long-running driver over a churning store doesn't
     // leak cache entries
-    val qdir = fs.makeQualified(d).toString
+    val qdir = fs.makeQualified(new Path(dir)).toString
     val live = files
       .map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
       .toSet
     countCache.keySet.removeIf(k =>
       new Path(k._1).getParent.toString == qdir && !live.contains(k))
     files
-      .map { st =>
-        val name = st.getPath.getName
-        val fstats = stats.get(name)
-        val n = fstats.map(_.count).getOrElse {
-          val key = (st.getPath.toString, st.getLen, st.getModificationTime)
-          countCache.computeIfAbsent(key, _ => {
-            containerOpens.incrementAndGet()
-            val s = new DataFileStream[GenericRecord](
-              fs.open(st.getPath), new GenericDatumReader[GenericRecord]())
-            try {
-              var c = 0L
-              while (s.hasNext) { c += s.getBlockCount; s.nextBlock() }
-              c
-            } finally s.close()
-          })
-        }
-        OcfLiveFile(name, n, st.getLen, fstats)
-      }.sortBy(_.name)
+      .map(st => liveFile(fs, st, st.getPath.getName, stats))
+      .sortBy(_.name)
   }
 }
 

@@ -90,16 +90,6 @@ object OcfFormat {
       val arr = new Array[Byte](bb.remaining()); bb.duplicate().get(arr); arr
   }
 
-  def toInternalRow(rec: GenericRecord): InternalRow =
-    InternalRow(
-      bytes(rec.get("key")),
-      bytes(rec.get("value")),
-      UTF8String.fromString(rec.get("topic").toString),
-      rec.get("partition").asInstanceOf[Int],
-      rec.get("offset").asInstanceOf[Long],
-      rec.get("timestamp_us").asInstanceOf[Long],
-      rec.get("timestamp_type").asInstanceOf[Int])
-
   /** Spark column name → Avro field name (the two diverge only on the
     * timestamp pair).
     */

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -59,19 +60,30 @@ object OcfMaintenance {
     * listing, and the commit installs-new-before-retiring-old.
     */
   def compact(spark: SparkSession, dir: String,
-              keepRetired: Boolean = false): (Int, Int) = {
-    def nFiles: Int =
-      OcfStore.headCounts(dir, OcfStore.driverConf()).size
-    val before = nFiles
-    // read fully resolves its file list at planning; the overwrite
-    // installs renamed temps only at driver commit, after every read
-    // task has finished — same-dir rewrite is ordered, not racy
-    spark.read.format("graft-ocf").load(dir)
-      .write.format("graft-ocf")
+              keepRetired: Boolean = false): (Int, Int) =
+    overwrite(dir, keepRetired, _.size)(
+      spark.read.format("graft-ocf").load(dir))
+
+  /** The one whole-store rewrite: write `rows` back over `dir` through
+    * the overwrite commit, with the live container names as its
+    * optimistic-concurrency witness and `keepRetired` passed through;
+    * returns `measure` of the store's head counts before and after.
+    *
+    * The read fully resolves its file list at planning; the overwrite
+    * installs renamed temps only at driver commit, after every read
+    * task has finished — same-dir rewrite is ordered, not racy.
+    */
+  private def overwrite[A](dir: String, keepRetired: Boolean,
+                           measure: Map[String, Long] => A,
+                           options: Map[String, String] = Map.empty)
+                          (rows: => DataFrame): (A, A) = {
+    def now: A = measure(OcfStore.headCounts(dir, OcfStore.driverConf()))
+    val before = now
+    rows.write.format("graft-ocf").options(options)
       .option("expectedContainers", containerNames(dir).mkString(","))
       .option("keepRetired", keepRetired.toString)
       .mode("overwrite").save(dir)
-    (before, nFiles)
+    (before, now)
   }
 
   /** Live container basenames — the optimistic-concurrency witness a
@@ -82,13 +94,9 @@ object OcfMaintenance {
     * epoch landing in that gap is read AND flagged — a conservative
     * spurious abort, never a loss; the rewrite retries.
     */
-  private def containerNames(dir: String): Seq[String] = {
-    val d = new org.apache.hadoop.fs.Path(dir)
-    val fs = d.getFileSystem(OcfStore.driverConf())
-    if (!fs.exists(d)) Seq.empty
-    else fs.listStatus(d).toSeq.map(_.getPath.getName)
+  private def containerNames(dir: String): Seq[String] =
+    OcfStore.list(dir, OcfStore.driverConf())._2.map(_.getPath.getName)
       .filter(OcfStore.isLiveContainer).sorted
-  }
 
   /** Kafka `cleanup.policy=compact` as a store rewrite: keep only the
     * highest-offset record per (topic, partition, key) — the broker
@@ -118,23 +126,15 @@ object OcfMaintenance {
     */
   def compactByKey(spark: SparkSession, dir: String,
                    dropTombstones: Boolean = false,
-                   keepRetired: Boolean = false): (Long, Long) = {
-    def records: Long =
-      OcfStore.headCounts(dir, OcfStore.driverConf()).values.sum
-    val before = records
-    val latest = graft.plans.GroupedTopK(
-      spark.read.format("graft-ocf").load(dir),
-      Seq("topic", "partition", "key"),
-      Seq(("offset", false)), k = 1, rankName = "rnk").drop("rnk")
-    val kept =
+                   keepRetired: Boolean = false): (Long, Long) =
+    overwrite(dir, keepRetired, _.values.sum) {
+      val latest = graft.plans.GroupedTopK(
+        spark.read.format("graft-ocf").load(dir),
+        Seq("topic", "partition", "key"),
+        Seq(("offset", false)), k = 1, rankName = "rnk").drop("rnk")
       if (dropTombstones) latest.filter(col("value").isNotNull)
       else latest
-    kept.write.format("graft-ocf")
-      .option("expectedContainers", containerNames(dir).mkString(","))
-      .option("keepRetired", keepRetired.toString)
-      .mode("overwrite").save(dir)
-    (before, records)
-  }
+    }
 
   /** Right-to-be-forgotten (GDPR art. 17) as a store rewrite:
     * PHYSICALLY remove every record whose key matches `keyPred` —
@@ -162,18 +162,10 @@ object OcfMaintenance {
     */
   def eraseKeys(spark: SparkSession, dir: String,
                 keyPred: org.apache.spark.sql.Column,
-                keepRetired: Boolean = false): (Long, Long) = {
-    def records: Long =
-      OcfStore.headCounts(dir, OcfStore.driverConf()).values.sum
-    val before = records
-    val kept = spark.read.format("graft-ocf").load(dir)
-      .filter(!coalesce(keyPred, lit(false)))
-    kept.write.format("graft-ocf")
-      .option("expectedContainers", containerNames(dir).mkString(","))
-      .option("keepRetired", keepRetired.toString)
-      .mode("overwrite").save(dir)
-    (before, records)
-  }
+                keepRetired: Boolean = false): (Long, Long) =
+    overwrite(dir, keepRetired, _.values.sum)(
+      spark.read.format("graft-ocf").load(dir)
+        .filter(!coalesce(keyPred, lit(false))))
 
   /** Rewrite the store time-clustered: containers range-distributed on
     * (timestamp, partition, offset), so each covers a tight, disjoint
@@ -194,22 +186,13 @@ object OcfMaintenance {
     */
   def cluster(spark: SparkSession, dir: String,
               targetFiles: Int = 0,
-              keepRetired: Boolean = false): (Int, Int) = {
-    def nFiles: Int =
-      OcfStore.headCounts(dir, OcfStore.driverConf()).size
-    val before = nFiles
-    spark.read.format("graft-ocf").load(dir)
-      .write.format("graft-ocf")
-      .option("layout", "time")
-      .option("targetFiles", targetFiles.toString)
-      .option("expectedContainers", containerNames(dir).mkString(","))
-      .option("keepRetired", keepRetired.toString)
-      .mode("overwrite").save(dir)
-    (before, nFiles)
-  }
+              keepRetired: Boolean = false): (Int, Int) =
+    overwrite(dir, keepRetired, _.size,
+      Map("layout" -> "time", "targetFiles" -> targetFiles.toString))(
+      spark.read.format("graft-ocf").load(dir))
 
   /** Consolidate the per-commit stats manifests into ONE. A
-    * micro-batch writer installs one `_manifest-<id>.ndjson` per
+    * micro-batch writer installs one stats manifest per
     * trigger, so a long-lived streaming store accrues thousands of
     * tiny manifests — the metadata twin of the small-files problem
     * (every planner listing parses them all, and retention deletes
@@ -220,35 +203,30 @@ object OcfMaintenance {
     *
     * Crash-safe and live-reader-safe: the consolidated file is
     * written dot-prefixed (invisible), renamed into place, and only
-    * then are the old manifests deleted. Its `_manifest-z` name
-    * sorts AFTER every writer-generated `_manifest-<uuid>` (hex <
-    * 'z'), so during the crash window where both generations coexist
+    * then are the old manifests deleted. Its name sorts AFTER every
+    * writer-generated manifest (`OcfStore.consolidatedManifestName`),
+    * so during the crash window where both generations coexist
     * the consolidated stats win the last-by-name merge — and the
     * values are identical anyway, since container files are
     * immutable under append commits. No container bytes move.
     */
   def compactManifests(spark: SparkSession, dir: String): (Int, Long) = {
-    val conf = OcfStore.driverConf()
-    val d = new org.apache.hadoop.fs.Path(dir)
-    val fs = d.getFileSystem(conf)
-    if (!fs.exists(d)) return (0, 0L)
-    val listing = fs.listStatus(d).toSeq
+    val (fs, listing) = OcfStore.list(dir, OcfStore.driverConf())
     val manifests = listing.map(_.getPath)
-      .filter(p => !p.getName.startsWith(".") &&
-        p.getName.startsWith("_manifest-") &&
-        p.getName.endsWith(".ndjson"))
+      .filter(p => OcfStore.isManifest(p.getName))
     if (manifests.isEmpty) return (0, 0L)
     val live = listing.map(_.getPath.getName)
-      .filter(n => n.endsWith(".ocf") && !n.startsWith(".")).toSet
-    val stats = OcfStore.manifestStats(dir, conf)
+      .filter(OcfStore.isLiveContainer).toSet
+    val stats = OcfStore.manifestStatsFrom(fs, listing)
     val (kept, stale) = stats.values.toSeq.partition(s => live(s.file))
-    val name = s"_manifest-z${System.currentTimeMillis()}.ndjson"
-    val tmp = new org.apache.hadoop.fs.Path(d, s".$name.tmp")
+    val name = OcfStore.consolidatedManifestName(System.currentTimeMillis())
+    val d = new Path(dir)
+    val tmp = new Path(d, OcfStore.tempOf(name))
     val out = fs.create(tmp, true)
     try kept.sortBy(_.file)
       .foreach(s => out.write((s.toJson + "\n").getBytes("UTF-8")))
     finally out.close()
-    if (!fs.rename(tmp, new org.apache.hadoop.fs.Path(d, name)))
+    if (!fs.rename(tmp, new Path(d, name)))
       throw new java.io.IOException(
         s"graft-ocf: failed to install consolidated manifest $name")
     manifests.foreach(p => fs.delete(p, false))
@@ -256,7 +234,7 @@ object OcfMaintenance {
   }
 
   /** Prune old streaming epoch markers. The sink leaves one zero-byte
-    * `_epoch-<queryId>-<id>` marker per committed trigger — the
+    * per-(writer, epoch) marker per committed trigger — the
     * replay-dedup record — so a long-lived stream accrues one marker
     * per trigger forever: the metadata small-files problem again
     * (every maintenance listing walks them), solved the same way as
@@ -266,29 +244,19 @@ object OcfMaintenance {
     * epoch per query on recovery, so only each writer's newest marker
     * is ever consulted again; `keepLast` per writer (default 20) is a
     * deep margin over that, covering even a manually rolled-back
-    * checkpoint a few epochs deep. Markers of legacy un-scoped form
-    * (`_epoch-<id>`) group under one writer key and age out the same
-    * way. Returns markers deleted.
+    * checkpoint a few epochs deep. Markers of the legacy un-scoped form
+    * group under one writer key and age out the same way. Returns
+    * markers deleted.
     */
   def pruneEpochMarkers(spark: SparkSession, dir: String,
                         keepLast: Int = 20): Int = {
     require(keepLast >= 1, "keepLast must be >= 1: the newest marker " +
       "is the live replay-dedup record and must survive")
-    val conf = OcfStore.driverConf()
-    val d = new org.apache.hadoop.fs.Path(dir)
-    val fs = d.getFileSystem(conf)
-    if (!fs.exists(d)) return 0
-    // _epoch-<queryId>-<epochId>: epochId is the suffix after the last
-    // dash; everything between prefix and it is the writer scope
-    val markers = fs.listStatus(d).toSeq.map(_.getPath)
-      .filter(_.getName.startsWith("_epoch-"))
-      .flatMap { p =>
-        val body = p.getName.stripPrefix("_epoch-")
-        val cut = body.lastIndexOf('-')
-        val (writer, epoch) =
-          if (cut < 0) ("", body) else (body.take(cut), body.drop(cut + 1))
-        epoch.toLongOption.map(e => (writer, e, p))
-      }
+    val (fs, listing) = OcfStore.list(dir, OcfStore.driverConf())
+    val markers = listing.map(_.getPath)
+      .flatMap(p => OcfStore.epochMarker(p.getName).map {
+        case (writer, e) => (writer, e, p)
+      })
     val victims = markers.groupBy(_._1).values.toSeq.flatMap { ms =>
       ms.sortBy(-_._2).drop(keepLast)
     }
@@ -314,25 +282,10 @@ object OcfMaintenance {
     * are only ever looked up for files present in the listing).
     */
   def retain(spark: SparkSession, dir: String, beforeTsUs: Long)
-      : (Int, Long) = {
-    val conf = OcfStore.driverConf()
-    val d = new org.apache.hadoop.fs.Path(dir)
-    val fs = d.getFileSystem(conf)
-    if (!fs.exists(d)) return (0, 0L)
-    val stats = OcfStore.manifestStats(dir, conf)
-    val victims = fs.listStatus(d).toSeq
-      .filter(st => st.getPath.getName.endsWith(".ocf") &&
-        !st.getPath.getName.startsWith("."))
-      .flatMap(st => stats.get(st.getPath.getName)
-        .filter(s => s.count > 0 && s.maxTsUs < beforeTsUs)
-        .map(s => (st.getPath, s.count)))
-    victims.foreach { case (p, _) => fs.delete(p, false) }
-    // retention changed the live set outside a writer commit: log the
-    // post-expiry snapshot so timestampAsOf reads after this point
-    // never resolve to expired containers
-    if (victims.nonEmpty) OcfStore.writeSnapshot(dir, conf)
-    (victims.size, victims.map(_._2).sum)
-  }
+      : (Int, Long) =
+    expire(dir)(_.filter { case (_, s) =>
+      s.count > 0 && s.maxTsUs < beforeTsUs
+    })
 
   /** Broker-style size retention (Kafka `retention.bytes`): keep the
     * newest containers (by manifest max timestamp, name as tiebreak)
@@ -341,27 +294,35 @@ object OcfMaintenance {
     * toward the budget. Same live-reader safety as `retain`.
     */
   def retainBytes(spark: SparkSession, dir: String, maxBytes: Long)
+      : (Int, Long) =
+    expire(dir) { manifested =>
+      var budget = maxBytes
+      manifested.sortBy { case (st, s) => (-s.maxTsUs, st.getPath.getName) }
+        .dropWhile { case (st, _) =>
+          val fits = st.getLen <= budget
+          if (fits) budget -= st.getLen
+          fits
+        }
+    }
+
+  /** Retention's one mechanism: delete the manifested live containers
+    * `pick` selects, then — the live set changed outside a writer
+    * commit — log the post-expiry snapshot so timestampAsOf reads
+    * after this point never resolve to expired containers. Returns
+    * (containers deleted, records deleted).
+    */
+  private def expire(dir: String)(
+      pick: Seq[(FileStatus, OcfFileStats)] => Seq[(FileStatus, OcfFileStats)])
       : (Int, Long) = {
     val conf = OcfStore.driverConf()
-    val d = new org.apache.hadoop.fs.Path(dir)
-    val fs = d.getFileSystem(conf)
-    if (!fs.exists(d)) return (0, 0L)
-    val stats = OcfStore.manifestStats(dir, conf)
-    val manifested = fs.listStatus(d).toSeq
-      .filter(st => st.getPath.getName.endsWith(".ocf") &&
-        !st.getPath.getName.startsWith("."))
-      .flatMap(st => stats.get(st.getPath.getName)
-        .map(s => (st.getPath, st.getLen, s)))
-      .sortBy { case (p, _, s) => (-s.maxTsUs, p.getName) }
-    var budget = maxBytes
-    val victims = manifested.dropWhile { case (_, len, _) =>
-      val fits = len <= budget
-      if (fits) budget -= len
-      fits
-    }
-    victims.foreach { case (p, _, _) => fs.delete(p, false) }
+    val (fs, listing) = OcfStore.list(dir, conf)
+    val stats = OcfStore.manifestStatsFrom(fs, listing)
+    val victims = pick(listing
+      .filter(st => OcfStore.isLiveContainer(st.getPath.getName))
+      .flatMap(st => stats.get(st.getPath.getName).map(s => (st, s))))
+    victims.foreach { case (st, _) => fs.delete(st.getPath, false) }
     if (victims.nonEmpty) OcfStore.writeSnapshot(dir, conf)
-    (victims.size, victims.map(_._3.count).sum)
+    (victims.size, victims.map(_._2.count).sum)
   }
 
   /** Maintenance ADVISOR: one metadata-only pass over the listing +
@@ -384,24 +345,19 @@ object OcfMaintenance {
              smallFiles: Int = 64, manifestPile: Int = 8,
              debrisHorizonMs: Long = 24L * 3600 * 1000): DataFrame = {
     import spark.implicits._
-    val conf = OcfStore.driverConf()
-    val d = new org.apache.hadoop.fs.Path(dir)
-    val fs = d.getFileSystem(conf)
+    val (fs, listing) = OcfStore.list(dir, OcfStore.driverConf())
     val out = scala.collection.mutable.ArrayBuffer
       .empty[(String, String, Long, String)]
-    if (fs.exists(d)) {
-      val listing = fs.listStatus(d).toSeq
-      val stats = OcfStore.manifestStats(dir, conf).values.toSeq
-      val containers = listing.filter { st =>
-        val n = st.getPath.getName
-        n.endsWith(".ocf") && !n.startsWith(".")
-      }
+    if (listing.nonEmpty) {
+      val stats = OcfStore.manifestStatsFrom(fs, listing).values.toSeq
+      val containers =
+        listing.filter(st => OcfStore.isLiveContainer(st.getPath.getName))
       if (containers.size > smallFiles)
         out += (("compact", "warn", containers.size.toLong,
           s"${containers.size} containers (> $smallFiles): micro-batch " +
             "cadence debris; one compact() pass restores few-file scans"))
-      val manifests = listing
-        .filter(_.getPath.getName.startsWith("_manifest-"))
+      val manifests =
+        listing.filter(st => OcfStore.isManifest(st.getPath.getName))
       if (manifests.size > manifestPile)
         out += (("consolidate", "warn", manifests.size.toLong,
           s"${manifests.size} manifest files (> $manifestPile): " +
@@ -421,12 +377,7 @@ object OcfMaintenance {
         }
       }
       val horizon = System.currentTimeMillis() - debrisHorizonMs
-      val debris = listing.count { st =>
-        val n = st.getPath.getName
-        st.isFile && n.startsWith(".") &&
-          (n.endsWith(".ocf.tmp") || n.endsWith(".stale")) &&
-          st.getModificationTime < horizon
-      }
+      val debris = listing.count(isAgedDebris(_, horizon))
       if (debris > 0)
         out += (("vacuum", "info", debris.toLong,
           s"$debris aged dot-file orphans: vacuum() reclaims them"))
@@ -483,67 +434,60 @@ object OcfMaintenance {
                     targetFiles: Int = 8,
                     tsBucketUs: Long = 3600L * 1000000,
                     curve: String = "morton",
-                    keepRetired: Boolean = false): (Int, Int) = {
-    def nFiles: Int =
-      OcfStore.headCounts(dir, OcfStore.driverConf()).size
-    val before = nFiles
-    val df = spark.read.format("graft-ocf").load(dir)
-    // min-max scale each dimension onto the FULL 16-bit width before
-    // interleaving: raw interleave lets whichever dimension has the
-    // higher magnitude own the top z-bits (a 6-bit hour bucket above a
-    // 2-bit partition id sorts purely by time) — scaling makes both
-    // dimensions share the high bits, which is what gives the Morton
-    // curve its rectangle locality. One bounded stats job, the same
-    // min/max pass every OPTIMIZE ZORDER implementation runs.
-    val tb = floor(unix_micros(col("timestamp")) / tsBucketUs)
-      .cast("bigint")
-    val stats = df.select(
-      min(col("partition").cast("bigint")).as("p0"),
-      max(col("partition").cast("bigint")).as("p1"),
-      min(tb).as("t0"), max(tb).as("t1")).head()
-    val (pLo, pHi) = (stats.getLong(0), stats.getLong(1))
-    val (tLo, tHi) = (stats.getLong(2), stats.getLong(3))
-    def scaled(c: org.apache.spark.sql.Column, lo: Long, hi: Long,
-               full: Long) =
-      if (hi <= lo) lit(0L)
-      else floor((c - lit(lo)) * lit(full) / lit(hi - lo)).cast("bigint")
-    val z = curve match {
-      case "morton" =>
-        val p16 = scaled(col("partition").cast("bigint"), pLo, pHi, 65535L)
-        val t16 = scaled(tb, tLo, tHi, 65535L)
-        (0 until 16).map { i =>
-          (shiftleft(shiftright(p16, i).bitwiseAND(lit(1L)), 2 * i + 1))
-            .bitwiseOR(
-              shiftleft(shiftright(t16, i).bitwiseAND(lit(1L)), 2 * i))
-        }.reduce(_.bitwiseOR(_))
-      case "hilbert" =>
-        graft.ops.Layout.hilbertKey(
-          scaled(tb, tLo, tHi, 255L),
-          scaled(col("partition").cast("bigint"), pLo, pHi, 255L),
-          bits = 8)
-      case other =>
-        throw new IllegalArgumentException(
-          s"curve must be morton|hilbert, got $other")
-    }
-    df.withColumn("_z", z)
-      .repartitionByRange(math.max(1, targetFiles), col("_z"),
-        col("partition"), col("offset"))
-      .sortWithinPartitions(col("_z"), col("partition"), col("offset"))
-      .drop("_z")
-      .write.format("graft-ocf")
-      .option("layout", "presorted")
-      .option("expectedContainers", containerNames(dir).mkString(","))
-      .option("keepRetired", keepRetired.toString)
-      .mode("overwrite").save(dir)
-    (before, nFiles)
+                    keepRetired: Boolean = false): (Int, Int) =
+    overwrite(dir, keepRetired, _.size, Map("layout" -> "presorted")) {
+      val df = spark.read.format("graft-ocf").load(dir)
+      // min-max scale each dimension onto the FULL 16-bit width before
+      // interleaving: raw interleave lets whichever dimension has the
+      // higher magnitude own the top z-bits (a 6-bit hour bucket above a
+      // 2-bit partition id sorts purely by time) — scaling makes both
+      // dimensions share the high bits, which is what gives the Morton
+      // curve its rectangle locality. One bounded stats job, the same
+      // min/max pass every OPTIMIZE ZORDER implementation runs.
+      val tb = floor(unix_micros(col("timestamp")) / tsBucketUs)
+        .cast("bigint")
+      val stats = df.select(
+        min(col("partition").cast("bigint")).as("p0"),
+        max(col("partition").cast("bigint")).as("p1"),
+        min(tb).as("t0"), max(tb).as("t1")).head()
+      val (pLo, pHi) = (stats.getLong(0), stats.getLong(1))
+      val (tLo, tHi) = (stats.getLong(2), stats.getLong(3))
+      def scaled(c: org.apache.spark.sql.Column, lo: Long, hi: Long,
+                 full: Long) =
+        if (hi <= lo) lit(0L)
+        else floor((c - lit(lo)) * lit(full) / lit(hi - lo)).cast("bigint")
+      val z = curve match {
+        case "morton" =>
+          val p16 = scaled(col("partition").cast("bigint"), pLo, pHi, 65535L)
+          val t16 = scaled(tb, tLo, tHi, 65535L)
+          (0 until 16).map { i =>
+            (shiftleft(shiftright(p16, i).bitwiseAND(lit(1L)), 2 * i + 1))
+              .bitwiseOR(
+                shiftleft(shiftright(t16, i).bitwiseAND(lit(1L)), 2 * i))
+          }.reduce(_.bitwiseOR(_))
+        case "hilbert" =>
+          graft.ops.Layout.hilbertKey(
+            scaled(tb, tLo, tHi, 255L),
+            scaled(col("partition").cast("bigint"), pLo, pHi, 255L),
+            bits = 8)
+        case other =>
+          throw new IllegalArgumentException(
+            s"curve must be morton|hilbert, got $other")
+      }
+      df.withColumn("_z", z)
+        .repartitionByRange(math.max(1, targetFiles), col("_z"),
+          col("partition"), col("offset"))
+        .sortWithinPartitions(col("_z"), col("partition"), col("offset"))
+        .drop("_z")
   }
 
   /** VACUUM: collect the dot-file debris the crash-safe protocols can
-    * leave behind — `.part-*.ocf.tmp` task temps whose writer died
+    * leave behind (`OcfStore.isDebris`) — task temps whose writer died
     * between write and commit-rename (a clean abort deletes its temp;
-    * a hard executor/driver crash cannot), and `.*.stale` retired-
-    * generation containers whose rewrite crashed between the hide-
-    * rename and the delete. Readers filter dot-files, so debris is
+    * a hard executor/driver crash cannot), consolidated-manifest temps
+    * whose `compactManifests` crashed before its rename, and retired
+    * containers whose rewrite crashed between the hide-rename and the
+    * delete. Readers filter dot-files, so debris is
     * invisible to every query — it only eats storage; on a long-lived
     * 100 TB store the temps of years of crashed tasks are real money.
     *
@@ -556,26 +500,15 @@ object OcfMaintenance {
     */
   def vacuum(spark: SparkSession, dir: String,
              olderThanMs: Long = 24L * 3600 * 1000): (Int, Long) = {
-    val conf = OcfStore.driverConf()
-    val d = new org.apache.hadoop.fs.Path(dir)
-    val fs = d.getFileSystem(conf)
-    if (!fs.exists(d)) return (0, 0L)
+    val (fs, listing) = OcfStore.list(dir, OcfStore.driverConf())
     val horizon = System.currentTimeMillis() - olderThanMs
-    val listing = fs.listStatus(d).toSeq
-    val victims = listing.filter { st =>
-      val n = st.getPath.getName
-      st.isFile && n.startsWith(".") &&
-        (n.endsWith(".ocf.tmp") || n.endsWith(".stale")) &&
-        st.getModificationTime < horizon
-    }
+    val victims = listing.filter(isAgedDebris(_, horizon))
     // expired time-travel snapshots go with the retired containers
     // they reference (same age gate = same horizon); the NEWEST
     // snapshot always survives — it is the store's current state
-    val snaps = listing.filter { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith(".") && n.startsWith("_snapshot-") &&
-        n.endsWith(".list")
-    }.sortBy(_.getPath.getName)
+    val snaps = listing
+      .filter(st => st.isFile && OcfStore.isSnapshot(st.getPath.getName))
+      .sortBy(_.getPath.getName)
     val snapVictims =
       if (snaps.isEmpty) Seq.empty
       else snaps.init.filter(_.getModificationTime < horizon)
@@ -583,6 +516,10 @@ object OcfMaintenance {
     (victims.size + snapVictims.size,
       (victims ++ snapVictims).map(_.getLen).sum)
   }
+
+  private def isAgedDebris(st: FileStatus, horizon: Long): Boolean =
+    st.isFile && OcfStore.isDebris(st.getPath.getName) &&
+      st.getModificationTime < horizon
 
   /** CHANGE DATA FEED between two snapshots — the Delta
     * CDF / Iceberg incremental-read role in the store's append-only
@@ -609,10 +546,8 @@ object OcfMaintenance {
   def changes(spark: SparkSession, dir: String, fromMillis: Long,
               toMillis: Long): DataFrame = {
     require(fromMillis <= toMillis, "changes: from must be <= to")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val from = OcfStore.snapshotAt(dir, conf, fromMillis).toSet
-    val added = OcfStore.snapshotAt(dir, conf, toMillis)
-      .filterNot(from)
+    val added = OcfStore.snapshotDiff(dir, OcfStore.driverConf(),
+      fromMillis, toMillis)
     val pinned = spark.read.format("graft-ocf")
       .option("timestampAsOf", toMillis.toString)
     if (added.isEmpty)

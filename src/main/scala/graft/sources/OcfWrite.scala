@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.avro.file.{CodecFactory, DataFileWriter}
 import org.apache.avro.generic.{GenericDatumWriter, GenericRecord}
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.util.SerializableConfiguration
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
@@ -64,7 +64,7 @@ class OcfWriteBuilder(dir: String, info: LogicalWriteInfo)
   private val keyBloomBits =
     Option(info.options.get("keyBloomBits")).map(_.toInt).getOrElse(0)
   // keepRetired=true: an overwrite RENAMES the old generation to
-  // hidden .stale files instead of deleting them, so timestampAsOf
+  // hidden retired files instead of deleting them, so timestampAsOf
   // reads can still serve pre-rewrite snapshots until vacuum's age
   // gate collects them — the time-travel retention window
   private val keepRetired =
@@ -103,22 +103,23 @@ class OcfWriteBuilder(dir: String, info: LogicalWriteInfo)
         SortDirection.ASCENDING))
     // container names carry the write job's queryId so an `append` of
     // a later generation can never rename over an earlier one
+    private def factory = OcfWriterFactory(dir, info.queryId(),
+      new SerializableConfiguration(OcfStore.driverConf()), keyBloomBits,
+      codec)
     override def toBatch: BatchWrite =
-      new OcfBatchWrite(dir, doTruncate, info.queryId(),
-        new SerializableConfiguration(OcfStore.driverConf()),
-        expectedContainers, keyBloomBits, keepRetired, codec)
+      new OcfBatchWrite(factory, doTruncate, expectedContainers, keepRetired)
 
     /** S8/S9 — the streaming ingestion sink the reference IS: a
       * Structured Streaming epoch writes one generation of containers
       * plus its stats manifest, committed exactly-once under epoch
       * replay (driver crash between checkpoint and sink commit, or a
       * restarted query re-running its last epoch). The commit point is
-      * a zero-byte `_epoch-<queryId>-<id>` marker created AFTER
+      * a zero-byte per-(writer, epoch) marker created AFTER
       * containers and manifest are visible: a replayed epoch whose
       * marker exists is dropped whole; a replay over a partial install
-      * (marker absent) first retires every `part-<queryId>-*-e<id>.ocf`
-      * container of the failed attempt, so the store never
-      * double-counts an epoch.
+      * (marker absent) first retires every container and manifest of
+      * the failed attempt (`OcfStore.isEpochInstall`), so the store
+      * never double-counts an epoch.
       *
       * Epoch state is scoped PER WRITER (the queryId Spark passes here
       * is the checkpoint-stable streaming query id, so a restart
@@ -131,9 +132,7 @@ class OcfWriteBuilder(dir: String, info: LogicalWriteInfo)
     override def toStreaming: StreamingWrite = {
       if (doTruncate) throw new UnsupportedOperationException(
         "graft-ocf streaming sink supports Append output mode only")
-      new OcfStreamingWrite(dir, info.queryId(),
-        new SerializableConfiguration(OcfStore.driverConf()), keyBloomBits,
-        codec)
+      new OcfStreamingWrite(factory)
     }
   }
 }
@@ -142,40 +141,109 @@ case class OcfCommit(temp: String, dest: String,
                      stats: Option[OcfFileStats] = None)
     extends WriterCommitMessage
 
-class OcfBatchWrite(dir: String, truncate: Boolean, queryId: String,
-                    conf: SerializableConfiguration,
-                    expectedContainers: Option[Set[String]] = None,
-                    keyBloomBits: Int = 0,
-                    keepRetired: Boolean = false,
-                    codec: String = "null")
-    extends BatchWrite {
-  override def createBatchWriterFactory(info: PhysicalWriteInfo)
-      : DataWriterFactory =
-    OcfWriterFactory(dir, queryId, conf, keyBloomBits, codec)
+/** The driver-side commit steps batch and streaming writes share: one
+  * install, one stats-manifest write, one retire, one temp cleanup.
+  *
+  * Hadoop FileSystem signals most failures by RETURNING FALSE, not
+  * throwing — an unchecked rename would report job success while a
+  * committed task's container silently never appears in the store.
+  * Every rename/delete on the commit path is require()d.
+  */
+object OcfCommit {
+  /** Rename every committed task temp into place; returns the installed
+    * container names. A dest can only pre-exist from a retry of THIS
+    * write (the queryId is in the name), so replacing it is idempotent.
+    */
+  def install(fs: FileSystem, messages: Array[WriterCommitMessage])
+      : Set[String] =
+    messages.collect {
+      case OcfCommit(temp, dest, _) if temp.nonEmpty =>
+        val t = new Path(temp)
+        val dst = new Path(dest)
+        if (fs.exists(t)) {
+          if (fs.exists(dst))
+            require(fs.delete(dst, false),
+              s"graft-ocf: failed to replace $dst")
+          require(fs.rename(t, dst),
+            s"graft-ocf: commit rename $t -> $dst failed")
+        }
+        dst.getName
+    }.toSet
 
-  // Hadoop FileSystem signals most failures by RETURNING FALSE, not
-  // throwing — an unchecked rename would report job success while a
-  // committed task's container silently never appears in the store.
-  // Every rename/delete on the commit path is require()d.
+  /** Per-file stats manifest (count + partition/offset/timestamp
+    * min-max) for the installed containers, written AFTER them so a
+    * reader never sees stats for a file that is not yet visible. Scan
+    * planning prunes whole files on pushed filters against these
+    * stats, and latestOffset() serves head counts from them without
+    * touching container bytes — the Parquet-footer /
+    * broker-head-offset role for the record store.
+    */
+  def writeManifest(fs: FileSystem, dir: Path, name: String,
+                    messages: Array[WriterCommitMessage],
+                    installed: Set[String]): Unit = {
+    val statLines = messages.collect {
+      case OcfCommit(temp, dest, Some(st)) if temp.nonEmpty &&
+          installed.contains(new Path(dest).getName) =>
+        st.copy(file = new Path(dest).getName).toJson
+    }
+    if (statLines.nonEmpty) {
+      val out = fs.create(new Path(dir, name), true)
+      try out.write((statLines.mkString("\n") + "\n").getBytes("UTF-8"))
+      finally out.close()
+    }
+  }
+
+  /** Retire files in two steps: RENAME to the hidden retired name
+    * first (readers filter dot-files, so each rename atomically
+    * removes the file from the read set — a failed delete can then
+    * only leave invisible garbage, never a double-counted store), then
+    * best-effort delete the hidden file — UNLESS `keep`: then the
+    * hidden files stay for `timestampAsOf` reads of earlier snapshots
+    * until vacuum's age gate collects them (the time-travel retention
+    * window).
+    */
+  def retire(fs: FileSystem, files: Seq[Path], keep: Boolean): Unit =
+    files.foreach { p =>
+      val hidden = new Path(p.getParent, OcfStore.retiredName(p.getName))
+      require(fs.rename(p, hidden), s"graft-ocf: failed to retire $p")
+      if (!keep) fs.delete(hidden, false)
+    }
+
+  /** Delete every task temp: the abort cleanup, and the drop of a
+    * replayed epoch that is already installed.
+    */
+  def dropTemps(fs: FileSystem,
+                messages: Array[WriterCommitMessage]): Unit =
+    messages.foreach {
+      case OcfCommit(temp, _, _) if temp != null && temp.nonEmpty =>
+        fs.delete(new Path(temp), false)
+      case _ => ()
+    }
+}
+
+class OcfBatchWrite(factory: OcfWriterFactory, truncate: Boolean,
+                    expectedContainers: Option[Set[String]] = None,
+                    keepRetired: Boolean = false)
+    extends BatchWrite {
+  import factory.{conf, dir, queryId}
+  override def createBatchWriterFactory(info: PhysicalWriteInfo)
+      : DataWriterFactory = factory
+
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val d = new Path(dir)
     val fs = d.getFileSystem(conf.value)
     fs.mkdirs(d)
     // overwrite ordering: install the NEW generation first (container
     // names carry the queryId, so they can never collide with an old
-    // generation's), delete the old generation LAST — a failure
+    // generation's), retire the old generation LAST — a failure
     // mid-commit leaves the previous store intact instead of deleted
     // with only part of its replacement in place
     val oldFiles: Seq[Path] =
       if (truncate)
-        fs.listStatus(d).toSeq
-          .filter { st =>
-            val n = st.getPath.getName
-            OcfStore.isLiveContainer(n) ||
-              (!n.startsWith(".") && n.startsWith("_manifest-") &&
-                n.endsWith(".ndjson"))
-          }
-          .map(_.getPath)
+        fs.listStatus(d).toSeq.map(_.getPath).filter { p =>
+          OcfStore.isLiveContainer(p.getName) ||
+            OcfStore.isManifest(p.getName)
+        }
       else Seq.empty
     // optimistic-concurrency GUARD (not a lock — it narrows the
     // whole-rewrite hazard window to the commit instant): containers
@@ -194,197 +262,93 @@ class OcfBatchWrite(dir: String, truncate: Boolean, queryId: String,
             "aborting the overwrite; retry the rewrite")
       }
     }
-    val installed = messages.collect {
-      case OcfCommit(temp, dest, _) if temp.nonEmpty =>
-        val t = new Path(temp)
-        val dst = new Path(dest)
-        if (fs.exists(t)) {
-          // a dest can only pre-exist from a retry of THIS query
-          // (same queryId in the name) — replacing it is idempotent
-          if (fs.exists(dst))
-            require(fs.delete(dst, false),
-              s"graft-ocf: failed to replace $dst")
-          require(fs.rename(t, dst),
-            s"graft-ocf: commit rename $t -> $dst failed")
-        }
-        dst.getName
-    }.toSet
-    // per-file stats manifest (count + partition/offset/timestamp
-    // min-max): one `_manifest-<queryId>.ndjson` per commit, installed
-    // AFTER its containers so a reader never sees stats for a file
-    // that is not yet visible. Scan planning prunes whole files on
-    // pushed filters against these stats, and latestOffset() serves
-    // head counts from them without touching container bytes — the
-    // Parquet-footer / broker-head-offset role for the record store.
-    val statLines = messages.collect {
-      case OcfCommit(temp, dest, Some(st)) if temp.nonEmpty &&
-          installed.contains(new Path(dest).getName) =>
-        st.copy(file = new Path(dest).getName).toJson
-    }
-    if (statLines.nonEmpty) {
-      val mf = new Path(d, s"_manifest-$queryId.ndjson")
-      val out = fs.create(mf, true)
-      try out.write((statLines.mkString("\n") + "\n")
-        .getBytes("UTF-8"))
-      finally out.close()
-    }
-    // retire the old generation in two steps: RENAME to a dotted name
-    // first (readers filter dot-files, so each rename atomically
-    // removes the file from the read set — a failed delete can then
-    // only leave invisible garbage, never a double-counted store),
-    // then best-effort delete the hidden file — UNLESS keepRetired:
-    // then the hidden files stay for `timestampAsOf` reads of
-    // pre-rewrite snapshots, until vacuum's age gate collects them
-    // (the time-travel retention window)
-    oldFiles.filterNot(p => installed.contains(p.getName))
-      .foreach { p =>
-        val hidden = new Path(p.getParent, "." + p.getName + ".stale")
-        require(fs.rename(p, hidden),
-          s"graft-ocf: truncate failed to retire $p")
-        if (!keepRetired) fs.delete(hidden, false)
-      }
+    val installed = OcfCommit.install(fs, messages)
+    // one manifest per commit
+    OcfCommit.writeManifest(fs, d, OcfStore.manifestName(queryId, None),
+      messages, installed)
+    OcfCommit.retire(fs,
+      oldFiles.filterNot(p => installed.contains(p.getName)), keepRetired)
     // time-travel snapshot log: the live set after THIS commit
     OcfStore.writeSnapshot(dir, conf.value)
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val d = new Path(dir)
-    val fs = d.getFileSystem(conf.value)
-    messages.foreach {
-      case OcfCommit(temp, _, _) if temp.nonEmpty =>
-        fs.delete(new Path(temp), false)
-      case _ => ()
-    }
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    OcfCommit.dropTemps(new Path(dir).getFileSystem(conf.value), messages)
 }
 
 /** The streaming side of the commit protocol. Epoch-local dest names
-  * carry the writer's queryId prefix AND the `-e<epochId>.ocf` suffix,
-  * so a replayed attempt's partial install is identifiable (and
-  * retirable) by THIS writer's re-run without touching the installs of
-  * any other query appending to the same store concurrently. Spark's
-  * streaming queryId is the checkpoint-stable query id, so a
-  * same-checkpoint restart replays in the same scope; a
-  * reset-checkpoint re-run is a new writer whose epoch 0 must append,
-  * not collide with the old writer's epoch 0.
+  * carry the writer's queryId AND its epoch id, so a replayed
+  * attempt's partial install is identifiable (and retirable) by THIS
+  * writer's re-run without touching the installs of any other query
+  * appending to the same store concurrently. Spark's streaming queryId
+  * is the checkpoint-stable query id, so a same-checkpoint restart
+  * replays in the same scope; a reset-checkpoint re-run is a new
+  * writer whose epoch 0 must append, not collide with the old writer's
+  * epoch 0.
   */
-class OcfStreamingWrite(dir: String, queryId: String,
-                        conf: SerializableConfiguration,
-                        keyBloomBits: Int = 0,
-                        codec: String = "null")
-    extends StreamingWrite {
-
+class OcfStreamingWrite(factory: OcfWriterFactory) extends StreamingWrite {
+  import factory.{conf, dir, queryId}
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
-      : StreamingDataWriterFactory = OcfStreamingWriterFactory(dir,
-    queryId, conf, keyBloomBits, codec)
+      : StreamingDataWriterFactory = factory
 
   override def commit(epochId: Long,
                       messages: Array[WriterCommitMessage]): Unit = {
     val d = new Path(dir)
     val fs = d.getFileSystem(conf.value)
     fs.mkdirs(d)
-    val marker = new Path(d, s"_epoch-$queryId-$epochId")
+    val marker = new Path(d, OcfStore.epochMarkerName(queryId, epochId))
     if (fs.exists(marker)) {
       // this epoch was fully installed by a previous attempt OF THIS
       // WRITER — a replay after recovery. Drop its temps; install
       // nothing twice. Another writer's same-numbered epoch has its
       // own marker and never trips this.
-      messages.foreach {
-        case OcfCommit(temp, _, _) if temp.nonEmpty =>
-          fs.delete(new Path(temp), false)
-        case _ => ()
-      }
+      OcfCommit.dropTemps(fs, messages)
       return
     }
     // a previous attempt of THIS WRITER's epoch may have crashed
     // mid-install (marker absent, some containers visible): retire its
-    // files first — readers filter dot-files, so each rename atomically
-    // removes the orphan from the read set. Scoped by queryId prefix:
-    // a concurrent query's epoch-N containers are NOT this writer's
-    // orphans.
-    val prefixOcf = s"part-$queryId-"
-    val suffixOcf = s"-e$epochId.ocf"
-    val mfName = s"_manifest-$queryId-e$epochId.ndjson"
-    fs.listStatus(d).toSeq
-      .filter { st =>
-        val n = st.getPath.getName
-        !n.startsWith(".") &&
-          ((n.startsWith(prefixOcf) && n.endsWith(suffixOcf)) ||
-            n == mfName)
-      }
-      .foreach { st =>
-        val hidden = new Path(d, "." + st.getPath.getName + ".stale")
-        require(fs.rename(st.getPath, hidden),
-          s"graft-ocf: failed to retire orphan ${st.getPath}")
-        fs.delete(hidden, false)
-      }
-    val installed = messages.collect {
-      case OcfCommit(temp, dest, _) if temp.nonEmpty =>
-        val t = new Path(temp)
-        val dst = new Path(dest)
-        if (fs.exists(t)) {
-          if (fs.exists(dst))
-            require(fs.delete(dst, false),
-              s"graft-ocf: failed to replace $dst")
-          require(fs.rename(t, dst),
-            s"graft-ocf: commit rename $t -> $dst failed")
-        }
-        dst.getName
-    }.toSet
+    // files first. Scoped by queryId: a concurrent query's epoch-N
+    // containers are NOT this writer's orphans.
+    OcfCommit.retire(fs, fs.listStatus(d).toSeq.map(_.getPath)
+      .filter(p => OcfStore.isEpochInstall(p.getName, queryId, epochId)),
+      keep = false)
+    val installed = OcfCommit.install(fs, messages)
     // stats manifest after its containers, marker last: the marker is
     // the atomic commit point, and stats are never visible for files
     // that are not
-    val statLines = messages.collect {
-      case OcfCommit(temp, dest, Some(st)) if temp.nonEmpty &&
-          installed.contains(new Path(dest).getName) =>
-        st.copy(file = new Path(dest).getName).toJson
-    }
-    if (statLines.nonEmpty) {
-      val mf = new Path(d, s"_manifest-$queryId-e$epochId.ndjson")
-      val out = fs.create(mf, true)
-      try out.write((statLines.mkString("\n") + "\n").getBytes("UTF-8"))
-      finally out.close()
-    }
+    OcfCommit.writeManifest(fs, d,
+      OcfStore.manifestName(queryId, Some(epochId)), messages, installed)
     fs.create(marker, true).close()
     // time-travel snapshot log: the live set after THIS epoch
     OcfStore.writeSnapshot(dir, conf.value)
   }
 
   override def abort(epochId: Long,
-                     messages: Array[WriterCommitMessage]): Unit = {
-    val d = new Path(dir)
-    val fs = d.getFileSystem(conf.value)
-    messages.foreach {
-      case OcfCommit(temp, _, _) if temp != null && temp.nonEmpty =>
-        fs.delete(new Path(temp), false)
-      case _ => ()
-    }
-  }
+                     messages: Array[WriterCommitMessage]): Unit =
+    OcfCommit.dropTemps(new Path(dir).getFileSystem(conf.value), messages)
 }
 
-case class OcfStreamingWriterFactory(dir: String, queryId: String,
-                                     conf: SerializableConfiguration,
-                                     keyBloomBits: Int = 0,
-                                     codec: String = "null")
-    extends StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long,
-                            epochId: Long): DataWriter[InternalRow] =
-    new OcfDataWriter(
-      s"$dir/.part-$queryId-$partitionId-$taskId-e$epochId.ocf.tmp",
-      f"$dir/part-$queryId-$partitionId%05d-e$epochId.ocf", conf,
-      keyBloomBits, codec)
-}
-
+/** One task-writer factory for both commit paths: a streaming writer
+  * carries its epoch id into the container and temp names, a batch
+  * writer does not.
+  */
 case class OcfWriterFactory(dir: String, queryId: String,
                             conf: SerializableConfiguration,
                             keyBloomBits: Int = 0,
                             codec: String = "null")
-    extends DataWriterFactory {
+    extends DataWriterFactory with StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
-      : DataWriter[InternalRow] = new OcfDataWriter(
-    s"$dir/.part-$queryId-$partitionId-$taskId.ocf.tmp",
-    f"$dir/part-$queryId-$partitionId%05d.ocf", conf, keyBloomBits,
-    codec)
+      : DataWriter[InternalRow] = writer(partitionId, taskId, None)
+  override def createWriter(partitionId: Int, taskId: Long,
+                            epochId: Long): DataWriter[InternalRow] =
+    writer(partitionId, taskId, Some(epochId))
+
+  private def writer(partitionId: Int, taskId: Long,
+                     epoch: Option[Long]): DataWriter[InternalRow] =
+    new OcfDataWriter(
+      s"$dir/${OcfStore.tempName(queryId, partitionId, taskId, epoch)}",
+      s"$dir/${OcfStore.containerName(queryId, partitionId, epoch)}",
+      conf, keyBloomBits, codec)
 }
 
 /** Codec names accepted by the `codec` writer option — resolved via
@@ -428,8 +392,10 @@ class OcfDataWriter(temp: String, dest: String,
     // current Avro block is closed (`sync()`) and the segment's
     // (endCount, maxTs, nextSegmentPos) is recorded — the manifest
     // entry that lets the timestamp seek block-skip a mega-container
-    // instead of decoding it from record 0 on the driver
-    private val segRecords = OcfDataWriter.tsIndexEvery
+    // instead of decoding it from record 0 on the driver. At 4096 a
+    // 10M-record mega-container carries ~2.4k manifest triples
+    // (~60 KB) and the driver-side seek decodes at most one segment.
+    private val segRecords = 4096
     private var segMaxTs = Long.MinValue
     private var lastSegEnd = 0L
     private val tsIdx = scala.collection.mutable.ArrayBuffer[OcfTsIdxEntry]()
@@ -489,15 +455,4 @@ class OcfDataWriter(temp: String, dest: String,
 
     override def close(): Unit =
       if (writer != null) { writer.close(); writer = null }
-}
-
-object OcfDataWriter {
-  /** Segment length of the block-level timestamp index (records per
-    * indexed Avro block). Overridable for tests via
-    * `graft.ocf.tsIndexEvery`; at the default a 10M-record
-    * mega-container carries ~2.4k manifest triples (~60 KB) and the
-    * driver-side timestamp seek decodes at most one segment.
-    */
-  def tsIndexEvery: Int =
-    sys.props.get("graft.ocf.tsIndexEvery").map(_.toInt).getOrElse(4096)
 }

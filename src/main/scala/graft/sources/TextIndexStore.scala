@@ -68,56 +68,21 @@ object TextIndexStore {
     ids.select(col(idCol).cast(LongType).as("doc_id")).distinct()
       .write.mode("overwrite").parquet(s"${tombsDir(dir)}/seq=$seq")
 
-  /** (frame, generation count) for a seq'd directory — the count lets
-    * [[read]] skip latest-wins resolution on a compacted store.
-    */
-  private def readSeqDirs(spark: SparkSession, base: String)
-      : (DataFrame, Int) = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(base), spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(base)
-    if (!fs.exists(p)) return (spark.emptyDataFrame, 0)
-    val seqs = fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("seq="))
-      .map(_.getPath.toString)
-    if (seqs.isEmpty) (spark.emptyDataFrame, 0)
-    else (spark.read.option("basePath", base).parquet(seqs: _*), seqs.size)
-  }
-
-  /** Latest-wins resolution of a seq'd frame keyed by doc_id against
-    * the tombstones (AnnIndexStore.read's algebra).
-    */
-  private def resolve(rows: DataFrame, tombs: DataFrame): DataFrame = {
-    if (rows.isEmpty) return rows
-    val latest = rows.groupBy(col("doc_id").as("l_id"))
-      .agg(max(col("seq")).as("l_seq"))
-    val live = rows.join(broadcast(latest),
-      col("doc_id") === col("l_id") && col("seq") === col("l_seq"))
-    if (tombs.isEmpty) live
-    else {
-      val dmax = tombs.groupBy(col("doc_id").as("d_id"))
-        .agg(max(col("seq")).as("d_seq"))
-      live.join(broadcast(dmax), col("doc_id") === col("d_id"),
-          "left_outer")
-        .filter(col("d_seq").isNull || col("l_seq") > col("d_seq"))
-    }
-  }
-
   /** The live (postings, docstats) pair. Postings are row-equivalent
     * to indexing the current corpus from scratch (asserted by the
     * `text_index_store` rebuild-equivalence oracle).
     */
   def read(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val (tombs, nTombSeqs) = readSeqDirs(spark, tombsDir(dir))
-    val (postsRaw, nPostSeqs) = readSeqDirs(spark, postingsDir(dir))
-    val (statsRaw, nStatSeqs) = readSeqDirs(spark, docstatsDir(dir))
+    val (tombs, nTombSeqs) = SeqDirs.read(spark, tombsDir(dir))
+    val (postsRaw, nPostSeqs) = SeqDirs.read(spark, postingsDir(dir))
+    val (statsRaw, nStatSeqs) = SeqDirs.read(spark, docstatsDir(dir))
     // compacted fast path: one generation and no tombstones means
     // every row is live BY CONSTRUCTION — the latest-wins join (a
     // full-scan aggregate + broadcast build per frame) would resolve
     // nothing. This is the read a serving tier pays at steady state.
     def resolved(raw: DataFrame, nSeqs: Int): DataFrame =
-      if (nSeqs == 1 && nTombSeqs == 0) raw
-      else resolve(raw, if (nTombSeqs == 0) spark.emptyDataFrame else tombs)
+      if (nSeqs == 1 && nTombSeqs == 0 || raw.isEmpty) raw
+      else SeqDirs.latestWins(raw, tombs, "doc_id")
     val posts = resolved(postsRaw, nPostSeqs)
     val stats = resolved(statsRaw, nStatSeqs)
     (if (nPostSeqs == 0 || posts.isEmpty) spark.emptyDataFrame
@@ -197,14 +162,8 @@ object TextIndexStore {
       .parquet(s"${postingsDir(dir)}/seq=$compactSeq")
     st.write.mode("overwrite")
       .parquet(s"${docstatsDir(dir)}/seq=$compactSeq")
-    for (base <- Seq(postingsDir(dir), docstatsDir(dir))) {
-      val bd = new org.apache.hadoop.fs.Path(base)
-      fs.listStatus(bd).toSeq
-        .filter(s => s.isDirectory &&
-          s.getPath.getName.startsWith("seq=") &&
-          s.getPath.getName != s"seq=$compactSeq")
-        .foreach(s => fs.delete(s.getPath, true))
-    }
+    SeqDirs.dropAllBut(fs, postingsDir(dir), compactSeq)
+    SeqDirs.dropAllBut(fs, docstatsDir(dir), compactSeq)
     val td = new org.apache.hadoop.fs.Path(tombsDir(dir))
     if (fs.exists(td)) fs.delete(td, true)
     p.unpersist(); st.unpersist()

@@ -224,7 +224,7 @@ class OcfSourceSpec extends SparkSuite {
       filters: Array[org.apache.spark.sql.sources.Filter],
       required: org.apache.spark.sql.types.StructType =
         OcfFormat.sparkSchema): Seq[OcfSlice] = {
-    val b = new OcfScanBuilder(dir, None, hconf)
+    val b = new OcfScanBuilder(OcfReadOptions(Seq(dir), hconf))
     b.pruneColumns(required)
     b.pushFilters(filters)
     b.build().toBatch.planInputPartitions()
@@ -329,7 +329,7 @@ class OcfSourceSpec extends SparkSuite {
     val dir = tmpDir("ocf_limit")
     stratifiedStore(dir)
     // direct: the builder caps planned ranges at the pushed limit
-    val b = new OcfScanBuilder(dir, None, hconf)
+    val b = new OcfScanBuilder(OcfReadOptions(Seq(dir), hconf))
     assert(b.pushLimit(70) && b.isPartiallyPushed())
     val planned = b.build().toBatch.planInputPartitions()
       .map(_.asInstanceOf[OcfSlice]).toSeq
@@ -363,7 +363,7 @@ class OcfSourceSpec extends SparkSuite {
     def stats(filters: Array[Filter],
               required: org.apache.spark.sql.types.StructType =
                 OcfFormat.sparkSchema) = {
-      val b = new OcfScanBuilder(dir, None, hconf)
+      val b = new OcfScanBuilder(OcfReadOptions(Seq(dir), hconf))
       b.pruneColumns(required)
       b.pushFilters(filters)
       b.build()
@@ -405,7 +405,7 @@ class OcfSourceSpec extends SparkSuite {
     import org.apache.spark.sql.sources._
     val dir = tmpDir("ocf_runtime_filter")
     stratifiedStore(dir)
-    val b = new OcfScanBuilder(dir, None, hconf)
+    val b = new OcfScanBuilder(OcfReadOptions(Seq(dir), hconf))
     b.pruneColumns(org.apache.spark.sql.types.StructType(
       OcfFormat.sparkSchema.filter(f =>
         Seq("topic", "offset").contains(f.name))))
@@ -421,7 +421,7 @@ class OcfSourceSpec extends SparkSuite {
       s"runtime IN(1,2) must keep exactly the two matching files: $planned")
     // a limit-capped scan refuses runtime filtering (the cap was
     // computed over the unfiltered file order)
-    val lb = new OcfScanBuilder(dir, None, hconf)
+    val lb = new OcfScanBuilder(OcfReadOptions(Seq(dir), hconf))
     lb.pushLimit(10)
     assert(lb.build().asInstanceOf[org.apache.spark.sql.connector.read
       .SupportsRuntimeFiltering].filterAttributes().isEmpty)
@@ -432,7 +432,7 @@ class OcfSourceSpec extends SparkSuite {
     val dir = tmpDir("ocf_stream_prune")
     stratifiedStore(dir)
     def plannedRows(filters: Array[Filter]): Long = {
-      val ms = new OcfMicroBatchStream(dir, None, hconf,
+      val ms = new OcfMicroBatchStream(OcfReadOptions(Seq(dir), hconf),
         OcfFormat.sparkSchema, filters)
       ms.planInputPartitions(ms.initialOffset(), ms.latestOffset())
         .map { p => val r = p.asInstanceOf[OcfRange]; r.end - r.start }
@@ -442,7 +442,7 @@ class OcfSourceSpec extends SparkSuite {
     // only the partition-2 container emits a read range...
     assert(plannedRows(Array(EqualTo("partition", 2))) == 50)
     // ...while offsets still advance over every file (no replay debt)
-    val ms = new OcfMicroBatchStream(dir, None, hconf,
+    val ms = new OcfMicroBatchStream(OcfReadOptions(Seq(dir), hconf),
       OcfFormat.sparkSchema, Array(EqualTo("partition", 2)))
     val latest = ms.latestOffset().asInstanceOf[OcfOffset]
     assert(latest.counts.values.sum == 200)
@@ -773,7 +773,7 @@ class OcfSourceSpec extends SparkSuite {
       conf: org.apache.spark.util.SerializableConfiguration,
       queryId: String = "q1")
       : org.apache.spark.sql.connector.write.WriterCommitMessage = {
-    val w = OcfStreamingWriterFactory(dir, queryId, conf)
+    val w = OcfWriterFactory(dir, queryId, conf)
       .createWriter(0, 0L, epochId)
     rows.foreach(w.write)
     val msg = w.commit()
@@ -785,7 +785,7 @@ class OcfSourceSpec extends SparkSuite {
     val dir = tmpDir("ocf_epoch_replay")
     val conf = new org.apache.spark.util.SerializableConfiguration(
       spark.sessionState.newHadoopConf())
-    val sw = new OcfStreamingWrite(dir, "q1", conf)
+    val sw = new OcfStreamingWrite(OcfWriterFactory(dir, "q1", conf))
     sw.commit(3L, Array(writeEpoch(dir, 3L, streamRows(0, 40), conf)))
     val after1 = spark.read.format("graft-ocf").load(dir).count()
     assert(after1 == 40)
@@ -794,7 +794,7 @@ class OcfSourceSpec extends SparkSuite {
     // unacknowledged batch — Spark's streaming queryId is the
     // checkpoint-stable query id, so the replay commits under the same
     // id): the marker must drop the whole install and clean the temp
-    val sw2 = new OcfStreamingWrite(dir, "q1", conf)
+    val sw2 = new OcfStreamingWrite(OcfWriterFactory(dir, "q1", conf))
     sw2.commit(3L,
       Array(writeEpoch(dir, 3L, streamRows(0, 40), conf, "q1")))
     assert(spark.read.format("graft-ocf").load(dir).count() == 40,
@@ -810,7 +810,7 @@ class OcfSourceSpec extends SparkSuite {
       spark.sessionState.newHadoopConf())
     // simulate a crashed attempt: epoch 7's container visible but no
     // _epoch-7 marker (crash between rename and marker create)
-    val sw = new OcfStreamingWrite(dir, "crashed", conf)
+    val sw = new OcfStreamingWrite(OcfWriterFactory(dir, "crashed", conf))
     val orphanMsg = writeEpoch(dir, 7L, streamRows(0, 25), conf, "crashed")
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(conf.value)
@@ -824,7 +824,7 @@ class OcfSourceSpec extends SparkSuite {
 
     // the recovered run re-commits epoch 7 (same checkpoint => same
     // stable queryId): the orphan must be retired, never double-counted
-    val sw2 = new OcfStreamingWrite(dir, "crashed", conf)
+    val sw2 = new OcfStreamingWrite(OcfWriterFactory(dir, "crashed", conf))
     sw2.commit(7L,
       Array(writeEpoch(dir, 7L, streamRows(0, 25), conf, "crashed")))
     val offsets = spark.read.format("graft-ocf").load(dir)
@@ -869,8 +869,8 @@ class OcfSourceSpec extends SparkSuite {
     val dir = tmpDir("ocf_two_writers")
     val conf = new org.apache.spark.util.SerializableConfiguration(
       spark.sessionState.newHadoopConf())
-    val wa = new OcfStreamingWrite(dir, "writer-a", conf)
-    val wb = new OcfStreamingWrite(dir, "writer-b", conf)
+    val wa = new OcfStreamingWrite(OcfWriterFactory(dir, "writer-a", conf))
+    val wb = new OcfStreamingWrite(OcfWriterFactory(dir, "writer-b", conf))
     // interleaved commits with OVERLAPPING epoch numbers — each
     // writer's epoch scope is independent, so b's epoch 0 must append
     // even though a's _epoch marker for 0 already exists, and a's
@@ -888,7 +888,7 @@ class OcfSourceSpec extends SparkSuite {
     assert(offsets == ((0L until 20L) ++ (100L until 120L)).toSeq,
       s"both writers' rows exactly once, got ${offsets.size} rows")
     // each writer's epochs stay replay-protected in their own scope
-    val wa2 = new OcfStreamingWrite(dir, "writer-a", conf)
+    val wa2 = new OcfStreamingWrite(OcfWriterFactory(dir, "writer-a", conf))
     wa2.commit(1L,
       Array(writeEpoch(dir, 1L, streamRows(10, 20), conf, "writer-a")))
     assert(spark.read.format("graft-ocf").load(dir).count() == 40,
@@ -1164,8 +1164,8 @@ class OcfSourceSpec extends SparkSuite {
     val dir = tmpDir("ocf_marker_prune")
     val conf = new org.apache.spark.util.SerializableConfiguration(
       spark.sessionState.newHadoopConf())
-    val wa = new OcfStreamingWrite(dir, "writer-a", conf)
-    val wb = new OcfStreamingWrite(dir, "writer-b", conf)
+    val wa = new OcfStreamingWrite(OcfWriterFactory(dir, "writer-a", conf))
+    val wb = new OcfStreamingWrite(OcfWriterFactory(dir, "writer-b", conf))
     (0 until 6).foreach { e =>
       wa.commit(e.toLong,
         Array(writeEpoch(dir, e.toLong, streamRows(e * 5, e * 5 + 5),
@@ -1182,7 +1182,7 @@ class OcfSourceSpec extends SparkSuite {
       "_epoch-writer-a-5", "_epoch-writer-b-0"), s"got $markers")
     // replay of the newest (the only epoch Spark can re-commit) is
     // still dropped; rows stay exactly-once
-    val wa2 = new OcfStreamingWrite(dir, "writer-a", conf)
+    val wa2 = new OcfStreamingWrite(OcfWriterFactory(dir, "writer-a", conf))
     wa2.commit(5L,
       Array(writeEpoch(dir, 5L, streamRows(25, 30), conf, "writer-a")))
     assert(spark.read.format("graft-ocf").load(dir).count() == 35)
@@ -1543,6 +1543,20 @@ class OcfSourceSpec extends SparkSuite {
     assert(OcfMaintenance.vacuum(spark, dir, 3600 * 1000) == ((0, 0L)))
     // missing dir: no-op
     assert(OcfMaintenance.vacuum(spark, dir + "_absent") == ((0, 0L)))
+  }
+
+  test("vacuum and advise treat a crashed compactManifests temp as " +
+      "debris") {
+    val dir = tmpDir("ocf_vacuum_manifest_tmp")
+    kafkaDf(0, 100).write.format("graft-ocf").mode("overwrite").save(dir)
+    val f = new java.io.File(dir, "._manifest-z1.ndjson.tmp")
+    java.nio.file.Files.write(f.toPath, Array[Byte](1, 2, 3, 4))
+    assert(f.setLastModified(System.currentTimeMillis() - 48L * 3600 * 1000))
+    val vacuumRule = OcfMaintenance.advise(spark, dir).collect()
+      .filter(_.getString(0) == "vacuum").map(_.getLong(2)).toSeq
+    assert(vacuumRule == Seq(1L), s"advise vacuum rule: $vacuumRule")
+    assert(OcfMaintenance.vacuum(spark, dir) == ((1, 4L)))
+    assert(!f.exists())
   }
 
   test("size retention keeps the newest containers within the budget") {
@@ -1944,50 +1958,45 @@ class OcfSourceSpec extends SparkSuite {
     val dir = tmpDir("ocf_tsidx")
     val baseUs = 1700000000000000L // 2023-11-14T22:13:20Z
     // one single-partition container, time-ordered (the streaming
-    // sink's layout), 1000 records at 1-second spacing; index every
-    // 100 records so the file carries 9 interior sync points
-    val prev = sys.props.get("graft.ocf.tsIndexEvery")
-    sys.props("graft.ocf.tsIndexEvery") = "100"
-    try {
-      (0 until 1000).map(_.toLong).toDF("id").select(
-        col("id").cast("string").cast("binary").as("key"),
-        col("id").cast("string").cast("binary").as("value"),
-        lit("events").as("topic"), lit(0).as("partition"),
-        col("id").as("offset"),
-        timestamp_micros(lit(baseUs) + col("id") * 1000000L)
-          .as("timestamp"),
-        lit(0).as("timestampType"))
-        .repartition(1)
-        .write.format("graft-ocf").mode("overwrite").save(dir)
-    } finally {
-      prev match {
-        case Some(v) => sys.props("graft.ocf.tsIndexEvery") = v
-        case None => sys.props.remove("graft.ocf.tsIndexEvery")
-      }
-    }
+    // sink's layout), ten 4096-record index segments at 1-second
+    // spacing, so the file carries 9 interior sync points
+    val seg = 4096L
+    val n = 10L * seg
+    def at(i: Long): Long = baseUs + i * 1000000L
+    spark.range(n).select(
+      col("id").cast("string").cast("binary").as("key"),
+      col("id").cast("string").cast("binary").as("value"),
+      lit("events").as("topic"), lit(0).as("partition"),
+      col("id").as("offset"),
+      timestamp_micros(lit(baseUs) + col("id") * 1000000L)
+        .as("timestamp"),
+      lit(0).as("timestampType"))
+      .repartition(1)
+      .write.format("graft-ocf").mode("overwrite").save(dir)
     val stats = OcfStore.manifestStats(dir, hconf.value).values.toSeq
     assert(stats.size == 1 && stats.head.tsIdx.size == 10,
       s"expected 10 index segments, got ${stats.map(_.tsIdx.size)}")
     // manifest JSON round-trips the index
     assert(OcfFileStats.fromJson(stats.head.toJson).contains(stats.head))
 
-    // a deep seek (record 803) resolves exactly and decodes only the
-    // records of ONE 100-record segment, not the 803 before it
+    // a deep seek (80.3% into the file) resolves exactly and decodes
+    // only the records of ONE segment, not the ~33k before it
+    val deep = n * 803 / 1000
     val before = OcfStore.seekRecordsDecoded.get()
-    val cur = OcfStore.cursorsAtTimestamp(Seq(dir),
-      baseUs + 803L * 1000000L, hconf.value)
+    val cur = OcfStore.cursorsAtTimestamp(Seq(dir), at(deep), hconf.value)
     val decoded = OcfStore.seekRecordsDecoded.get() - before
-    assert(cur.values.toSeq == Seq(803L), s"wrong cursor: $cur")
-    assert(decoded <= 110L,
+    assert(cur.values.toSeq == Seq(deep), s"wrong cursor: $cur")
+    assert(decoded <= seg + seg / 10,
       s"seek decoded $decoded records — block index not applied")
 
     // one shared decode resolves start AND stop cursors of a time
     // slice; the sliced batch read stays exact on the indexed store
+    val (lo, hi) = (n * 3 / 10, n * 7 / 10)
     val sliced = spark.read.format("graft-ocf")
-      .option("startingTimestamp", (baseUs + 300L * 1000000L).toString)
-      .option("endingTimestamp", (baseUs + 700L * 1000000L).toString)
+      .option("startingTimestamp", at(lo).toString)
+      .option("endingTimestamp", at(hi).toString)
       .load(dir).select("offset").as[Long].collect().toSet
-    assert(sliced == (300L until 700L).toSet,
+    assert(sliced == (lo until hi).toSet,
       s"time slice wrong: ${sliced.size} rows")
 
     // stats still short-circuit the edges: a seek before/after the
@@ -1995,8 +2004,8 @@ class OcfSourceSpec extends SparkSuite {
     val b2 = OcfStore.seekRecordsDecoded.get()
     assert(OcfStore.cursorsAtTimestamp(Seq(dir), baseUs - 1L,
       hconf.value).values.toSeq == Seq(0L))
-    assert(OcfStore.cursorsAtTimestamp(Seq(dir),
-      baseUs + 5000L * 1000000L, hconf.value).values.toSeq == Seq(1000L))
+    assert(OcfStore.cursorsAtTimestamp(Seq(dir), at(5 * n),
+      hconf.value).values.toSeq == Seq(n))
     assert(OcfStore.seekRecordsDecoded.get() == b2,
       "edge seeks must resolve from stats alone")
   }

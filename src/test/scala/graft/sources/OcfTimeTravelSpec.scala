@@ -157,13 +157,13 @@ class OcfTimeTravelSpec extends SparkSuite {
     }
     def epoch(sw: OcfStreamingWrite, id: Long, from: Int,
               until: Int): Unit = {
-      val w = OcfStreamingWriterFactory(dir, "qtt", conf)
+      val w = OcfWriterFactory(dir, "qtt", conf)
         .createWriter(0, 0L, id)
       rows(from, until).foreach(w.write)
       val msg = w.commit(); w.close()
       sw.commit(id, Array(msg))
     }
-    val sw = new OcfStreamingWrite(dir, "qtt", conf)
+    val sw = new OcfStreamingWrite(OcfWriterFactory(dir, "qtt", conf))
     epoch(sw, 0L, 0, 30)
     val t0 = System.currentTimeMillis()
     Thread.sleep(25)
