@@ -8,10 +8,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types._
 
 import graft.engine.{KafkaShape, Tables}
-import graft.streaming.{KafkaRecord, SessionStream, StreamingPipelines}
+import graft.streaming.{KafkaRecord, StreamingPipelines}
 
 /** Streaming benchmark main (r12 VERDICT task 1): the reference is a
   * streaming engine (`PartitionedSimpleConsumerKafkaInputDStream
@@ -109,25 +108,6 @@ object BenchStream {
   private val docSchema = SchemaBuilder.record("Doc").fields()
     .requiredLong("doc_id").requiredLong("user_id")
     .requiredLong("ts_us").requiredString("text").endRecord()
-  private val docStruct = StructType(Seq(
-    StructField("doc_id", LongType), StructField("user_id", LongType),
-    StructField("ts_us", LongType), StructField("text", StringType)))
-
-  /** ChaosPipelineSpec's composed pipeline, verbatim: one watermark
-    * node feeding both stateful operators.
-    */
-  private def pipeline(kafka: DataFrame): DataFrame = {
-    val dec = StreamingPipelines.decodeWithDlq(kafka, docStruct)
-      .where(col("decode_error").isNull)
-      .select(col("doc_id"), col("user_id"),
-        timestamp_micros(col("ts_us")).as("ts"), col("text"))
-    val clean = StreamingPipelines.corpusFilterStream(
-      dec, "ts", "doc_id", "text", watermark = "2 hours")
-    SessionStream.sessionStream(
-      clean.select(col("ts"), col("user_id"),
-        col("doc_id").as("event_id")),
-      gapSeconds = 1800, watermark = "").toDF()
-  }
 
   private def ocfBytes(docs: Seq[(Long, Long, Long, String)])
       : Array[Byte] =
@@ -174,7 +154,7 @@ object BenchStream {
         }
       }
     val stream = MemoryStream[KafkaRecord]
-    val q = pipeline(stream.toDF())
+    val q = StreamingPipelines.docPipeline(stream.toDF())
       .writeStream.format("noop")
       .option("checkpointLocation", s"$tmp/ck_chaos_$label")
       .start()

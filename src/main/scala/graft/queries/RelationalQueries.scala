@@ -590,12 +590,16 @@ object RelationalQueries {
         |FROM orders GROUP BY 1""".stripMargin,
       barrier = true),
     // stream-stream attribution join, batch form (same code runs on
-    // streams with bounded state — StreamingEquivalenceSpec)
+    // streams with bounded state — StreamingEquivalenceSpec): each
+    // purchase within 30 minutes after a same-user click
     QuerySpec("attribution_join", (s, d) => {
       val ev = events(s, d)
-      graft.streaming.StreamingPipelines.attributionJoin(
-        ev.filter(col("event_type") === "click"),
-        ev.filter(col("event_type") === "purchase"))
+      graft.streaming.JoinStream.clickAttribution(
+          ev.filter(col("event_type") === "click"),
+          ev.filter(col("event_type") === "purchase"),
+          horizonSeconds = 1800, joinType = "inner")
+        .select(col("user_id"), col("click_id"), col("purchase_id"),
+          col("click_ts"), col("purchase_ts"))
     },
       """SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id,
         |       c.ts AS click_ts, p.ts AS purchase_ts

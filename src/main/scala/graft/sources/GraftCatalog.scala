@@ -203,17 +203,13 @@ class GraftCatalog extends CatalogPlugin with ProcedureCatalog {
       ProcedureParameter.in("from_ms", LongType).build(),
       ProcedureParameter.in("to_ms", LongType).build())) {
       override def call(in: InternalRow): java.util.Iterator[Scan] = {
-        val dir = in.getString(0)
-        val conf = OcfStore.driverConf()
-        val added = OcfStore.snapshotDiff(dir, conf, in.getLong(1),
-          in.getLong(2))
-        val counts = OcfStore.filesAsOf(dir, conf, in.getLong(2))
-          .map { case (_, f) => f.name -> f.count }.toMap
+        val added = OcfStore.changedFiles(in.getString(0),
+          OcfStore.driverConf(), in.getLong(1), in.getLong(2))
         val schema = StructType(Seq(
           StructField("container", StringType),
           StructField("n_records", LongType)))
-        val rows = added.map(n => new GenericInternalRow(Array[Any](
-          s(n), counts.getOrElse(n, -1L))): InternalRow).toArray
+        val rows = added.map(f => new GenericInternalRow(Array[Any](
+          s(f.name), f.count)): InternalRow).toArray
         Collections.singletonList[Scan](Result(schema, rows)).iterator()
       }
     },

@@ -1118,8 +1118,11 @@ object OcfStore extends org.apache.spark.internal.Logging {
   def driverConf(): Configuration =
     org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()
 
+  /** Block counts per qualified store dir, then per (name, length,
+    * mtime): a listing evicts only its own store's stale entries.
+    */
   private val countCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Long]()
+    new java.util.concurrent.ConcurrentHashMap[String, StoreCounts]()
   private val manifestCache = new java.util.concurrent.ConcurrentHashMap[
     (String, Long, Long), Map[String, OcfFileStats]]()
   /** Containers opened for block-count fallback — test-observable so
@@ -1267,6 +1270,12 @@ object OcfStore extends org.apache.spark.internal.Logging {
   def snapshotAt(dir: String, conf: Configuration,
                  asOfMillis: Long): Seq[String] = {
     val (fs, listing) = list(dir, conf)
+    snapshotIn(dir, fs, listing, asOfMillis)
+  }
+
+  private def snapshotIn(dir: String, fs: FileSystem,
+                         listing: Seq[FileStatus],
+                         asOfMillis: Long): Seq[String] = {
     if (listing.isEmpty)
       throw new IllegalArgumentException(
         s"graft-ocf: no store at $dir to time-travel")
@@ -1285,8 +1294,21 @@ object OcfStore extends org.apache.spark.internal.Logging {
     */
   def snapshotDiff(dir: String, conf: Configuration, fromMillis: Long,
                    toMillis: Long): Seq[String] = {
-    val from = snapshotAt(dir, conf, fromMillis).toSet
-    snapshotAt(dir, conf, toMillis).filterNot(from).sorted
+    val (fs, listing) = list(dir, conf)
+    val from = snapshotIn(dir, fs, listing, fromMillis).toSet
+    snapshotIn(dir, fs, listing, toMillis).filterNot(from).sorted
+  }
+
+  /** The [[snapshotDiff]] containers as the `toMillis` listing sees
+    * them (record counts, bytes, stats), from one LIST — the catalog
+    * `changes` census.
+    */
+  def changedFiles(dir: String, conf: Configuration, fromMillis: Long,
+                   toMillis: Long): Seq[OcfLiveFile] = {
+    val (fs, listing) = list(dir, conf)
+    val from = snapshotIn(dir, fs, listing, fromMillis).toSet
+    filesIn(dir, fs, listing, snapshotIn(dir, fs, listing, toMillis))
+      .map(_._2).filterNot(f => from(f.name))
   }
 
   /** The as-of listing twin of [[liveFiles]], as (full path, file):
@@ -1300,43 +1322,59 @@ object OcfStore extends org.apache.spark.internal.Logging {
     */
   def filesAsOf(dir: String, conf: Configuration,
                 asOfMillis: Long): Seq[(String, OcfLiveFile)] = {
+    val (fs, listing) = list(dir, conf)
+    filesIn(dir, fs, listing, snapshotIn(dir, fs, listing, asOfMillis))
+  }
+
+  /** Resolve snapshot container names against one listing, sorted. */
+  private def filesIn(dir: String, fs: FileSystem,
+                      listing: Seq[FileStatus],
+                      names: Seq[String]): Seq[(String, OcfLiveFile)] = {
     val d = new Path(dir)
-    val fs = d.getFileSystem(conf)
-    val stats = manifestStats(dir, conf)
-    snapshotAt(dir, conf, asOfMillis).sorted.map { name =>
-      val live = new Path(d, name)
-      val retired = new Path(d, retiredName(name))
-      val p =
-        if (fs.exists(live)) live
-        else if (fs.exists(retired)) retired
-        else throw new IllegalStateException(
+    val byName = listing.map(st => st.getPath.getName -> st).toMap
+    val stats = manifestStatsFrom(fs, listing)
+    val counts = storeCounts(fs, dir)
+    names.sorted.map { name =>
+      val st = byName.get(name)
+        .orElse(byName.get(retiredName(name)))
+        .getOrElse(throw new IllegalStateException(
           s"graft-ocf: snapshot container $name of $dir is gone " +
             "(vacuumed, or retired without keepRetired=true) — this " +
-            "timestamp is beyond the store's time-travel horizon")
-      (p.toString, liveFile(fs, fs.getFileStatus(p), name, stats))
+            "timestamp is beyond the store's time-travel horizon"))
+      (new Path(d, st.getPath.getName).toString,
+        liveFile(counts, fs, st, name, stats))
     }
   }
 
   /** A container as a listing sees it: the manifest's count when the
     * file is manifested, else the memoized block-header count.
     */
-  private def liveFile(fs: FileSystem, st: FileStatus, name: String,
+  private def liveFile(counts: StoreCounts, fs: FileSystem,
+                       st: FileStatus, name: String,
                        stats: Map[String, OcfFileStats]): OcfLiveFile = {
     val fstats = stats.get(name)
-    OcfLiveFile(name, fstats.map(_.count).getOrElse(blockCount(fs, st)),
+    OcfLiveFile(name,
+      fstats.map(_.count).getOrElse(blockCount(counts, fs, st)),
       st.getLen, fstats)
   }
 
+  private type StoreCounts =
+    java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Long]
+
+  private def storeCounts(fs: FileSystem, dir: String): StoreCounts =
+    countCache.computeIfAbsent(fs.makeQualified(new Path(dir)).toString,
+      _ => new StoreCounts())
+
   /** Record count from Avro container BLOCK headers (no record decode)
-    * for a container the manifest does not cover, memoized per (path,
-    * length, mtime): committed containers are immutable (the V2 writer
+    * for a container the manifest does not cover, memoized per store
+    * by (name, length, mtime): committed containers are immutable (the V2 writer
     * renames a finished temp into place, never appends), so a cache
     * hit is always valid and a rewritten file busts the key.
     */
-  private def blockCount(fs: FileSystem,
+  private def blockCount(counts: StoreCounts, fs: FileSystem,
                          st: FileStatus): Long =
-    countCache.computeIfAbsent(
-      (st.getPath.toString, st.getLen, st.getModificationTime), _ => {
+    counts.computeIfAbsent(
+      (st.getPath.getName, st.getLen, st.getModificationTime), _ => {
         containerOpens.incrementAndGet()
         val s = new DataFileStream[GenericRecord](
           fs.open(st.getPath), new GenericDatumReader[GenericRecord]())
@@ -1577,17 +1615,16 @@ object OcfStore extends org.apache.spark.internal.Logging {
     val files = listing
       .filter(st => isLiveContainer(st.getPath.getName))
     val stats = manifestStatsFrom(fs, listing)
-    // evict superseded keys for THIS dir (rewritten or vanished
+    // evict this store's superseded keys (rewritten or vanished
     // files) so a long-running driver over a churning store doesn't
     // leak cache entries
-    val qdir = fs.makeQualified(new Path(dir)).toString
+    val counts = storeCounts(fs, dir)
     val live = files
-      .map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
+      .map(st => (st.getPath.getName, st.getLen, st.getModificationTime))
       .toSet
-    countCache.keySet.removeIf(k =>
-      new Path(k._1).getParent.toString == qdir && !live.contains(k))
+    counts.keySet.removeIf(k => !live.contains(k))
     files
-      .map(st => liveFile(fs, st, st.getPath.getName, stats))
+      .map(st => liveFile(counts, fs, st, st.getPath.getName, stats))
       .sortBy(_.name)
   }
 }

@@ -2,10 +2,12 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.DoubleType
 
-import graft.functions.{GraftFunctions, TopKAgg}
+import graft.functions.GraftFunctions
 import graft.ops.Dedup
+import graft.sources.AnnIndexStore
 
 /** Streaming twin of `graft.ops.Similarity.ivfProbeIndex` — the ANN
   * SERVING path: query vectors arrive on a stream and each probes the
@@ -14,21 +16,13 @@ import graft.ops.Dedup
   *
   * Dataflow: quantize + nearest-cells fan-out (stateless codegen) →
   * stream-static join against the cell-keyed index (the static side
-  * is re-planned every trigger, so the API persists the projected
-  * postings by default — `cacheIndex`; on a cell-partitioned store
-  * the cold read touches only probed cells' postings) →
-  * windowed top-k aggregate.
-  *
-  * The ranking itself is the part Structured Streaming forbids as a
-  * window function (`row_number` over a stream has no incremental
-  * form), so it runs as [[graft.functions.TopKAgg]] — a mergeable
-  * bounded-heap aggregate whose per-key state is exactly k hits, the
-  * incremental twin of the batch rank-limit. State is bounded two
-  * ways: k hits per (window, query) key, and the watermark retires
-  * whole windows — nothing grows with stream lifetime. A candidate
-  * meeting a query in several probed cells folds inside the heap (the
-  * batch probe's `dropDuplicates` pre-rank), so ranks never count a
-  * neighbor twice.
+  * is re-planned every trigger, so the projected postings persist
+  * when the queries stream — [[ProbeTwin.static]]; on a
+  * cell-partitioned store the cold read touches only probed cells'
+  * postings) → windowed top-k aggregate ([[ProbeTwin.rankTopK]]). A
+  * candidate meeting a query in several probed cells folds inside the
+  * heap (the batch probe's `dropDuplicates` pre-rank), so ranks never
+  * count a neighbor twice.
   */
 object AnnStream {
 
@@ -39,37 +33,20 @@ object AnnStream {
     * their own `seq=<batchId>` files; deletes append tombstones.
     * Within one micro-batch a delete of an id wins over its add
     * (tombstones kill appends at the same seq); a later batch's
-    * re-add resurrects.
-    *
-    * Exactly-once under replay: both writers overwrite their own
-    * batchId-keyed subdirectory, so a recovered epoch rewrites the
-    * same files (the OcfWrite epoch-commit pattern). After any prefix
-    * of batches, `AnnIndexStore.read` equals a batch rebuild over the
-    * corpus that prefix implies — asserted, with checkpoint restart,
-    * in AnnIndexStoreSpec.
-    *
-    * Returns the started query; callers own checkpoint placement via
-    * `checkpointLocation`.
+    * re-add resurrects. Exactly-once under replay
+    * ([[ProbeTwin.maintainStream]]): after any prefix of batches,
+    * `AnnIndexStore.read` equals a batch rebuild over the corpus that
+    * prefix implies — asserted, with checkpoint restart, in
+    * AnnIndexStoreSpec.
     */
   def indexMaintainStream(deltas: DataFrame, dir: String,
                           centroids: Array[Array[Long]], idCol: String,
                           vecCol: String, opCol: String,
                           checkpointLocation: String,
-                          nAssign: Int = 2)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    deltas.writeStream
-      .option("checkpointLocation", checkpointLocation)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val adds = batch.filter(col(opCol) === "add")
-        val dels = batch.filter(col(opCol) === "del")
-        if (!adds.isEmpty)
-          graft.sources.AnnIndexStore.append(adds, idCol, vecCol,
-            centroids, dir, batchId, nAssign)
-        if (!dels.isEmpty)
-          graft.sources.AnnIndexStore.tombstone(dels, idCol, dir, batchId)
-        ()
-      }
-      .start()
+                          nAssign: Int = 2): StreamingQuery =
+    ProbeTwin.maintainStream(deltas, opCol, checkpointLocation)(
+      AnnIndexStore.append(_, idCol, vecCol, centroids, dir, _, nAssign),
+      AnnIndexStore.tombstone(_, idCol, dir, _))
 
   /** @param centroids trained cell centroids (quantized rows from
     *                  `Similarity.trainCentroids` — the same array the
@@ -77,19 +54,6 @@ object AnnStream {
     * @param index     static IVF index (vec_id, cell, q, nn) from
     *                  `Similarity.ivfIndex` or its persisted read-back
     * @param queries   streaming frame with `tsCol`, `idCol`, `vecCol`
-    * @param cacheIndex when true (default) and `queries` is streaming,
-    *                  the projected index is persisted
-    *                  (MEMORY_AND_DISK) so each trigger probes the
-    *                  cached postings instead of re-scanning the
-    *                  source — Structured Streaming re-plans the
-    *                  static side of a stream-static join EVERY
-    *                  micro-batch, and at 100 TB an uncached
-    *                  per-trigger index re-scan is a table scan per
-    *                  micro-batch, not a probe. The index is the
-    *                  small amortized artifact (~24-100 B/posting),
-    *                  sized to fit executor storage; spill to disk is
-    *                  the fallback, never a correctness issue.
-    *                  Asserted cached-per-trigger in AnnStreamSpec.
     * @return (window, query_id, neighbor_id, rnk, cosine) — identical
     *         rows to `Similarity.ivfProbeIndex` plus the window,
     *         emitted when the watermark closes the window. Runs
@@ -99,35 +63,22 @@ object AnnStream {
                      queries: DataFrame, idCol: String, vecCol: String,
                      tsCol: String, k: Int = 5, nProbe: Int = 8,
                      watermark: String = "10 minutes",
-                     windowDur: String = "10 minutes",
-                     cacheIndex: Boolean = true): DataFrame = {
-    val qs = (if (queries.isStreaming)
-        queries.withWatermark(tsCol, watermark) else queries)
+                     windowDur: String = "10 minutes"): DataFrame = {
+    val qs = queries.withWatermark(tsCol, watermark)
       .select(col(tsCol), col(idCol).as("query_id"),
         Dedup.quantize(col(vecCol)).as("q_q"))
       .withColumn("nn_q", Dedup.qdot(col("q_q"), col("q_q")))
       .withColumn("cell", explode(
         GraftFunctions.nearestCentroids(col("q_q"), centroids, nProbe)))
-    val postings = {
-      val p = index.select(col("vec_id"), col("cell"), col("q"), col("nn"))
-      if (cacheIndex && queries.isStreaming)
-        p.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else p
-    }
+    val postings = ProbeTwin.static(queries,
+      index.select(col("vec_id"), col("cell"), col("q"), col("nn")))
     val scored = qs
       .join(postings, Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("cosine",
         Dedup.qdot(col("q"), col("q_q")).cast(DoubleType) /
           sqrt(col("nn").cast(DoubleType) * col("nn_q").cast(DoubleType)))
-    val topk = udaf(new TopKAgg(k))
-    scored
-      .groupBy(window(col(tsCol), windowDur), col("query_id"))
-      .agg(topk(col("cosine"), col("vec_id")).as("top"))
-      .select(col("window"), col("query_id"), posexplode(col("top")))
-      .select(col("window"), col("query_id"),
-        col("col.id").as("neighbor_id"),
-        (col("pos") + 1).cast(LongType).as("rnk"),
-        col("col.score").as("cosine"))
+    ProbeTwin.rankTopK(scored, window(col(tsCol), windowDur), "query_id",
+      k, "cosine", "vec_id", "neighbor_id", "rnk", "cosine")
   }
 }

@@ -19,6 +19,13 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Kafka 0.8 error codes handled, as the reference dispatches them:
   * 0 NoError, 1 OffsetOutOfRange, 5 LeaderNotAvailable,
   * 6 NotLeaderForPartition.
+  *
+  * X6 — the same state is the partition's health surface, as the
+  * reference's gauges and Meter read its `ConsumerData` (`:214-228`,
+  * `Meter.mark(consumed)` `:387-389`): besides cursor and processed
+  * total it carries a deterministic EWMA of per-trigger delivery
+  * (α = 1/2, seeded with the first trigger's delivered count —
+  * reproducible across replays, unlike a wall-clock Meter).
   */
 object ConsumerStateMachine {
 
@@ -31,18 +38,20 @@ object ConsumerStateMachine {
                               error: Int, eventTimeMs: Long)
 
   /** The ConsumerData twin: next offset to fetch, last status, running
-    * processed counter, leader validity, and the update generation
-    * (the `ConsumerData.ts` freshness twin — reference `:22,261`).
+    * processed counter, leader validity, the update generation
+    * (the `ConsumerData.ts` freshness twin — reference `:22,261`) and
+    * the per-trigger delivery EWMA.
     */
   final case class PartitionState(offset: Long, status: Int,
                                   processed: Long, leaderValid: Boolean,
-                                  generation: Long = 0L)
+                                  generation: Long = 0L,
+                                  ewma: Double = 0.0)
 
   /** One emitted row per (topic, partition) per microbatch. */
   final case class PartitionUpdate(topic: String, partition: Int,
                                    offset: Long, status: Int,
                                    processed: Long, leaderValid: Boolean,
-                                   generation: Long)
+                                   generation: Long, ewma: Double)
 
   implicit val feEnc: Encoder[FetchEvent] = Encoders.product[FetchEvent]
   implicit val puEnc: Encoder[PartitionUpdate] =
@@ -60,8 +69,8 @@ object ConsumerStateMachine {
         // nextOffset (reference `:304`); a replayed offset below the
         // cursor still counts as processed but never moves it back
         if (e.offset >= st.offset)
-          PartitionState(e.offset + 1, 0, st.processed + 1,
-            leaderValid = true)
+          st.copy(offset = e.offset + 1, status = 0,
+            processed = st.processed + 1, leaderValid = true)
         else st.copy(status = 0, processed = st.processed + 1)
       case 1 =>
         // OffsetOutOfRange → smallest available offset strictly above
@@ -88,11 +97,15 @@ object ConsumerStateMachine {
         case ((topic, partition), it, state: GroupState[PartitionState]) =>
           val start = state.getOption
             .getOrElse(PartitionState(0L, 0, 0L, leaderValid = true))
-          val end = it.toSeq.sortBy(e => (e.eventTimeMs, e.offset))
-            .foldLeft(start)(step)
-            .copy(generation = start.generation + 1)
+          val evs = it.toSeq.sortBy(e => (e.eventTimeMs, e.offset))
+          val delivered = evs.count(_.error == 0).toDouble
+          val end = evs.foldLeft(start)(step).copy(
+            generation = start.generation + 1,
+            ewma = if (start.generation == 0L) delivered
+                   else (start.ewma + delivered) / 2.0)
           state.update(end)
           Iterator(PartitionUpdate(topic, partition, end.offset,
-            end.status, end.processed, end.leaderValid, end.generation))
+            end.status, end.processed, end.leaderValid, end.generation,
+            end.ewma))
       }
 }

@@ -18,8 +18,8 @@ import graft.functions.GraftFunctions
   *   1. shingle + minhash-band each streaming doc (pure codegen maps);
   *   2. stream-static LEFT OUTER join of the doc's band postings
   *      against the index — Spark plans the static side per
-  *      micro-batch, so `cache()` the index frame (it is the small,
-  *      amortized artifact) to avoid a re-scan per trigger;
+  *      micro-batch, so the index frame (the small, amortized
+  *      artifact) persists when the docs stream ([[ProbeTwin.static]]);
   *   3. stream-static join to the corpus shingle-set table for the
   *      exact-jaccard verify — on a bucketed/keyed corpus store this
   *      is a pruned lookup, and only candidate rows pay the join;
@@ -38,9 +38,7 @@ import graft.functions.GraftFunctions
   * Semantics match the batch op exactly (asserted in
   * DedupStreamSpec): `n_matches` = distinct corpus docs with jaccard
   * >= threshold, `best_match_id` = highest-jaccard match with
-  * smallest-id tie-break (the batch row_number ordering, expressed
-  * here as a min over a (-jaccard, id) struct so it runs inside a
-  * streaming-legal declarative aggregate), `keep` = no match.
+  * smallest-id tie-break, `keep` = no match ([[ProbeTwin.verdict]]).
   * Reference behavior: wgnet/spark-kafka-streaming processes each
   * micro-batch against externally persisted state the same way
   * (HBase-backed lookups per RDD batch); this re-expresses that
@@ -67,13 +65,6 @@ object DedupStream {
     *                  silently yields near-zero candidates, so it is
     *                  rejected up front (band_idx range check).
     * @param sets      static corpus shingle sets from [[corpusSets]]
-    * @param cacheStatic when true (default) and `docs` is streaming,
-    *                  persist the index and shingle-set frames
-    *                  (MEMORY_AND_DISK): Structured Streaming
-    *                  re-plans the static side of a stream-static
-    *                  join every micro-batch, and at corpus scale an
-    *                  uncached re-scan per trigger is a table scan,
-    *                  not an index probe. Asserted in DedupStreamSpec.
     * @param windowDur tumbling event-time window that scopes the
     *                  verdict aggregate (each doc id yields one row
     *                  regardless — the window only bounds state)
@@ -90,8 +81,7 @@ object DedupStream {
                              numPerms: Int = graft.ops.Dedup.plan05.signatureWidth,
                              bands: Int = graft.ops.Dedup.plan05.bands,
                              watermark: String = "10 minutes",
-                             windowDur: String = "10 minutes",
-                             cacheStatic: Boolean = true)
+                             windowDur: String = "10 minutes")
       : DataFrame = {
     // Reject a band-parameter mismatch with the supplied index up
     // front: the stream's band hashes are a function of
@@ -112,13 +102,7 @@ object DedupStream {
           "silently matches nothing; pass the parameters the index " +
           "was built with (Dedup.corpusBandIndex defaults)")
     }
-    val cache = cacheStatic && docs.isStreaming
-    def persistIf(df: DataFrame): DataFrame =
-      if (cache)
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else df
-    val withSets = (if (docs.isStreaming)
-        docs.withWatermark(tsCol, watermark) else docs)
+    val withSets = docs.withWatermark(tsCol, watermark)
       .select(col(tsCol), col(idCol).as("doc_id"),
         GraftFunctions.hashedWordShingles(col(textCol), 3).as("set_b"))
     // posexplode_outer keeps empty-shingle docs as a single null-band
@@ -136,11 +120,11 @@ object DedupStream {
     // plan, which keeps the persisted unpruned index, and the bloom
     // build cost exceeded the pruned-shuffle saving at fixture scale.)
     val cands = banded.join(
-      persistIf(index.select(col(idCol).as("corpus_id"), col("band_idx"),
-        col("band_hash"))),
+      ProbeTwin.static(docs, index.select(col(idCol).as("corpus_id"),
+        col("band_idx"), col("band_hash"))),
       Seq("band_idx", "band_hash"), "left_outer")
     val verified = cands
-      .join(persistIf(sets), Seq("corpus_id"), "left_outer")
+      .join(ProbeTwin.static(docs, sets), Seq("corpus_id"), "left_outer")
       .withColumn("inter",
         GraftFunctions.sortedIntersectCount(col("set_b"), col("set_c")))
       .withColumn("jaccard",
@@ -148,22 +132,8 @@ object DedupStream {
           col("inter").cast(DoubleType) /
             (size(col("set_b")) + size(col("set_c")) - col("inter"))
               .cast(DoubleType)))
-      .withColumn("hit_id",
-        when(col("jaccard") >= threshold, col("corpus_id")))
-      // min over (-jaccard, id) == "jaccard desc, id asc" — the batch
-      // op's row_number ordering, but streaming-aggregate-legal
-      .withColumn("hit_rank",
-        when(col("jaccard") >= threshold,
-          struct((-col("jaccard")).as("nj"), col("corpus_id").as("cid"))))
-    verified
-      .groupBy(window(col(tsCol), windowDur), col("doc_id"))
-      .agg(
-        size(collect_set(col("hit_id"))).as("n_matches"),
-        min(col("hit_rank")).as("best"))
-      .select(col("window"), col("doc_id"),
-        col("n_matches").cast("long").as("n_matches"),
-        col("best.cid").as("best_match_id"),
-        (-col("best.nj")).as("best_jaccard"),
-        (col("n_matches") === 0).as("keep"))
+    ProbeTwin.verdict(verified, window(col(tsCol), windowDur), "doc_id",
+      col("jaccard") >= threshold, col("corpus_id"), col("jaccard"), "nj",
+      "best_jaccard", "keep")
   }
 }

@@ -3,33 +3,27 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** OUTER stream-stream join — the completion of
-  * [[StreamingPipelines.attributionJoin]] (the inner watermarked
-  * form): both sides unbounded, each buffered in the state store,
-  * watermark + time-interval condition bounding how long a row can
-  * wait for its match. What the inner form cannot express is the
-  * NEGATIVE verdict — "this purchase had no qualifying click" — which
-  * needs the engine to hold the unmatched left row until the right
-  * watermark PROVES no match can still arrive, then emit it once,
-  * null-padded. That proof-of-absence is the join-state machinery
-  * this module exists to exercise (reference semantics: the windowed
-  * two-topic pair-up of `examples/.../KafkaWordCount.scala`, extended
-  * to the unmatched case a monitoring pipeline alerts on).
-  *
-  * Attribution shape: every purchase matched to the same user's
-  * clicks at most `horizonSeconds` BEFORE it (inclusive both ends) —
-  * purchase-anchored looking back, the mirror of attributionJoin's
-  * click-anchored looking forward. `joinType`:
-  *  - `inner` — only matched (purchase, click) pairs;
-  *  - `left_outer` — purchases with NO click inside the horizon
-  *    surface once with a null click, emitted when the click-side
-  *    watermark passes their horizon.
+/** Stream-stream event join — the capability the reference never had
+  * (its only join is the batch lag zip, M3): attribute each
+  * `purchase` to the same user's clicks at most `horizonSeconds`
+  * BEFORE it (inclusive both ends). Both sides unbounded, each
+  * buffered in the state store, watermark + time-interval condition
+  * bounding how long a row can wait for its match. `joinType`:
+  *  - `inner` — only matched (purchase, click) pairs (the
+  *    `attribution_join` row, 30-minute horizon);
+  *  - `left_outer` — the NEGATIVE verdict "this purchase had no
+  *    qualifying click": the engine holds the unmatched purchase until
+  *    the click watermark PROVES no match can still arrive, then emits
+  *    it once, null-padded (the `stream_stream_join` row; reference
+  *    semantics: the windowed two-topic pair-up of
+  *    `examples/.../KafkaWordCount.scala`, extended to the unmatched
+  *    case a monitoring pipeline alerts on).
   *
   * Batch replay: the SAME code on batch frames is a plain interval
   * (left) join — `withWatermark` is a no-op outside streaming — so
-  * the registry row (`stream_stream_join`) shares a plain-SQL oracle
-  * and StreamStreamJoinSpec asserts stream == batch, including the
-  * post-watermark null flush.
+  * both registry rows share plain-SQL oracles, and
+  * StreamStreamJoinSpec / StreamingEquivalenceSpec assert
+  * stream == batch, including the post-watermark null flush.
   *
   * 100 TB shape: one shuffle of each side keyed by user; per-key join
   * state is bounded by the horizon × per-user event rate on the click

@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-
 /** Streaming twin of [[graft.ops.FuzzyJoin.linkRecords]] — incremental
   * entity resolution: records arrive on a stream and each one is
   * checked against the PERSISTED master-data signature index, getting
@@ -16,8 +15,9 @@ import org.apache.spark.sql.types.LongType
   * Dataflow (all stages before the final aggregate are stateless):
   *  1. deletion-signature each streaming record (pure expression map);
   *  2. stream-static LEFT OUTER join on (block, signature) against
-  *     the index — blocking is part of the join key, so bucket width
-  *     is bounded by within-block name neighborhoods;
+  *     the index (persisted when the records stream,
+  *     [[ProbeTwin.static]]) — blocking is part of the join key, so
+  *     bucket width is bounded by within-block name neighborhoods;
   *  3. one exact levenshtein verify per candidate, agreement fields
   *     scored in the same projection (they ride the index);
   *  4. event-time windowed aggregation folds a record's candidates
@@ -49,9 +49,6 @@ object LinkageStream {
     *                `blockCol`, `agreeCols`
     * @param index   static signature index from [[nameIndex]], built
     *                with the SAME maxDist
-    * @param cacheIndex persist the static side (default true when
-    *                streaming): stream-static joins re-plan the
-    *                static side every micro-batch
     * @return (window, id, n_matches, best_match_id, best_score,
     *         is_new), append mode once the watermark passes
     */
@@ -60,13 +57,8 @@ object LinkageStream {
                   agreeCols: Seq[String], tsCol: String,
                   maxDist: Int = 2,
                   watermark: String = "10 minutes",
-                  windowDur: String = "1 hour",
-                  cacheIndex: Boolean = true): DataFrame = {
-    val idx = if (cacheIndex && records.isStreaming)
-      index.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else index
-    val in = (if (records.isStreaming)
-        records.withWatermark(tsCol, watermark) else records)
+                  windowDur: String = "1 hour"): DataFrame = {
+    val in = records.withWatermark(tsCol, watermark)
       .select((col(tsCol) +: col(idCol).as("id") +:
         col(nameCol).as("nm") +: col(blockCol).as("blk") +:
         agreeCols.map(col)): _*)
@@ -79,7 +71,8 @@ object LinkageStream {
       .map(c => when(col(c) === col(s"m_$c"), 1L).otherwise(0L))
       .reduceOption(_ + _).getOrElse(lit(0L))
     val verified = sigs
-      .join(idx, Seq("blk", "sig"), "left_outer")
+      .join(ProbeTwin.static(records, index), Seq("blk", "sig"),
+        "left_outer")
       // threshold levenshtein (r15, the FuzzyJoin.linkRecords change):
       // banded DP with early bail-out — returns the distance when
       // ≤ maxDist and -1 above it, so the score guard tests ≥ 0
@@ -88,19 +81,8 @@ object LinkageStream {
       .withColumn("score",
         when(col("mid").isNotNull && col("dist") >= 0,
           lit(maxDist.toLong) - col("dist").cast(LongType) + nAgree))
-      .withColumn("hit_id", when(col("score").isNotNull, col("mid")))
-      // min over (-score, id) == "score desc, id asc" — the batch
-      // ordering, streaming-aggregate-legal
-      .withColumn("hit_rank", when(col("score").isNotNull,
-        struct((-col("score")).as("ns"), col("mid").as("cid"))))
-    verified
-      .groupBy(window(col(tsCol), windowDur), col("id"))
-      .agg(size(collect_set(col("hit_id"))).as("n_matches"),
-        min(col("hit_rank")).as("best"))
-      .select(col("window"), col("id"),
-        col("n_matches").cast(LongType).as("n_matches"),
-        col("best.cid").as("best_match_id"),
-        (-col("best.ns")).as("best_score"),
-        (col("n_matches") === 0).as("is_new"))
+    ProbeTwin.verdict(verified, window(col(tsCol), windowDur), "id",
+      col("score").isNotNull, col("mid"), col("score"), "ns",
+      "best_score", "is_new")
   }
 }

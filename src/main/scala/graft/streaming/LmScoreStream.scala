@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
@@ -17,10 +17,10 @@ import graft.ops.TextOps
   * Dataflow — every stage before the final aggregate is stateless:
   *   1. bigram-explode each streaming doc (pure narrow maps);
   *   2. stream-static LEFT join against the pair-count table keyed
-  *      (w1, w2) — static side persisted when the input streams (the
-  *      AnnStream/DedupStream static-side-cache discipline: Spark
-  *      re-plans the static side per trigger, so an uncached model
-  *      would re-aggregate the corpus every micro-batch);
+  *      (w1, w2) — static side persisted when the input streams
+  *      ([[ProbeTwin.static]]: Spark re-plans the static side per
+  *      trigger, so an uncached model would re-aggregate the corpus
+  *      every micro-batch);
   *   3. broadcast LEFT join of the vocabulary-bounded prefix table;
   *   4. event-time windowed aggregation (watermark-bounded state)
   *      folding a doc's bigram rows into ONE score row.
@@ -48,13 +48,7 @@ object LmScoreStream {
                      vocab: Long)
 
   def trainModel(corpus: DataFrame, textCol: String): LmModel = {
-    val bg = corpus.select(TextOps.tokens(col(textCol)).as("w"))
-      .where(size(col("w")) >= 2)
-      .select(explode(expr(
-        "transform(sequence(1, size(w) - 1), " +
-          "i -> struct(w[i-1] AS w1, w[i] AS w2))")).as("bg"))
-      .select(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-    val pc = bg.groupBy(col("w1"), col("w2"))
+    val pc = bigrams(corpus, textCol).groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("c_pair"))
     val fc = pc.groupBy(col("w1")).agg(sum(col("c_pair")).as("c_prefix"))
     val v = corpus.select(explode(TextOps.tokens(col(textCol))).as("t"))
@@ -66,27 +60,12 @@ object LmScoreStream {
                   textCol: String, tsCol: String,
                   windowDur: String = "1 hour",
                   watermark: String = "30 minutes",
-                  scaleBits: Int = 20,
-                  cacheModel: Boolean = true): DataFrame = {
+                  scaleBits: Int = 20): DataFrame = {
     val scale = 1L << scaleBits
-    val in = if (docsStream.isStreaming)
-      docsStream.withWatermark(tsCol, watermark) else docsStream
-    val bg = in
-      .select(col(tsCol), col(idCol), TextOps.tokens(col(textCol)).as("w"))
-      .where(size(col("w")) >= 2)
-      .select(col(tsCol), col(idCol), explode(expr(
-        "transform(sequence(1, size(w) - 1), " +
-          "i -> struct(w[i-1] AS w1, w[i] AS w2))")).as("bg"))
-      .select(col(tsCol), col(idCol),
-        col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-    val pc = {
-      val p = model.pairCounts
-      if (cacheModel && docsStream.isStreaming)
-        p.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else p
-    }
-    bg
-      .join(pc, Seq("w1", "w2"), "left")
+    bigrams(docsStream.withWatermark(tsCol, watermark), textCol,
+        col(tsCol), col(idCol))
+      .join(ProbeTwin.static(docsStream, model.pairCounts),
+        Seq("w1", "w2"), "left")
       .join(broadcast(model.prefixCounts), Seq("w1"), "left")
       .select(col(tsCol), col(idCol),
         expr(s"((coalesce(c_pair, 0L) + 1L) * ${scale}L) div " +
@@ -97,4 +76,17 @@ object LmScoreStream {
       .withColumn("avg_fp",
         col("fp_sum").cast(DoubleType) / col("n_bigrams").cast(DoubleType))
   }
+
+  /** One row per adjacent-token bigram (w1, w2) of `textCol`, carrying
+    * `keep`. The size >= 2 guard runs BEFORE sequence(1, size - 1),
+    * which yields a descending [1, 0] on a one-token doc.
+    */
+  private def bigrams(docs: DataFrame, textCol: String,
+                      keep: Column*): DataFrame =
+    docs.select(keep :+ TextOps.tokens(col(textCol)).as("w"): _*)
+      .where(size(col("w")) >= 2)
+      .select(keep :+ explode(expr(
+        "transform(sequence(1, size(w) - 1), " +
+          "i -> struct(w[i-1] AS w1, w[i] AS w2))")).as("bg"): _*)
+      .select(keep :+ col("bg.w1").as("w1") :+ col("bg.w2").as("w2"): _*)
 }

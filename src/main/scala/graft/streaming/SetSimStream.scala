@@ -33,9 +33,9 @@ import graft.functions.GraftFunctions
   *      min-struct trick, `keep` = no match (the DedupStream output
   *      contract, so the two gates are drop-in comparable).
   *
-  * All static sides persist when the input streams (the
-  * AnnStream/DedupStream discipline — Spark re-plans static sides per
-  * trigger). State is watermark-bounded at both aggregations.
+  * All static sides persist when the input streams
+  * ([[ProbeTwin.static]]). State is watermark-bounded at both
+  * aggregations.
   */
 object SetSimStream {
 
@@ -44,21 +44,15 @@ object SetSimStream {
                        idCol: String, textCol: String, tsCol: String,
                        tauNum: Int = 6, tauDen: Int = 10,
                        windowDur: String = "10 seconds",
-                       watermark: String = "1 second",
-                       cacheStatic: Boolean = true): DataFrame = {
+                       watermark: String = "1 second"): DataFrame = {
     require(tauNum > 0 && tauNum <= tauDen)
-    def static(df: DataFrame): DataFrame =
-      if (cacheStatic && docsStream.isStreaming)
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else df
+    def static(df: DataFrame): DataFrame = ProbeTwin.static(docsStream, df)
     val dfreq = static(index.dfreq)
     val postings = static(index.postings)
     // n_c already rides the postings; keep only the verify payload
     val corpusSets = static(index.sets.select(col("corpus_id"),
       col("set_c")))
-    val in = if (docsStream.isStreaming)
-      docsStream.withWatermark(tsCol, watermark) else docsStream
-    val sets = in
+    val sets = docsStream.withWatermark(tsCol, watermark)
       .select(col(tsCol), col(idCol),
         GraftFunctions.hashedWordShingles(col(textCol), 3).as("set_d"))
       .where(size(col("set_d")) > 0)

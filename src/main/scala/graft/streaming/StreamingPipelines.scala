@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.engine.KafkaShape
@@ -197,32 +197,24 @@ object StreamingPipelines {
     nearDupSuppress(decon, tsCol, idCol, textCol, watermark)
   }
 
-  /** Stream-stream event join — the capability the reference never had
-    * (its only join is the batch lag zip, M3): attribute each
-    * `purchase` to the same user's preceding `click` within
-    * `attributionWindow`. Both sides watermarked so the join state is
-    * bounded: a click older than the window can never match again and
-    * is evicted — the state-retention reasoning a 100 TB/day stream
-    * needs. Inner equi-join on user + a time-range predicate, which
-    * Structured Streaming executes with symmetric state stores keyed
-    * by user_id.
+  /** The 5-stage doc pipeline over Kafka-shaped records carrying avro
+    * (doc_id, user_id, ts_us, text) containers: decode (poison
+    * containers dropped via the DLQ column) → quality filter → lang-id
+    * → near-dup suppression → sessionization, the last two stateful
+    * behind ONE 2 h watermark node. Identical code for stream and batch.
     */
-  def attributionJoin(clicks: DataFrame, purchases: DataFrame,
-                      attributionWindow: String = "30 minutes",
-                      watermark: String = "10 minutes"): DataFrame = {
-    val c = clicks.select(col("user_id").as("c_user"),
-      col("ts").as("click_ts"), col("event_id").as("click_id"))
-      .withWatermark("click_ts", watermark)
-    val p = purchases.select(col("user_id").as("p_user"),
-      col("ts").as("purchase_ts"), col("event_id").as("purchase_id"))
-      .withWatermark("purchase_ts", watermark)
-    c.join(p,
-      col("c_user") === col("p_user") &&
-        col("purchase_ts") >= col("click_ts") &&
-        col("purchase_ts") <=
-          col("click_ts") + expr(s"INTERVAL $attributionWindow"))
-      .select(col("c_user").as("user_id"), col("click_id"),
-        col("purchase_id"), col("click_ts"), col("purchase_ts"))
+  def docPipeline(kafka: DataFrame): DataFrame = {
+    val dec = decodeWithDlq(kafka, org.apache.spark.sql.types.StructType
+        .fromDDL("doc_id BIGINT, user_id BIGINT, ts_us BIGINT, text STRING"))
+      .where(col("decode_error").isNull)
+      .select(col("doc_id"), col("user_id"),
+        timestamp_micros(col("ts_us")).as("ts"), col("text"))
+    val clean = corpusFilterStream(dec, "ts", "doc_id", "text",
+      watermark = "2 hours")
+    SessionStream.sessionStream(
+        clean.select(col("ts"), col("user_id"),
+          col("doc_id").as("event_id")),
+      gapSeconds = 1800, watermark = "").toDF()
   }
 
   /** X6 — the metrics hook: per-microbatch record count and head
@@ -233,10 +225,8 @@ object StreamingPipelines {
     * CommitLogListener.
     */
   def withSourceMetrics(kafka: DataFrame): DataFrame =
-    kafka.observe("graft_source",
-      count(lit(1)).as("records"),
-      max(col("offset")).as("head_offset"),
-      approx_count_distinct(col("partition")).as("active_partitions"))
+    kafka.observe("graft_source", sourceMetrics.head,
+      sourceMetrics.tail: _*)
 
   /** X6 batch twin — the same source metrics over a batch run, via the
     * Observation API: metrics collect on the driver as a side effect
@@ -245,9 +235,12 @@ object StreamingPipelines {
   def observeBatch(kafka: DataFrame)
       : (org.apache.spark.sql.Observation, DataFrame) = {
     val obs = org.apache.spark.sql.Observation("graft_source_batch")
-    (obs, kafka.observe(obs,
-      count(lit(1)).as("records"),
-      max(col("offset")).as("head_offset"),
-      approx_count_distinct(col("partition")).as("active_partitions")))
+    (obs, kafka.observe(obs, sourceMetrics.head, sourceMetrics.tail: _*))
   }
+
+  /** The three source aggregates both X6 hooks observe. */
+  private val sourceMetrics: Seq[Column] = Seq(
+    count(lit(1)).as("records"),
+    max(col("offset")).as("head_offset"),
+    approx_count_distinct(col("partition")).as("active_partitions"))
 }

@@ -2,43 +2,17 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.DoubleType
 
-import graft.functions.TopKAgg
+import graft.sources.TextIndexStore
 
-/** Streaming maintenance for the persisted text index — the
-  * [[AnnStream.indexMaintainStream]] twin for keyword retrieval: each
-  * micro-batch's document adds/deletes fold into the
-  * [[graft.sources.TextIndexStore]] changelog under the batchId as
-  * seq. Exactly-once under epoch replay: both writers overwrite their
-  * own batchId-keyed subdirectory, so a recovered epoch rewrites the
-  * same files. Within one batch a delete beats an add for the same id
-  * (tombstones kill appends at or below their seq — the store's
-  * documented algebra); a later batch's re-add resurrects.
+/** Keyword retrieval as a stream over the persisted
+  * [[graft.sources.TextIndexStore]]: search requests probe it, and
+  * document deltas maintain it.
   */
 object TextIndexStream {
 
-  /** Search-as-a-stream: streaming requests (ts, req_id,
-    * terms array<string>) probe the live text index — the
-    * [[AnnStream.ivfProbeStream]] twin for keyword retrieval.
-    *
-    * The static side is fully precomputed: per-(term, doc) BM25
-    * partials depend only on the index (tf, dl, df and the corpus
-    * stats), so `scoredPostings` carries ready `score_t` values and
-    * each trigger's work is one stream-static equi-join on term plus
-    * two chained streaming aggregations (Spark 4 multiple-stateful-
-    * operator support, append mode): per-(window, req, doc) the
-    * matched term partials collect and fold in TERM-SORTED order — a
-    * deterministic left fold, bit-stable regardless of arrival or
-    * partial-aggregation order, unlike a naive double sum — then
-    * TopKAgg ranks k docs per request with k hits of state per key.
-    * `cacheIndex` persists the scored postings so triggers don't
-    * re-resolve the store (the ivfProbeStream contract).
-    *
-    * @param postings live postings from `TextIndexStore.read(...)._1`
-    * @param nDocs    corpus-stat literals from the docstats side —
-    * @param sumLen   trained-artifact style (bounded one-row agg)
-    */
   /** Per-(term, doc) BM25 partials of the live index — the SERVING
     * ARTIFACT `probeScored` consumes: scores depend only on the index
     * (tf, dl, df, corpus stats), so they're computed once per index
@@ -58,14 +32,34 @@ object TextIndexStream {
       .select(col("term"), col("doc_id"), col("score_t"))
   }
 
+  /** Search-as-a-stream: streaming requests (ts, req_id,
+    * terms array<string>) probe the live text index — the
+    * [[AnnStream.ivfProbeStream]] twin for keyword retrieval.
+    *
+    * The static side is fully precomputed: per-(term, doc) BM25
+    * partials depend only on the index (tf, dl, df and the corpus
+    * stats), so `scoredPostings` carries ready `score_t` values and
+    * each trigger's work is one stream-static equi-join on term plus
+    * two chained streaming aggregations (Spark 4 multiple-stateful-
+    * operator support, append mode): per-(window, req, doc) the
+    * matched term partials collect and fold in TERM-SORTED order — a
+    * deterministic left fold, bit-stable regardless of arrival or
+    * partial-aggregation order, unlike a naive double sum — then
+    * TopKAgg ranks k docs per request with k hits of state per key.
+    * The scored postings persist when the requests stream, so
+    * triggers don't re-resolve the store ([[ProbeTwin.static]]).
+    *
+    * @param postings live postings from `TextIndexStore.read(...)._1`
+    * @param nDocs    corpus-stat literals from the docstats side —
+    * @param sumLen   trained-artifact style (bounded one-row agg)
+    */
   def bm25ProbeStream(postings: DataFrame, nDocs: Long, sumLen: Long,
                       requests: DataFrame, tsCol: String,
                       reqIdCol: String, termsCol: String, k: Int = 10,
                       watermark: String = "10 minutes",
-                      windowDur: String = "10 minutes",
-                      cacheIndex: Boolean = true): DataFrame =
+                      windowDur: String = "10 minutes"): DataFrame =
     probeScored(scorePostings(postings, nDocs, sumLen), requests,
-      tsCol, reqIdCol, termsCol, k, watermark, windowDur, cacheIndex)
+      tsCol, reqIdCol, termsCol, k, watermark, windowDur)
 
   /** The probe tail against a ready scored-postings frame (in-session
     * or read back from the persisted artifact).
@@ -73,17 +67,11 @@ object TextIndexStream {
   def probeScored(scored: DataFrame, requests: DataFrame, tsCol: String,
                   reqIdCol: String, termsCol: String, k: Int = 10,
                   watermark: String = "10 minutes",
-                  windowDur: String = "10 minutes",
-                  cacheIndex: Boolean = true): DataFrame = {
-    val scoredPostings =
-      if (cacheIndex && requests.isStreaming)
-        scored.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else scored
-    val qs = (if (requests.isStreaming)
-        requests.withWatermark(tsCol, watermark) else requests)
+                  windowDur: String = "10 minutes"): DataFrame = {
+    val qs = requests.withWatermark(tsCol, watermark)
       .select(col(tsCol), col(reqIdCol).as("req_id"),
         explode(col(termsCol)).as("term"))
-    val folded = qs.join(scoredPostings, Seq("term"))
+    val folded = qs.join(ProbeTwin.static(requests, scored), Seq("term"))
       .groupBy(window(col(tsCol), windowDur), col("req_id"),
         col("doc_id"))
       .agg(collect_list(struct(col("term"), col("score_t")))
@@ -92,32 +80,19 @@ object TextIndexStream {
       // request, so struct sort orders by term alone)
       .withColumn("score", expr(
         "aggregate(array_sort(hits), 0.0D, (acc, h) -> acc + h.score_t)"))
-    val topk = udaf(new TopKAgg(k))
-    folded
-      .groupBy(col("window"), col("req_id"))
-      .agg(topk(col("score"), col("doc_id")).as("top"))
-      .select(col("window"), col("req_id"), posexplode(col("top")))
-      .select(col("window"), col("req_id"), col("col.id").as("doc_id"),
-        (col("pos") + 1).cast(LongType).as("rk"),
-        col("col.score").as("score"))
+    ProbeTwin.rankTopK(folded, col("window"), "req_id", k, "score",
+      "doc_id", "doc_id", "rk", "score")
   }
 
+  /** The [[AnnStream.indexMaintainStream]] twin for keyword retrieval:
+    * within one batch a delete beats an add for the same id
+    * (tombstones kill appends at or below their seq); a later batch's
+    * re-add resurrects.
+    */
   def maintainStream(deltas: DataFrame, dir: String, idCol: String,
                      textCol: String, opCol: String,
-                     checkpointLocation: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    deltas.writeStream
-      .option("checkpointLocation", checkpointLocation)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val adds = batch.filter(col(opCol) === "add")
-        val dels = batch.filter(col(opCol) === "del")
-        if (!adds.isEmpty)
-          graft.sources.TextIndexStore.append(adds, idCol, textCol,
-            dir, batchId)
-        if (!dels.isEmpty)
-          graft.sources.TextIndexStore.tombstone(dels, idCol, dir,
-            batchId)
-        ()
-      }
-      .start()
+                     checkpointLocation: String): StreamingQuery =
+    ProbeTwin.maintainStream(deltas, opCol, checkpointLocation)(
+      TextIndexStore.append(_, idCol, textCol, dir, _),
+      TextIndexStore.tombstone(_, idCol, dir, _))
 }

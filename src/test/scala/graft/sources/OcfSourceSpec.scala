@@ -608,6 +608,39 @@ class OcfSourceSpec extends SparkSuite {
       "without a manifest the store must fall back to block counting")
   }
 
+  test("block counts are cached per store: replacing a container in one " +
+      "store re-counts only that file") {
+    def unmanifested(name: String): String = {
+      val dir = tmpDir(name)
+      stratifiedStore(dir)
+      new java.io.File(dir).listFiles()
+        .filter(_.getName.startsWith("_manifest-")).foreach(_.delete())
+      dir
+    }
+    val a = unmanifested("ocf_counts_a")
+    val b = unmanifested("ocf_counts_b")
+    val countsA = OcfStore.headCounts(a, hconf.value)
+    val countsB = OcfStore.headCounts(b, hconf.value)
+    // replace A's first container by a copy of its second (and drop
+    // the stale checksum sidecar): new length and mtime, new count key
+    val Seq(first, second) = countsA.keys.toSeq.sorted.take(2)
+    val target = java.nio.file.Paths.get(a, first)
+    java.nio.file.Files.copy(java.nio.file.Paths.get(a, second), target,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    java.nio.file.Files.setLastModifiedTime(target,
+      java.nio.file.attribute.FileTime.fromMillis(
+        System.currentTimeMillis() + 60000L))
+    new java.io.File(a, s".$first.crc").delete()
+    val before = OcfStore.containerOpens.get()
+    assert(OcfStore.headCounts(b, hconf.value) == countsB)
+    assert(OcfStore.containerOpens.get() == before,
+      "re-listing an unchanged store must open no container")
+    val again = OcfStore.headCounts(a, hconf.value)
+    assert(OcfStore.containerOpens.get() == before + 1,
+      "only the replaced container is counted again")
+    assert(again == countsA.updated(first, countsA(second)))
+  }
+
   test("a corrupt manifest line only costs its file's stats, not the query") {
     val dir = tmpDir("ocf_corrupt_manifest")
     stratifiedStore(dir)

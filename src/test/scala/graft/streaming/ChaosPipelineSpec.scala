@@ -10,7 +10,6 @@ import org.apache.avro.generic.{GenericData, GenericRecord}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.SparkSuite
 import graft.engine.AvroOcf
@@ -42,9 +41,6 @@ class ChaosPipelineSpec extends SparkSuite {
   private val docSchema = SchemaBuilder.record("Doc").fields()
     .requiredLong("doc_id").requiredLong("user_id")
     .requiredLong("ts_us").requiredString("text").endRecord()
-  private val docStruct = StructType(Seq(
-    StructField("doc_id", LongType), StructField("user_id", LongType),
-    StructField("ts_us", LongType), StructField("text", StringType)))
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
   private def us(t: Timestamp): Long = t.getTime * 1000L
@@ -63,22 +59,6 @@ class ChaosPipelineSpec extends SparkSuite {
   private def rec(off: Long, value: Array[Byte], t: Timestamp) =
     KafkaRecord(key = null, value = value, topic = "docs",
       partition = 0, offset = off, timestamp = t, timestampType = 0)
-
-  /** The pipeline under test — identical code for stream and batch. */
-  private def pipeline(kafka: DataFrame): DataFrame = {
-    val dec = StreamingPipelines.decodeWithDlq(kafka, docStruct)
-      .where(col("decode_error").isNull)
-      .select(col("doc_id"), col("user_id"),
-        timestamp_micros(col("ts_us")).as("ts"), col("text"))
-    val clean = StreamingPipelines.corpusFilterStream(
-      dec, "ts", "doc_id", "text", watermark = "2 hours")
-    // watermark = "": ts already carries the 2h watermark from the
-    // dedup stage — one watermark node feeding both stateful operators
-    SessionStream.sessionStream(
-        clean.select(col("ts"), col("user_id"),
-          col("doc_id").as("event_id")),
-      gapSeconds = 1800, watermark = "").toDF()
-  }
 
   test("decode→filter→dedup→sessionize survives a restart at every " +
       "micro-batch boundary and equals the batch twin") {
@@ -140,7 +120,7 @@ class ChaosPipelineSpec extends SparkSuite {
       val ckpt = tmpDir("chaos_ckpt")
       val sunk = TrieMap.empty[Long, Set[Seq[Any]]]
       val mem = MemoryStream[KafkaRecord](KafkaRecord.encoder, s)
-      def start() = pipeline(mem.toDF()).writeStream
+      def start() = StreamingPipelines.docPipeline(mem.toDF()).writeStream
         .outputMode("append")
         .foreachBatch { (df: DataFrame, bid: Long) =>
           val rows = df.collect().map(_.toSeq.toVector: Seq[Any]).toSet
@@ -180,7 +160,7 @@ class ChaosPipelineSpec extends SparkSuite {
       val allRecs = waves.flatten ++ Seq(
         rec(4L, ocfBytes(Seq(markers.head)), markers.head.t),
         rec(5L, ocfBytes(Seq(markers(1))), markers(1).t))
-      val want = pipeline(allRecs.toDS().toDF())
+      val want = StreamingPipelines.docPipeline(allRecs.toDS().toDF())
         .where(col("user_id") =!= 99L)
         .collect().map(_.toSeq.toVector: Seq[Any]).toSet
 

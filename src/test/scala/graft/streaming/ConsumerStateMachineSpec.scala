@@ -7,8 +7,9 @@ import graft.streaming.ConsumerStateMachine.{FetchEvent, PartitionState, Partiti
 
 /** X2/X3: the per-partition state machine advances the at-least-once
   * cursor, tolerates replays, recovers from OffsetOutOfRange exactly
-  * like the reference's fixOffsets, and tracks leader loss — both as a
-  * pure transition function and end-to-end through the state store.
+  * like the reference's fixOffsets, tracks leader loss and the
+  * per-trigger delivery EWMA — both as a pure transition function and
+  * end-to-end through the state store.
   */
 class ConsumerStateMachineSpec extends SparkSuite {
 
@@ -34,15 +35,15 @@ class ConsumerStateMachineSpec extends SparkSuite {
     assert(step(lost, ev(5)).leaderValid)
   }
 
-  test("transformWithState health monitor: cursor/processed/EWMA " +
-    "evolve per trigger through RocksDB-backed typed state") (withRocksDB {
+  test("per-trigger cursor, processed and EWMA in RocksDB") (withRocksDB {
     val s = spark
+    import s.implicits._
     val input = MemoryStream[FetchEvent](
       ConsumerStateMachine.feEnc, s)
-    val q = PartitionHealthTws(input.toDS())
-      .writeStream.format("memory").queryName("tws_health")
+    val q = ConsumerStateMachine(input.toDS())
+      .writeStream.format("memory").queryName("csm_health")
       .outputMode("append")
-      .option("checkpointLocation", tmpDir("tws_ckpt"))
+      .option("checkpointLocation", tmpDir("csm_health_ckpt"))
       .start()
     // trigger 1: two delivered records + one error on partition 0
     input.addData(ev(0), ev(1), ev(7, err = 5))
@@ -51,10 +52,9 @@ class ConsumerStateMachineSpec extends SparkSuite {
     input.addData(ev(2), ev(1))
     q.processAllAvailable()
     q.stop()
-    val rows = s.table("tws_health")
+    val rows = s.table("csm_health").as[PartitionUpdate]
       .orderBy("generation").collect()
-      .map(r => (r.getLong(5), r.getLong(2), r.getLong(3),
-        r.getDouble(4)))
+      .map(u => (u.generation, u.offset, u.processed, u.ewma))
     // gen 1: cursor 2, processed 2, ewma seeded at 2.0
     // gen 2: cursor 3, processed 4 (replay counts), ewma (2+2)/2
     assert(rows.toSeq == Seq((1L, 2L, 2L, 2.0), (2L, 3L, 4L, 2.0)),
@@ -95,5 +95,7 @@ class ConsumerStateMachineSpec extends SparkSuite {
     // partition 1: recovered to broker's earliest-above (100)
     assert(last(1).offset == 100L && last(1).status == 1)
     assert(last(1).processed == 10L)
+    // EWMA: partition 0 delivered 10 then 10, partition 1 10 then 0
+    assert(last(0).ewma == 10.0 && last(1).ewma == 5.0)
   }
 }

@@ -105,6 +105,62 @@ class StreamStreamJoinSpec extends SparkSuite {
     }
   }
 
+  test("the horizon edge is inclusive to the microsecond, stream == batch") {
+    val s = spark
+    import s.implicits._
+    implicit val sq = s.sqlContext
+    val h = 1800L
+    val t0 = ts("2024-01-01 00:00:00")
+    def after(micros: Long) = {
+      val t = new Timestamp(t0.getTime + micros / 1000L)
+      t.setNanos(((micros % 1000000L) * 1000L).toInt)
+      t
+    }
+    val edgeClicks = Seq((1L, 11L, t0), (2L, 21L, t0))
+    // user 1 buys exactly h after the click, user 2 one microsecond later
+    val edgePurchases =
+      Seq((1L, 91L, after(h * 1000000L)), (2L, 92L, after(h * 1000000L + 1)))
+    def pairs(df: org.apache.spark.sql.DataFrame) = df
+      .filter(col("user_id") =!= 9L).collect()
+      .map(r => (r.getAs[Long]("purchase_id"),
+        Option(r.getAs[java.lang.Long]("click_id")).map(_.longValue)))
+      .toSet
+    val want = Map(
+      "inner" -> Set((91L, Some(11L))),
+      "left_outer" -> Set((91L, Some(11L)), (92L, None)))
+    for ((joinType, expected) <- want) withRocksDB {
+      val batch = pairs(JoinStream.clickAttribution(
+        edgeClicks.toDF("user_id", "event_id", "ts"),
+        edgePurchases.toDF("user_id", "event_id", "ts"),
+        horizonSeconds = h, joinType = joinType))
+      assert(batch == expected, s"$joinType batch")
+      val cMem = MemoryStream[(Long, Long, Timestamp)]
+      val pMem = MemoryStream[(Long, Long, Timestamp)]
+      val name = s"ssj_edge_$joinType"
+      val q = JoinStream.clickAttribution(
+          cMem.toDF().toDF("user_id", "event_id", "ts"),
+          pMem.toDF().toDF("user_id", "event_id", "ts"),
+          horizonSeconds = h, joinType = joinType)
+        .writeStream.format("memory").queryName(name)
+        .outputMode("append")
+        .option("checkpointLocation", tmpDir(s"ssj_edge_ckpt_$joinType"))
+        .start()
+      try {
+        cMem.addData(edgeClicks: _*)
+        pMem.addData(edgePurchases: _*)
+        q.processAllAvailable()
+        // two far-future pushes: the watermark passes every horizon,
+        // then the follow-up batch emits left_outer's null row
+        for (day <- Seq("2024-01-03", "2024-01-04")) {
+          cMem.addData((9L, 999L, ts(s"$day 00:00:00")))
+          pMem.addData((9L, 998L, ts(s"$day 00:00:00")))
+          q.processAllAvailable()
+        }
+      } finally q.stop()
+      assert(pairs(spark.table(name)) == batch, s"$joinType stream")
+    }
+  }
+
   test("stream == batch: left_outer nulls flush on watermark") {
     withRocksDB {
       val got = runStream("left_outer")

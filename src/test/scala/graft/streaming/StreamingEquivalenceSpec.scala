@@ -202,9 +202,10 @@ class StreamingEquivalenceSpec extends SparkSuite with RocksDBStateStore {
       .MemoryStream[(Long, Timestamp, Long)](enc, s)
     val purchases = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Timestamp, Long)](enc, s)
-    val joined = StreamingPipelines.attributionJoin(
+    val joined = JoinStream.clickAttribution(
       clicks.toDF().toDF("user_id", "ts", "event_id"),
-      purchases.toDF().toDF("user_id", "ts", "event_id"))
+      purchases.toDF().toDF("user_id", "ts", "event_id"),
+      horizonSeconds = 1800)
     val q = joined.writeStream.format("memory").queryName("attr")
       .outputMode("append")
       .option("checkpointLocation", tmpDir("attr_ckpt"))
@@ -218,7 +219,8 @@ class StreamingEquivalenceSpec extends SparkSuite with RocksDBStateStore {
     q.processAllAvailable()
     q.stop()
     val got = s.table("attr").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("click_id"),
+        r.getAs[Long]("purchase_id"))).toSet
     assert(got == Set((1L, 100L, 200L)), s"got $got")
   }
 
@@ -240,9 +242,13 @@ class StreamingEquivalenceSpec extends SparkSuite with RocksDBStateStore {
       .MemoryStream[(Long, Timestamp, Long)](enc, s)
     val pIn = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Timestamp, Long)](enc, s)
-    val q = StreamingPipelines.attributionJoin(
+    def pairs(df: DataFrame) = df.collect()
+      .map(r => (r.getAs[Long]("click_id"), r.getAs[Long]("purchase_id")))
+      .toSet
+    val q = JoinStream.clickAttribution(
         cIn.toDF().toDF("user_id", "ts", "event_id"),
-        pIn.toDF().toDF("user_id", "ts", "event_id"))
+        pIn.toDF().toDF("user_id", "ts", "event_id"),
+        horizonSeconds = 1800)
       .writeStream.format("memory").queryName("attr_eq")
       .outputMode("append")
       .option("checkpointLocation", tmpDir("attr_eq_ckpt"))
@@ -253,12 +259,11 @@ class StreamingEquivalenceSpec extends SparkSuite with RocksDBStateStore {
     q.stop()
 
     import s.implicits._
-    val batch = StreamingPipelines.attributionJoin(
+    val batch = pairs(JoinStream.clickAttribution(
         clicksData.toDF("user_id", "ts", "event_id"),
-        purchasesData.toDF("user_id", "ts", "event_id"))
-      .collect().map(r => (r.getLong(1), r.getLong(2))).toSet
-    val stream = s.table("attr_eq").collect()
-      .map(r => (r.getLong(1), r.getLong(2))).toSet
+        purchasesData.toDF("user_id", "ts", "event_id"),
+        horizonSeconds = 1800))
+    val stream = pairs(s.table("attr_eq"))
     assert(batch.nonEmpty, "fixture must produce matches")
     assert(stream == batch,
       s"missing=${(batch -- stream).take(5)} extra=${(stream -- batch).take(5)}")
@@ -301,6 +306,37 @@ class StreamingEquivalenceSpec extends SparkSuite with RocksDBStateStore {
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == batch, s"stream $got != batch $batch")
     assert(got.map(_._1) == Set("events_click", "events_purchase"))
+  }
+
+  test("S2 forConfig: two consumers split the partitions disjointly") {
+    // createStreamPartition's twin: each consumer instance reads only
+    // the partitions its (consumerId, consumersCount) shard owns
+    val s = spark
+    val data = records(200)
+    val got = (0 until 2).map { id =>
+      val (input, df) = KafkaShapedStream.forConfig(s,
+        KafkaShape.StreamConfig(consumerId = id, consumersCount = 2))
+      val name = s"consumer_$id"
+      val q = df.select(col("partition"), col("offset"))
+        .writeStream.format("memory").queryName(name)
+        .outputMode("append")
+        .option("checkpointLocation", tmpDir(s"${name}_ckpt"))
+        .start()
+      input.addData(data)
+      q.processAllAvailable()
+      q.stop()
+      id -> s.table(name).collect()
+        .map(r => (r.getAs[Int]("partition"), r.getAs[Long]("offset")))
+        .toSet
+    }.toMap
+    val all = data.map(r => (r.partition, r.offset)).toSet
+    assert(got(0).nonEmpty && got(1).nonEmpty)
+    assert((got(0) intersect got(1)).isEmpty, "consumers overlap")
+    assert((got(0) ++ got(1)) == all, "the union must equal the input")
+    got.foreach { case (id, rows) =>
+      assert(rows.forall(_._1 % 2 == id),
+        s"consumer $id read a partition it does not own")
+    }
   }
 
   test("corpus annotators run unchanged on a stream (pure-map proof)") {

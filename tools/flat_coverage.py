@@ -24,7 +24,7 @@ IMPL = re.compile(
     r'IvmStream|LinkageStream|LmScoreStream|TextIndexStream|'
     r'CommitLogStream|DriftStream|SetSimStream|SketchStream|OhlcStream|'
     r'RateLimitStream|AnomalyStream|JoinStream|SlidingWordCountStream|'
-    r'StreamingPipelines|KafkaShapedStream|PartitionHealthTws)\.(\w+)')
+    r'StreamingPipelines|KafkaShapedStream)\.(\w+)')
 
 
 def joined(lines):
