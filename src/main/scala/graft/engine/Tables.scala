@@ -1,15 +1,94 @@
 package graft.engine
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table access for the driver-generated testdata star schema
   * (TESTDATA.md / FIXTURES.md). All queries read through here so the
   * scan is a plain parquet relation Catalyst can push filters into.
   */
 object Tables {
+  /** Every schema-inferring parquet read in the program goes through
+    * here. `spark.read.parquet(path)` without a schema runs a Spark job
+    * over the parquet footers to infer one; the first read of a path
+    * still does, later reads of the unchanged path pass the memoized
+    * schema (`spark.read.schema(s).parquet`), which lists the files but
+    * launches no job. A read is unchanged when its stamp is: the names,
+    * lengths and mtimes of every file under its paths (one recursive
+    * Hadoop listing) plus the session settings schema inference depends
+    * on. One entry per qualified path, the latest stamp replacing the
+    * last, so rewritten sidecar artifacts do not pile up. Inference runs
+    * outside any map lock; two racing first reads both infer.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    parquet(spark, Seq(path), None)
+
+  /** [[parquet]] over several directories, with Spark's `basePath`
+    * option for partition discovery when given; the memo then keeps one
+    * entry per `basePath`.
+    */
+  def parquet(spark: SparkSession, paths: Seq[String],
+              basePath: Option[String]): DataFrame = {
+    val reader = basePath.foldLeft(spark.read)(_.option("basePath", _))
+    val conf = spark.sparkContext.hadoopConfiguration
+    def qualify(p: String) = {
+      val path = new Path(p)
+      val fs = path.getFileSystem(conf)
+      (fs, fs.makeQualified(path))
+    }
+    val dirs = paths.map(qualify)
+    // an absent path: let Spark raise its own error
+    if (!dirs.forall { case (fs, p) => fs.exists(p) })
+      return reader.parquet(paths: _*)
+    // one entry per table root: the stamp names every file, so the
+    // same root read over a different path set re-infers and replaces
+    val key = basePath.map(qualify(_)._2.toString)
+      .getOrElse(dirs.map(_._2).mkString("\n"))
+    val stamp = Stamp(dirs.flatMap { case (fs, p) => listing(fs, p) },
+      inferenceConfs.map(spark.conf.getOption))
+    Option(schemas.get(key)) match {
+      case Some((`stamp`, schema)) => reader.schema(schema).parquet(paths: _*)
+      case _ =>
+        val df = reader.parquet(paths: _*)
+        schemas.put(key, (stamp, df.schema))
+        df
+    }
+  }
+
+  /** Session settings that change what parquet schema inference
+    * returns (`events` sets the first).
+    */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+    "spark.sql.sources.partitionColumnTypeInference.enabled")
+
+  private case class Stamp(files: Seq[(String, Long, Long)],
+                           confs: Seq[Option[String]])
+
+  private val schemas = new ConcurrentHashMap[String, (Stamp, StructType)]()
+
+  /** (name, length, mtime) of every file under `dir`, sorted. */
+  private def listing(fs: FileSystem, dir: Path): Seq[(String, Long, Long)] = {
+    val it = fs.listFiles(dir, true)
+    val out = Seq.newBuilder[(String, Long, Long)]
+    while (it.hasNext) {
+      val st = it.next()
+      out += ((st.getPath.toString, st.getLen, st.getModificationTime))
+    }
+    out.result().sorted
+  }
+
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
 
   def lineitem(s: SparkSession, d: String): DataFrame = table(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame = table(s, d, "orders")

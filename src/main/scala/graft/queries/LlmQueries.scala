@@ -149,7 +149,7 @@ object LlmQueries {
     // pair table is the persisted per-(session, sf) artifact
     // (linkagePairsArtifact): built once, read by every consumer
     QuerySpec("record_linkage", (s, d) =>
-      s.read.parquet(linkagePairsArtifact(s, d)),
+      Tables.parquet(s, linkagePairsArtifact(s, d)),
       // within-block all-pairs is the oracle's luxury: blocks are
       // nation-sized here; the Spark plan joins on (block, signature)
       recordLinkageSql("customer")),
@@ -160,7 +160,7 @@ object LlmQueries {
     // pair artifact: the merge pass alone, no FastSS re-join
     QuerySpec("golden_record", (s, d) =>
       graft.ops.FuzzyJoin.goldenRecordFromPairs(Tables.customer(s, d),
-        s.read.parquet(linkagePairsArtifact(s, d))
+        Tables.parquet(s, linkagePairsArtifact(s, d))
           .select(col("id_a").as("doc_a"), col("id_b").as("doc_b")),
         "c_custkey", "c_name", "c_nationkey", "c_mktsegment",
         round(col("c_acctbal") * 100).cast(LongType)),
@@ -215,7 +215,7 @@ object LlmQueries {
       // is the once-per-master-change maintenance job, not the probe
       graft.streaming.LinkageStream.probeStream(
           c.filter(col("c_custkey") % 5 === 0),
-          s.read.parquet(linkageIndexArtifact(s, d)),
+          Tables.parquet(s, linkageIndexArtifact(s, d)),
           "c_custkey", "c_name", "c_nationkey", Seq("c_mktsegment"),
           "ts")
         .select(col("window.start").as("w_start"), col("id"),
@@ -767,7 +767,7 @@ object LlmQueries {
         if (sys.props.contains("graft.ivf.cells.skipWrite")) built
         else {
           built.write.mode("overwrite").parquet(annIndexDir)
-          s.read.parquet(annIndexDir)
+          Tables.parquet(s, annIndexDir)
         }
       if (!sys.props.contains("graft.ivf.cells.skipWrite"))
         index.select("vec_id", "cell").withColumn("side", lit("c"))
@@ -809,7 +809,7 @@ object LlmQueries {
       val e = emb(s, d)
       val batch = e.filter(col("vec_id") % 5 === 0)
       val (cts, indexDir) = annProbeArtifact(s, d)
-      val index = s.read.parquet(indexDir)
+      val index = Tables.parquet(s, indexDir)
       if (!sys.props.contains("graft.ivf.cells.skipWrite"))
         index.select("vec_id", "cell").withColumn("side", lit("c"))
           .unionByName(
@@ -1026,7 +1026,7 @@ object LlmQueries {
         if (sys.props.contains("graft.ivf.cells.skipWrite")) built
         else {
           built.write.mode("overwrite").parquet(annIvfpqIndexDir)
-          s.read.parquet(annIvfpqIndexDir)
+          Tables.parquet(s, annIvfpqIndexDir)
         }
       // probe width DERIVES from the cell count (Similarity.
       // ivfPqProbePlan — the k/32 rule the recall gate uses, now
@@ -1788,7 +1788,7 @@ object LlmQueries {
           r.toLong, terms)
       }.toDF("ts", "req_id", "terms")
       graft.streaming.TextIndexStream.probeScored(
-          s.read.parquet(scoredDir), reqs, "ts", "req_id",
+          Tables.parquet(s, scoredDir), reqs, "ts", "req_id",
           "terms", k = 10)
         .select(col("req_id"), col("doc_id"), col("rk"), col("score"))
     },
@@ -4456,7 +4456,7 @@ object LlmQueries {
       val ev = Tables.events(s, d)
         .select(to_date(col("ts")).as("day"), col("user_id"))
       val dir = hllDailyArtifact(s, d)
-      val appr = s.read.parquet(dir)
+      val appr = Tables.parquet(s, dir)
         .agg(expr("hll_sketch_estimate(hll_union_agg(sk, false))")
           .as("approx"))
         .withColumn("__jk", pmod(xxhash64(col("approx")), lit(1L)))
@@ -4524,7 +4524,7 @@ object LlmQueries {
     // it supports). The DAU/WAU pattern where history is never
     // re-scanned — only seven sketch rows per day.
     QuerySpec("rolling_wau_sketch", (s, d) => {
-      val daily = s.read.parquet(hllDailyArtifact(s, d))
+      val daily = Tables.parquet(s, hllDailyArtifact(s, d))
       val win = daily.select(col("day").as("d0"))
         .withColumn("off", explode(array((0 to 6).map(lit(_)): _*)))
         .select(col("d0"), date_sub(col("d0"), col("off")).as("day"))

@@ -741,7 +741,7 @@ object RelationalQueries {
     // over the flat table.
     QuerySpec("partitioned_scan", (s, d) => {
       val dir = partitionedEventsDir(s, d)
-      s.read.parquet(dir)
+      Tables.parquet(s, dir)
         .filter(col("event_type") === "purchase")
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_purchases"),
@@ -761,8 +761,8 @@ object RelationalQueries {
     // and partitioned_scan.
     QuerySpec("dpp_scan", (s, d) => {
       val dir = partitionedEventsDir(s, d)
-      val dim = s.read.parquet(s"${dir}_dim")
-      s.read.parquet(dir)
+      val dim = Tables.parquet(s, s"${dir}_dim")
+      Tables.parquet(s, dir)
         .join(dim.filter(col("status") === "tracked")
           .select("event_type"), Seq("event_type"))
         .groupBy(col("event_type"))

@@ -67,36 +67,43 @@ object OcfMaintenance {
   /** The one whole-store rewrite: write `rows` back over `dir` through
     * the overwrite commit, with the live container names as its
     * optimistic-concurrency witness and `keepRetired` passed through;
-    * returns `measure` of the store's head counts before and after.
+    * returns `measure` of the live container names before and after.
     *
     * The read fully resolves its file list at planning; the overwrite
     * installs renamed temps only at driver commit, after every read
     * task has finished — same-dir rewrite is ordered, not racy.
     */
   private def overwrite[A](dir: String, keepRetired: Boolean,
-                           measure: Map[String, Long] => A,
+                           measure: Seq[String] => A,
                            options: Map[String, String] = Map.empty)
                           (rows: => DataFrame): (A, A) = {
-    def now: A = measure(OcfStore.headCounts(dir, OcfStore.driverConf()))
-    val before = now
+    val live = containerNames(dir)
+    val before = measure(live)
     rows.write.format("graft-ocf").options(options)
-      .option("expectedContainers", containerNames(dir).mkString(","))
+      .option("expectedContainers", live.mkString(","))
       .option("keepRetired", keepRetired.toString)
       .mode("overwrite").save(dir)
-    (before, now)
+    (before, measure(containerNames(dir)))
   }
 
   /** Live container basenames — the optimistic-concurrency witness a
-    * rewrite hands to its overwrite commit. A plain LIST (no record
-    * counting — headCounts would open unmanifested containers just to
-    * learn their names). Captured when the writer chain is built,
-    * strictly before the rewrite's scan lists the store, so a writer
-    * epoch landing in that gap is read AND flagged — a conservative
-    * spurious abort, never a loss; the rewrite retries.
+    * rewrite hands to its overwrite commit, and the file count
+    * `compact`/`cluster`/`clusterZOrder` report. A plain LIST (no
+    * record counting — headCounts would open unmanifested containers
+    * just to learn their names). Captured before the rewrite's scan
+    * lists the store, so a writer epoch landing in that gap is read
+    * AND flagged — a conservative spurious abort, never a loss; the
+    * rewrite retries.
     */
   private def containerNames(dir: String): Seq[String] =
     OcfStore.list(dir, OcfStore.driverConf())._2.map(_.getPath.getName)
       .filter(OcfStore.isLiveContainer).sorted
+
+  /** Manifest-backed record count of the live store — what
+    * `compactByKey` and `eraseKeys` report.
+    */
+  private def records(dir: String): Long =
+    OcfStore.headCounts(dir, OcfStore.driverConf()).values.sum
 
   /** Kafka `cleanup.policy=compact` as a store rewrite: keep only the
     * highest-offset record per (topic, partition, key) — the broker
@@ -127,7 +134,7 @@ object OcfMaintenance {
   def compactByKey(spark: SparkSession, dir: String,
                    dropTombstones: Boolean = false,
                    keepRetired: Boolean = false): (Long, Long) =
-    overwrite(dir, keepRetired, _.values.sum) {
+    overwrite(dir, keepRetired, _ => records(dir)) {
       val latest = graft.plans.GroupedTopK(
         spark.read.format("graft-ocf").load(dir),
         Seq("topic", "partition", "key"),
@@ -163,7 +170,7 @@ object OcfMaintenance {
   def eraseKeys(spark: SparkSession, dir: String,
                 keyPred: org.apache.spark.sql.Column,
                 keepRetired: Boolean = false): (Long, Long) =
-    overwrite(dir, keepRetired, _.values.sum)(
+    overwrite(dir, keepRetired, _ => records(dir))(
       spark.read.format("graft-ocf").load(dir)
         .filter(!coalesce(keyPred, lit(false))))
 

@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, max}
 
+import graft.engine.Tables
+
 /** The `seq=<n>` generation directories of the append-only index
   * stores ([[AnnIndexStore]], [[TextIndexStore]]): one directory per
   * appended delta, folded into one by compaction.
@@ -22,7 +24,7 @@ private[sources] object SeqDirs {
     if (!fs.exists(p)) return (spark.emptyDataFrame, 0)
     val seqs = fs.listStatus(p).toSeq.filter(isSeq).map(_.getPath.toString)
     if (seqs.isEmpty) (spark.emptyDataFrame, 0)
-    else (spark.read.option("basePath", base).parquet(seqs: _*), seqs.size)
+    else (Tables.parquet(spark, seqs, Some(base)), seqs.size)
   }
 
   /** Latest-wins resolution of a seq'd changelog keyed by `id`: a

@@ -47,10 +47,7 @@ object DriftStream {
     def cum(list: Column, b: Column): Column =
       aggregate(filter(list, x => x.getField("bkt") <= b), lit(0L),
         (a, x) => a + x.getField("nw"))
-    val in =
-      if (events.isStreaming)
-        watermarkDelay.fold(events)(events.withWatermark("ts", _))
-      else events
+    val in = watermarkDelay.fold(events)(events.withWatermark("ts", _))
     in.select(col("ts"),
         floor(round(col("value") * 100).cast(LongType)
           / lit(bucketCents)).cast(LongType).as("bkt"))

@@ -58,7 +58,7 @@ class IvmApplier(spark: SparkSession, dir: String, keyCol: String)
     * first applied batch.
     */
   def latestSummary(): DataFrame = latestGen() match {
-    case Some(g) => spark.read.parquet(s"$dir/gen=$g")
+    case Some(g) => spark.read.schema(summarySchema).parquet(s"$dir/gen=$g")
     case None => spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], summarySchema)
   }

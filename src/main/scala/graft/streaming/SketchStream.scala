@@ -31,10 +31,7 @@ object SketchStream {
       if (valueCents == null)
         round(col("value") * 100).cast(LongType)
       else valueCents
-    val in =
-      if (events.isStreaming)
-        watermarkDelay.fold(events)(events.withWatermark("ts", _))
-      else events
+    val in = watermarkDelay.fold(events)(events.withWatermark("ts", _))
     in.select(col("ts"), col(keyCol),
         GraftFunctions.qBucket(cents).as("bucket"))
       .groupBy(window(col("ts"), "1 day"), col(keyCol), col("bucket"))

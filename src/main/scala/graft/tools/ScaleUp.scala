@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.engine.Tables
+
 /** Scaling-fixture generator: replicates the driver's sf0.1 tables R×
   * (default 10× → an sf1.0-shaped dataset) with key remapping so the
   * result is a VALID larger instance of the same schema, not R clones.
@@ -56,7 +58,7 @@ object ScaleUp {
     spark.sparkContext.setLogLevel("WARN")
 
     def tbl(name: String): DataFrame =
-      spark.read.parquet(s"$src/$name.parquet")
+      Tables.table(spark, src, name)
     def out(df: DataFrame, name: String, files: Int, rangeKey: String)
         : Unit = {
       val laid =

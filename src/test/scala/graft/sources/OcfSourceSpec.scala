@@ -641,6 +641,24 @@ class OcfSourceSpec extends SparkSuite {
     assert(again == countsA.updated(first, countsA(second)))
   }
 
+  test("compact counts files from its witness LIST: on an unmanifested " +
+      "store the measurement opens no container beyond the scan's own") {
+    val dir = tmpDir("ocf_compact_measure")
+    stratifiedStore(dir)
+    new java.io.File(dir).listFiles()
+      .filter(_.getName.startsWith("_manifest-")).foreach(_.delete())
+    def live = new java.io.File(dir).listFiles()
+      .count(f => OcfStore.isLiveContainer(f.getName))
+    val n = live
+    val before = OcfStore.containerOpens.get()
+    val (nBefore, nAfter) = OcfMaintenance.compact(spark, dir)
+    assert(nBefore == n && nAfter == live)
+    assert(OcfStore.containerOpens.get() - before == n,
+      "the rewrite's scan counts each unmanifested container once; " +
+        "the before/after measurement adds none")
+    assert(spark.read.format("graft-ocf").load(dir).count() == 200)
+  }
+
   test("a corrupt manifest line only costs its file's stats, not the query") {
     val dir = tmpDir("ocf_corrupt_manifest")
     stratifiedStore(dir)
