@@ -35,25 +35,13 @@ object LlmQueries {
     tagDataset(d); Tables.embeddings(s, d)
   }
 
-  /** Tag of the dataset dir this JVM's queries run against, recorded
-    * when a closure resolves its input tables. Every oracle sidecar
-    * dir embeds it, so two concurrent runs at different scale factors
-    * can never clobber each other's artifacts and poison the DuckDB
-    * compare. The handshake is sound because Verify dumps `oracleSql`
-    * AFTER running every query in the same JVM — the tag the closures
-    * recorded is the one the SQL strings interpolate. An explicit
-    * `-Dgraft.<x>.dir=` prop still overrides per sidecar.
+  /** Pins the oracle-input tag to a dataset dir ([[Sidecars]]). Public
+    * so Verify can pin it UP FRONT: a VERIFY_ONLY subset that happens to
+    * touch no documents/embeddings table would otherwise re-dump
+    * oracle_sql.json with sidecar paths under the "default" tag while
+    * the inputs live under the sf-dir tag.
     */
-  @volatile private var dsTag: String = "default"
-  /** Public so Verify can pin the tag UP FRONT: a VERIFY_ONLY subset
-    * that happens to touch no documents/embeddings table would
-    * otherwise re-dump oracle_sql.json with sidecar paths under the
-    * "default" tag while the artifacts live under the sf-dir tag.
-    */
-  def tagDataset(d: String): Unit =
-    dsTag = d.replaceAll("[^A-Za-z0-9._-]", "_")
-  private def sidecar(prop: String, base: String): String =
-    sys.props.getOrElse(prop, s"${base}_${dsTag}")
+  def tagDataset(d: String): Unit = Sidecars.tagDataset(d)
 
   /** Driver-visible recall gate shared by the approximate ANN paths:
     * one boolean row that hashes equal to the oracle's `true` iff
@@ -678,17 +666,13 @@ object LlmQueries {
       val e = emb(s, d)
       val q = e.filter(col("vec_id") < 8)
       val cts = centroids32("all", d, e)
-      // Bench sets skipWrite: the side-materialization exists for the
-      // verify-time oracle only and must not be re-timed or clobbered
-      // by a bench run at a different scale factor
-      if (!sys.props.contains("graft.ivf.cells.skipWrite"))
+      Sidecars.writeOracleInput(ivfCellsDir) {
         Similarity.ivfCells(e, "vec_id", "embedding", cts, n = 2)
           .withColumn("side", lit("c"))
           .unionByName(
             Similarity.ivfCells(q, "vec_id", "embedding", cts, n = 12)
               .withColumn("side", lit("q")))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(ivfCellsDir)
+      }
       Similarity.ivfTopKWith(cts, e, q, "vec_id", "embedding",
         k = 5, nProbe = 12, nAssign = 2)
     },
@@ -718,15 +702,14 @@ object LlmQueries {
       val q = e.filter(col("vec_id") < 8)
       val cts = centroids32("all", d, e)
       val pred = col("label") % 2 === 0
-      if (!sys.props.contains("graft.ivf.cells.skipWrite"))
+      Sidecars.writeOracleInput(ivfFiltCellsDir) {
         Similarity.ivfCells(e.filter(pred), "vec_id", "embedding",
             cts, n = 2)
           .withColumn("side", lit("c"))
           .unionByName(
             Similarity.ivfCells(q, "vec_id", "embedding", cts, n = 16)
               .withColumn("side", lit("q")))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(ivfFiltCellsDir)
+      }
       Similarity.ivfTopKFiltered(cts, e, pred, q, "vec_id",
         "embedding", k = 5, nProbe = 16, nAssign = 2)
     },
@@ -754,28 +737,22 @@ object LlmQueries {
     // index artifact (vec_id, cell, quantized vec, self-dot) once; the
     // batch (the other 20%) probes the read-back artifact without
     // touching raw corpus vectors — per-batch cost independent of how
-    // many batches probed before. Bench (skipWrite) builds the index
-    // inline: identical rows, no cross-sf artifact clobber.
+    // many batches probed before.
     QuerySpec("ann_incremental", (s, d) => {
       val e = emb(s, d)
       val corpus = e.filter(col("vec_id") % 5 =!= 0)
       val batch = e.filter(col("vec_id") % 5 === 0)
       val cts = centroids32("corpus", d, corpus)
-      val built = Similarity.ivfIndex(corpus, "vec_id", "embedding", cts,
-        nAssign = 2)
-      val index =
-        if (sys.props.contains("graft.ivf.cells.skipWrite")) built
-        else {
-          built.write.mode("overwrite").parquet(annIndexDir)
-          Tables.parquet(s, annIndexDir)
-        }
-      if (!sys.props.contains("graft.ivf.cells.skipWrite"))
+      val indexDir = Sidecars.artifact("ann_index", d)
+      Similarity.ivfIndex(corpus, "vec_id", "embedding", cts, nAssign = 2)
+        .write.mode("overwrite").parquet(indexDir)
+      val index = Tables.parquet(s, indexDir)
+      Sidecars.writeOracleInput(annCellsDir) {
         index.select("vec_id", "cell").withColumn("side", lit("c"))
           .unionByName(
             Similarity.ivfCells(batch, "vec_id", "embedding", cts, n = 8)
               .withColumn("side", lit("q")))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(annCellsDir)
+      }
       Similarity.ivfProbeIndex(cts, index, batch, "vec_id", "embedding",
         k = 5, nProbe = 8)
     },
@@ -810,13 +787,12 @@ object LlmQueries {
       val batch = e.filter(col("vec_id") % 5 === 0)
       val (cts, indexDir) = annProbeArtifact(s, d)
       val index = Tables.parquet(s, indexDir)
-      if (!sys.props.contains("graft.ivf.cells.skipWrite"))
+      Sidecars.writeOracleInput(annProbeCellsDir) {
         index.select("vec_id", "cell").withColumn("side", lit("c"))
           .unionByName(
             Similarity.ivfCells(batch, "vec_id", "embedding", cts, n = 8)
               .withColumn("side", lit("q")))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(annProbeCellsDir)
+      }
       Similarity.ivfProbeIndex(cts, index, batch, "vec_id", "embedding",
         k = 5, nProbe = 8)
     },
@@ -852,13 +828,12 @@ object LlmQueries {
       val cts = centroids32("corpus", d, corpus)
       val index = Similarity.ivfIndex(corpus, "vec_id", "embedding", cts,
         nAssign = 2)
-      if (!sys.props.contains("graft.ivf.cells.skipWrite"))
+      Sidecars.writeOracleInput(annStreamCellsDir) {
         index.select("vec_id", "cell").withColumn("side", lit("c"))
           .unionByName(
             Similarity.ivfCells(batch, "vec_id", "embedding", cts, n = 8)
               .withColumn("side", lit("q")))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(annStreamCellsDir)
+      }
       graft.streaming.AnnStream.ivfProbeStream(cts, index, batch,
           "vec_id", "embedding", "ts", k = 5, nProbe = 8,
           windowDur = "1 hour")
@@ -912,14 +887,13 @@ object LlmQueries {
       val finalCorpus = e.filter(!isBatch &&
         ((col("vec_id") % 7 =!= 0 && col("vec_id") % 11 =!= 0) ||
           col("vec_id") % 7 === 0))
-      if (!sys.props.contains("graft.ivf.cells.skipWrite"))
+      Sidecars.writeOracleInput(annUpsertCellsDir) {
         Similarity.ivfCells(finalCorpus, "vec_id", "embedding", cts, n = 2)
           .withColumn("side", lit("c"))
           .unionByName(
             Similarity.ivfCells(batch, "vec_id", "embedding", cts, n = 8)
               .withColumn("side", lit("q")))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(annUpsertCellsDir)
+      }
       Similarity.ivfProbeIndex(cts, maintained, batch, "vec_id",
         "embedding", k = 5, nProbe = 8)
     },
@@ -948,11 +922,10 @@ object LlmQueries {
       val e = emb(s, d)
       val corpus = e.filter(col("vec_id") % 5 =!= 0)
       val cts = centroids32("corpus", d, corpus)
-      if (!sys.props.contains("graft.ivf.cells.skipWrite"))
+      Sidecars.writeOracleInput(annCellStatsDir) {
         Similarity.ivfCells(corpus, "vec_id", "embedding", cts, n = 2)
           .withColumn("side", lit("c"))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(annCellStatsDir)
+      }
       Similarity.ivfCellStats(
           Similarity.ivfIndex(corpus, "vec_id", "embedding", cts,
             nAssign = 2))
@@ -1020,38 +993,33 @@ object LlmQueries {
       val batch = e.filter(col("vec_id") % 5 === 0)
       val cts = centroids32("corpus", d, corpus)
       val cbs = pqCodebooks("corpus", d, corpus)
-      val built = Similarity.ivfPqIndex(corpus, "vec_id", "embedding",
-        cts, cbs, nAssign = 2)
-      val index =
-        if (sys.props.contains("graft.ivf.cells.skipWrite")) built
-        else {
-          built.write.mode("overwrite").parquet(annIvfpqIndexDir)
-          Tables.parquet(s, annIvfpqIndexDir)
-        }
+      val indexDir = Sidecars.artifact("ann_ivfpq_index", d)
+      Similarity.ivfPqIndex(corpus, "vec_id", "embedding", cts, cbs,
+          nAssign = 2)
+        .write.mode("overwrite").parquet(indexDir)
+      val index = Tables.parquet(s, indexDir)
       // probe width DERIVES from the cell count (Similarity.
       // ivfPqProbePlan — the k/32 rule the recall gate uses, now
       // inherited by the serving path); the sidecar's probed-cell
       // set must derive identically so the oracle replays the same
       // candidates
       val (npD, _) = Similarity.ivfPqProbePlan(cts.length)
-      if (!sys.props.contains("graft.ivf.cells.skipWrite")) {
+      Sidecars.writeOracleInput(annIvfpqCellsDir) {
         index.select("vec_id", "cell").withColumn("side", lit("c"))
           .unionByName(
             Similarity.ivfCells(batch, "vec_id", "embedding", cts, n = npD)
               .withColumn("side", lit("q")))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(annIvfpqCellsDir)
+      }
+      Sidecars.writeOracleInput(annIvfpqCodesDir) {
         index.dropDuplicates("vec_id")
           .select(col("vec_id"),
             posexplode(col("codes")).as(Seq("subspace", "code")))
           .select(col("vec_id"),
             col("subspace").cast(LongType).as("subspace"),
             col("code").cast(LongType).as("code"))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(annIvfpqCodesDir)
+      }
+      Sidecars.writeOracleInput(annIvfpqCodebookDir) {
         Similarity.pqCodebookTable(s, cbs)
-          .coalesce(1)
-          .write.mode("overwrite").parquet(annIvfpqCodebookDir)
       }
       // nProbe/rerankFactor omitted → the derived ivfPqProbePlan
       // (byte-identical at fixture scale where cts.length = 32)
@@ -1272,13 +1240,11 @@ object LlmQueries {
       val e = emb(s, d)
       val q = e.filter(col("vec_id") < 8)
       val cbs = pqCodebooks("all", d, e)
-      if (!sys.props.contains("graft.ivf.cells.skipWrite")) {
+      Sidecars.writeOracleInput(pqCodesDir) {
         Similarity.pqCodes(e, "vec_id", "embedding", cbs)
-          .coalesce(1)
-          .write.mode("overwrite").parquet(pqCodesDir)
+      }
+      Sidecars.writeOracleInput(pqCodebookDir) {
         Similarity.pqCodebookTable(s, cbs)
-          .coalesce(1)
-          .write.mode("overwrite").parquet(pqCodebookDir)
       }
       Similarity.pqTopK(cbs, e, q, "vec_id", "embedding",
         k = 5, rerankFactor = 40)
@@ -1355,14 +1321,13 @@ object LlmQueries {
     QuerySpec("bq_topk", (s, d) => {
       val e = emb(s, d)
       val q = e.filter(col("vec_id") < 8)
-      if (!sys.props.contains("graft.ivf.cells.skipWrite"))
+      Sidecars.writeOracleInput(bqSigsDir) {
         Similarity.bqSignatures(e, "vec_id", "embedding", 256)
           .withColumn("side", lit("c"))
           .unionByName(
             Similarity.bqSignatures(q, "vec_id", "embedding", 256)
               .withColumn("side", lit("q")))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(bqSigsDir)
+      }
       Similarity.bqTopK(e, q, "vec_id", "embedding", k = 5,
         nBits = 256, rerankFactor = 80)
     },
@@ -1426,19 +1391,17 @@ object LlmQueries {
       val e = emb(s, d)
       val q = e.filter(col("vec_id") < 8)
       val maxs = Similarity.sq8Calibrate(e, "embedding", 64)
-      if (!sys.props.contains("graft.ivf.cells.skipWrite")) {
+      Sidecars.writeOracleInput(sq8CodesDir) {
         Similarity.sq8Codes(e, "vec_id", "embedding", maxs)
           .withColumn("side", lit("c"))
           .unionByName(
             Similarity.sq8Codes(q, "vec_id", "embedding", maxs)
               .withColumn("side", lit("q")))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(sq8CodesDir)
+      }
+      Sidecars.writeOracleInput(sq8MaxsDir) {
         import s.implicits._
         maxs.zipWithIndex.map { case (m, i) => (i.toLong, m) }.toSeq
           .toDF("dim", "m")
-          .coalesce(1)
-          .write.mode("overwrite").parquet(sq8MaxsDir)
       }
       Similarity.sq8TopK(e, q, "vec_id", "embedding", maxs,
         k = 5, rerankFactor = 20)
@@ -1497,20 +1460,18 @@ object LlmQueries {
       val q = e.filter(col("vec_id") < 8)
       val cts = centroids32("all", d, e)
       val cbs = pqCodebooks("all", d, e)
-      if (!sys.props.contains("graft.ivf.cells.skipWrite")) {
+      Sidecars.writeOracleInput(ivfpqCellsDir) {
         Similarity.ivfCells(e, "vec_id", "embedding", cts, n = 2)
           .withColumn("side", lit("c"))
           .unionByName(
             Similarity.ivfCells(q, "vec_id", "embedding", cts, n = 14)
               .withColumn("side", lit("q")))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(ivfpqCellsDir)
+      }
+      Sidecars.writeOracleInput(ivfpqCodesDir) {
         Similarity.pqCodes(e, "vec_id", "embedding", cbs)
-          .coalesce(1)
-          .write.mode("overwrite").parquet(ivfpqCodesDir)
+      }
+      Sidecars.writeOracleInput(ivfpqCodebookDir) {
         Similarity.pqCodebookTable(s, cbs)
-          .coalesce(1)
-          .write.mode("overwrite").parquet(ivfpqCodebookDir)
       }
       Similarity.ivfPqTopK(cts, cbs, e, q, "vec_id", "embedding",
         k = 5, nProbe = 14, nAssign = 2, rerankFactor = 20)
@@ -1667,15 +1628,13 @@ object LlmQueries {
     // N2/N3 — SemDeDup: k-means cells (same driver-trained coarse
     // quantizer as IVF), within-cell exact quantized cosine, min-id
     // greedy keep. Cell assignments materialize beside the ivf cells
-    // so the oracle compares the exact same partition (same skipWrite
-    // guard: Bench never re-times or clobbers the side write).
+    // so the oracle compares the exact same partition.
     QuerySpec("semantic_dedup", (s, d) => {
       val e = emb(s, d)
       val cts = centroids32("all", d, e)
-      if (!sys.props.contains("graft.ivf.cells.skipWrite"))
+      Sidecars.writeOracleInput(semdedupCellsDir) {
         Similarity.semanticCells(e, "vec_id", "embedding", cts)
-          .coalesce(1)
-          .write.mode("overwrite").parquet(semdedupCellsDir)
+      }
       Similarity.semanticDedup(e, "vec_id", "embedding", cts, tau = 0.3)
     },
       // exact within-cell pairs over the MATERIALIZED cell assignments
@@ -1769,8 +1728,7 @@ object LlmQueries {
         val (posts, stats) = graft.sources.TextIndexStore.read(s, dir)
         val srow = stats.agg(count(lit(1)).as("n"),
           sum(col("dl")).as("sl")).head()
-        val out = sidecar("graft.text.scored.dir",
-          "/tmp/graft_text_scored")
+        val out = Sidecars.artifact("text_scored", d)
         graft.streaming.TextIndexStream
           .scorePostings(posts, srow.getLong(0), srow.getLong(1))
           .write.mode("overwrite").parquet(out)
@@ -4904,8 +4862,7 @@ object LlmQueries {
         .select(col("doc_id"), col("chunk_idx"),
           element_at(col("sg"), 1).as("sim_lo"),
           element_at(col("sg"), 2).as("sim_hi"))
-      if (!sys.props.contains("graft.ivf.cells.skipWrite"))
-        sigs.coalesce(1).write.mode("overwrite").parquet(ragSigsDir)
+      Sidecars.writeOracleInput(ragSigsDir)(sigs)
       val (qlo, qhi) = ragQuerySig
       val scored = sigs.withColumn("hamming",
         (bit_count(col("sim_lo").bitwiseXOR(lit(qlo))) +
@@ -4948,8 +4905,7 @@ object LlmQueries {
         .select(col("doc_id"), col("chunk_idx"),
           element_at(col("sg"), 1).as("sim_lo"),
           element_at(col("sg"), 2).as("sim_hi"))
-      if (!sys.props.contains("graft.ivf.cells.skipWrite"))
-        sigs.coalesce(1).write.mode("overwrite").parquet(ragSigsDir)
+      Sidecars.writeOracleInput(ragSigsDir)(sigs)
       Retrieval.lateInteractionTopK(sigs,
         bm25Terms.map(simhashSigOf), k = 10)
     },
@@ -5244,41 +5200,32 @@ object LlmQueries {
     * k-means in SQL). Evaluated identically by the query closure and
     * the oracle string within one Verify run.
     */
-  private def ivfCellsDir: String =
-    sidecar("graft.ivf.cells.dir", "/tmp/graft_ivf_cells")
+  private def ivfCellsDir: String = Sidecars.oracleInput("ivf_cells")
 
   /** ivf_topk_filtered's own cell sidecar (the filtered corpus posts
     * differently, and subset Verify runs must not depend on ivf_topk
     * having written its sidecar first).
     */
-  private def ivfFiltCellsDir: String =
-    sidecar("graft.ivf.filt.cells.dir", "/tmp/graft_ivf_filt_cells")
+  private def ivfFiltCellsDir: String = Sidecars.oracleInput("ivf_filt_cells")
 
-  /** ann_incremental's persisted index artifact and its oracle-side
-    * cell materialization (ivfCellsDir pattern).
+  /** The ann_* rows' oracle-side cell materializations (ivfCellsDir
+    * pattern).
     */
-  private def annIndexDir: String =
-    sidecar("graft.ann.index.dir", "/tmp/graft_ann_index")
-  private def annCellsDir: String =
-    sidecar("graft.ann.cells.dir", "/tmp/graft_ann_cells")
+  private def annCellsDir: String = Sidecars.oracleInput("ann_cells")
   private def annProbeCellsDir: String =
-    sidecar("graft.ann.probe.cells.dir", "/tmp/graft_ann_probe_cells")
+    Sidecars.oracleInput("ann_probe_cells")
   private def annUpsertCellsDir: String =
-    sidecar("graft.ann.upsert.cells.dir", "/tmp/graft_ann_upsert_cells")
-  private def annStoreDir: String =
-    sidecar("graft.ann.store.dir", "/tmp/graft_ann_store")
+    Sidecars.oracleInput("ann_upsert_cells")
   private def annStoreCellsDir: String =
-    sidecar("graft.ann.store.cells.dir", "/tmp/graft_ann_store_cells")
-  private def annCellStatsDir: String =
-    sidecar("graft.ann.cellstats.cells.dir", "/tmp/graft_ann_cellstats")
+    Sidecars.oracleInput("ann_store_cells")
+  private def annCellStatsDir: String = Sidecars.oracleInput("ann_cellstats")
   private def annStreamCellsDir: String =
-    sidecar("graft.ann.stream.cells.dir", "/tmp/graft_ann_stream_cells")
+    Sidecars.oracleInput("ann_stream_cells")
 
   /** ann_incremental_probe's once-per-(session, sf) serving artifact:
     * centroids train and the IVF index persists on first use; later
     * calls (bench iterations) reuse both, so the timed query is the
-    * probe alone. The index dir is sf-qualified — two scale factors in
-    * one session never clobber each other's artifact.
+    * probe alone.
     */
   private val annProbeMemo = new java.util.concurrent.ConcurrentHashMap[
     String, (Array[Array[Long]], String)]()
@@ -5288,9 +5235,7 @@ object LlmQueries {
       val e = emb(s, d)
       val corpus = e.filter(col("vec_id") % 5 =!= 0)
       val cts = centroids32("corpus", d, corpus)
-      val dir = sys.props.getOrElse("graft.ann.probe.index.dir",
-        "/tmp/graft_ann_probe_index_" +
-          d.replaceAll("[^A-Za-z0-9._-]", "_"))
+      val dir = Sidecars.artifact("ann_probe_index", d)
       Similarity.ivfIndex(corpus, "vec_id", "embedding", cts, nAssign = 2)
         .write.mode("overwrite").parquet(dir)
       (cts, dir)
@@ -5346,14 +5291,12 @@ object LlmQueries {
     * tombstoned among them — strictly-higher seq wins). Final live
     * corpus: (%7 != 0 && %11 != 0) || %7 == 0.
     */
-  private def textIndexDir: String =
-    sidecar("graft.text.index.dir", "/tmp/graft_text_index")
   private val textIndexMemo = new java.util.concurrent.ConcurrentHashMap[
     String, String]()
   private def textIndexArtifact(s: SparkSession, d: String): String =
     textIndexMemo.computeIfAbsent(d, _ => {
       val dd = docs(s, d)
-      val dir = textIndexDir
+      val dir = Sidecars.artifact("text_index", d)
       val fs = org.apache.hadoop.fs.FileSystem.get(
         new java.net.URI(dir), s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(dir), true)
@@ -5381,13 +5324,11 @@ object LlmQueries {
     * and rolling_wau_sketch: one (day, sk) row per calendar day —
     * the daily job's output, any rollup unions sketch rows only.
     */
-  private def hllSketchDir: String =
-    sidecar("graft.hll.sketch.dir", "/tmp/graft_hll_sketches")
   private val hllSketchMemo = new java.util.concurrent.ConcurrentHashMap[
     String, String]()
   private def hllDailyArtifact(s: SparkSession, d: String): String =
     hllSketchMemo.computeIfAbsent(d, _ => {
-      val out = hllSketchDir
+      val out = Sidecars.artifact("hll_sketches", d)
       Tables.events(s, d)
         .select(to_date(col("ts")).as("day"), col("user_id"))
         .groupBy(col("day"))
@@ -5418,7 +5359,7 @@ object LlmQueries {
       val dels = e.filter(col("vec_id") % 11 === 0)
       val batch = e.filter(isBatch)
       val cts = centroids32("corpus0", d, corpus0)
-      val store = annStoreDir
+      val store = Sidecars.artifact("ann_store", d)
       val fs = org.apache.hadoop.fs.FileSystem.get(
         new java.net.URI(store), s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(store), true)
@@ -5435,14 +5376,13 @@ object LlmQueries {
       val finalCorpus = e.filter(!isBatch &&
         ((col("vec_id") % 7 =!= 0 && col("vec_id") % 11 =!= 0) ||
           col("vec_id") % 7 === 0))
-      if (!sys.props.contains("graft.ivf.cells.skipWrite"))
+      Sidecars.writeOracleInput(annStoreCellsDir) {
         Similarity.ivfCells(finalCorpus, "vec_id", "embedding", cts, n = 2)
           .withColumn("side", lit("c"))
           .unionByName(
             Similarity.ivfCells(batch, "vec_id", "embedding", cts, n = 8)
               .withColumn("side", lit("q")))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(annStoreCellsDir)
+      }
       (cts, store)
     })
 
@@ -5459,25 +5399,12 @@ object LlmQueries {
     * "What's wrong" 2): the three rows re-ran the signature join per
     * bench iteration — the most expensive repeated subtree in the
     * registry.
-    *
-    * The default path is PROCESS-UNIQUE (PID suffix): the documented
-    * workflow runs a background Verify concurrently with an sbt Bench
-    * on the same sfDir, and a shared fixed path would let one JVM's
-    * mode-overwrite delete part files out from under the other's read
-    * (r12 ADVICE). Each JVM builds its own copy once (memoized); no
-    * cross-JVM reuse also means no stale-artifact risk across code
-    * versions. `-Dgraft.linkage.{pairs,index}.dir=` still pins an
-    * explicit shared path when a caller wants one.
     */
-  private def pidTag: String =
-    java.lang.ProcessHandle.current().pid().toString
   private val linkagePairsMemo = new java.util.concurrent.ConcurrentHashMap[
     String, String]()
   private def linkagePairsArtifact(s: SparkSession, d: String): String =
     linkagePairsMemo.computeIfAbsent(d, _ => {
-      val dir = sys.props.getOrElse("graft.linkage.pairs.dir",
-        "/tmp/graft_linkage_pairs_" +
-          d.replaceAll("[^A-Za-z0-9._-]", "_") + "_p" + pidTag)
+      val dir = Sidecars.artifact("linkage_pairs", d)
       graft.ops.FuzzyJoin.linkRecords(Tables.customer(s, d),
           "c_custkey", "c_name", "c_nationkey", Seq("c_mktsegment"))
         .write.mode("overwrite").parquet(dir)
@@ -5487,9 +5414,7 @@ object LlmQueries {
     String, String]()
   private def linkageIndexArtifact(s: SparkSession, d: String): String =
     linkageIndexMemo.computeIfAbsent(d, _ => {
-      val dir = sys.props.getOrElse("graft.linkage.index.dir",
-        "/tmp/graft_linkage_index_" +
-          d.replaceAll("[^A-Za-z0-9._-]", "_") + "_p" + pidTag)
+      val dir = Sidecars.artifact("linkage_index", d)
       val master = Tables.customer(s, d).filter(col("c_custkey") % 5 =!= 0)
       graft.streaming.LinkageStream.nameIndex(master, "c_custkey",
           "c_name", "c_nationkey", Seq("c_mktsegment"))
@@ -5503,8 +5428,7 @@ object LlmQueries {
     * are the '|'-separated substring forms the SQL splices with
     * ('|a|b|' → '|ab|'); tokens never contain '|' (whitespace words).
     */
-  private def bpeMergesDir: String =
-    sidecar("graft.bpe.merges.dir", "/tmp/graft_bpe_merges")
+  private def bpeMergesDir: String = Sidecars.oracleInput("bpe_merges")
   private val bpeMemo = new java.util.concurrent.ConcurrentHashMap[
     String, Seq[(String, String)]]()
   private def bpeArtifact(s: SparkSession, d: String)
@@ -5515,8 +5439,7 @@ object LlmQueries {
         (r, s"|$a|$b|", s"|$a$b|")
       }
       import s.implicits._
-      rows.toDF("rank", "pat", "rep")
-        .coalesce(1).write.mode("overwrite").parquet(bpeMergesDir)
+      Sidecars.writeOracleInput(bpeMergesDir)(rows.toDF("rank", "pat", "rep"))
       merges
     })
 
@@ -5530,8 +5453,7 @@ object LlmQueries {
       .mkString("CASE ", " ", " ELSE substr(rest, 1, 1) END")
 
   /** rag_chunk_search's materialized chunk signatures. */
-  private def ragSigsDir: String =
-    sidecar("graft.rag.sigs.dir", "/tmp/graft_rag_sigs")
+  private def ragSigsDir: String = Sidecars.oracleInput("rag_sigs")
 
   /** The fixed retrieval query for rag_chunk_search, and its SimHash
     * signature computed ONCE via the kernel's interpreted eval — the
@@ -5559,47 +5481,36 @@ object LlmQueries {
     * table (ivfCellsDir pattern — separate paths so queries can't
     * clobber each other within one Verify run).
     */
-  private def pqCodesDir: String =
-    sidecar("graft.pq.codes.dir", "/tmp/graft_pq_codes")
-  private def pqCodebookDir: String =
-    sidecar("graft.pq.codebook.dir", "/tmp/graft_pq_codebook")
+  private def pqCodesDir: String = Sidecars.oracleInput("pq_codes")
+  private def pqCodebookDir: String = Sidecars.oracleInput("pq_codebook")
 
   /** bq_topk's materialized packed sign signatures (both sides). */
-  private def bqSigsDir: String =
-    sidecar("graft.bq.sigs.dir", "/tmp/graft_bq_sigs")
+  private def bqSigsDir: String = Sidecars.oracleInput("bq_sigs")
 
   /** sq8_topk's materialized code vectors and per-dim scales. */
-  private def sq8CodesDir: String =
-    sidecar("graft.sq8.codes.dir", "/tmp/graft_sq8_codes")
-  private def sq8MaxsDir: String =
-    sidecar("graft.sq8.maxs.dir", "/tmp/graft_sq8_maxs")
+  private def sq8CodesDir: String = Sidecars.oracleInput("sq8_codes")
+  private def sq8MaxsDir: String = Sidecars.oracleInput("sq8_maxs")
 
   /** ivfpq_topk's materialized sidecars (cells + codes + codebook). */
-  private def ivfpqCellsDir: String =
-    sidecar("graft.ivfpq.cells.dir", "/tmp/graft_ivfpq_cells")
-  private def ivfpqCodesDir: String =
-    sidecar("graft.ivfpq.codes.dir", "/tmp/graft_ivfpq_codes")
-  private def ivfpqCodebookDir: String =
-    sidecar("graft.ivfpq.codebook.dir", "/tmp/graft_ivfpq_codebook")
+  private def ivfpqCellsDir: String = Sidecars.oracleInput("ivfpq_cells")
+  private def ivfpqCodesDir: String = Sidecars.oracleInput("ivfpq_codes")
+  private def ivfpqCodebookDir: String = Sidecars.oracleInput("ivfpq_codebook")
 
-  /** ann_incremental_ivfpq's persisted serving index + oracle sidecars
-    * (cells derive from the read-back index; codes/codebook alongside).
+  /** ann_incremental_ivfpq's oracle sidecars (cells derive from the
+    * read-back index; codes/codebook alongside).
     */
-  private def annIvfpqIndexDir: String =
-    sidecar("graft.ann.ivfpq.index.dir", "/tmp/graft_ann_ivfpq_index")
   private def annIvfpqCellsDir: String =
-    sidecar("graft.ann.ivfpq.cells.dir", "/tmp/graft_ann_ivfpq_cells")
+    Sidecars.oracleInput("ann_ivfpq_cells")
   private def annIvfpqCodesDir: String =
-    sidecar("graft.ann.ivfpq.codes.dir", "/tmp/graft_ann_ivfpq_codes")
+    Sidecars.oracleInput("ann_ivfpq_codes")
   private def annIvfpqCodebookDir: String =
-    sidecar("graft.ann.ivfpq.codebook.dir", "/tmp/graft_ann_ivfpq_codebook")
+    Sidecars.oracleInput("ann_ivfpq_codebook")
 
   /** semantic_dedup's materialized cell assignments (ivfCellsDir
     * pattern — same lifecycle, separate path so the two queries can't
     * clobber each other within one Verify run).
     */
-  private def semdedupCellsDir: String =
-    sidecar("graft.semdedup.cells.dir", "/tmp/graft_semdedup_cells")
+  private def semdedupCellsDir: String = Sidecars.oracleInput("semdedup_cells")
 
   /** The fixed query-term set for bm25_search; the left-to-right order
     * here is the score association order replicated in the oracle.

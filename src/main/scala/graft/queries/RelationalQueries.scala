@@ -741,7 +741,7 @@ object RelationalQueries {
     // over the flat table.
     QuerySpec("partitioned_scan", (s, d) => {
       val dir = partitionedEventsDir(s, d)
-      Tables.parquet(s, dir)
+      Tables.parquet(s, s"$dir/events")
         .filter(col("event_type") === "purchase")
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_purchases"),
@@ -761,8 +761,8 @@ object RelationalQueries {
     // and partitioned_scan.
     QuerySpec("dpp_scan", (s, d) => {
       val dir = partitionedEventsDir(s, d)
-      val dim = Tables.parquet(s, s"${dir}_dim")
-      Tables.parquet(s, dir)
+      val dim = Tables.parquet(s, s"$dir/dim")
+      Tables.parquet(s, s"$dir/events")
         .join(dim.filter(col("status") === "tracked")
           .select("event_type"), Seq("event_type"))
         .groupBy(col("event_type"))
@@ -4460,11 +4460,10 @@ object RelationalQueries {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def partitionedEventsDir(s: SparkSession, d: String): String =
     partMemo.computeIfAbsent(d, _ => {
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-      val dir = sys.props.getOrElse("graft.partitioned.dir",
-        s"/tmp/graft_partitioned_$tag")
+      val dir = Sidecars.artifact("partitioned", d)
       Tables.events(s, d)
-        .write.mode("overwrite").partitionBy("event_type").parquet(dir)
+        .write.mode("overwrite").partitionBy("event_type")
+        .parquet(s"$dir/events")
       // a tiny FILE-BASED dim beside it (dpp_scan): dynamic partition
       // pruning needs a selective predicate on a real relation — a
       // literal local frame constant-folds its filter away and the
@@ -4474,7 +4473,7 @@ object RelationalQueries {
         ("view", "ignored"), ("signup", "ignored"),
         ("error", "ignored")))
         .toDF("event_type", "status")
-        .write.mode("overwrite").parquet(s"${dir}_dim")
+        .write.mode("overwrite").parquet(s"$dir/dim")
       dir
     })
 
@@ -4483,11 +4482,12 @@ object RelationalQueries {
   private def bucketedTables(s: SparkSession, d: String)
       : (String, String) =
     bucketMemo.computeIfAbsent(d, _ => {
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-      val liT = s"graft_bkt_lineitem_$tag"
-      val orT = s"graft_bkt_orders_$tag"
-      val base = sys.props.getOrElse("graft.bucketed.dir",
-        s"/tmp/graft_bucketed_$tag")
+      // the artifact dir's name is unique per (JVM, dataset dir) and
+      // identifier-safe, so it also names the two catalog tables
+      val base = Sidecars.artifact("bucketed", d)
+      val name = new java.io.File(base).getName
+      val liT = s"${name}_lineitem"
+      val orT = s"${name}_orders"
       val fs = org.apache.hadoop.fs.FileSystem.get(
         new java.net.URI(base), s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(base), true)

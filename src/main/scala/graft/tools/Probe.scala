@@ -106,7 +106,7 @@ object Probe {
     require(args.nonEmpty, "usage: Probe noop <sfDir> [outFile]")
     val d = args(0)
     val out = args.lift(1).getOrElse("noop_sweep.json")
-    // bench conditions: sidecar materialization off (Bench sets the
+    // bench conditions: oracle-input writes off (Bench sets the
     // same flag — the sweep judges the BENCH's fidelity)
     System.setProperty("graft.ivf.cells.skipWrite", "true")
     val spark = session("32", "ERROR")
