@@ -134,8 +134,7 @@ object LlmQueries {
     // within 2 edits INSIDE the same nation block, scored by segment
     // agreement — FastSS signatures keyed by (block, signature), the
     // within-block quadratic lives only in the oracle. The verified
-    // pair table is the persisted per-(session, sf) artifact
-    // (linkagePairsArtifact): built once, read by every consumer
+    // pair table is the persisted artifact (linkagePairsArtifact)
     QuerySpec("record_linkage", (s, d) =>
       Tables.parquet(s, linkagePairsArtifact(s, d)),
       // within-block all-pairs is the oracle's luxury: blocks are
@@ -665,7 +664,7 @@ object LlmQueries {
     QuerySpec("ivf_topk", (s, d) => {
       val e = emb(s, d)
       val q = e.filter(col("vec_id") < 8)
-      val cts = centroids32("all", d, e)
+      val cts = centroids32("all", s, d, e)
       Sidecars.writeOracleInput(ivfCellsDir) {
         Similarity.ivfCells(e, "vec_id", "embedding", cts, n = 2)
           .withColumn("side", lit("c"))
@@ -700,7 +699,7 @@ object LlmQueries {
     QuerySpec("ivf_topk_filtered", (s, d) => {
       val e = emb(s, d)
       val q = e.filter(col("vec_id") < 8)
-      val cts = centroids32("all", d, e)
+      val cts = centroids32("all", s, d, e)
       val pred = col("label") % 2 === 0
       Sidecars.writeOracleInput(ivfFiltCellsDir) {
         Similarity.ivfCells(e.filter(pred), "vec_id", "embedding",
@@ -742,7 +741,7 @@ object LlmQueries {
       val e = emb(s, d)
       val corpus = e.filter(col("vec_id") % 5 =!= 0)
       val batch = e.filter(col("vec_id") % 5 === 0)
-      val cts = centroids32("corpus", d, corpus)
+      val cts = centroids32("corpus", s, d, corpus)
       val indexDir = Sidecars.artifact("ann_index", d)
       Similarity.ivfIndex(corpus, "vec_id", "embedding", cts, nAssign = 2)
         .write.mode("overwrite").parquet(indexDir)
@@ -774,14 +773,10 @@ object LlmQueries {
          |  FROM scored)
          |SELECT query_id, neighbor_id, rnk, cosine FROM r WHERE rnk <= 5""".stripMargin),
     // N3 — the PROBE-ONLY bench twin of ann_incremental: the serving
-    // index is trained, written, and memoized ONCE per (session,
-    // sf dir); every call reads the artifact back and probes. Bench
-    // iterations after the first therefore time exactly what
-    // production pays per daily batch — the probe — instead of
-    // re-paying index construction, which in production is amortized
-    // across batches. Output is row-identical to ann_incremental
-    // (same deterministic centroid training, corpus/batch split, and
-    // probe parameters).
+    // index is built once per dataset (annProbeArtifact); every call
+    // reads it back and probes, what production pays per daily batch.
+    // Output is row-identical to ann_incremental (same deterministic
+    // centroid training, corpus/batch split, and probe parameters).
     QuerySpec("ann_incremental_probe", (s, d) => {
       val e = emb(s, d)
       val batch = e.filter(col("vec_id") % 5 === 0)
@@ -825,7 +820,7 @@ object LlmQueries {
       val corpus = e.filter(col("vec_id") % 5 =!= 0)
       val batch = e.filter(col("vec_id") % 5 === 0)
         .withColumn("ts", timestamp_seconds(col("vec_id") * 60))
-      val cts = centroids32("corpus", d, corpus)
+      val cts = centroids32("corpus", s, d, corpus)
       val index = Similarity.ivfIndex(corpus, "vec_id", "embedding", cts,
         nAssign = 2)
       Sidecars.writeOracleInput(annStreamCellsDir) {
@@ -875,7 +870,7 @@ object LlmQueries {
       val adds = e.filter(!isBatch && col("vec_id") % 7 === 0)
       val dels = e.filter(col("vec_id") % 11 === 0)
       val batch = e.filter(isBatch)
-      val cts = centroids32("corpus0", d, corpus0)
+      val cts = centroids32("corpus0", s, d, corpus0)
       val maintained = Similarity.ivfIndexUpsert(
         Similarity.ivfIndexDelete(
           Similarity.ivfIndex(corpus0, "vec_id", "embedding", cts,
@@ -921,7 +916,7 @@ object LlmQueries {
     QuerySpec("ann_cell_stats", (s, d) => {
       val e = emb(s, d)
       val corpus = e.filter(col("vec_id") % 5 =!= 0)
-      val cts = centroids32("corpus", d, corpus)
+      val cts = centroids32("corpus", s, d, corpus)
       Sidecars.writeOracleInput(annCellStatsDir) {
         Similarity.ivfCells(corpus, "vec_id", "embedding", cts, n = 2)
           .withColumn("side", lit("c"))
@@ -947,14 +942,10 @@ object LlmQueries {
     // green hash proves changelog-resolution == rebuild through the
     // persisted bytes.
     QuerySpec("ann_index_store", (s, d) => {
-      // store build + cells sidecar are memoized per (session, sf) —
-      // the annProbeArtifact pattern: the first call pays the
-      // changelog day (delete, append, tombstone, append, sidecar);
-      // bench iterations 2..n then time what production pays every
-      // day after — the latest-wins read + probe of the persisted
-      // store. Maintenance-day cost stays benchmarked by
-      // ann_index_upsert; correctness of the build is Verify's first
-      // run + AnnIndexStoreSpec.
+      // store build + cells sidecar are built once per dataset
+      // (annStoreArtifact); later calls time the latest-wins read +
+      // probe. Maintenance-day cost stays benchmarked by
+      // ann_index_upsert.
       val (cts, store) = annStoreArtifact(s, d)
       val e = emb(s, d)
       val batch = e.filter(col("vec_id") % 5 === 0)
@@ -991,8 +982,8 @@ object LlmQueries {
       val e = emb(s, d)
       val corpus = e.filter(col("vec_id") % 5 =!= 0)
       val batch = e.filter(col("vec_id") % 5 === 0)
-      val cts = centroids32("corpus", d, corpus)
-      val cbs = pqCodebooks("corpus", d, corpus)
+      val cts = centroids32("corpus", s, d, corpus)
+      val cbs = pqCodebooks("corpus", s, d, corpus)
       val indexDir = Sidecars.artifact("ann_ivfpq_index", d)
       Similarity.ivfPqIndex(corpus, "vec_id", "embedding", cts, cbs,
           nAssign = 2)
@@ -1239,7 +1230,7 @@ object LlmQueries {
     QuerySpec("pq_topk", (s, d) => {
       val e = emb(s, d)
       val q = e.filter(col("vec_id") < 8)
-      val cbs = pqCodebooks("all", d, e)
+      val cbs = pqCodebooks("all", s, d, e)
       Sidecars.writeOracleInput(pqCodesDir) {
         Similarity.pqCodes(e, "vec_id", "embedding", cbs)
       }
@@ -1306,7 +1297,7 @@ object LlmQueries {
     QuerySpec("pq_recall", (s, d) => {
       val e = emb(s, d)
       val q = e.filter(col("vec_id") < 50)
-      val cbs = pqCodebooks("all", d, e)
+      val cbs = pqCodebooks("all", s, d, e)
       recallGate(
         Similarity.bruteForceTopK(e, q, "vec_id", "embedding", k = 5),
         Similarity.pqTopK(cbs, e, q, "vec_id", "embedding",
@@ -1458,8 +1449,8 @@ object LlmQueries {
     QuerySpec("ivfpq_topk", (s, d) => {
       val e = emb(s, d)
       val q = e.filter(col("vec_id") < 8)
-      val cts = centroids32("all", d, e)
-      val cbs = pqCodebooks("all", d, e)
+      val cts = centroids32("all", s, d, e)
+      val cbs = pqCodebooks("all", s, d, e)
       Sidecars.writeOracleInput(ivfpqCellsDir) {
         Similarity.ivfCells(e, "vec_id", "embedding", cts, n = 2)
           .withColumn("side", lit("c"))
@@ -1534,8 +1525,8 @@ object LlmQueries {
     QuerySpec("ivfpq_recall", (s, d) => {
       val e = emb(s, d)
       val q = e.filter(col("vec_id") < 50)
-      val cts = centroids32("all", d, e)
-      val cbs = pqCodebooks("all", d, e)
+      val cts = centroids32("all", s, d, e)
+      val cbs = pqCodebooks("all", s, d, e)
       // BOTH approximation knobs scale with the √n cell count
       // (k/32 — anchored so k=32, both committed fixture scales,
       // keeps (14, 20) byte-identical): the r12 √n rule alone let
@@ -1631,7 +1622,7 @@ object LlmQueries {
     // so the oracle compares the exact same partition.
     QuerySpec("semantic_dedup", (s, d) => {
       val e = emb(s, d)
-      val cts = centroids32("all", d, e)
+      val cts = centroids32("all", s, d, e)
       Sidecars.writeOracleInput(semdedupCellsDir) {
         Similarity.semanticCells(e, "vec_id", "embedding", cts)
       }
@@ -1663,9 +1654,8 @@ object LlmQueries {
     // inverted-index posting store maintained by append-only deltas
     // (TextIndexStore: seq'd generations + tombstones, latest-wins per
     // doc, 64-way term-bucket partitioning), probed by the same
-    // rational-BM25 chain as bm25_search. The store build (base
-    // append, tombstone day, re-add day) is memoized per (session,
-    // sf); the timed query is the daily probe of the read-back store.
+    // rational-BM25 chain as bm25_search. The store is built once per
+    // dataset; the timed query is the daily probe of the read-back store.
     // Oracle recomputes BM25 from scratch over the final corpus —
     // green hash proves changelog-resolution == rebuild.
     QuerySpec("text_index_store", (s, d) => {
@@ -1719,11 +1709,10 @@ object LlmQueries {
     // TopKAgg ranking. The streaming run of the same function is
     // asserted stream==batch in TextIndexStoreSpec.
     QuerySpec("text_probe_stream", (s, d) => {
-      // the scored-postings serving artifact: computed once per
-      // (session, sf) index generation and read back — the timed
-      // query is the request fan-in + fold + top-k, which is what a
-      // serving tier pays per trigger
-      val scoredDir = textScoredMemo.computeIfAbsent(d, _ => {
+      // the scored-postings serving artifact, built once per dataset:
+      // the timed query is the request fan-in + fold + top-k, which
+      // is what a serving tier pays per trigger
+      val scoredDir = Sidecars.derived("text_scored", s, d, "documents") {
         val dir = textIndexArtifact(s, d)
         val (posts, stats) = graft.sources.TextIndexStore.read(s, dir)
         val srow = stats.agg(count(lit(1)).as("n"),
@@ -1733,7 +1722,7 @@ object LlmQueries {
           .scorePostings(posts, srow.getLong(0), srow.getLong(1))
           .write.mode("overwrite").parquet(out)
         out
-      })
+      }
       import s.implicits._
       val reqs = (0 until 8).map { r =>
         val terms = r % 4 match {
@@ -4522,13 +4511,13 @@ object LlmQueries {
     // broadcast shape); exact by construction — Bloom false positives
     // die in the gram-string join, false negatives don't exist — so it
     // shares decontaminate's oracle verbatim
-    // the Bloom is the once-per-eval-set-release artifact: memoized
-    // per (session, sf) so the timed query is the daily corpus pass —
-    // probe-in-scan + exact gram join — not the filter build
+    // the Bloom is the once-per-eval-set-release artifact, so the
+    // timed query is the daily corpus pass, not the filter build
     QuerySpec("decontaminate_bloom", (s, d) =>
       CorpusOps.decontaminateBloom(docs(s, d), "doc_id", "text",
-        prebuilt = Some(evalBloomMemo.computeIfAbsent(d,
-          _ => CorpusOps.evalGramBloom(docs(s, d), "doc_id", "text")))),
+        prebuilt = Some(Sidecars.derived("eval_bloom", s, d, "documents") {
+          CorpusOps.evalGramBloom(docs(s, d), "doc_id", "text")
+        })),
       decontaminateOracle,
       barrier = true),
     // Corpus ops — global span dedup: per-doc fraction of 5-word spans
@@ -5222,31 +5211,24 @@ object LlmQueries {
   private def annStreamCellsDir: String =
     Sidecars.oracleInput("ann_stream_cells")
 
-  /** ann_incremental_probe's once-per-(session, sf) serving artifact:
-    * centroids train and the IVF index persists on first use; later
-    * calls (bench iterations) reuse both, so the timed query is the
-    * probe alone.
+  /** ann_incremental_probe's serving artifact: trained centroids and
+    * the persisted IVF index, reused until the embeddings change.
     */
-  private val annProbeMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[Array[Long]], String)]()
   private def annProbeArtifact(s: SparkSession, d: String)
       : (Array[Array[Long]], String) =
-    annProbeMemo.computeIfAbsent(d, _ => {
+    Sidecars.derived("ann_probe_index", s, d, "embeddings") {
       val e = emb(s, d)
       val corpus = e.filter(col("vec_id") % 5 =!= 0)
-      val cts = centroids32("corpus", d, corpus)
+      val cts = centroids32("corpus", s, d, corpus)
       val dir = Sidecars.artifact("ann_probe_index", d)
       Similarity.ivfIndex(corpus, "vec_id", "embedding", cts, nAssign = 2)
         .write.mode("overwrite").parquet(dir)
       (cts, dir)
-    })
+    }
 
-  /** The shared coarse quantizer per (session, sf, corpus shape):
-    * trainCentroids is deterministic for identical input, so memoizing
-    * only removes the repeated sample job + driver k-means each bench
-    * iteration paid — in production the quantizer is a trained-once
-    * artifact every daily job loads (the premise of ivfIndexUpsert's
-    * fixed-centroid contract).
+  /** The shared coarse quantizer per (dataset, corpus shape), trained
+    * once like the artifact every daily job loads in production (the
+    * premise of ivfIndexUpsert's fixed-centroid contract).
     *
     * CELL COUNT SCALES WITH THE CORPUS (the FAISS √n rule): at fixed
     * k, an IVF probe scans nProbe/k of the corpus PER QUERY, so a
@@ -5258,43 +5240,35 @@ object LlmQueries {
     * constant and the probe at Θ(q·√n). Anchored so BOTH fixture
     * scales keep k = 32 exactly — every committed oracle artifact is
     * byte-identical; only larger corpora (the sf1 run: k = 91) get
-    * more cells. One count() job per (session, sf), inside the memo.
+    * more cells. One count() job per training.
     */
-  private val ctsMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Array[Array[Long]]]()
-  private def centroids32(tag: String, d: String,
+  private def centroids32(tag: String, s: SparkSession, d: String,
                           emb: => DataFrame): Array[Array[Long]] =
-    ctsMemo.computeIfAbsent(s"$d#$tag", _ => {
+    Sidecars.derived(s"centroids32_$tag", s, d, "embeddings") {
       val corpus = emb
       val k = math.max(32, math.round(
         32.0 * math.sqrt(corpus.count() / 2000.0)).toInt)
       Similarity.trainCentroids(corpus, "vec_id", "embedding", k)
-    })
+    }
 
-  /** The shared PQ codebooks per (session, sf, corpus shape) — the
-    * ctsMemo argument verbatim: training is deterministic, the
-    * codebook is a trained-once artifact in production, and the
-    * repeated sample job + driver k-means per bench iteration was the
-    * bulk of ann_incremental_ivfpq's time.
+  /** The shared PQ codebooks per (dataset, corpus shape), trained once
+    * as [[centroids32]] is.
     */
-  private val pqMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Array[Array[Array[Long]]]]()
-  private def pqCodebooks(tag: String, d: String,
+  private def pqCodebooks(tag: String, s: SparkSession, d: String,
                           emb: => DataFrame): Array[Array[Array[Long]]] =
-    pqMemo.computeIfAbsent(s"$d#$tag",
-      _ => Similarity.trainPqCodebooks(emb, "vec_id", "embedding",
-        m = 16, codesPerSub = 32))
+    Sidecars.derived(s"pq_codebooks_$tag", s, d, "embeddings") {
+      Similarity.trainPqCodebooks(emb, "vec_id", "embedding",
+        m = 16, codesPerSub = 32)
+    }
 
-  /** text_index_store's once-per-(session, sf) changelog-day build:
+  /** text_index_store's changelog-day build:
     * base corpus (doc_id % 7 != 0) at seq 0, tombstones (% 11 == 0) at
     * seq 1, the % 7 == 0 docs appended at seq 2 (resurrecting any
     * tombstoned among them — strictly-higher seq wins). Final live
     * corpus: (%7 != 0 && %11 != 0) || %7 == 0.
     */
-  private val textIndexMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, String]()
   private def textIndexArtifact(s: SparkSession, d: String): String =
-    textIndexMemo.computeIfAbsent(d, _ => {
+    Sidecars.derived("text_index", s, d, "documents") {
       val dd = docs(s, d)
       val dir = Sidecars.artifact("text_index", d)
       val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -5314,20 +5288,14 @@ object LlmQueries {
       // resolve() here, and the oracle still proves probe == rebuild.
       graft.sources.TextIndexStore.compact(s, dir, 3L)
       dir
-    })
-
-  /** text_probe_stream's scored-postings serving artifact. */
-  private val textScoredMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, String]()
+    }
 
   /** The per-day HLL sketch artifact shared by distinct_users_sketch
     * and rolling_wau_sketch: one (day, sk) row per calendar day —
     * the daily job's output, any rollup unions sketch rows only.
     */
-  private val hllSketchMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, String]()
   private def hllDailyArtifact(s: SparkSession, d: String): String =
-    hllSketchMemo.computeIfAbsent(d, _ => {
+    Sidecars.derived("hll_sketches", s, d, "events") {
       val out = Sidecars.artifact("hll_sketches", d)
       Tables.events(s, d)
         .select(to_date(col("ts")).as("day"), col("user_id"))
@@ -5335,30 +5303,22 @@ object LlmQueries {
         .agg(expr("hll_sketch_agg(user_id, 14)").as("sk"))
         .coalesce(1).write.mode("overwrite").parquet(out)
       out
-    })
+    }
 
-  /** decontaminate_bloom's once-per-(session, sf) eval-gram filter. */
-  private val evalBloomMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, graft.functions.GraftBloomFilter]()
-
-  /** ann_index_store's once-per-(session, sf) store build: the
-    * changelog day (base append, tombstone day, add day) plus the
-    * oracle's cells sidecar; returns (centroids, store dir). See the
-    * query comment — bench iterations after the first time only the
-    * steady-state read + probe.
+  /** ann_index_store's store build: the changelog day (base append,
+    * tombstone day, add day) plus the oracle's cells sidecar; returns
+    * (centroids, store dir).
     */
-  private val annStoreMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[Array[Long]], String)]()
   private def annStoreArtifact(s: SparkSession, d: String)
       : (Array[Array[Long]], String) =
-    annStoreMemo.computeIfAbsent(d, _ => {
+    Sidecars.derived("ann_store", s, d, "embeddings") {
       val e = emb(s, d)
       val isBatch = col("vec_id") % 5 === 0
       val corpus0 = e.filter(!isBatch && col("vec_id") % 7 =!= 0)
       val adds = e.filter(!isBatch && col("vec_id") % 7 === 0)
       val dels = e.filter(col("vec_id") % 11 === 0)
       val batch = e.filter(isBatch)
-      val cts = centroids32("corpus0", d, corpus0)
+      val cts = centroids32("corpus0", s, d, corpus0)
       val store = Sidecars.artifact("ann_store", d)
       val fs = org.apache.hadoop.fs.FileSystem.get(
         new java.net.URI(store), s.sparkContext.hadoopConfiguration)
@@ -5384,56 +5344,44 @@ object LlmQueries {
               .withColumn("side", lit("q")))
       }
       (cts, store)
-    })
+    }
 
-  /** The linkage family's once-per-(session, sf) persisted artifacts
-    * — the annStoreArtifact precedent applied to entity resolution.
-    * In a master-data pipeline the VERIFIED PAIR TABLE and the master
-    * SIGNATURE INDEX are maintained artifacts: the FastSS join runs
-    * when records change, and downstream consumers (survivorship
-    * merges, delta probes, audits) read the artifact instead of
-    * re-pairing the corpus. record_linkage / golden_record /
-    * linkage_probe_stream share these; values are byte-identical to
-    * the inline form (parquet round-trip of a deterministic frame),
-    * so each row keeps its independent oracle. Measured (r11 VERDICT
-    * "What's wrong" 2): the three rows re-ran the signature join per
-    * bench iteration — the most expensive repeated subtree in the
-    * registry.
+  /** The linkage family's persisted artifacts: the VERIFIED PAIR
+    * TABLE and the master SIGNATURE INDEX of a master-data pipeline,
+    * rebuilt when the customer records change and read by
+    * record_linkage / golden_record / linkage_probe_stream instead of
+    * re-pairing the corpus. Values are byte-identical to the inline
+    * form (parquet round-trip of a deterministic frame), so each row
+    * keeps its independent oracle.
     */
-  private val linkagePairsMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, String]()
   private def linkagePairsArtifact(s: SparkSession, d: String): String =
-    linkagePairsMemo.computeIfAbsent(d, _ => {
+    Sidecars.derived("linkage_pairs", s, d, "customer") {
       val dir = Sidecars.artifact("linkage_pairs", d)
       graft.ops.FuzzyJoin.linkRecords(Tables.customer(s, d),
           "c_custkey", "c_name", "c_nationkey", Seq("c_mktsegment"))
         .write.mode("overwrite").parquet(dir)
       dir
-    })
-  private val linkageIndexMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, String]()
+    }
   private def linkageIndexArtifact(s: SparkSession, d: String): String =
-    linkageIndexMemo.computeIfAbsent(d, _ => {
+    Sidecars.derived("linkage_index", s, d, "customer") {
       val dir = Sidecars.artifact("linkage_index", d)
       val master = Tables.customer(s, d).filter(col("c_custkey") % 5 =!= 0)
       graft.streaming.LinkageStream.nameIndex(master, "c_custkey",
           "c_name", "c_nationkey", Seq("c_mktsegment"))
         .write.mode("overwrite").parquet(dir)
       dir
-    })
+    }
 
-  /** bpe_tokenize's merge-table artifact: learned once per (session,
-    * dataset dir) and persisted for the oracle's recursive-CTE replay —
+  /** bpe_tokenize's merge-table artifact: learned once per dataset and
+    * persisted for the oracle's recursive-CTE replay —
     * the trained-model-as-artifact shape of the IVF centroids. pat/rep
     * are the '|'-separated substring forms the SQL splices with
     * ('|a|b|' → '|ab|'); tokens never contain '|' (whitespace words).
     */
   private def bpeMergesDir: String = Sidecars.oracleInput("bpe_merges")
-  private val bpeMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(String, String)]]()
   private def bpeArtifact(s: SparkSession, d: String)
       : Seq[(String, String)] =
-    bpeMemo.computeIfAbsent(d, _ => {
+    Sidecars.derived("bpe_merges", s, d, "documents") {
       val merges = TextOps.learnBpeMerges(docs(s, d), "text")
       val rows = merges.zipWithIndex.map { case ((a, b), r) =>
         (r, s"|$a|$b|", s"|$a$b|")
@@ -5441,7 +5389,7 @@ object LlmQueries {
       import s.implicits._
       Sidecars.writeOracleInput(bpeMergesDir)(rows.toDF("rank", "pat", "rep"))
       merges
-    })
+    }
 
   /** The WordPieces greedy loop as SQL: one CASE arm per vocab entry,
     * longest-first with lexical tie-break — the exact match order the

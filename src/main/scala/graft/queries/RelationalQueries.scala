@@ -4436,30 +4436,16 @@ object RelationalQueries {
              |FROM j$i)""".stripMargin
         }.mkString("\nUNION ALL\n")))
 
-  /** Bucketed co-located join layout: lineitem and orders written
-    * ONCE per (session, dataset) as bucketed + per-bucket-sorted
-    * tables on the SAME 8-bucket orderkey hash — the table-layout
-    * twin of the graft-ocf store's KeyGroupedPartitioning. A join on
-    * the bucket key then needs NO shuffle on either side (and no
-    * sort, buckets being pre-sorted): the shuffle is paid once at
-    * write time and amortized over every downstream join/aggregate —
-    * THE core co-location technique for a fact table consumed by many
-    * per-key pipelines at 100 TB. No-Exchange plan proven in
-    * BucketedJoinSpec; this builder memoizes per dataset dir, so
-    * bench iterations 2..n time what production pays after layout.
-    */
   /** Hive-style partitioned layout of events (partitionBy event_type)
-    * written ONCE per (session, dataset) — the directory-partitioning
+    * written once per dataset — the directory-partitioning
     * face of the layout family next to [[bucketedTables]]: an
     * equality filter on the partition column prunes whole directories
     * at PLANNING time (PartitionFilters in the scan, proven in
     * PartitionedScanSpec), so a 100 TB table filtered to one type
     * reads that type's files and nothing else.
     */
-  private val partMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def partitionedEventsDir(s: SparkSession, d: String): String =
-    partMemo.computeIfAbsent(d, _ => {
+    Sidecars.derived("partitioned", s, d, "events") {
       val dir = Sidecars.artifact("partitioned", d)
       Tables.events(s, d)
         .write.mode("overwrite").partitionBy("event_type")
@@ -4475,13 +4461,20 @@ object RelationalQueries {
         .toDF("event_type", "status")
         .write.mode("overwrite").parquet(s"$dir/dim")
       dir
-    })
+    }
 
-  private val bucketMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
+  /** Bucketed co-located join layout: lineitem and orders written once
+    * per dataset as bucketed + per-bucket-sorted tables on the SAME
+    * 8-bucket orderkey hash — the table-layout twin of the graft-ocf
+    * store's KeyGroupedPartitioning. A join on the bucket key then
+    * needs NO shuffle on either side (and no sort, buckets being
+    * pre-sorted): the shuffle is paid once at write time and amortized
+    * over every downstream join/aggregate. No-Exchange plan proven in
+    * BucketedJoinSpec.
+    */
   private def bucketedTables(s: SparkSession, d: String)
       : (String, String) =
-    bucketMemo.computeIfAbsent(d, _ => {
+    Sidecars.derived("bucketed", s, d, "lineitem", "orders") {
       // the artifact dir's name is unique per (JVM, dataset dir) and
       // identifier-safe, so it also names the two catalog tables
       val base = Sidecars.artifact("bucketed", d)
@@ -4504,5 +4497,5 @@ object RelationalQueries {
         .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
         .saveAsTable(orT)
       (liT, orT)
-    })
+    }
 }

@@ -1,6 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.engine.Tables
 
 /** Where registry sidecars live. A sidecar is a parquet directory a
   * row writes beside its result, and who reads it picks its lifetime:
@@ -17,6 +21,9 @@ import org.apache.spark.sql.DataFrame
   *    daily sketch) is read back only by the query that wrote it. It
   *    lives in a per-JVM temp dir, one per (artifact, dataset dir),
   *    deleted when the JVM exits.
+  *
+  * It also owns every memo of a value derived from a dataset: see
+  * [[derived]] for the one staleness rule.
   */
 private[queries] object Sidecars {
 
@@ -48,15 +55,37 @@ private[queries] object Sidecars {
     if (!java.lang.Boolean.getBoolean("graft.ivf.cells.skipWrite"))
       df.coalesce(1).write.mode("overwrite").parquet(dir)
 
-  private val artifacts =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val artifacts = new ConcurrentHashMap[(String, String), String]()
 
   /** The query artifact `name` for dataset dir `d`: one temp dir per
-    * (name, d) per JVM, deleted at exit. Keyed by `d` itself, the key
-    * of the artifact's own memo, so a second dataset in the same JVM
-    * can never overwrite the first one's artifact.
+    * (name, d) per JVM, deleted at exit, so a second dataset in the
+    * same JVM can never overwrite the first one's artifact.
     */
   def artifact(name: String, d: String): String =
     artifacts.computeIfAbsent((name, d),
       _ => graft.tools.TempDirs.create(s"graft_${name}_"))
+
+  /** Per (name, d): the last value built and its stamp; the key's lock. */
+  private final class Built { var last: Option[(Tables.Stamp, Any)] = None }
+  private val built = new ConcurrentHashMap[(String, String), Built]()
+
+  /** The value `name` derived from the tables `tables` of dataset dir
+    * `d` (an artifact dir, trained centroids, a filter). It is kept
+    * with those tables' `Tables.stamp` and rebuilt, into the same
+    * [[artifact]] dir when it writes one, once that stamp changes: a
+    * fixture replaced at the same path is never answered from the old
+    * one's artifacts. `build` runs under its own key's lock only, so a
+    * build may derive other values.
+    */
+  def derived[A](name: String, s: SparkSession, d: String,
+                 tables: String*)(build: => A): A = {
+    val cell = built.computeIfAbsent((name, d), _ => new Built)
+    cell.synchronized {
+      val now = Tables.stamp(s, d, tables: _*)
+      cell.last match {
+        case Some((`now`, v)) => v.asInstanceOf[A]
+        case _ => val v = build; cell.last = Some((now, v)); v
+      }
+    }
+  }
 }

@@ -49,8 +49,8 @@ abstract class SparkSuite extends AnyFunSuite {
     s.sparkContext.setLogLevel("WARN")
     s
   }
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  /** A fresh temp dir, deleted when the test JVM exits. */
+  def tmpDir(prefix: String): String = graft.tools.TempDirs.create(prefix)
 
   /** Run `body` on the RocksDB state store provider —
     * `transformWithState`'s contract and the store the 100-TB

@@ -10,7 +10,10 @@ import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.functions.{col, sum}
+import org.apache.spark.sql.sources.BaseRelation
 import org.apache.spark.sql.types._
 
 import graft.SparkSuite
@@ -160,5 +163,51 @@ class TablesSpec extends SparkSuite {
     assert(b.orderBy("event_id").collect().map(r =>
         (r.getLong(0), r.getTimestamp(1).getTime)).toSeq ==
       (0L until 5L).map(i => (i, (i * 60 - shift) * 1000L)))
+  }
+
+  private def relationOf(df: DataFrame): BaseRelation =
+    df.queryExecution.analyzed.collectFirst {
+      case lr: LogicalRelation => lr.relation
+    }.get
+
+  private def sessionOf(df: DataFrame): SparkSession =
+    relationOf(df).sqlContext.sparkSession
+
+  test("two events reads of one path self-join with distinct attribute " +
+      "ids") {
+    val d = "/root/testdata/sf0.001"
+    val (a, b) = (Tables.events(spark, d), Tables.events(spark, d))
+    def userId(df: DataFrame) =
+      df.queryExecution.analyzed.output.find(_.name == "user_id").get.exprId
+    assert(userId(a) != userId(b))
+    // every user with n events pairs n * n times
+    val pairs = spark.read.parquet(s"$d/events.parquet")
+      .groupBy("user_id").count()
+      .agg(sum(col("count") * col("count"))).head().getLong(0)
+    assert(a.join(b, a("user_id") === b("user_id")).count() == pairs)
+  }
+
+  test("a memo hit reuses its session's relation; a second SparkSession " +
+      "gets its own") {
+    val p = s"${tmpDir("tables_sessions")}/t.parquet"
+    spark.range(100).toDF("a").write.parquet(p)
+    val other = spark.newSession()
+    val first = Tables.parquet(spark, p)
+    assert(relationOf(Tables.parquet(spark, p)) eq relationOf(first))
+    val theirs = Tables.parquet(other, p)
+    assert(sessionOf(first) eq spark)
+    assert(sessionOf(theirs) eq other)
+    assert(sessionOf(Tables.parquet(spark, p)) eq spark)
+    assert(theirs.count() == 100)
+  }
+
+  test("events on a MICROS fixture leaves nanosAsLong as the caller set it") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    withConf(key, "false") {
+      val ev = Tables.events(spark, "/root/testdata/sf0.001")
+      assert(ev.schema("ts").dataType == TimestampType)
+      assert(ev.count() > 0)
+      assert(spark.conf.get(key) == "false")
+    }
   }
 }

@@ -53,18 +53,19 @@ class PartitionedScanSpec extends SparkSuite {
     val d = "/root/testdata/sf0.001"
     val dir = tmpDir("part_events_dpp")
     Tables.events(s, d)
-      .write.mode("overwrite").partitionBy("event_type").parquet(dir)
+      .write.mode("overwrite").partitionBy("event_type")
+      .parquet(s"$dir/events")
     // file-based dim: a literal local frame would constant-fold its
     // filter and leave DPP nothing to key on
     Seq(("click", "tracked"), ("purchase", "tracked"),
         ("view", "ignored"))
       .toDF("event_type", "status")
-      .write.mode("overwrite").parquet(s"${dir}_dim")
-    val dim = s.read.parquet(s"${dir}_dim")
+      .write.mode("overwrite").parquet(s"$dir/dim")
+    val dim = s.read.parquet(s"$dir/dim")
     withSQLConf(
         "spark.sql.optimizer.dynamicPartitionPruning.useStats" -> "false",
         "spark.sql.adaptive.enabled" -> "false") {
-      val q = s.read.parquet(dir)
+      val q = s.read.parquet(s"$dir/events")
         .join(dim.filter(col("status") === "tracked")
           .select("event_type"), Seq("event_type"))
         .groupBy(col("event_type")).agg(count(lit(1)).as("n"))

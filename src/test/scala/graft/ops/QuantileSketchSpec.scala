@@ -85,8 +85,7 @@ class QuantileSketchSpec extends SparkSuite {
       .sketchStream(input.toDF().toDF("ts", "event_type", "value"))
       .writeStream.format("memory").queryName("sketch_stream")
       .outputMode("append")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("skck").toString)
+      .option("checkpointLocation", tmpDir("skck"))
       .start()
     input.addData(day1)
     q.processAllAvailable()
