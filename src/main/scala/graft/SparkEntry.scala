@@ -25,6 +25,19 @@ object SparkEntry {
       KafkaShape.decodeUtf8(
         KafkaShape.fromEvents(Tables.events(spark, "/root/testdata/sf0.001"))))
 
+  /** The local session every graft main runs in: `local[cpus]` with
+    * as many shuffle partitions, UTC, the graft extensions, no UI.
+    */
+  def session(cpus: String, logLevel: String): SparkSession = {
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+      .config("spark.ui.enabled", "false").getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
+
   /** One entry per implemented operator from SURVEY.md §2, built once
     * from the registry rows ([[Queries.rows]]). */
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =

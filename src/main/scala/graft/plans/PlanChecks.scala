@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** Structural scale-audit over OPTIMIZED logical plans — the r13
-  * PlanAudit blind spot, closed. PlanAudit greps physical-plan text
+  * plan-audit blind spot, closed. `Probe audit` greps physical-plan text
   * for BroadcastNestedLoopJoin/CartesianProduct, but a cartesian can
   * wear an equi-join costume: the r13 `margin_mine` gave BOTH
   * unbounded label sides the constant key `pmod(xxhash64(id), 1)` ≡ 0

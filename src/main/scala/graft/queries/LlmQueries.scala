@@ -64,6 +64,17 @@ object LlmQueries {
         (col("n_hit").cast(DoubleType) / col("n_exact").cast(DoubleType)
           >= floor).as("recall_ok"))
 
+  /** Writes an ANN oracle input: corpus-side rows `c` tagged
+    * `side = 'c'` over query-side rows `q` tagged `side = 'q'`, one
+    * sidecar the oracle splits again.
+    */
+  private def writeSides(dir: String)(c: => DataFrame,
+                                      q: => DataFrame): Unit =
+    Sidecars.writeOracleInput(dir) {
+      c.withColumn("side", lit("c"))
+        .unionByName(q.withColumn("side", lit("q")))
+    }
+
   val specs: Seq[QuerySpec] = Seq(
     // N1 — exact dedup by key: representative (min event_id) per
     // (user_id, event_type) group; groups are genuinely multi-row.
@@ -239,26 +250,11 @@ object LlmQueries {
     // canonical representative per cluster
     QuerySpec("dedup_corpus", (s, d) =>
       Dedup.dedupCorpus(docs(s, d), "doc_id", "text", threshold = 0.5),
-      {
-        // same pair predicate as neardup_minhash (brute force), then the
-        // SAME 4 min-propagation rounds the Spark op runs
-        val rounds = (1 to 4).map { k =>
-          s"""l$k AS (SELECT l.id, least(l.comp, coalesce(min(n.comp), l.comp)) AS comp
-             |  FROM l${k - 1} l LEFT JOIN sym e ON l.id = e.s
-             |  LEFT JOIN l${k - 1} n ON e.d = n.id
-             |  GROUP BY l.id, l.comp)""".stripMargin
-        }.mkString(",\n")
-        s"""WITH $shingleInterCte,
-           |pr AS (SELECT ia, ib FROM pint
-           |  WHERE CAST(inter AS DOUBLE)
-           |      / CAST(la + lb - inter AS DOUBLE) >= 0.5),
-           |sym AS (SELECT ia AS s, ib AS d FROM pr
-           |        UNION ALL SELECT ib, ia FROM pr),
-           |l0 AS (SELECT doc_id AS id, doc_id AS comp FROM documents),
-           |$rounds
-           |SELECT id AS doc_id, comp AS canonical_id, id = comp AS kept
-           |FROM l4""".stripMargin
-      }),
+      // same pair predicate as neardup_minhash (brute force), then the
+      // SAME 4 min-propagation rounds the Spark op runs
+      s"""WITH $corpusComponentCtes
+         |SELECT id AS doc_id, comp AS canonical_id, id = comp AS kept
+         |FROM l4""".stripMargin),
     // N2 — the dedup YIELD report a pipeline logs per run: cluster-size
     // histogram over the corpus components plus documents/tokens the
     // canonical-keep policy drops — the "how much did dedup save"
@@ -281,36 +277,21 @@ object LlmQueries {
       // yield replay: the SAME corpus-CC CTE chain as dedup_corpus, then
       // the per-component fold and the size histogram, sums CAST from
       // HUGEINT
-      {
-        val rounds = (1 to 4).map { k =>
-          s"""l$k AS (SELECT l.id, least(l.comp, coalesce(min(n.comp), l.comp)) AS comp
-             |  FROM l${k - 1} l LEFT JOIN sym e ON l.id = e.s
-             |  LEFT JOIN l${k - 1} n ON e.d = n.id
-             |  GROUP BY l.id, l.comp)""".stripMargin
-        }.mkString(",\n")
-        s"""WITH $shingleInterCte,
-           |pr AS (SELECT ia, ib FROM pint
-           |  WHERE CAST(inter AS DOUBLE)
-           |      / CAST(la + lb - inter AS DOUBLE) >= 0.5),
-           |sym AS (SELECT ia AS s, ib AS d FROM pr
-           |        UNION ALL SELECT ib, ia FROM pr),
-           |l0 AS (SELECT doc_id AS id, doc_id AS comp FROM documents),
-           |$rounds,
-           |cc AS (SELECT id AS doc_id, comp AS canonical_id,
-           |  id = comp AS kept FROM l4),
-           |tk AS (SELECT doc_id,
-           |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
-           |  FROM documents),
-           |per AS (SELECT canonical_id, count(*) AS cluster_size,
-           |  CAST(sum(CASE WHEN kept THEN 0 ELSE 1 END) AS BIGINT) AS dd,
-           |  CAST(sum(CASE WHEN kept THEN 0 ELSE n_tok END) AS BIGINT)
-           |    AS td
-           |  FROM cc JOIN tk USING (doc_id) GROUP BY 1)
-           |SELECT cluster_size, count(*) AS n_clusters,
-           |  CAST(sum(dd) AS BIGINT) AS docs_dropped,
-           |  CAST(sum(td) AS BIGINT) AS tokens_dropped
-           |FROM per GROUP BY 1""".stripMargin
-      }),
+      s"""WITH $corpusComponentCtes,
+         |cc AS (SELECT id AS doc_id, comp AS canonical_id,
+         |  id = comp AS kept FROM l4),
+         |tk AS (SELECT doc_id,
+         |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
+         |  FROM documents),
+         |per AS (SELECT canonical_id, count(*) AS cluster_size,
+         |  CAST(sum(CASE WHEN kept THEN 0 ELSE 1 END) AS BIGINT) AS dd,
+         |  CAST(sum(CASE WHEN kept THEN 0 ELSE n_tok END) AS BIGINT)
+         |    AS td
+         |  FROM cc JOIN tk USING (doc_id) GROUP BY 1)
+         |SELECT cluster_size, count(*) AS n_clusters,
+         |  CAST(sum(dd) AS BIGINT) AS docs_dropped,
+         |  CAST(sum(td) AS BIGINT) AS tokens_dropped
+         |FROM per GROUP BY 1""".stripMargin),
     // N1/N2 — INCREMENTAL dedup: the daily-delta operation. Corpus =
     // docs with doc_id % 5 != 0 (the indexed 80%), batch = the other
     // 20%; each batch doc probes the corpus band index and gets a
@@ -557,17 +538,7 @@ object LlmQueries {
       Similarity.bruteForceTopK(e, e.filter(col("vec_id") < 8),
         "vec_id", "embedding", k = 5)
     },
-      s"""WITH $quantCte,
-         |qs AS (SELECT vec_id, qv, nn FROM n WHERE vec_id < 8),
-         |scored AS (SELECT b.vec_id AS query_id, a.vec_id AS neighbor_id,
-         |  CAST($dotAb AS DOUBLE)
-         |    / sqrt(CAST(a.nn AS DOUBLE) * CAST(b.nn AS DOUBLE)) AS cosine
-         |  FROM n a JOIN qs b ON a.vec_id <> b.vec_id),
-         |r AS (SELECT query_id, neighbor_id,
-         |  CAST(row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rnk, cosine
-         |  FROM scored)
-         |SELECT query_id, neighbor_id, rnk, cosine FROM r WHERE rnk <= 5""".stripMargin),
+      topkCosineOracle),
     // N3 — same ranking through the GroupedTopK custom operator
     // (logical node + planner strategy + bounded-heap exec); same
     // oracle SQL as topk_cosine proves plan-level equivalence
@@ -576,17 +547,7 @@ object LlmQueries {
       Similarity.bruteForceTopKExec(e, e.filter(col("vec_id") < 8),
         "vec_id", "embedding", k = 5)
     },
-      s"""WITH $quantCte,
-         |qs AS (SELECT vec_id, qv, nn FROM n WHERE vec_id < 8),
-         |scored AS (SELECT b.vec_id AS query_id, a.vec_id AS neighbor_id,
-         |  CAST($dotAb AS DOUBLE)
-         |    / sqrt(CAST(a.nn AS DOUBLE) * CAST(b.nn AS DOUBLE)) AS cosine
-         |  FROM n a JOIN qs b ON a.vec_id <> b.vec_id),
-         |r AS (SELECT query_id, neighbor_id,
-         |  CAST(row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rnk, cosine
-         |  FROM scored)
-         |SELECT query_id, neighbor_id, rnk, cosine FROM r WHERE rnk <= 5""".stripMargin),
+      topkCosineOracle),
     // N3 — margin-based bitext/pair mining (CCMatrix/LASER scoring):
     // best cross-label match per BOUNDED anchor batch (1024 smallest-
     // id label-0 vectors — binding only at sf1+; fixtures have ≤ 200
@@ -665,33 +626,15 @@ object LlmQueries {
       val e = emb(s, d)
       val q = e.filter(col("vec_id") < 8)
       val cts = centroids32("all", s, d, e)
-      Sidecars.writeOracleInput(ivfCellsDir) {
-        Similarity.ivfCells(e, "vec_id", "embedding", cts, n = 2)
-          .withColumn("side", lit("c"))
-          .unionByName(
-            Similarity.ivfCells(q, "vec_id", "embedding", cts, n = 12)
-              .withColumn("side", lit("q")))
-      }
+      writeSides(ivfCellsDir)(
+        Similarity.ivfCells(e, "vec_id", "embedding", cts, n = 2),
+        Similarity.ivfCells(q, "vec_id", "embedding", cts, n = 12))
       Similarity.ivfTopKWith(cts, e, q, "vec_id", "embedding",
         k = 5, nProbe = 12, nAssign = 2)
     },
       s"""WITH $quantCte,
-         |cells AS (SELECT * FROM '$ivfCellsDir/*.parquet'),
-         |cand AS (SELECT DISTINCT qc.vec_id AS query_id,
-         |    cc.vec_id AS neighbor_id
-         |  FROM (SELECT vec_id, cell FROM cells WHERE side = 'q') qc
-         |  JOIN (SELECT vec_id, cell FROM cells WHERE side = 'c') cc
-         |    ON qc.cell = cc.cell AND qc.vec_id <> cc.vec_id),
-         |scored AS (SELECT cand.query_id, cand.neighbor_id,
-         |  CAST($dotAb AS DOUBLE)
-         |    / sqrt(CAST(a.nn AS DOUBLE) * CAST(b.nn AS DOUBLE)) AS cosine
-         |  FROM cand JOIN n a ON cand.neighbor_id = a.vec_id
-         |            JOIN n b ON cand.query_id = b.vec_id),
-         |r AS (SELECT query_id, neighbor_id,
-         |  CAST(row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rnk, cosine
-         |  FROM scored)
-         |SELECT query_id, neighbor_id, rnk, cosine FROM r WHERE rnk <= 5""".stripMargin),
+         |${cellCand(ivfCellsDir)},
+         |$rerankTop5""".stripMargin),
     // N3 — FILTERED vector search (pre-filter strategy): top-5 among
     // even-label corpus vectors only, probes widened 12→16 for the
     // thinner cells; own cells sidecar so the oracle reranks exactly
@@ -701,36 +644,18 @@ object LlmQueries {
       val q = e.filter(col("vec_id") < 8)
       val cts = centroids32("all", s, d, e)
       val pred = col("label") % 2 === 0
-      Sidecars.writeOracleInput(ivfFiltCellsDir) {
-        Similarity.ivfCells(e.filter(pred), "vec_id", "embedding",
-            cts, n = 2)
-          .withColumn("side", lit("c"))
-          .unionByName(
-            Similarity.ivfCells(q, "vec_id", "embedding", cts, n = 16)
-              .withColumn("side", lit("q")))
-      }
+      writeSides(ivfFiltCellsDir)(
+        Similarity.ivfCells(e.filter(pred), "vec_id", "embedding", cts,
+          n = 2),
+        Similarity.ivfCells(q, "vec_id", "embedding", cts, n = 16))
       Similarity.ivfTopKFiltered(cts, e, pred, q, "vec_id",
         "embedding", k = 5, nProbe = 16, nAssign = 2)
     },
       // the ivf_topk rerank over the FILTERED sidecar (corpus side
       // already predicate-restricted at materialization)
       s"""WITH $quantCte,
-         |cells AS (SELECT * FROM '$ivfFiltCellsDir/*.parquet'),
-         |cand AS (SELECT DISTINCT qc.vec_id AS query_id,
-         |    cc.vec_id AS neighbor_id
-         |  FROM (SELECT vec_id, cell FROM cells WHERE side = 'q') qc
-         |  JOIN (SELECT vec_id, cell FROM cells WHERE side = 'c') cc
-         |    ON qc.cell = cc.cell AND qc.vec_id <> cc.vec_id),
-         |scored AS (SELECT cand.query_id, cand.neighbor_id,
-         |  CAST($dotAb AS DOUBLE)
-         |    / sqrt(CAST(a.nn AS DOUBLE) * CAST(b.nn AS DOUBLE)) AS cosine
-         |  FROM cand JOIN n a ON cand.neighbor_id = a.vec_id
-         |            JOIN n b ON cand.query_id = b.vec_id),
-         |r AS (SELECT query_id, neighbor_id,
-         |  CAST(row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rnk, cosine
-         |  FROM scored)
-         |SELECT query_id, neighbor_id, rnk, cosine FROM r WHERE rnk <= 5""".stripMargin),
+         |${cellCand(ivfFiltCellsDir)},
+         |$rerankTop5""".stripMargin),
     // N3 — INCREMENTAL ANN: the daily-delta twin of dedup_incremental
     // for vectors. Corpus (doc_id % 5 != 0) builds a PERSISTED IVF
     // index artifact (vec_id, cell, quantized vec, self-dot) once; the
@@ -746,32 +671,15 @@ object LlmQueries {
       Similarity.ivfIndex(corpus, "vec_id", "embedding", cts, nAssign = 2)
         .write.mode("overwrite").parquet(indexDir)
       val index = Tables.parquet(s, indexDir)
-      Sidecars.writeOracleInput(annCellsDir) {
-        index.select("vec_id", "cell").withColumn("side", lit("c"))
-          .unionByName(
-            Similarity.ivfCells(batch, "vec_id", "embedding", cts, n = 8)
-              .withColumn("side", lit("q")))
-      }
+      writeSides(annCellsDir)(
+        index.select("vec_id", "cell"),
+        Similarity.ivfCells(batch, "vec_id", "embedding", cts, n = 8))
       Similarity.ivfProbeIndex(cts, index, batch, "vec_id", "embedding",
         k = 5, nProbe = 8)
     },
       s"""WITH $quantCte,
-         |cells AS (SELECT * FROM '$annCellsDir/*.parquet'),
-         |cand AS (SELECT DISTINCT qc.vec_id AS query_id,
-         |    cc.vec_id AS neighbor_id
-         |  FROM (SELECT vec_id, cell FROM cells WHERE side = 'q') qc
-         |  JOIN (SELECT vec_id, cell FROM cells WHERE side = 'c') cc
-         |    ON qc.cell = cc.cell AND qc.vec_id <> cc.vec_id),
-         |scored AS (SELECT cand.query_id, cand.neighbor_id,
-         |  CAST($dotAb AS DOUBLE)
-         |    / sqrt(CAST(a.nn AS DOUBLE) * CAST(b.nn AS DOUBLE)) AS cosine
-         |  FROM cand JOIN n a ON cand.neighbor_id = a.vec_id
-         |            JOIN n b ON cand.query_id = b.vec_id),
-         |r AS (SELECT query_id, neighbor_id,
-         |  CAST(row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rnk, cosine
-         |  FROM scored)
-         |SELECT query_id, neighbor_id, rnk, cosine FROM r WHERE rnk <= 5""".stripMargin),
+         |${cellCand(annCellsDir)},
+         |$rerankTop5""".stripMargin),
     // N3 — the PROBE-ONLY bench twin of ann_incremental: the serving
     // index is built once per dataset (annProbeArtifact); every call
     // reads it back and probes, what production pays per daily batch.
@@ -782,32 +690,15 @@ object LlmQueries {
       val batch = e.filter(col("vec_id") % 5 === 0)
       val (cts, indexDir) = annProbeArtifact(s, d)
       val index = Tables.parquet(s, indexDir)
-      Sidecars.writeOracleInput(annProbeCellsDir) {
-        index.select("vec_id", "cell").withColumn("side", lit("c"))
-          .unionByName(
-            Similarity.ivfCells(batch, "vec_id", "embedding", cts, n = 8)
-              .withColumn("side", lit("q")))
-      }
+      writeSides(annProbeCellsDir)(
+        index.select("vec_id", "cell"),
+        Similarity.ivfCells(batch, "vec_id", "embedding", cts, n = 8))
       Similarity.ivfProbeIndex(cts, index, batch, "vec_id", "embedding",
         k = 5, nProbe = 8)
     },
       s"""WITH $quantCte,
-         |cells AS (SELECT * FROM '$annProbeCellsDir/*.parquet'),
-         |cand AS (SELECT DISTINCT qc.vec_id AS query_id,
-         |    cc.vec_id AS neighbor_id
-         |  FROM (SELECT vec_id, cell FROM cells WHERE side = 'q') qc
-         |  JOIN (SELECT vec_id, cell FROM cells WHERE side = 'c') cc
-         |    ON qc.cell = cc.cell AND qc.vec_id <> cc.vec_id),
-         |scored AS (SELECT cand.query_id, cand.neighbor_id,
-         |  CAST($dotAb AS DOUBLE)
-         |    / sqrt(CAST(a.nn AS DOUBLE) * CAST(b.nn AS DOUBLE)) AS cosine
-         |  FROM cand JOIN n a ON cand.neighbor_id = a.vec_id
-         |            JOIN n b ON cand.query_id = b.vec_id),
-         |r AS (SELECT query_id, neighbor_id,
-         |  CAST(row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rnk, cosine
-         |  FROM scored)
-         |SELECT query_id, neighbor_id, rnk, cosine FROM r WHERE rnk <= 5""".stripMargin),
+         |${cellCand(annProbeCellsDir)},
+         |$rerankTop5""".stripMargin),
     // N3 streaming twin, batch path — the ANN SERVING shape: query
     // vectors probe the IVF index and rank via the mergeable
     // bounded-heap TopKAgg (k hits of state per key — the
@@ -823,12 +714,9 @@ object LlmQueries {
       val cts = centroids32("corpus", s, d, corpus)
       val index = Similarity.ivfIndex(corpus, "vec_id", "embedding", cts,
         nAssign = 2)
-      Sidecars.writeOracleInput(annStreamCellsDir) {
-        index.select("vec_id", "cell").withColumn("side", lit("c"))
-          .unionByName(
-            Similarity.ivfCells(batch, "vec_id", "embedding", cts, n = 8)
-              .withColumn("side", lit("q")))
-      }
+      writeSides(annStreamCellsDir)(
+        index.select("vec_id", "cell"),
+        Similarity.ivfCells(batch, "vec_id", "embedding", cts, n = 8))
       graft.streaming.AnnStream.ivfProbeStream(cts, index, batch,
           "vec_id", "embedding", "ts", k = 5, nProbe = 8,
           windowDur = "1 hour")
@@ -836,21 +724,8 @@ object LlmQueries {
           col("neighbor_id"), col("rnk"), col("cosine"))
     },
       s"""WITH $quantCte,
-         |cells AS (SELECT * FROM '$annStreamCellsDir/*.parquet'),
-         |cand AS (SELECT DISTINCT qc.vec_id AS query_id,
-         |    cc.vec_id AS neighbor_id
-         |  FROM (SELECT vec_id, cell FROM cells WHERE side = 'q') qc
-         |  JOIN (SELECT vec_id, cell FROM cells WHERE side = 'c') cc
-         |    ON qc.cell = cc.cell AND qc.vec_id <> cc.vec_id),
-         |scored AS (SELECT cand.query_id, cand.neighbor_id,
-         |  CAST($dotAb AS DOUBLE)
-         |    / sqrt(CAST(a.nn AS DOUBLE) * CAST(b.nn AS DOUBLE)) AS cosine
-         |  FROM cand JOIN n a ON cand.neighbor_id = a.vec_id
-         |            JOIN n b ON cand.query_id = b.vec_id),
-         |r AS (SELECT query_id, neighbor_id,
-         |  CAST(row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rnk, cosine
-         |  FROM scored)
+         |${cellCand(annStreamCellsDir)},
+         |$rerankCtes
          |SELECT make_timestamp((query_id*60)//3600*3600*1000000)
          |    AS w_start,
          |  query_id, neighbor_id, rnk, cosine FROM r WHERE rnk <= 5""".stripMargin),
@@ -882,33 +757,15 @@ object LlmQueries {
       val finalCorpus = e.filter(!isBatch &&
         ((col("vec_id") % 7 =!= 0 && col("vec_id") % 11 =!= 0) ||
           col("vec_id") % 7 === 0))
-      Sidecars.writeOracleInput(annUpsertCellsDir) {
-        Similarity.ivfCells(finalCorpus, "vec_id", "embedding", cts, n = 2)
-          .withColumn("side", lit("c"))
-          .unionByName(
-            Similarity.ivfCells(batch, "vec_id", "embedding", cts, n = 8)
-              .withColumn("side", lit("q")))
-      }
+      writeSides(annUpsertCellsDir)(
+        Similarity.ivfCells(finalCorpus, "vec_id", "embedding", cts, n = 2),
+        Similarity.ivfCells(batch, "vec_id", "embedding", cts, n = 8))
       Similarity.ivfProbeIndex(cts, maintained, batch, "vec_id",
         "embedding", k = 5, nProbe = 8)
     },
       s"""WITH $quantCte,
-         |cells AS (SELECT * FROM '$annUpsertCellsDir/*.parquet'),
-         |cand AS (SELECT DISTINCT qc.vec_id AS query_id,
-         |    cc.vec_id AS neighbor_id
-         |  FROM (SELECT vec_id, cell FROM cells WHERE side = 'q') qc
-         |  JOIN (SELECT vec_id, cell FROM cells WHERE side = 'c') cc
-         |    ON qc.cell = cc.cell AND qc.vec_id <> cc.vec_id),
-         |scored AS (SELECT cand.query_id, cand.neighbor_id,
-         |  CAST($dotAb AS DOUBLE)
-         |    / sqrt(CAST(a.nn AS DOUBLE) * CAST(b.nn AS DOUBLE)) AS cosine
-         |  FROM cand JOIN n a ON cand.neighbor_id = a.vec_id
-         |            JOIN n b ON cand.query_id = b.vec_id),
-         |r AS (SELECT query_id, neighbor_id,
-         |  CAST(row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rnk, cosine
-         |  FROM scored)
-         |SELECT query_id, neighbor_id, rnk, cosine FROM r WHERE rnk <= 5""".stripMargin),
+         |${cellCand(annUpsertCellsDir)},
+         |$rerankTop5""".stripMargin),
     // N3 — per-cell posting census of the persisted index: the skew
     // signal (probe tail latency follows the largest probed cell)
     // that schedules the rare retrain. Oracle recomputes assignments
@@ -954,22 +811,8 @@ object LlmQueries {
         "embedding", k = 5, nProbe = 8)
     },
       s"""WITH $quantCte,
-         |cells AS (SELECT * FROM '$annStoreCellsDir/*.parquet'),
-         |cand AS (SELECT DISTINCT qc.vec_id AS query_id,
-         |    cc.vec_id AS neighbor_id
-         |  FROM (SELECT vec_id, cell FROM cells WHERE side = 'q') qc
-         |  JOIN (SELECT vec_id, cell FROM cells WHERE side = 'c') cc
-         |    ON qc.cell = cc.cell AND qc.vec_id <> cc.vec_id),
-         |scored AS (SELECT cand.query_id, cand.neighbor_id,
-         |  CAST($dotAb AS DOUBLE)
-         |    / sqrt(CAST(a.nn AS DOUBLE) * CAST(b.nn AS DOUBLE)) AS cosine
-         |  FROM cand JOIN n a ON cand.neighbor_id = a.vec_id
-         |            JOIN n b ON cand.query_id = b.vec_id),
-         |r AS (SELECT query_id, neighbor_id,
-         |  CAST(row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rnk, cosine
-         |  FROM scored)
-         |SELECT query_id, neighbor_id, rnk, cosine FROM r WHERE rnk <= 5""".stripMargin),
+         |${cellCand(annStoreCellsDir)},
+         |$rerankTop5""".stripMargin),
     // N3 — INCREMENTAL ANN over the COMPRESSED index: ann_incremental
     // persists raw-quantized postings; a 100 TB vector store persists
     // IVF cells + PQ codes (ivfPqIndex, ~24 B/posting) as the serving
@@ -995,12 +838,9 @@ object LlmQueries {
       // set must derive identically so the oracle replays the same
       // candidates
       val (npD, _) = Similarity.ivfPqProbePlan(cts.length)
-      Sidecars.writeOracleInput(annIvfpqCellsDir) {
-        index.select("vec_id", "cell").withColumn("side", lit("c"))
-          .unionByName(
-            Similarity.ivfCells(batch, "vec_id", "embedding", cts, n = npD)
-              .withColumn("side", lit("q")))
-      }
+      writeSides(annIvfpqCellsDir)(
+        index.select("vec_id", "cell"),
+        Similarity.ivfCells(batch, "vec_id", "embedding", cts, n = npD))
       Sidecars.writeOracleInput(annIvfpqCodesDir) {
         index.dropDuplicates("vec_id")
           .select(col("vec_id"),
@@ -1025,59 +865,17 @@ object LlmQueries {
       // queries are the 20% batch, candidates the 80% corpus
       s"""WITH $quantCte,
          |qs AS (SELECT vec_id, qv, nn FROM n WHERE vec_id % 5 = 0),
-         |cells AS (SELECT * FROM '$annIvfpqCellsDir/*.parquet'),
-         |cand0 AS (SELECT DISTINCT qc.vec_id AS query_id,
-         |    cc.vec_id AS neighbor_id
-         |  FROM (SELECT vec_id, cell FROM cells WHERE side = 'q') qc
-         |  JOIN (SELECT vec_id, cell FROM cells WHERE side = 'c') cc
-         |    ON qc.cell = cc.cell AND qc.vec_id <> cc.vec_id),
-         |codes AS (SELECT CAST(vec_id AS BIGINT) AS vec_id,
-         |  CAST(subspace AS BIGINT) AS subspace, CAST(code AS BIGINT) AS code
-         |  FROM '$annIvfpqCodesDir/*.parquet'),
-         |cb AS (SELECT CAST(subspace AS BIGINT) AS subspace,
-         |  CAST(code AS BIGINT) AS code, CAST(sub_off AS BIGINT) AS sub_off,
-         |  centroid, CAST(cnorm AS BIGINT) AS cnorm
-         |  FROM '$annIvfpqCodebookDir/*.parquet'),
-         |nr AS (SELECT c.vec_id, CAST(sum(cb.cnorm) AS BIGINT) AS nn_r
-         |  FROM codes c JOIN cb ON c.subspace = cb.subspace
-         |    AND c.code = cb.code
-         |  GROUP BY 1),
-         |contrib AS (SELECT c0.query_id, c0.neighbor_id,
-         |  list_sum(list_transform(range(1, len(cb.centroid)+1),
-         |    i -> cb.centroid[i] * q.qv[cb.sub_off + i])) AS part
-         |  FROM cand0 c0
-         |  JOIN codes c ON c0.neighbor_id = c.vec_id
-         |  JOIN cb ON c.subspace = cb.subspace AND c.code = cb.code
-         |  JOIN qs q ON c0.query_id = q.vec_id),
-         |ad AS (SELECT query_id, neighbor_id,
-         |  CAST(sum(part) AS BIGINT) AS adc
-         |  FROM contrib GROUP BY 1, 2),
-         |recon AS (SELECT ad.query_id, ad.neighbor_id,
-         |  CAST(ad.adc AS DOUBLE)
-         |    / sqrt(CAST(nr.nn_r AS DOUBLE) * CAST(q.nn AS DOUBLE))
-         |    AS recon_cos
-         |  FROM ad JOIN nr ON ad.neighbor_id = nr.vec_id
-         |  JOIN qs q ON ad.query_id = q.vec_id),
+         |${cellCand(annIvfpqCellsDir, "cand0")},
+         |${pqCodeCtes(annIvfpqCodesDir, annIvfpqCodebookDir)},
+         |$cellAdcContrib,
+         |$adcReconCtes,
          |kc AS (SELECT GREATEST(32, CAST(round(32 * sqrt(
          |    count(*) / 2000.0)) AS BIGINT)) AS kcells
          |  FROM embeddings WHERE vec_id % 5 <> 0),
          |cut AS (SELECT 5 * GREATEST(20, CAST(ceil(
          |    20 * (kcells / 32.0)) AS BIGINT)) AS rcut FROM kc),
-         |cand AS (SELECT query_id, neighbor_id FROM (
-         |  SELECT query_id, neighbor_id,
-         |    row_number() OVER (PARTITION BY query_id
-         |      ORDER BY recon_cos DESC, neighbor_id) AS crk FROM recon)
-         |  WHERE crk <= (SELECT rcut FROM cut)),
-         |scored AS (SELECT cand.query_id, cand.neighbor_id,
-         |  CAST($dotAb AS DOUBLE)
-         |    / sqrt(CAST(a.nn AS DOUBLE) * CAST(b.nn AS DOUBLE)) AS cosine
-         |  FROM cand JOIN n a ON cand.neighbor_id = a.vec_id
-         |            JOIN n b ON cand.query_id = b.vec_id),
-         |r AS (SELECT query_id, neighbor_id,
-         |  CAST(row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rnk, cosine
-         |  FROM scored)
-         |SELECT query_id, neighbor_id, rnk, cosine FROM r WHERE rnk <= 5""".stripMargin),
+         |${candWindow("recon_cos DESC", "recon", "(SELECT rcut FROM cut)")},
+         |$rerankTop5""".stripMargin),
     // N3 — driver-visible recall gate for the IVF scale path: recall@5
     // vs the IN-PLAN exact top-k (same corpus, 50 queries), emitted as
     // one boolean row. Hashes equal to the oracle's `true` iff recall
@@ -1246,47 +1044,16 @@ object LlmQueries {
       // chain, so the output hash-matches bit-for-bit
       s"""WITH $quantCte,
          |qs AS (SELECT vec_id, qv, nn FROM n WHERE vec_id < 8),
-         |codes AS (SELECT CAST(vec_id AS BIGINT) AS vec_id,
-         |  CAST(subspace AS BIGINT) AS subspace, CAST(code AS BIGINT) AS code
-         |  FROM '$pqCodesDir/*.parquet'),
-         |cb AS (SELECT CAST(subspace AS BIGINT) AS subspace,
-         |  CAST(code AS BIGINT) AS code, CAST(sub_off AS BIGINT) AS sub_off,
-         |  centroid, CAST(cnorm AS BIGINT) AS cnorm
-         |  FROM '$pqCodebookDir/*.parquet'),
-         |nr AS (SELECT c.vec_id, CAST(sum(cb.cnorm) AS BIGINT) AS nn_r
-         |  FROM codes c JOIN cb ON c.subspace = cb.subspace
-         |    AND c.code = cb.code
-         |  GROUP BY 1),
+         |${pqCodeCtes(pqCodesDir, pqCodebookDir)},
          |contrib AS (SELECT c.vec_id AS neighbor_id, q.vec_id AS query_id,
          |  list_sum(list_transform(range(1, len(cb.centroid)+1),
          |    i -> cb.centroid[i] * q.qv[cb.sub_off + i])) AS part
          |  FROM codes c
          |  JOIN cb ON c.subspace = cb.subspace AND c.code = cb.code
          |  JOIN qs q ON c.vec_id <> q.vec_id),
-         |ad AS (SELECT query_id, neighbor_id,
-         |  CAST(sum(part) AS BIGINT) AS adc
-         |  FROM contrib GROUP BY 1, 2),
-         |recon AS (SELECT ad.query_id, ad.neighbor_id,
-         |  CAST(ad.adc AS DOUBLE)
-         |    / sqrt(CAST(nr.nn_r AS DOUBLE) * CAST(q.nn AS DOUBLE))
-         |    AS recon_cos
-         |  FROM ad JOIN nr ON ad.neighbor_id = nr.vec_id
-         |  JOIN qs q ON ad.query_id = q.vec_id),
-         |cand AS (SELECT query_id, neighbor_id FROM (
-         |  SELECT query_id, neighbor_id,
-         |    row_number() OVER (PARTITION BY query_id
-         |      ORDER BY recon_cos DESC, neighbor_id) AS crk FROM recon)
-         |  WHERE crk <= 200),
-         |scored AS (SELECT cand.query_id, cand.neighbor_id,
-         |  CAST($dotAb AS DOUBLE)
-         |    / sqrt(CAST(a.nn AS DOUBLE) * CAST(b.nn AS DOUBLE)) AS cosine
-         |  FROM cand JOIN n a ON cand.neighbor_id = a.vec_id
-         |            JOIN n b ON cand.query_id = b.vec_id),
-         |r AS (SELECT query_id, neighbor_id,
-         |  CAST(row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rnk, cosine
-         |  FROM scored)
-         |SELECT query_id, neighbor_id, rnk, cosine FROM r WHERE rnk <= 5""".stripMargin),
+         |$adcReconCtes,
+         |${candWindow("recon_cos DESC", "recon", "200")},
+         |$rerankTop5""".stripMargin),
     // N3 — recall gate for the PQ path (the ivf_recall pattern). The
     // ADC candidate window is rf=40 (200 deep), measured (recall@5
     // vs exact top-5, the figures below are the record):
@@ -1312,13 +1079,9 @@ object LlmQueries {
     QuerySpec("bq_topk", (s, d) => {
       val e = emb(s, d)
       val q = e.filter(col("vec_id") < 8)
-      Sidecars.writeOracleInput(bqSigsDir) {
-        Similarity.bqSignatures(e, "vec_id", "embedding", 256)
-          .withColumn("side", lit("c"))
-          .unionByName(
-            Similarity.bqSignatures(q, "vec_id", "embedding", 256)
-              .withColumn("side", lit("q")))
-      }
+      writeSides(bqSigsDir)(
+        Similarity.bqSignatures(e, "vec_id", "embedding", 256),
+        Similarity.bqSignatures(q, "vec_id", "embedding", 256))
       Similarity.bqTopK(e, q, "vec_id", "embedding", k = 5,
         nBits = 256, rerankFactor = 80)
     },
@@ -1341,20 +1104,8 @@ object LlmQueries {
          |     + CAST(bit_count(xor(c.s2, q.s2)) AS BIGINT)
          |     + CAST(bit_count(xor(c.s3, q.s3)) AS BIGINT) AS ham
          |  FROM sc c JOIN sq q ON c.vec_id <> q.vec_id),
-         |cand AS (SELECT query_id, neighbor_id FROM (
-         |  SELECT query_id, neighbor_id,
-         |    row_number() OVER (PARTITION BY query_id
-         |      ORDER BY ham, neighbor_id) AS crk FROM h)
-         |  WHERE crk <= 400),
-         |scored AS (SELECT cand.query_id, cand.neighbor_id,
-         |  CAST($dotAb AS DOUBLE)
-         |    / sqrt(CAST(a.nn AS DOUBLE) * CAST(b.nn AS DOUBLE)) AS cosine
-         |  FROM cand JOIN n a ON cand.neighbor_id = a.vec_id
-         |            JOIN n b ON cand.query_id = b.vec_id),
-         |r AS (SELECT query_id, neighbor_id,
-         |  CAST(row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rnk, cosine
-         |  FROM scored)
+         |${candWindow("ham", "h", "400")},
+         |$rerankCtes
          |SELECT query_id, neighbor_id, rnk, cosine
          |FROM r WHERE rnk <= 5""".stripMargin),
     // N3 — recall gate for the BQ path (ivf_recall pattern). The
@@ -1382,13 +1133,9 @@ object LlmQueries {
       val e = emb(s, d)
       val q = e.filter(col("vec_id") < 8)
       val maxs = Similarity.sq8Calibrate(e, "embedding", 64)
-      Sidecars.writeOracleInput(sq8CodesDir) {
-        Similarity.sq8Codes(e, "vec_id", "embedding", maxs)
-          .withColumn("side", lit("c"))
-          .unionByName(
-            Similarity.sq8Codes(q, "vec_id", "embedding", maxs)
-              .withColumn("side", lit("q")))
-      }
+      writeSides(sq8CodesDir)(
+        Similarity.sq8Codes(e, "vec_id", "embedding", maxs),
+        Similarity.sq8Codes(q, "vec_id", "embedding", maxs))
       Sidecars.writeOracleInput(sq8MaxsDir) {
         import s.implicits._
         maxs.zipWithIndex.map { case (m, i) => (i.toLong, m) }.toSeq
@@ -1412,20 +1159,8 @@ object LlmQueries {
          |    d -> c.codes[d] * q.codes[d] * ml.ml[d] * ml.ml[d]))
          |    AS BIGINT) AS approx
          |  FROM cc c JOIN cq q ON c.vec_id <> q.vec_id, ml),
-         |cand AS (SELECT query_id, neighbor_id FROM (
-         |  SELECT query_id, neighbor_id,
-         |    row_number() OVER (PARTITION BY query_id
-         |      ORDER BY approx DESC, neighbor_id) AS crk FROM ap)
-         |  WHERE crk <= 100),
-         |scored AS (SELECT cand.query_id, cand.neighbor_id,
-         |  CAST($dotAb AS DOUBLE)
-         |    / sqrt(CAST(a.nn AS DOUBLE) * CAST(b.nn AS DOUBLE)) AS cosine
-         |  FROM cand JOIN n a ON cand.neighbor_id = a.vec_id
-         |            JOIN n b ON cand.query_id = b.vec_id),
-         |r AS (SELECT query_id, neighbor_id,
-         |  CAST(row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rnk, cosine
-         |  FROM scored)
+         |${candWindow("approx DESC", "ap", "100")},
+         |$rerankCtes
          |SELECT query_id, neighbor_id, rnk, cosine
          |FROM r WHERE rnk <= 5""".stripMargin),
     // N3 — recall gate for the SQ8 path (ivf_recall pattern): SQ8
@@ -1451,13 +1186,9 @@ object LlmQueries {
       val q = e.filter(col("vec_id") < 8)
       val cts = centroids32("all", s, d, e)
       val cbs = pqCodebooks("all", s, d, e)
-      Sidecars.writeOracleInput(ivfpqCellsDir) {
-        Similarity.ivfCells(e, "vec_id", "embedding", cts, n = 2)
-          .withColumn("side", lit("c"))
-          .unionByName(
-            Similarity.ivfCells(q, "vec_id", "embedding", cts, n = 14)
-              .withColumn("side", lit("q")))
-      }
+      writeSides(ivfpqCellsDir)(
+        Similarity.ivfCells(e, "vec_id", "embedding", cts, n = 2),
+        Similarity.ivfCells(q, "vec_id", "embedding", cts, n = 14))
       Sidecars.writeOracleInput(ivfpqCodesDir) {
         Similarity.pqCodes(e, "vec_id", "embedding", cbs)
       }
@@ -1472,54 +1203,12 @@ object LlmQueries {
       // finished by the same exact rerank
       s"""WITH $quantCte,
          |qs AS (SELECT vec_id, qv, nn FROM n WHERE vec_id < 8),
-         |cells AS (SELECT * FROM '$ivfpqCellsDir/*.parquet'),
-         |cand0 AS (SELECT DISTINCT qc.vec_id AS query_id,
-         |    cc.vec_id AS neighbor_id
-         |  FROM (SELECT vec_id, cell FROM cells WHERE side = 'q') qc
-         |  JOIN (SELECT vec_id, cell FROM cells WHERE side = 'c') cc
-         |    ON qc.cell = cc.cell AND qc.vec_id <> cc.vec_id),
-         |codes AS (SELECT CAST(vec_id AS BIGINT) AS vec_id,
-         |  CAST(subspace AS BIGINT) AS subspace, CAST(code AS BIGINT) AS code
-         |  FROM '$ivfpqCodesDir/*.parquet'),
-         |cb AS (SELECT CAST(subspace AS BIGINT) AS subspace,
-         |  CAST(code AS BIGINT) AS code, CAST(sub_off AS BIGINT) AS sub_off,
-         |  centroid, CAST(cnorm AS BIGINT) AS cnorm
-         |  FROM '$ivfpqCodebookDir/*.parquet'),
-         |nr AS (SELECT c.vec_id, CAST(sum(cb.cnorm) AS BIGINT) AS nn_r
-         |  FROM codes c JOIN cb ON c.subspace = cb.subspace
-         |    AND c.code = cb.code
-         |  GROUP BY 1),
-         |contrib AS (SELECT c0.query_id, c0.neighbor_id,
-         |  list_sum(list_transform(range(1, len(cb.centroid)+1),
-         |    i -> cb.centroid[i] * q.qv[cb.sub_off + i])) AS part
-         |  FROM cand0 c0
-         |  JOIN codes c ON c0.neighbor_id = c.vec_id
-         |  JOIN cb ON c.subspace = cb.subspace AND c.code = cb.code
-         |  JOIN qs q ON c0.query_id = q.vec_id),
-         |ad AS (SELECT query_id, neighbor_id,
-         |  CAST(sum(part) AS BIGINT) AS adc
-         |  FROM contrib GROUP BY 1, 2),
-         |recon AS (SELECT ad.query_id, ad.neighbor_id,
-         |  CAST(ad.adc AS DOUBLE)
-         |    / sqrt(CAST(nr.nn_r AS DOUBLE) * CAST(q.nn AS DOUBLE))
-         |    AS recon_cos
-         |  FROM ad JOIN nr ON ad.neighbor_id = nr.vec_id
-         |  JOIN qs q ON ad.query_id = q.vec_id),
-         |cand AS (SELECT query_id, neighbor_id FROM (
-         |  SELECT query_id, neighbor_id,
-         |    row_number() OVER (PARTITION BY query_id
-         |      ORDER BY recon_cos DESC, neighbor_id) AS crk FROM recon)
-         |  WHERE crk <= 100),
-         |scored AS (SELECT cand.query_id, cand.neighbor_id,
-         |  CAST($dotAb AS DOUBLE)
-         |    / sqrt(CAST(a.nn AS DOUBLE) * CAST(b.nn AS DOUBLE)) AS cosine
-         |  FROM cand JOIN n a ON cand.neighbor_id = a.vec_id
-         |            JOIN n b ON cand.query_id = b.vec_id),
-         |r AS (SELECT query_id, neighbor_id,
-         |  CAST(row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rnk, cosine
-         |  FROM scored)
-         |SELECT query_id, neighbor_id, rnk, cosine FROM r WHERE rnk <= 5""".stripMargin),
+         |${cellCand(ivfpqCellsDir, "cand0")},
+         |${pqCodeCtes(ivfpqCodesDir, ivfpqCodebookDir)},
+         |$cellAdcContrib,
+         |$adcReconCtes,
+         |${candWindow("recon_cos DESC", "recon", "100")},
+         |$rerankTop5""".stripMargin),
     // N3 — recall gate for the composed path (floor from PqSpec's
     // measurement on the 50-query set)
     QuerySpec("ivfpq_recall", (s, d) => {
@@ -1610,10 +1299,7 @@ object LlmQueries {
          |    / sqrt(CAST(a.nn AS DOUBLE) * CAST(b.nn AS DOUBLE)) AS cosine
          |  FROM nl a JOIN qs b
          |  ON a.vec_id <> b.vec_id AND a.label <> b.label),
-         |r AS (SELECT query_id, neighbor_id, neg_label,
-         |  CAST(row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rnk, cosine
-         |  FROM scored)
+         |${rankCte(" neg_label,")}
          |SELECT query_id, neighbor_id, neg_label, rnk, cosine FROM r
          |WHERE rnk <= 5""".stripMargin),
     // N2/N3 — SemDeDup: k-means cells (same driver-trained coarse
@@ -1665,43 +1351,11 @@ object LlmQueries {
     },
       // from-scratch BM25 over the post-changelog corpus: a green hash
       // proves the store's latest-wins resolution reproduced it exactly
-      """WITH fin AS (SELECT doc_id, text FROM documents
+      s"""WITH fin AS (SELECT doc_id, text FROM documents
         |  WHERE (doc_id % 7 <> 0 AND doc_id % 11 <> 0)
         |     OR doc_id % 7 = 0),
         |d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM fin),
-        |l AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl, toks FROM d),
-        |st AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(dl) AS BIGINT) AS sum_len FROM l),
-        |e AS (SELECT doc_id, dl, unnest(toks) AS term FROM l),
-        |tf AS (SELECT doc_id, dl, term, CAST(count(*) AS BIGINT) AS tf
-        |  FROM e WHERE term IN ('spark', 'stream', 'vector', 'query')
-        |  GROUP BY 1, 2, 3),
-        |dfq AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf
-        |  GROUP BY 1),
-        |sc AS (SELECT tf.doc_id, tf.term,
-        |  (CAST(2*(st.n_docs - dfq.df) + 1 AS DOUBLE)
-        |     / CAST(2*dfq.df + 1 AS DOUBLE))
-        |  * (CAST(44*tf.tf*st.sum_len AS DOUBLE)
-        |     / CAST(20*tf.tf*st.sum_len + 6*st.sum_len
-        |            + 18*tf.dl*st.n_docs AS DOUBLE)) AS score_t
-        |  FROM tf JOIN dfq ON tf.term = dfq.term CROSS JOIN st),
-        |p AS (SELECT doc_id,
-        |  coalesce(max(CASE WHEN term = 'spark' THEN score_t END), 0.0)
-        |    AS s_spark,
-        |  coalesce(max(CASE WHEN term = 'stream' THEN score_t END), 0.0)
-        |    AS s_stream,
-        |  coalesce(max(CASE WHEN term = 'vector' THEN score_t END), 0.0)
-        |    AS s_vector,
-        |  coalesce(max(CASE WHEN term = 'query' THEN score_t END), 0.0)
-        |    AS s_query
-        |  FROM sc GROUP BY 1),
-        |r AS (SELECT doc_id, s_spark, s_stream, s_vector, s_query,
-        |  ((s_spark + s_stream) + s_vector) + s_query AS score FROM p),
-        |k AS (SELECT doc_id,
-        |  CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT)
-        |    AS rk,
-        |  score, s_spark, s_stream, s_vector, s_query FROM r)
-        |SELECT * FROM k WHERE rk <= 10""".stripMargin),
+        |$bm25Top10""".stripMargin),
     // N4 — SEARCH-AS-A-STREAM, batch path: fixed request set (term
     // subsets over the fixture vocabulary) probing the persisted text
     // index through bm25ProbeStream's exact plan — static-side
@@ -1785,41 +1439,9 @@ object LlmQueries {
         |WHERE rk <= 10""".stripMargin),
     QuerySpec("bm25_search", (s, d) =>
       Retrieval.bm25TopK(docs(s, d), "doc_id", "text", bm25Terms, k = 10),
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks
+      s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks
         |  FROM documents),
-        |l AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl, toks FROM d),
-        |st AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(dl) AS BIGINT) AS sum_len FROM l),
-        |e AS (SELECT doc_id, dl, unnest(toks) AS term FROM l),
-        |tf AS (SELECT doc_id, dl, term, CAST(count(*) AS BIGINT) AS tf
-        |  FROM e WHERE term IN ('spark', 'stream', 'vector', 'query')
-        |  GROUP BY 1, 2, 3),
-        |dfq AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf
-        |  GROUP BY 1),
-        |sc AS (SELECT tf.doc_id, tf.term,
-        |  (CAST(2*(st.n_docs - dfq.df) + 1 AS DOUBLE)
-        |     / CAST(2*dfq.df + 1 AS DOUBLE))
-        |  * (CAST(44*tf.tf*st.sum_len AS DOUBLE)
-        |     / CAST(20*tf.tf*st.sum_len + 6*st.sum_len
-        |            + 18*tf.dl*st.n_docs AS DOUBLE)) AS score_t
-        |  FROM tf JOIN dfq ON tf.term = dfq.term CROSS JOIN st),
-        |p AS (SELECT doc_id,
-        |  coalesce(max(CASE WHEN term = 'spark' THEN score_t END), 0.0)
-        |    AS s_spark,
-        |  coalesce(max(CASE WHEN term = 'stream' THEN score_t END), 0.0)
-        |    AS s_stream,
-        |  coalesce(max(CASE WHEN term = 'vector' THEN score_t END), 0.0)
-        |    AS s_vector,
-        |  coalesce(max(CASE WHEN term = 'query' THEN score_t END), 0.0)
-        |    AS s_query
-        |  FROM sc GROUP BY 1),
-        |r AS (SELECT doc_id, s_spark, s_stream, s_vector, s_query,
-        |  ((s_spark + s_stream) + s_vector) + s_query AS score FROM p),
-        |k AS (SELECT doc_id,
-        |  CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT)
-        |    AS rk,
-        |  score, s_spark, s_stream, s_vector, s_query FROM r)
-        |SELECT * FROM k WHERE rk <= 10""".stripMargin),
+        |$bm25Top10""".stripMargin),
     // N4 — pseudo-relevance feedback: seed BM25 round, co-occurrence
     // term census over the top-10 feedback docs (≤3-row driver read),
     // expanded second round over the sorted union term set — the
@@ -2246,12 +1868,7 @@ object LlmQueries {
              |  LEFT JOIN e ON e.dst = d.doc_id
              |  LEFT JOIN $prev r ON r.node = e.src
              |  GROUP BY 1)""".stripMargin
-        s"""WITH nn AS (SELECT count(*) AS n FROM documents),
-           |e AS (SELECT src, m + CASE WHEN m >= src THEN 1 ELSE 0 END
-           |    AS dst FROM
-           |  (SELECT doc_id AS src,
-           |     (doc_id * 1103515245 + j * 12345) % (n - 1) AS m
-           |   FROM documents, nn, unnest([1, 2, 3]) AS t(j))),
+        s"""WITH ${linkEdges("e")},
            |r0 AS (SELECT doc_id AS node,
            |  CAST(1000000000000 AS BIGINT) AS rank FROM documents),
            |${step("r0", "r1")},
@@ -2272,14 +1889,7 @@ object LlmQueries {
     },
       // naive id-ordered a<b<c enumeration — fine at oracle scale; the
       // engine's degree-ordered orientation finds the identical set
-      """WITH nn AS (SELECT count(*) AS n FROM documents),
-        |raw AS (SELECT src, m + CASE WHEN m >= src THEN 1 ELSE 0 END
-        |    AS dst FROM
-        |  (SELECT doc_id AS src,
-        |     (doc_id * 1103515245 + j * 12345) % (n - 1) AS m
-        |   FROM documents, nn, unnest([1, 2, 3]) AS t(j))),
-        |u AS (SELECT DISTINCT least(src, dst) AS a,
-        |    greatest(src, dst) AS b FROM raw WHERE src <> dst),
+      s"""WITH $undirectedLinks,
         |d AS (SELECT node, count(*) AS degree FROM
         |  (SELECT a AS node FROM u UNION ALL SELECT b FROM u)
         |  GROUP BY 1),
@@ -2310,14 +1920,7 @@ object LlmQueries {
     },
       // same undirected edge set; moments over both-orientation edge
       // ends, one division
-      """WITH nn AS (SELECT count(*) AS n FROM documents),
-        |raw AS (SELECT src, m + CASE WHEN m >= src THEN 1 ELSE 0 END
-        |    AS dst FROM
-        |  (SELECT doc_id AS src,
-        |     (doc_id * 1103515245 + j * 12345) % (n - 1) AS m
-        |   FROM documents, nn, unnest([1, 2, 3]) AS t(j))),
-        |u AS (SELECT DISTINCT least(src, dst) AS a,
-        |    greatest(src, dst) AS b FROM raw WHERE src <> dst),
+      s"""WITH $undirectedLinks,
         |d AS (SELECT node, CAST(count(*) AS BIGINT) AS degree FROM
         |  (SELECT a AS node FROM u UNION ALL SELECT b FROM u)
         |  GROUP BY 1),
@@ -2352,14 +1955,7 @@ object LlmQueries {
              |  (SELECT a AS node FROM e$r UNION ALL SELECT b FROM e$r)
              |  GROUP BY 1) WHERE deg >= 6)""".stripMargin
         }.mkString(",\n")
-        s"""WITH nn AS (SELECT count(*) AS n FROM documents),
-           |raw AS (SELECT src, m + CASE WHEN m >= src THEN 1 ELSE 0 END
-           |    AS dst FROM
-           |  (SELECT doc_id AS src,
-           |     (doc_id * 1103515245 + j * 12345) % (n - 1) AS m
-           |   FROM documents, nn, unnest([1, 2, 3]) AS t(j))),
-           |u AS (SELECT DISTINCT least(src, dst) AS a,
-           |    greatest(src, dst) AS b FROM raw WHERE src <> dst),
+        s"""WITH $undirectedLinks,
            |dg AS (SELECT node, count(*) AS deg FROM
            |  (SELECT a AS node FROM u UNION ALL SELECT b FROM u)
            |  GROUP BY 1),
@@ -2397,14 +1993,7 @@ object LlmQueries {
              |  FROM l${k - 1} l LEFT JOIN p$k p ON l.node = p.node)"""
             .stripMargin
         }.mkString(",\n")
-        s"""WITH nn AS (SELECT count(*) AS n FROM documents),
-           |raw AS (SELECT src, m + CASE WHEN m >= src THEN 1 ELSE 0 END
-           |    AS dst FROM
-           |  (SELECT doc_id AS src,
-           |     (doc_id * 1103515245 + j * 12345) % (n - 1) AS m
-           |   FROM documents, nn, unnest([1, 2, 3]) AS t(j))),
-           |u AS (SELECT DISTINCT least(src, dst) AS a,
-           |    greatest(src, dst) AS b FROM raw WHERE src <> dst),
+        s"""WITH $undirectedLinks,
            |sym AS (SELECT a AS s, b AS d FROM u
            |        UNION ALL SELECT b, a FROM u),
            |l0 AS (SELECT doc_id AS node, doc_id AS lbl FROM documents),
@@ -2422,14 +2011,7 @@ object LlmQueries {
       // same synthetic edge set; witness folds replay the op's
       // (deg, w)-ordered IEEE additions via ordered list aggregation;
       // 1/ln(deg) terms through the DetLn series replay
-      s"""WITH nn AS (SELECT count(*) AS n FROM documents),
-        |raw AS (SELECT src, m + CASE WHEN m >= src THEN 1 ELSE 0 END
-        |    AS dst FROM
-        |  (SELECT doc_id AS src,
-        |     (doc_id * 1103515245 + j * 12345) % (n - 1) AS m
-        |   FROM documents, nn, unnest([1, 2, 3]) AS t(j))),
-        |u AS (SELECT DISTINCT least(src, dst) AS a,
-        |    greatest(src, dst) AS b FROM raw WHERE src <> dst),
+      s"""WITH $undirectedLinks,
         |d AS (SELECT node, count(*) AS deg FROM
         |  (SELECT a AS node FROM u UNION ALL SELECT b FROM u)
         |  GROUP BY 1),
@@ -2477,12 +2059,7 @@ object LlmQueries {
     },
       // bounded recursion replays the hop relaxation; min(dist) per
       // node collapses the path multiplicity the recursive walk emits
-      """WITH RECURSIVE nn AS (SELECT count(*) AS n FROM documents),
-        |e AS (SELECT src, m + CASE WHEN m >= src THEN 1 ELSE 0 END
-        |    AS dst FROM
-        |  (SELECT doc_id AS src,
-        |     (doc_id * 1103515245 + j * 12345) % (n - 1) AS m
-        |   FROM documents, nn, unnest([1, 2, 3]) AS t(j))),
+      s"""WITH RECURSIVE ${linkEdges("e")},
         |walk(node, dist) AS (
         |  SELECT doc_id, 0 FROM documents WHERE doc_id < 5
         |  UNION ALL
@@ -2522,12 +2099,7 @@ object LlmQueries {
              |    THEN CAST(raw AS HUGEINT) * 1000000000
              |      // (SELECT max(raw) FROM hr$k)
              |    ELSE 0 END AS hub FROM hr$k)""".stripMargin
-        s"""WITH nn AS (SELECT count(*) AS n FROM documents),
-           |e AS (SELECT src, m + CASE WHEN m >= src THEN 1 ELSE 0 END
-           |    AS dst FROM
-           |  (SELECT doc_id AS src,
-           |     (doc_id * 1103515245 + j * 12345) % (n - 1) AS m
-           |   FROM documents, nn, unnest([1, 2, 3]) AS t(j))),
+        s"""WITH ${linkEdges("e")},
            |h0 AS (SELECT doc_id AS node,
            |  CAST(1000000000 AS BIGINT) AS hub FROM documents),
            |${round(1)},
@@ -2556,12 +2128,7 @@ object LlmQueries {
              |  LEFT JOIN e ON e.dst = d.doc_id
              |  LEFT JOIN $prev r ON r.node = e.src
              |  GROUP BY 1)""".stripMargin
-        s"""WITH nn AS (SELECT count(*) AS n FROM documents),
-           |e AS (SELECT src, m + CASE WHEN m >= src THEN 1 ELSE 0 END
-           |    AS dst FROM
-           |  (SELECT doc_id AS src,
-           |     (doc_id * 1103515245 + j * 12345) % (n - 1) AS m
-           |   FROM documents, nn, unnest([1, 2, 3]) AS t(j))),
+        s"""WITH ${linkEdges("e")},
            |r0 AS (SELECT doc_id AS node,
            |  CASE WHEN doc_id < 5 THEN CAST(1000000000000 AS BIGINT)
            |       ELSE 0 END AS rank FROM documents),
@@ -3003,12 +2570,7 @@ object LlmQueries {
       // exact brute-force replay: the equi-join on shared shingles is a
       // lossless pre-filter (J >= 0.6 > 0 requires a common shingle),
       // then the same integer Jaccard test and single division
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w
-        |  FROM documents),
-        |s AS (SELECT doc_id, list_distinct(list_transform(
-        |    range(1, len(w) - 1),
-        |    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS ts
-        |  FROM t WHERE len(w) >= 3),
+      s"""WITH $setSimShinglesCtes,
         |e AS (SELECT doc_id, len(ts) AS l, unnest(ts) AS sh FROM s),
         |v AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
         |    count(*) AS inter,
@@ -3034,12 +2596,7 @@ object LlmQueries {
     },
       // brute-force delta-vs-corpus replay over the same lossless
       // shared-shingle pre-filter
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w
-        |  FROM documents),
-        |s AS (SELECT doc_id, list_distinct(list_transform(
-        |    range(1, len(w) - 1),
-        |    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS ts
-        |  FROM t WHERE len(w) >= 3),
+      s"""WITH $setSimShinglesCtes,
         |dd AS (SELECT * FROM s WHERE doc_id % 5 = 0),
         |cc AS (SELECT * FROM s WHERE doc_id % 5 <> 0),
         |e1 AS (SELECT doc_id, len(ts) AS l, unnest(ts) AS sh FROM dd),
@@ -3073,12 +2630,7 @@ object LlmQueries {
       // verdict replay over the same brute-force delta-vs-corpus pairs:
       // count + (jaccard desc, id) best + keep, window start from the
       // synthetic ts; only docs with >= 1 shingle carry a verdict
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w
-        |  FROM documents),
-        |s AS (SELECT doc_id, list_distinct(list_transform(
-        |    range(1, len(w) - 1),
-        |    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS ts
-        |  FROM t WHERE len(w) >= 3),
+      s"""WITH $setSimShinglesCtes,
         |dd AS (SELECT * FROM s WHERE doc_id % 5 = 0),
         |cc AS (SELECT * FROM s WHERE doc_id % 5 <> 0),
         |e1 AS (SELECT doc_id, len(ts) AS l, unnest(ts) AS sh FROM dd),
@@ -3135,12 +2687,7 @@ object LlmQueries {
       // the recall-gate oracle shape: exact pair count recomputed from
       // scratch, recall_ok asserted true (a Spark-side gate failure
       // hash-mismatches the row)
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w
-        |  FROM documents),
-        |s AS (SELECT doc_id, list_distinct(list_transform(
-        |    range(1, len(w) - 1),
-        |    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS ts
-        |  FROM t WHERE len(w) >= 3),
+      s"""WITH $setSimShinglesCtes,
         |e AS (SELECT doc_id, len(ts) AS l, unnest(ts) AS sh FROM s),
         |v AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
         |    count(*) AS inter,
@@ -3160,16 +2707,7 @@ object LlmQueries {
     QuerySpec("langid", (s, d) =>
       docs(s, d).select(col("doc_id"), TextOps.langId(col("text")).as("lang_id")),
       {
-        val markers = TextOps.langMarkers
-        val counts = markers.map { case (lang, ms) =>
-          val pred = ms.map(m => s"t='$m'").mkString(" OR ")
-          s"len(list_filter(w, t -> $pred)) AS c_$lang"
-        }.mkString(",\n  ")
-        val best = markers.map { case (lang, _) => s"c_$lang" }
-          .reduce((a, b) => s"greatest($a, $b)")
-        val cases = markers.map { case (lang, _) =>
-          s"WHEN c_$lang > 0 AND c_$lang = best THEN '$lang'"
-        }.mkString("\n  ")
+        val (counts, best, cases) = langVoteSql
         s"""WITH b AS (SELECT doc_id, string_split(lower(text), ' ') AS w
            |  FROM documents),
            |c AS (SELECT doc_id,
@@ -3325,31 +2863,7 @@ object LlmQueries {
       // and splices its leftmost occurrence — exactly the kernel's
       // (min-rank, leftmost, one-per-step) semantics; the fixpoint row
       // per word is arg_max(seq, step)
-      s"""WITH RECURSIVE
-         |m AS (SELECT rank, pat, rep FROM '$bpeMergesDir/*.parquet'),
-         |w AS (SELECT doc_id, i AS wi, toks[i] AS word FROM
-         |  (SELECT doc_id, toks,
-         |    unnest(generate_series(1, len(toks))) AS i
-         |   FROM (SELECT doc_id, string_split(text, ' ') AS toks
-         |         FROM documents))),
-         |chars AS (SELECT doc_id, wi,
-         |  '|' || string_agg(substr(word, ci, 1), '|' ORDER BY ci)
-         |      || '|' AS seq
-         |  FROM w, unnest(generate_series(1, length(word))) t(ci)
-         |  GROUP BY doc_id, wi),
-         |seg AS (
-         |  SELECT doc_id, wi, seq, 0 AS step FROM chars
-         |  UNION ALL
-         |  SELECT s.doc_id, s.wi,
-         |    substr(s.seq, 1, b.p - 1) || b.rep
-         |      || substr(s.seq, b.p + length(b.pat)),
-         |    s.step + 1
-         |  FROM seg s, LATERAL (
-         |    SELECT m.pat, m.rep, position(m.pat IN s.seq) AS p
-         |    FROM m WHERE position(m.pat IN s.seq) > 0
-         |    ORDER BY m.rank LIMIT 1) b),
-         |fin AS (SELECT doc_id, wi, arg_max(seq, step) AS seq
-         |  FROM seg GROUP BY 1, 2)
+      bpeSegSql + """
          |SELECT doc_id,
          |  CAST(sum(len(string_split(trim(seq, '|'), '|'))) AS BIGINT)
          |    AS n_tokens,
@@ -3386,31 +2900,7 @@ object LlmQueries {
             col("n_tokens").cast(DoubleType)).as("chars_per_token"))
     },
       // the same recursive segmentation, folded per language
-      s"""WITH RECURSIVE
-         |m AS (SELECT rank, pat, rep FROM '$bpeMergesDir/*.parquet'),
-         |w AS (SELECT doc_id, i AS wi, toks[i] AS word FROM
-         |  (SELECT doc_id, toks,
-         |    unnest(generate_series(1, len(toks))) AS i
-         |   FROM (SELECT doc_id, string_split(text, ' ') AS toks
-         |         FROM documents))),
-         |chars AS (SELECT doc_id, wi,
-         |  '|' || string_agg(substr(word, ci, 1), '|' ORDER BY ci)
-         |      || '|' AS seq
-         |  FROM w, unnest(generate_series(1, length(word))) t(ci)
-         |  GROUP BY doc_id, wi),
-         |seg AS (
-         |  SELECT doc_id, wi, seq, 0 AS step FROM chars
-         |  UNION ALL
-         |  SELECT s.doc_id, s.wi,
-         |    substr(s.seq, 1, b.p - 1) || b.rep
-         |      || substr(s.seq, b.p + length(b.pat)),
-         |    s.step + 1
-         |  FROM seg s, LATERAL (
-         |    SELECT m.pat, m.rep, position(m.pat IN s.seq) AS p
-         |    FROM m WHERE position(m.pat IN s.seq) > 0
-         |    ORDER BY m.rank LIMIT 1) b),
-         |fin AS (SELECT doc_id, wi, arg_max(seq, step) AS seq
-         |  FROM seg GROUP BY 1, 2),
+      bpeSegSql + """,
          |dt AS (SELECT doc_id,
          |  CAST(sum(len(string_split(trim(seq, '|'), '|'))) AS BIGINT)
          |    AS n_tokens FROM fin GROUP BY 1),
@@ -3454,23 +2944,10 @@ object LlmQueries {
     // (fastText inference shape), pure int64 map, kept = score > 0
     QuerySpec("quality_classify", (s, d) =>
       TextOps.classifyScore(docs(s, d), "doc_id", "text"),
-      {
-        // the weight table interpolated as a DuckDB list literal; token
-        // hash = the fingerprint polyHash recipe, index = 1-based
-        val ws = TextOps.classifierWeights
-          .map(w => s"CAST($w AS BIGINT)").mkString("[", ", ", "]")
-        s"""WITH scored AS (
-           |  SELECT doc_id, CAST(coalesce(list_sum(list_transform(
-           |    string_split(text, ' '),
-           |    t -> ($ws)[1 + CAST(list_reduce(
-           |      list_prepend(CAST(0 AS BIGINT),
-           |        list_transform(range(1, length(t)+1),
-           |          i -> CAST(ascii(substr(t, i, 1)) AS BIGINT))),
-           |      (acc, c) -> (acc*31+c) % ${TextOps.FpMod})
-           |      % ${TextOps.classifierDim} AS INT)])), 0) AS BIGINT) AS score
-           |  FROM documents)
-           |SELECT doc_id, score, score > 0 AS kept FROM scored""".stripMargin
-      }),
+      s"""WITH scored AS (
+         |  SELECT doc_id, $classifierScoreSql AS score
+         |  FROM documents)
+         |SELECT doc_id, score, score > 0 AS kept FROM scored""".stripMargin),
     // top-5 keywords per doc by rational-idf TF-IDF (score = tf·N/df,
     // one exact division) — tf/df shuffle pair + bounded-heap
     // GroupedTopK, stopword tier dropped by the length floor
@@ -3517,31 +2994,20 @@ object LlmQueries {
     },
       // same scored CTE; equi-width decile bins with SQL-side (min,
       // max) census — (s-lo) >= 0 so // floor == Spark's div truncate
-      {
-        val ws = TextOps.classifierWeights
-          .map(w => s"CAST($w AS BIGINT)").mkString("[", ", ", "]")
-        s"""WITH scored AS (
-           |  SELECT CAST(coalesce(list_sum(list_transform(
-           |    string_split(text, ' '),
-           |    t -> ($ws)[1 + CAST(list_reduce(
-           |      list_prepend(CAST(0 AS BIGINT),
-           |        list_transform(range(1, length(t)+1),
-           |          i -> CAST(ascii(substr(t, i, 1)) AS BIGINT))),
-           |      (acc, c) -> (acc*31+c) % ${TextOps.FpMod})
-           |      % ${TextOps.classifierDim} AS INT)])), 0) AS BIGINT) AS s,
-           |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-           |  FROM documents),
-           |b AS (SELECT min(s) AS lo, max(s) - min(s) + 1 AS width
-           |  FROM scored),
-           |binned AS (SELECT ((s - lo) * 10) // width AS bin, s, y
-           |  FROM scored, b)
-           |SELECT bin, count(*) AS n, CAST(sum(y) AS BIGINT) AS n_pos,
-           |  CAST(sum(s) AS DOUBLE) / CAST(count(*) AS DOUBLE)
-           |    AS mean_score,
-           |  CAST(sum(y) AS DOUBLE) / CAST(count(*) AS DOUBLE)
-           |    AS pos_rate
-           |FROM binned GROUP BY 1""".stripMargin
-      }),
+      s"""WITH scored AS (
+         |  SELECT $classifierScoreSql AS s,
+         |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
+         |  FROM documents),
+         |b AS (SELECT min(s) AS lo, max(s) - min(s) + 1 AS width
+         |  FROM scored),
+         |binned AS (SELECT ((s - lo) * 10) // width AS bin, s, y
+         |  FROM scored, b)
+         |SELECT bin, count(*) AS n, CAST(sum(y) AS BIGINT) AS n_pos,
+         |  CAST(sum(s) AS DOUBLE) / CAST(count(*) AS DOUBLE)
+         |    AS mean_score,
+         |  CAST(sum(y) AS DOUBLE) / CAST(count(*) AS DOUBLE)
+         |    AS pos_rate
+         |FROM binned GROUP BY 1""".stripMargin),
     // isotonic (PAV) fit over the same deciles via the minimax
     // identity: interval means are single divisions of exact prefix
     // sums, min/max are order-free — the monotone calibration map a
@@ -3557,43 +3023,32 @@ object LlmQueries {
       // the same deciles, then the minimax identity: iso(i) =
       // max_{j<=i} min_{k>=i} mean(j..k) — comparisons over identical
       // single-division doubles, bit-equal to the op by construction
-      {
-        val ws = TextOps.classifierWeights
-          .map(w => s"CAST($w AS BIGINT)").mkString("[", ", ", "]")
-        s"""WITH scored AS (
-           |  SELECT CAST(coalesce(list_sum(list_transform(
-           |    string_split(text, ' '),
-           |    t -> ($ws)[1 + CAST(list_reduce(
-           |      list_prepend(CAST(0 AS BIGINT),
-           |        list_transform(range(1, length(t)+1),
-           |          i -> CAST(ascii(substr(t, i, 1)) AS BIGINT))),
-           |      (acc, c) -> (acc*31+c) % ${TextOps.FpMod})
-           |      % ${TextOps.classifierDim} AS INT)])), 0) AS BIGINT) AS s,
-           |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-           |  FROM documents),
-           |bb AS (SELECT min(s) AS lo, max(s) - min(s) + 1 AS width
-           |  FROM scored),
-           |binned AS (SELECT ((s - lo) * 10) // width AS bin, y
-           |  FROM scored, bb),
-           |bins AS (SELECT bin, count(*) AS n,
-           |  CAST(sum(y) AS BIGINT) AS n_pos FROM binned GROUP BY 1),
-           |ms AS (SELECT a.bin AS j, c.bin AS k,
-           |  CAST((SELECT sum(x.n_pos) FROM bins x
-           |     WHERE x.bin BETWEEN a.bin AND c.bin) AS DOUBLE)
-           |  / CAST((SELECT sum(x.n) FROM bins x
-           |     WHERE x.bin BETWEEN a.bin AND c.bin) AS DOUBLE) AS m
-           |  FROM bins a JOIN bins c ON a.bin <= c.bin),
-           |f1 AS (SELECT ms.j, i.bin AS i, min(ms.m) AS mn
-           |  FROM ms JOIN bins i ON ms.j <= i.bin AND ms.k >= i.bin
-           |  GROUP BY 1, 2),
-           |f2 AS (SELECT i AS bin, max(mn) AS iso_rate FROM f1
-           |  GROUP BY 1)
-           |SELECT bins.bin, bins.n, bins.n_pos,
-           |  CAST(bins.n_pos AS DOUBLE) / CAST(bins.n AS DOUBLE)
-           |    AS pos_rate,
-           |  f2.iso_rate
-           |FROM bins JOIN f2 USING (bin)""".stripMargin
-      }),
+      s"""WITH scored AS (
+         |  SELECT $classifierScoreSql AS s,
+         |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
+         |  FROM documents),
+         |bb AS (SELECT min(s) AS lo, max(s) - min(s) + 1 AS width
+         |  FROM scored),
+         |binned AS (SELECT ((s - lo) * 10) // width AS bin, y
+         |  FROM scored, bb),
+         |bins AS (SELECT bin, count(*) AS n,
+         |  CAST(sum(y) AS BIGINT) AS n_pos FROM binned GROUP BY 1),
+         |ms AS (SELECT a.bin AS j, c.bin AS k,
+         |  CAST((SELECT sum(x.n_pos) FROM bins x
+         |     WHERE x.bin BETWEEN a.bin AND c.bin) AS DOUBLE)
+         |  / CAST((SELECT sum(x.n) FROM bins x
+         |     WHERE x.bin BETWEEN a.bin AND c.bin) AS DOUBLE) AS m
+         |  FROM bins a JOIN bins c ON a.bin <= c.bin),
+         |f1 AS (SELECT ms.j, i.bin AS i, min(ms.m) AS mn
+         |  FROM ms JOIN bins i ON ms.j <= i.bin AND ms.k >= i.bin
+         |  GROUP BY 1, 2),
+         |f2 AS (SELECT i AS bin, max(mn) AS iso_rate FROM f1
+         |  GROUP BY 1)
+         |SELECT bins.bin, bins.n, bins.n_pos,
+         |  CAST(bins.n_pos AS DOUBLE) / CAST(bins.n AS DOUBLE)
+         |    AS pos_rate,
+         |  f2.iso_rate
+         |FROM bins JOIN f2 USING (bin)""".stripMargin),
     // N10 — Luhn-validated card detection: candidates come from a
     // deterministic per-doc synthetic PAN (the fixture corpus carries
     // no digits) embedded with dash separators plus a short decoy run;
@@ -3644,16 +3099,7 @@ object LlmQueries {
         TextOps.langId(col("text")).as("pred"))
         .groupBy("lang", "pred").agg(count(lit(1)).as("n")),
       {
-        val markers = TextOps.langMarkers
-        val counts = markers.map { case (lang, ms) =>
-          val pred = ms.map(m => s"t='$m'").mkString(" OR ")
-          s"len(list_filter(w, t -> $pred)) AS c_$lang"
-        }.mkString(",\n  ")
-        val best = markers.map { case (lang, _) => s"c_$lang" }
-          .reduce((a, b) => s"greatest($a, $b)")
-        val cases = markers.map { case (lang, _) =>
-          s"WHEN c_$lang > 0 AND c_$lang = best THEN '$lang'"
-        }.mkString("\n  ")
+        val (counts, best, cases) = langVoteSql
         s"""WITH b AS (SELECT doc_id, lang, string_split(lower(text), ' ') AS w
            |  FROM documents),
            |c AS (SELECT doc_id, lang,
@@ -3677,43 +3123,32 @@ object LlmQueries {
           col("lang")),
         col("sc") > 0L, col("lang") === "en"),
       // hashed-score CTE, exact counts, the same guarded divisions
-      {
-        val ws = TextOps.classifierWeights
-          .map(x => s"CAST($x AS BIGINT)").mkString("[", ", ", "]")
-        s"""WITH sc AS (SELECT doc_id,
-           |  CAST(coalesce(list_sum(list_transform(
-           |    string_split(text, ' '),
-           |    t -> ($ws)[1 + CAST(list_reduce(
-           |      list_prepend(CAST(0 AS BIGINT),
-           |        list_transform(range(1, length(t)+1),
-           |          i -> CAST(ascii(substr(t, i, 1)) AS BIGINT))),
-           |      (acc, c) -> (acc*31+c) % ${TextOps.FpMod})
-           |      % ${TextOps.classifierDim} AS INT)])), 0) AS BIGINT)
-           |    AS s FROM documents),
-           |j AS (SELECT sc.s > 0 AS p, d.lang = 'en' AS t
-           |  FROM documents d JOIN sc USING (doc_id)),
-           |w AS (SELECT count(*) AS n,
-           |  CAST(sum(CASE WHEN p AND t THEN 1 ELSE 0 END) AS BIGINT)
-           |    AS tp,
-           |  CAST(sum(CASE WHEN p AND NOT t THEN 1 ELSE 0 END)
-           |    AS BIGINT) AS fp,
-           |  CAST(sum(CASE WHEN NOT p AND t THEN 1 ELSE 0 END)
-           |    AS BIGINT) AS fn,
-           |  CAST(sum(CASE WHEN NOT p AND NOT t THEN 1 ELSE 0 END)
-           |    AS BIGINT) AS tn
-           |  FROM j),
-           |f AS (SELECT *,
-           |  CASE WHEN tp + fp > 0 THEN CAST(tp AS DOUBLE)
-           |    / CAST(tp + fp AS DOUBLE) ELSE 0.0 END AS precision,
-           |  CASE WHEN tp + fn > 0 THEN CAST(tp AS DOUBLE)
-           |    / CAST(tp + fn AS DOUBLE) ELSE 0.0 END AS recall
-           |  FROM w)
-           |SELECT n, tp, fp, fn, tn, precision, recall,
-           |  CASE WHEN precision + recall > 0.0 THEN
-           |    2.0 * (precision * recall) / (precision + recall)
-           |  ELSE 0.0 END AS f1
-           |FROM f""".stripMargin
-      }),
+      s"""WITH sc AS (SELECT doc_id,
+         |  $classifierScoreSql
+         |    AS s FROM documents),
+         |j AS (SELECT sc.s > 0 AS p, d.lang = 'en' AS t
+         |  FROM documents d JOIN sc USING (doc_id)),
+         |w AS (SELECT count(*) AS n,
+         |  CAST(sum(CASE WHEN p AND t THEN 1 ELSE 0 END) AS BIGINT)
+         |    AS tp,
+         |  CAST(sum(CASE WHEN p AND NOT t THEN 1 ELSE 0 END)
+         |    AS BIGINT) AS fp,
+         |  CAST(sum(CASE WHEN NOT p AND t THEN 1 ELSE 0 END)
+         |    AS BIGINT) AS fn,
+         |  CAST(sum(CASE WHEN NOT p AND NOT t THEN 1 ELSE 0 END)
+         |    AS BIGINT) AS tn
+         |  FROM j),
+         |f AS (SELECT *,
+         |  CASE WHEN tp + fp > 0 THEN CAST(tp AS DOUBLE)
+         |    / CAST(tp + fp AS DOUBLE) ELSE 0.0 END AS precision,
+         |  CASE WHEN tp + fn > 0 THEN CAST(tp AS DOUBLE)
+         |    / CAST(tp + fn AS DOUBLE) ELSE 0.0 END AS recall
+         |  FROM w)
+         |SELECT n, tp, fp, fn, tn, precision, recall,
+         |  CASE WHEN precision + recall > 0.0 THEN
+         |    2.0 * (precision * recall) / (precision + recall)
+         |  ELSE 0.0 END AS f1
+         |FROM f""".stripMargin),
     // do the two English detectors agree beyond chance, and do their
     // ERROR RATES differ — Cohen's kappa + McNemar between the
     // marker-vote langid and the hashed linear classifier, truth =
@@ -3729,18 +3164,7 @@ object LlmQueries {
       // langid CASE ladder + the hashed-score CTE, then the exact
       // integer kappa/McNemar rearrangements
       {
-        val markers = TextOps.langMarkers
-        val counts = markers.map { case (lang, ms) =>
-          val pred = ms.map(m => s"t='$m'").mkString(" OR ")
-          s"len(list_filter(w, t -> $pred)) AS c_$lang"
-        }.mkString(",\n  ")
-        val best = markers.map { case (lang, _) => s"c_$lang" }
-          .reduce((x, y) => s"greatest($x, $y)")
-        val cases = markers.map { case (lang, _) =>
-          s"WHEN c_$lang > 0 AND c_$lang = best THEN '$lang'"
-        }.mkString("\n  ")
-        val ws = TextOps.classifierWeights
-          .map(x => s"CAST($x AS BIGINT)").mkString("[", ", ", "]")
+        val (counts, best, cases) = langVoteSql
         s"""WITH bw AS (SELECT doc_id,
            |  string_split(lower(text), ' ') AS w FROM documents),
            |cc0 AS (SELECT doc_id, $counts FROM bw),
@@ -3749,14 +3173,7 @@ object LlmQueries {
            |li AS (SELECT doc_id, CASE
            |  $cases
            |  ELSE 'unknown' END AS lang_id FROM mm),
-           |sc AS (SELECT doc_id, CAST(coalesce(list_sum(list_transform(
-           |    string_split(text, ' '),
-           |    t -> ($ws)[1 + CAST(list_reduce(
-           |      list_prepend(CAST(0 AS BIGINT),
-           |        list_transform(range(1, length(t)+1),
-           |          i -> CAST(ascii(substr(t, i, 1)) AS BIGINT))),
-           |      (acc, c) -> (acc*31+c) % ${TextOps.FpMod})
-           |      % ${TextOps.classifierDim} AS INT)])), 0) AS BIGINT)
+           |sc AS (SELECT doc_id, $classifierScoreSql
            |    AS s FROM documents),
            |j AS (SELECT li.lang_id = 'en' AS a, sc.s > 0 AS b,
            |  d.lang = 'en' AS t
@@ -3857,34 +3274,19 @@ object LlmQueries {
       CorpusOps.clusterSplit(docs(s, d), "doc_id", "text",
         threshold = 0.5),
       // dedup_corpus's CC CTE chain, then the 8/1/1 canonical_id bucket
-      {
-        val rounds = (1 to 4).map { k =>
-          s"""l$k AS (SELECT l.id, least(l.comp, coalesce(min(n.comp), l.comp)) AS comp
-             |  FROM l${k - 1} l LEFT JOIN sym e ON l.id = e.s
-             |  LEFT JOIN l${k - 1} n ON e.d = n.id
-             |  GROUP BY l.id, l.comp)""".stripMargin
-        }.mkString(",\n")
-        s"""WITH $shingleInterCte,
-           |pr AS (SELECT ia, ib FROM pint
-           |  WHERE CAST(inter AS DOUBLE)
-           |      / CAST(la + lb - inter AS DOUBLE) >= 0.5),
-           |sym AS (SELECT ia AS s, ib AS d FROM pr
-           |        UNION ALL SELECT ib, ia FROM pr),
-           |l0 AS (SELECT doc_id AS id, doc_id AS comp FROM documents),
-           |$rounds,
-           |cc AS (SELECT id AS doc_id, comp AS canonical_id FROM l4),
-           |tk AS (SELECT doc_id,
-           |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
-           |  FROM documents),
-           |j AS (SELECT CASE WHEN canonical_id % 10 < 8 THEN 'train'
-           |    WHEN canonical_id % 10 < 9 THEN 'val'
-           |    ELSE 'test' END AS split, canonical_id, n_tok
-           |  FROM cc JOIN tk USING (doc_id))
-           |SELECT split,
-           |  CAST(count(DISTINCT canonical_id) AS BIGINT) AS n_clusters,
-           |  count(*) AS n_docs, CAST(sum(n_tok) AS BIGINT) AS n_tokens
-           |FROM j GROUP BY 1""".stripMargin
-      }),
+      s"""WITH $corpusComponentCtes,
+         |cc AS (SELECT id AS doc_id, comp AS canonical_id FROM l4),
+         |tk AS (SELECT doc_id,
+         |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
+         |  FROM documents),
+         |j AS (SELECT CASE WHEN canonical_id % 10 < 8 THEN 'train'
+         |    WHEN canonical_id % 10 < 9 THEN 'val'
+         |    ELSE 'test' END AS split, canonical_id, n_tok
+         |  FROM cc JOIN tk USING (doc_id))
+         |SELECT split,
+         |  CAST(count(DISTINCT canonical_id) AS BIGINT) AS n_clusters,
+         |  count(*) AS n_docs, CAST(sum(n_tok) AS BIGINT) AS n_tokens
+         |FROM j GROUP BY 1""".stripMargin),
     // N1/N2/N4 end-to-end — the C4-style corpus cleanup an LLM data
     // pipeline actually ships: near-dup removal (keep the canonical
     // representative) ∩ quality floor, annotated with language ID and
@@ -3911,30 +3313,8 @@ object LlmQueries {
         // dedup_corpus's pair predicate + the SAME 4 propagation rounds,
         // then quality + langid recomputed per the text_quality / langid
         // oracles, intersected exactly as the Spark plan does
-        val rounds = (1 to 4).map { k =>
-          s"""l$k AS (SELECT l.id, least(l.comp, coalesce(min(n.comp), l.comp)) AS comp
-             |  FROM l${k - 1} l LEFT JOIN sym e ON l.id = e.s
-             |  LEFT JOIN l${k - 1} n ON e.d = n.id
-             |  GROUP BY l.id, l.comp)""".stripMargin
-        }.mkString(",\n")
-        val markers = TextOps.langMarkers
-        val counts = markers.map { case (lang, ms) =>
-          val pred = ms.map(m => s"t='$m'").mkString(" OR ")
-          s"len(list_filter(w, t -> $pred)) AS c_$lang"
-        }.mkString(",\n  ")
-        val best = markers.map { case (lang, _) => s"c_$lang" }
-          .reduce((a, b) => s"greatest($a, $b)")
-        val cases = markers.map { case (lang, _) =>
-          s"WHEN c_$lang > 0 AND c_$lang = best THEN '$lang'"
-        }.mkString("\n  ")
-        s"""WITH $shingleInterCte,
-           |pr AS (SELECT ia, ib FROM pint
-           |  WHERE CAST(inter AS DOUBLE)
-           |      / CAST(la + lb - inter AS DOUBLE) >= 0.5),
-           |sym AS (SELECT ia AS s, ib AS d FROM pr
-           |        UNION ALL SELECT ib, ia FROM pr),
-           |l0 AS (SELECT doc_id AS id, doc_id AS comp FROM documents),
-           |$rounds,
+        val (counts, best, cases) = langVoteSql
+        s"""WITH $corpusComponentCtes,
            |keep AS (SELECT id AS doc_id FROM l4 WHERE id = comp),
            |qb AS (SELECT doc_id, text, string_split(text, ' ') AS w,
            |  CAST(length(text) AS BIGINT) AS n_chars FROM documents),
@@ -3964,13 +3344,7 @@ object LlmQueries {
     // N6 — sessionization, gaps-and-islands form
     QuerySpec("sessionize", (s, d) =>
       Sessionize.gapsAndIslands(Tables.events(s, d), gapSeconds = 1800),
-      """WITH l AS (SELECT user_id, ts, event_id,
-        |  lag(epoch_us(ts)) OVER (PARTITION BY user_id
-        |    ORDER BY ts, event_id) AS prev_us FROM events),
-        |f AS (SELECT user_id, ts, event_id,
-        |  CASE WHEN prev_us IS NULL
-        |        OR epoch_us(ts) - prev_us >= 1800000000 THEN 1
-        |  ELSE 0 END AS new_sess FROM l),
+      s"""WITH ${OracleSql.sessionStarts()},
         |s AS (SELECT user_id, ts,
         |  CAST(sum(new_sess) OVER (PARTITION BY user_id
         |    ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sess_id
@@ -4005,13 +3379,7 @@ object LlmQueries {
             col("gap_days"))).as("p90_days"))
     },
       // the sessionize CTE; per-user lead, day-census rank selection
-      """WITH l AS (SELECT user_id, ts, event_id,
-        |  lag(epoch_us(ts)) OVER (PARTITION BY user_id
-        |    ORDER BY ts, event_id) AS prev_us FROM events),
-        |f AS (SELECT user_id, ts, event_id,
-        |  CASE WHEN prev_us IS NULL
-        |        OR epoch_us(ts) - prev_us >= 1800000000 THEN 1
-        |  ELSE 0 END AS new_sess FROM l),
+      s"""WITH ${OracleSql.sessionStarts()},
         |s AS (SELECT user_id, ts,
         |  CAST(sum(new_sess) OVER (PARTITION BY user_id
         |    ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING)
@@ -4053,13 +3421,7 @@ object LlmQueries {
               .cast(org.apache.spark.sql.types.DoubleType))
             .as("bounce_rate")),
       // the sessionize CTE aggregated to session-start days
-      """WITH l AS (SELECT user_id, ts, event_id,
-        |  lag(epoch_us(ts)) OVER (PARTITION BY user_id
-        |    ORDER BY ts, event_id) AS prev_us FROM events),
-        |f AS (SELECT user_id, ts, event_id,
-        |  CASE WHEN prev_us IS NULL
-        |        OR epoch_us(ts) - prev_us >= 1800000000 THEN 1
-        |  ELSE 0 END AS new_sess FROM l),
+      s"""WITH ${OracleSql.sessionStarts()},
         |s AS (SELECT user_id, ts,
         |  CAST(sum(new_sess) OVER (PARTITION BY user_id
         |    ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING)
@@ -4088,13 +3450,7 @@ object LlmQueries {
           col("n_events")),
       // same session-assignment CTE; the streaming twin carries no
       // per-user ordinal, so the ordinal groups but is not selected
-      """WITH l AS (SELECT user_id, ts, event_id,
-        |  lag(epoch_us(ts)) OVER (PARTITION BY user_id
-        |    ORDER BY ts, event_id) AS prev_us FROM events),
-        |f AS (SELECT user_id, ts, event_id,
-        |  CASE WHEN prev_us IS NULL
-        |        OR epoch_us(ts) - prev_us >= 1800000000 THEN 1
-        |  ELSE 0 END AS new_sess FROM l),
+      s"""WITH ${OracleSql.sessionStarts()},
         |s AS (SELECT user_id, ts,
         |  CAST(sum(new_sess) OVER (PARTITION BY user_id
         |    ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sess_id
@@ -4109,13 +3465,7 @@ object LlmQueries {
     // a month at ANY data volume; allowlisted in PlanQualitySpec)
     QuerySpec("peak_concurrency", (s, d) =>
       Sessionize.peakConcurrency(Tables.events(s, d), gapSeconds = 1800),
-      """WITH l AS (SELECT user_id, ts, event_id,
-        |  lag(epoch_us(ts)) OVER (PARTITION BY user_id
-        |    ORDER BY ts, event_id) AS prev_us FROM events),
-        |f AS (SELECT user_id, ts, event_id,
-        |  CASE WHEN prev_us IS NULL
-        |        OR epoch_us(ts) - prev_us >= 1800000000 THEN 1
-        |  ELSE 0 END AS new_sess FROM l),
+      s"""WITH ${OracleSql.sessionStarts()},
         |s AS (SELECT user_id, ts,
         |  sum(new_sess) OVER (PARTITION BY user_id
         |    ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS sess_id
@@ -4137,13 +3487,7 @@ object LlmQueries {
     // path-analysis / Sankey input over the same session assignment
     QuerySpec("top_paths", (s, d) =>
       Sessionize.topPaths(Tables.events(s, d)),
-      """WITH l AS (SELECT user_id, ts, event_id, event_type,
-        |  lag(epoch_us(ts)) OVER (PARTITION BY user_id
-        |    ORDER BY ts, event_id) AS prev_us FROM events),
-        |f AS (SELECT user_id, ts, event_id, event_type,
-        |  CASE WHEN prev_us IS NULL
-        |        OR epoch_us(ts) - prev_us >= 1800000000 THEN 1
-        |  ELSE 0 END AS new_sess FROM l),
+      s"""WITH ${OracleSql.sessionStarts(", event_type")},
         |s AS (SELECT user_id, ts, event_id, event_type,
         |  sum(new_sess) OVER (PARTITION BY user_id
         |    ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING)
@@ -4163,13 +3507,7 @@ object LlmQueries {
       Sessionize.sessionAssoc(Tables.events(s, d), gapSeconds = 1800),
       // same session-assignment CTE; distinct (session, type) baskets,
       // identical one-division ratio chain
-      """WITH l AS (SELECT user_id, ts, event_id, event_type,
-        |  lag(epoch_us(ts)) OVER (PARTITION BY user_id
-        |    ORDER BY ts, event_id) AS prev_us FROM events),
-        |f AS (SELECT user_id, ts, event_id, event_type,
-        |  CASE WHEN prev_us IS NULL
-        |        OR epoch_us(ts) - prev_us >= 1800000000 THEN 1
-        |  ELSE 0 END AS new_sess FROM l),
+      s"""WITH ${OracleSql.sessionStarts(", event_type")},
         |s AS (SELECT user_id, event_type,
         |  CAST(sum(new_sess) OVER (PARTITION BY user_id
         |    ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT)
@@ -4199,13 +3537,7 @@ object LlmQueries {
         |WHERE n_ab >= 2""".stripMargin),
     QuerySpec("sessionize_native", (s, d) =>
       Sessionize.sessionWindow(Tables.events(s, d), gap = "30 minutes"),
-      """WITH l AS (SELECT user_id, ts, event_id,
-        |  lag(epoch_us(ts)) OVER (PARTITION BY user_id
-        |    ORDER BY ts, event_id) AS prev_us FROM events),
-        |f AS (SELECT user_id, ts, event_id,
-        |  CASE WHEN prev_us IS NULL
-        |        OR epoch_us(ts) - prev_us >= 1800000000 THEN 1
-        |  ELSE 0 END AS new_sess FROM l),
+      s"""WITH ${OracleSql.sessionStarts()},
         |s AS (SELECT user_id, ts,
         |  sum(new_sess) OVER (PARTITION BY user_id
         |    ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS sess_id
@@ -5096,6 +4428,112 @@ object LlmQueries {
        |  FROM shl a JOIN shl b ON a.g = b.g AND a.doc_id < b.doc_id
        |  GROUP BY 1, 2)""".stripMargin
 
+  /** Shared SQL: the near-dup components of Dedup.dedupCorpus — the
+    * neardup_minhash pairs (jaccard >= 0.5) and the SAME 4
+    * min-propagation rounds the op runs — ending in `l4(id, comp)`.
+    */
+  private def corpusComponentCtes: String = {
+    val rounds = (1 to 4).map { k =>
+      s"""l$k AS (SELECT l.id, least(l.comp, coalesce(min(n.comp), l.comp)) AS comp
+         |  FROM l${k - 1} l LEFT JOIN sym e ON l.id = e.s
+         |  LEFT JOIN l${k - 1} n ON e.d = n.id
+         |  GROUP BY l.id, l.comp)""".stripMargin
+    }.mkString(",\n")
+    s"""$shingleInterCte,
+       |pr AS (SELECT ia, ib FROM pint
+       |  WHERE CAST(inter AS DOUBLE)
+       |      / CAST(la + lb - inter AS DOUBLE) >= 0.5),
+       |sym AS (SELECT ia AS s, ib AS d FROM pr
+       |        UNION ALL SELECT ib, ia FROM pr),
+       |l0 AS (SELECT doc_id AS id, doc_id AS comp FROM documents),
+       |$rounds""".stripMargin
+  }
+
+  /** Shared SQL: the rational-idf BM25 top-10 of [[bm25Terms]] over
+    * `d(doc_id, toks)` — per-term scores, their fixed-order sum and
+    * the (score DESC, doc_id) rank (see Retrieval.bm25TopK).
+    */
+  private def bm25Top10: String =
+    """l AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl, toks FROM d),
+      |st AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
+      |  CAST(sum(dl) AS BIGINT) AS sum_len FROM l),
+      |e AS (SELECT doc_id, dl, unnest(toks) AS term FROM l),
+      |tf AS (SELECT doc_id, dl, term, CAST(count(*) AS BIGINT) AS tf
+      |  FROM e WHERE term IN ('spark', 'stream', 'vector', 'query')
+      |  GROUP BY 1, 2, 3),
+      |dfq AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf
+      |  GROUP BY 1),
+      |sc AS (SELECT tf.doc_id, tf.term,
+      |  (CAST(2*(st.n_docs - dfq.df) + 1 AS DOUBLE)
+      |     / CAST(2*dfq.df + 1 AS DOUBLE))
+      |  * (CAST(44*tf.tf*st.sum_len AS DOUBLE)
+      |     / CAST(20*tf.tf*st.sum_len + 6*st.sum_len
+      |            + 18*tf.dl*st.n_docs AS DOUBLE)) AS score_t
+      |  FROM tf JOIN dfq ON tf.term = dfq.term CROSS JOIN st),
+      |p AS (SELECT doc_id,
+      |  coalesce(max(CASE WHEN term = 'spark' THEN score_t END), 0.0)
+      |    AS s_spark,
+      |  coalesce(max(CASE WHEN term = 'stream' THEN score_t END), 0.0)
+      |    AS s_stream,
+      |  coalesce(max(CASE WHEN term = 'vector' THEN score_t END), 0.0)
+      |    AS s_vector,
+      |  coalesce(max(CASE WHEN term = 'query' THEN score_t END), 0.0)
+      |    AS s_query
+      |  FROM sc GROUP BY 1),
+      |r AS (SELECT doc_id, s_spark, s_stream, s_vector, s_query,
+      |  ((s_spark + s_stream) + s_vector) + s_query AS score FROM p),
+      |k AS (SELECT doc_id,
+      |  CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT)
+      |    AS rk,
+      |  score, s_spark, s_stream, s_vector, s_query FROM r)
+      |SELECT * FROM k WHERE rk <= 10""".stripMargin
+
+  /** Shared SQL: the LangIdVote replay over a word list `w` — the
+    * per-language marker counts `c_<lang>`, their maximum, and the
+    * CASE arms naming the first language at that maximum.
+    */
+  private def langVoteSql: (String, String, String) = {
+    val markers = TextOps.langMarkers
+    val counts = markers.map { case (lang, ms) =>
+      val pred = ms.map(m => s"t='$m'").mkString(" OR ")
+      s"len(list_filter(w, t -> $pred)) AS c_$lang"
+    }.mkString(",\n  ")
+    val best = markers.map { case (lang, _) => s"c_$lang" }
+      .reduce((a, b) => s"greatest($a, $b)")
+    val cases = markers.map { case (lang, _) =>
+      s"WHEN c_$lang > 0 AND c_$lang = best THEN '$lang'"
+    }.mkString("\n  ")
+    (counts, best, cases)
+  }
+
+  /** Shared SQL: the LinearScore kernel's replay over `text` — each
+    * token's polyHash fingerprint indexes the hashed weight table
+    * (1-based), weights summed as BIGINT, 0 for an empty document.
+    */
+  private def classifierScoreSql: String = {
+    val ws = TextOps.classifierWeights
+      .map(w => s"CAST($w AS BIGINT)").mkString("[", ", ", "]")
+    s"""CAST(coalesce(list_sum(list_transform(
+       |    string_split(text, ' '),
+       |    t -> ($ws)[1 + CAST(list_reduce(
+       |      list_prepend(CAST(0 AS BIGINT),
+       |        list_transform(range(1, length(t)+1),
+       |          i -> CAST(ascii(substr(t, i, 1)) AS BIGINT))),
+       |      (acc, c) -> (acc*31+c) % ${TextOps.FpMod})
+       |      % ${TextOps.classifierDim} AS INT)])), 0) AS BIGINT)""".stripMargin
+  }
+
+  /** Shared SQL: the set-similarity join's shingle sets — each doc's
+    * distinct 3-word shingles `s(doc_id, ts)`, docs of 3+ words only.
+    */
+  private def setSimShinglesCtes: String =
+    """t AS (SELECT doc_id, string_split(text, ' ') AS w
+      |  FROM documents),
+      |s AS (SELECT doc_id, list_distinct(list_transform(
+      |    range(1, len(w) - 1),
+      |    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS ts
+      |  FROM t WHERE len(w) >= 3)""".stripMargin
+
   /** Shared SQL: the polynomial char-fold hash of an arbitrary string
     * expression (mirror of TextOps.polyHash / the PolyHash31 kernel).
     * Pass a parenthesized expression if it contains operators.
@@ -5182,6 +4620,19 @@ object LlmQueries {
        |  FROM scored)
        |SELECT count(*) AS n_exact, true AS recall_ok
        |FROM r WHERE rnk <= 5""".stripMargin
+
+  /** Shared oracle for topk_cosine and topk_cosine_exec: one brute-force
+    * top-5 for both proves the custom operator plan-equivalent.
+    */
+  private def topkCosineOracle: String =
+    s"""WITH $quantCte,
+       |qs AS (SELECT vec_id, qv, nn FROM n WHERE vec_id < 8),
+       |scored AS (SELECT b.vec_id AS query_id, a.vec_id AS neighbor_id,
+       |  CAST($dotAb AS DOUBLE)
+       |    / sqrt(CAST(a.nn AS DOUBLE) * CAST(b.nn AS DOUBLE)) AS cosine
+       |  FROM n a JOIN qs b ON a.vec_id <> b.vec_id),
+       |${rankCte()}
+       |SELECT query_id, neighbor_id, rnk, cosine FROM r WHERE rnk <= 5""".stripMargin
 
   /** Where `ivf_topk` materializes its deterministic cell assignments
     * for the DuckDB oracle (the coarse quantizer is driver-trained, so
@@ -5336,13 +4787,9 @@ object LlmQueries {
       val finalCorpus = e.filter(!isBatch &&
         ((col("vec_id") % 7 =!= 0 && col("vec_id") % 11 =!= 0) ||
           col("vec_id") % 7 === 0))
-      Sidecars.writeOracleInput(annStoreCellsDir) {
-        Similarity.ivfCells(finalCorpus, "vec_id", "embedding", cts, n = 2)
-          .withColumn("side", lit("c"))
-          .unionByName(
-            Similarity.ivfCells(batch, "vec_id", "embedding", cts, n = 8)
-              .withColumn("side", lit("q")))
-      }
+      writeSides(annStoreCellsDir)(
+        Similarity.ivfCells(finalCorpus, "vec_id", "embedding", cts, n = 2),
+        Similarity.ivfCells(batch, "vec_id", "embedding", cts, n = 8))
       (cts, store)
     }
 
@@ -5390,6 +4837,40 @@ object LlmQueries {
       Sidecars.writeOracleInput(bpeMergesDir)(rows.toDF("rank", "pat", "rep"))
       merges
     }
+
+  /** Shared SQL: bpe_tokenize's apply loop as a recursive CTE over the
+    * persisted merge table — each word starts as '|c1|...|cn|', each
+    * step splices the leftmost occurrence of the lowest-rank merge
+    * that occurs — ending in `fin(doc_id, wi, seq)`, each word's
+    * fixpoint. Some of its lines start with `||`, so it is prepended
+    * to a margin-stripped literal, never interpolated into one.
+    */
+  private def bpeSegSql: String =
+    s"""WITH RECURSIVE
+       |m AS (SELECT rank, pat, rep FROM '$bpeMergesDir/*.parquet'),
+       |w AS (SELECT doc_id, i AS wi, toks[i] AS word FROM
+       |  (SELECT doc_id, toks,
+       |    unnest(generate_series(1, len(toks))) AS i
+       |   FROM (SELECT doc_id, string_split(text, ' ') AS toks
+       |         FROM documents))),
+       |chars AS (SELECT doc_id, wi,
+       |  '|' || string_agg(substr(word, ci, 1), '|' ORDER BY ci)
+       |      || '|' AS seq
+       |  FROM w, unnest(generate_series(1, length(word))) t(ci)
+       |  GROUP BY doc_id, wi),
+       |seg AS (
+       |  SELECT doc_id, wi, seq, 0 AS step FROM chars
+       |  UNION ALL
+       |  SELECT s.doc_id, s.wi,
+       |    substr(s.seq, 1, b.p - 1) || b.rep
+       |      || substr(s.seq, b.p + length(b.pat)),
+       |    s.step + 1
+       |  FROM seg s, LATERAL (
+       |    SELECT m.pat, m.rep, position(m.pat IN s.seq) AS p
+       |    FROM m WHERE position(m.pat IN s.seq) > 0
+       |    ORDER BY m.rank LIMIT 1) b),
+       |fin AS (SELECT doc_id, wi, arg_max(seq, step) AS seq
+       |  FROM seg GROUP BY 1, 2)""".stripMargin
 
   /** The WordPieces greedy loop as SQL: one CASE arm per vocab entry,
     * longest-first with lexical tie-break — the exact match order the
@@ -5496,6 +4977,121 @@ object LlmQueries {
 
   private val dotAb =
     "list_sum(list_transform(range(1, len(a.qv)+1), i -> a.qv[i]*b.qv[i]))"
+
+  /** Shared SQL: the replay of [[Graph.syntheticLinks]] — three
+    * pseudo-random out-links per document, never a self-link — as
+    * `edges(src, dst)`.
+    */
+  private def linkEdges(edges: String): String =
+    s"""nn AS (SELECT count(*) AS n FROM documents),
+       |$edges AS (SELECT src, m + CASE WHEN m >= src THEN 1 ELSE 0 END
+       |    AS dst FROM
+       |  (SELECT doc_id AS src,
+       |     (doc_id * 1103515245 + j * 12345) % (n - 1) AS m
+       |   FROM documents, nn, unnest([1, 2, 3]) AS t(j)))""".stripMargin
+
+  /** Shared SQL: [[linkEdges]] as the undirected graph, one
+    * `u(a, b)` row per edge with a < b.
+    */
+  private def undirectedLinks: String =
+    s"""${linkEdges("raw")},
+       |u AS (SELECT DISTINCT least(src, dst) AS a,
+       |    greatest(src, dst) AS b FROM raw WHERE src <> dst)""".stripMargin
+
+  /** Shared SQL: `r`, each query's neighbors in `scored` ranked by
+    * (cosine DESC, neighbor_id) — the order every top-k kernel breaks
+    * ties in — carrying the extra `scored` columns `cols`.
+    */
+  private def rankCte(cols: String = ""): String =
+    s"""r AS (SELECT query_id, neighbor_id,$cols
+       |  CAST(row_number() OVER (PARTITION BY query_id
+       |    ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rnk, cosine
+       |  FROM scored)""".stripMargin
+
+  /** Shared SQL: the exact rerank of the candidate pairs
+    * `cand(query_id, neighbor_id)` — quantized cosine over [[quantCte]]'s
+    * `n` — ending in [[rankCte]]'s `r`.
+    */
+  private def rerankCtes: String =
+    s"""scored AS (SELECT cand.query_id, cand.neighbor_id,
+       |  CAST($dotAb AS DOUBLE)
+       |    / sqrt(CAST(a.nn AS DOUBLE) * CAST(b.nn AS DOUBLE)) AS cosine
+       |  FROM cand JOIN n a ON cand.neighbor_id = a.vec_id
+       |            JOIN n b ON cand.query_id = b.vec_id),
+       |${rankCte()}""".stripMargin
+
+  /** Shared SQL: the approximate top-5 oracles' tail — [[rerankCtes]]
+    * and the top 5 of `r`.
+    */
+  private def rerankTop5: String =
+    s"""$rerankCtes
+       |SELECT query_id, neighbor_id, rnk, cosine FROM r WHERE rnk <= 5""".stripMargin
+
+  /** Shared SQL: the IVF candidate pairs — every query-side vector
+    * (`side = 'q'`) against the corpus-side vectors in its probed
+    * cells — from the cell sidecar at `dir`, as `cand`.
+    */
+  private def cellCand(dir: String, cand: String = "cand"): String =
+    s"""cells AS (SELECT * FROM '$dir/*.parquet'),
+       |$cand AS (SELECT DISTINCT qc.vec_id AS query_id,
+       |    cc.vec_id AS neighbor_id
+       |  FROM (SELECT vec_id, cell FROM cells WHERE side = 'q') qc
+       |  JOIN (SELECT vec_id, cell FROM cells WHERE side = 'c') cc
+       |    ON qc.cell = cc.cell AND qc.vec_id <> cc.vec_id)""".stripMargin
+
+  /** Shared SQL: the candidate window of a compressed-scan oracle —
+    * the `depth` first pairs of `src` per query by (`order`,
+    * neighbor_id), as `cand`.
+    */
+  private def candWindow(order: String, src: String, depth: String): String =
+    s"""cand AS (SELECT query_id, neighbor_id FROM (
+       |  SELECT query_id, neighbor_id,
+       |    row_number() OVER (PARTITION BY query_id
+       |      ORDER BY $order, neighbor_id) AS crk FROM $src)
+       |  WHERE crk <= $depth)""".stripMargin
+
+  /** Shared SQL: a PQ oracle input — per-subspace `codes` and the
+    * codebook `cb` from their sidecars — and each coded vector's
+    * reconstructed squared norm `nr`.
+    */
+  private def pqCodeCtes(codesDir: String, codebookDir: String): String =
+    s"""codes AS (SELECT CAST(vec_id AS BIGINT) AS vec_id,
+       |  CAST(subspace AS BIGINT) AS subspace, CAST(code AS BIGINT) AS code
+       |  FROM '$codesDir/*.parquet'),
+       |cb AS (SELECT CAST(subspace AS BIGINT) AS subspace,
+       |  CAST(code AS BIGINT) AS code, CAST(sub_off AS BIGINT) AS sub_off,
+       |  centroid, CAST(cnorm AS BIGINT) AS cnorm
+       |  FROM '$codebookDir/*.parquet'),
+       |nr AS (SELECT c.vec_id, CAST(sum(cb.cnorm) AS BIGINT) AS nn_r
+       |  FROM codes c JOIN cb ON c.subspace = cb.subspace
+       |    AND c.code = cb.code
+       |  GROUP BY 1)""".stripMargin
+
+  /** Shared SQL: the IVFADC `contrib` — each subspace's integer ADC
+    * term for the cell-gated pairs `cand0` against query vectors `qs`.
+    */
+  private def cellAdcContrib: String =
+    """contrib AS (SELECT c0.query_id, c0.neighbor_id,
+      |  list_sum(list_transform(range(1, len(cb.centroid)+1),
+      |    i -> cb.centroid[i] * q.qv[cb.sub_off + i])) AS part
+      |  FROM cand0 c0
+      |  JOIN codes c ON c0.neighbor_id = c.vec_id
+      |  JOIN cb ON c.subspace = cb.subspace AND c.code = cb.code
+      |  JOIN qs q ON c0.query_id = q.vec_id)""".stripMargin
+
+  /** Shared SQL: the integer ADC score per pair (`ad`) and its
+    * reconstructed cosine (`recon`), one division, as the kernel.
+    */
+  private def adcReconCtes: String =
+    """ad AS (SELECT query_id, neighbor_id,
+      |  CAST(sum(part) AS BIGINT) AS adc
+      |  FROM contrib GROUP BY 1, 2),
+      |recon AS (SELECT ad.query_id, ad.neighbor_id,
+      |  CAST(ad.adc AS DOUBLE)
+      |    / sqrt(CAST(nr.nn_r AS DOUBLE) * CAST(q.nn AS DOUBLE))
+      |    AS recon_cos
+      |  FROM ad JOIN nr ON ad.neighbor_id = nr.vec_id
+      |  JOIN qs q ON ad.query_id = q.vec_id)""".stripMargin
 
   /** The fixed slice the `_capped` linkage twins replay over — 4096
     * smallest custkeys, so the block-quadratic oracle cost is

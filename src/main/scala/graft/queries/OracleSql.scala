@@ -1,7 +1,10 @@
 package graft.queries
 
-/** Shared oracle-SQL fragments that must replay a kernel's exact IEEE
-  * op sequence (see the paired kernel's scaladoc for the contract).
+/** Oracle-SQL fragments shared by more than one registry file: the
+  * replays of a kernel's exact IEEE op sequence (see the paired
+  * kernel's scaladoc for the contract) and the CTEs several rows'
+  * oracles start from. A fragment used by one file sits beside that
+  * file's rows.
   */
 object OracleSql {
 
@@ -54,4 +57,19 @@ object OracleSql {
        |  ELSE (4 + $b % 4)
        |    * (CAST(1 AS BIGINT) << CAST($b // 4 - 2 AS INT)) END"""
       .stripMargin
+
+  /** The gaps-and-islands session starts of
+    * [[graft.ops.Sessionize.gapsAndIslands]] at its 30-minute gap:
+    * `l` carries each event's previous timestamp per user, `f` flags
+    * `new_sess`. `cols` lists extra `events` columns both carry
+    * (", event_type").
+    */
+  def sessionStarts(cols: String = ""): String =
+    s"""l AS (SELECT user_id, ts, event_id$cols,
+       |  lag(epoch_us(ts)) OVER (PARTITION BY user_id
+       |    ORDER BY ts, event_id) AS prev_us FROM events),
+       |f AS (SELECT user_id, ts, event_id$cols,
+       |  CASE WHEN prev_us IS NULL
+       |        OR epoch_us(ts) - prev_us >= 1800000000 THEN 1
+       |  ELSE 0 END AS new_sess FROM l)""".stripMargin
 }

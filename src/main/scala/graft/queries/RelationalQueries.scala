@@ -24,6 +24,230 @@ object RelationalQueries {
   private val sqlPropsK: String =
     """CAST(regexp_extract(props, '"k":\s*([0-9]+)', 1) AS BIGINT)"""
 
+  /** Shared oracle SQL: `g(h)`, every grid step from `b.lo` to `b.hi`. */
+  private def gridSteps: String =
+    "(SELECT unnest(generate_series(lo, hi)) AS h FROM b) g"
+
+  /** Shared oracle SQL: the dense hourly series of
+    * [[graft.ops.TimeSeries]] — whole hours since the 2024-01-01 grid
+    * origin, event counts `cnt(h, event_type, c)`, and `grid`, the
+    * global hour span × every event type.
+    */
+  private def hourGridCtes: String =
+    s"""e AS (SELECT (epoch_us(ts) - 1704067200000000)
+       |    // 3600000000 AS h, event_type FROM events),
+       |cnt AS (SELECT h, event_type, count(*) AS c FROM e
+       |  GROUP BY 1, 2),
+       |b AS (SELECT min(h) AS lo, max(h) AS hi FROM e),
+       |grid AS (SELECT g.h, t.event_type FROM
+       |  $gridSteps,
+       |  (SELECT DISTINCT event_type FROM events) t)""".stripMargin
+
+  /** [[hourGridCtes]] zero-filled into `dense(h, event_type, c)`, the
+    * series every hourly time-series oracle reads.
+    */
+  private def denseHours(dense: String): String =
+    s"""$hourGridCtes,
+       |$dense AS (SELECT grid.h, grid.event_type, COALESCE(cnt.c, 0) AS c
+       |  FROM grid LEFT JOIN cnt USING (h, event_type))""".stripMargin
+
+  /** Shared oracle SQL: each type's hour count and total over
+    * [[denseHours]]`("dense")` (`st`), and every hour's n-scaled
+    * deviation from the type mean, `d(event_type, h, dev)`.
+    */
+  private def hourDevCtes: String =
+    """st AS (SELECT event_type, count(*) AS n_hours,
+      |    sum(c) AS total FROM dense GROUP BY 1),
+      |d AS (SELECT dense.event_type, h,
+      |    c * n_hours - total AS dev FROM dense
+      |  JOIN st USING (event_type))""".stripMargin
+
+  /** Shared oracle SQL: the as-of rows' sides — clicks `c(user_id,
+    * click_id, click_ts)` and purchases `p(user_id, purchase_id,
+    * purchase_ts)`, as [[clicksAndPurchases]] builds them.
+    */
+  private def clickPurchaseCtes: String =
+    """c AS (SELECT user_id, event_id AS click_id, ts AS click_ts
+      |  FROM events WHERE event_type = 'click'),
+      |p AS (SELECT user_id, event_id AS purchase_id, ts AS purchase_ts
+      |  FROM events WHERE event_type = 'purchase')""".stripMargin
+
+  /** Shared oracle SQL: [[activationCohort]] — each user's first-event
+    * day `f0` and first-purchase day `p0`, and `du(t, ev)`, the days
+    * to first purchase capped at 3 and whether it came. `arm` adds
+    * leading `du` columns.
+    */
+  private def cohortCtes(arm: String = ""): String =
+    s"""e AS (SELECT user_id, event_type,
+       |  epoch_us(ts) // 86400000000 AS day FROM events),
+       |f0 AS (SELECT user_id, min(day) AS f FROM e GROUP BY 1),
+       |p0 AS (SELECT user_id, min(day) AS p FROM e
+       |  WHERE event_type = 'purchase' GROUP BY 1),
+       |du AS (SELECT$arm
+       |  CASE WHEN p IS NOT NULL AND p - f <= 3 THEN p - f
+       |       ELSE 3 END AS t,
+       |  p IS NOT NULL AND p - f <= 3 AS ev
+       |  FROM f0 LEFT JOIN p0 USING (user_id))""".stripMargin
+
+  /** Shared oracle SQL: the survival census over [[cohortCtes]]' `du` —
+    * users and events per day `c(t, n_at, d)` and each day's risk set
+    * `r(t, n_at, d, n_risk)`.
+    */
+  private def riskSetCtes: String =
+    """c AS (SELECT t, count(*) AS n_at,
+      |  CAST(sum(CASE WHEN ev THEN 1 ELSE 0 END) AS BIGINT) AS d
+      |  FROM du GROUP BY 1),
+      |r AS (SELECT t, n_at, d,
+      |  CAST((SELECT sum(n_at) FROM c)
+      |    - coalesce(sum(n_at) OVER (ORDER BY t
+      |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+      |    AS BIGINT) AS n_risk
+      |  FROM c)""".stripMargin
+
+  /** Shared oracle for quantile_sketch and quantile_sketch_stream: the
+    * full-data sketch replay — identical integer bucket/lower ladders
+    * and ceil-rank arithmetic, every number exact — so the day-sharded
+    * build's green hash proves the merge identity.
+    */
+  private def quantileSketchOracle: String =
+    s"""WITH v AS (SELECT event_type,
+       |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
+       |bk AS (SELECT event_type, ${OracleSql.qBucket("c")}
+       |  AS bucket FROM v),
+       |sk AS (SELECT event_type, bucket, count(*) AS cnt FROM bk
+       |  GROUP BY 1, 2),
+       |cu AS (SELECT event_type, bucket, cnt,
+       |  sum(cnt) OVER (PARTITION BY event_type ORDER BY bucket
+       |    ROWS UNBOUNDED PRECEDING) AS cum,
+       |  sum(cnt) OVER (PARTITION BY event_type) AS n,
+       |  ${OracleSql.qLower("bucket")} AS lb FROM sk)
+       |SELECT event_type, CAST(max(n) AS BIGINT) AS n,
+       |  min(CASE WHEN cum >= (n * 1 + 1) // 2 THEN lb END) AS p50,
+       |  min(CASE WHEN cum >= (n * 9 + 9) // 10 THEN lb END) AS p90,
+       |  min(CASE WHEN cum >= (n * 99 + 99) // 100 THEN lb END)
+       |    AS p99
+       |FROM cu GROUP BY 1""".stripMargin
+
+  /** Shared oracle SQL: psi_drift's replay for the feature `valueExpr`
+    * — smoothed 10-bin reference/current split, each term's divisions
+    * and DetLn difference in the op's order, bin-ordered fold — up to
+    * the `psi` column of its select over `tot`.
+    */
+  private def psiSql(valueExpr: String): String = {
+    val lnr = OracleSql.detLn("(cr + 1) * (nc + b)")
+    val lnc = OracleSql.detLn("(cc + 1) * (nr + b)")
+    s"""WITH r AS (SELECT
+       |  epoch_us(ts) < 1705276800000000 AS rf,
+       |  $valueExpr AS c FROM events),
+       |mm AS (SELECT min(c) AS lo, max(c) - min(c) + 1 AS width
+       |  FROM r),
+       |bn AS (SELECT ((c - lo) * 10) // width AS bin,
+       |  sum(CASE WHEN rf THEN 1 ELSE 0 END) AS cr,
+       |  sum(CASE WHEN NOT rf THEN 1 ELSE 0 END) AS cc
+       |  FROM r, mm GROUP BY 1),
+       |tot AS (SELECT CAST(count(*) AS BIGINT) AS b,
+       |  CAST(sum(cr) AS BIGINT) AS nr,
+       |  CAST(sum(cc) AS BIGINT) AS nc FROM bn),
+       |terms AS (SELECT bin,
+       |  (CAST(cr + 1 AS DOUBLE) / CAST(nr + b AS DOUBLE)
+       |   - CAST(cc + 1 AS DOUBLE) / CAST(nc + b AS DOUBLE))
+       |  * (($lnr) - ($lnc)) AS term
+       |  FROM bn, tot)
+       |SELECT b AS n_bins, nr AS n_ref, nc AS n_cur,
+       |  (SELECT list_reduce(list_prepend(0.0,
+       |     (SELECT list(term ORDER BY bin) FROM terms)),
+       |     (x, y) -> x + y)) AS psi""".stripMargin
+  }
+
+  /** Shared oracle SQL: the two-feature OLS of per-user spend `y` on
+    * event count `x1` and active days `x2` — exact HUGEINT moments over
+    * the users `pu` kept by `where`, and the Cramer determinants
+    * `det`, `d0`..`d2` in `coef`.
+    */
+  private def olsCramerCtes(where: String, coef: String): String =
+    s"""pu AS (SELECT user_id,
+       |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
+       |    AS y,
+       |  count(*) AS x1,
+       |  CAST(count(DISTINCT epoch_us(ts) // 86400000000) AS BIGINT)
+       |    AS x2
+       |  FROM events GROUP BY 1),
+       |m AS (SELECT count(*) AS n,
+       |  sum(CAST(x1 AS HUGEINT)) AS s1,
+       |  sum(CAST(x2 AS HUGEINT)) AS s2,
+       |  sum(CAST(y AS HUGEINT)) AS sy,
+       |  sum(CAST(x1 AS HUGEINT) * x1) AS s11,
+       |  sum(CAST(x1 AS HUGEINT) * x2) AS s12,
+       |  sum(CAST(x2 AS HUGEINT) * x2) AS s22,
+       |  sum(CAST(x1 AS HUGEINT) * y) AS s1y,
+       |  sum(CAST(x2 AS HUGEINT) * y) AS s2y
+       |  FROM pu$where),
+       |$coef AS (SELECT *,
+       |  CAST(n AS HUGEINT) * (s11 * s22 - s12 * s12)
+       |    - s1 * (s1 * s22 - s12 * s2)
+       |    + s2 * (s1 * s12 - s11 * s2) AS det,
+       |  sy * (s11 * s22 - s12 * s12)
+       |    - s1 * (s1y * s22 - s12 * s2y)
+       |    + s2 * (s1y * s12 - s11 * s2y) AS d0,
+       |  CAST(n AS HUGEINT) * (s1y * s22 - s12 * s2y)
+       |    - sy * (s1 * s22 - s12 * s2)
+       |    + s2 * (s1 * s2y - s1y * s2) AS d1,
+       |  CAST(n AS HUGEINT) * (s11 * s2y - s1y * s12)
+       |    - s1 * (s1 * s2y - s1y * s2)
+       |    + sy * (s1 * s12 - s11 * s2) AS d2
+       |  FROM m)""".stripMargin
+
+  /** Shared oracle for skyline_frontier and its incremental twin: the
+    * full-corpus 2-d frontier by the quadratic-free running max.
+    */
+  private def skylineOracle: String =
+    """WITH t AS (SELECT
+      |  CAST(round(l_extendedprice * 100) AS BIGINT) AS price_cents,
+      |  CAST(round(l_quantity * 100) AS BIGINT) AS qty_cents
+      |  FROM lineitem),
+      |c AS (SELECT price_cents, max(qty_cents) AS qty_cents
+      |  FROM t GROUP BY 1)
+      |SELECT price_cents, qty_cents FROM (
+      |  SELECT price_cents, qty_cents,
+      |    max(qty_cents) OVER (ORDER BY price_cents DESC
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS mq
+      |  FROM c)
+      |WHERE mq IS NULL OR qty_cents > mq""".stripMargin
+
+  /** Shared oracle SQL: the A/B census — per user, the arm
+    * (user_id % 2) and spend cents before (`x`) and after (`y`) the
+    * 2024-01-15 split, as `pu`.
+    */
+  private def abUsersCte: String =
+    """pu AS (SELECT user_id, max(user_id % 2) AS arm,
+      |  coalesce(sum(CASE WHEN epoch_us(ts) < 1705276800000000
+      |    THEN CAST(round(value * 100) AS BIGINT) END), 0) AS x,
+      |  coalesce(sum(CASE WHEN epoch_us(ts) >= 1705276800000000
+      |    THEN CAST(round(value * 100) AS BIGINT) END), 0) AS y
+      |  FROM events GROUP BY 1)""".stripMargin
+
+  /** Shared oracle SQL: per-arm user counts and HUGEINT pre/post sums
+    * over [[abUsersCte]] (`n_a`, `sx_a`, `sy_a`, then arm b's).
+    */
+  private def abArmSums: String =
+    """sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS n_a,
+      |  sum(CASE WHEN arm = 0 THEN CAST(x AS HUGEINT) ELSE 0 END)
+      |    AS sx_a,
+      |  sum(CASE WHEN arm = 0 THEN CAST(y AS HUGEINT) ELSE 0 END)
+      |    AS sy_a,
+      |  sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS n_b,
+      |  sum(CASE WHEN arm = 1 THEN CAST(x AS HUGEINT) ELSE 0 END)
+      |    AS sx_b,
+      |  sum(CASE WHEN arm = 1 THEN CAST(y AS HUGEINT) ELSE 0 END)
+      |    AS sy_b""".stripMargin
+
+  /** Shared oracle SQL: the daily spend census `daily(day, cents)`. */
+  private def dailyCentsCte: String =
+    """daily AS (SELECT epoch_us(ts) // 86400000000 AS day,
+      |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
+      |    AS cents
+      |  FROM events GROUP BY 1)""".stripMargin
+
   val specs: Seq[QuerySpec] = Seq(
     QuerySpec("q1_pricing", (s, d) => Relational.pricingSummary(Tables.lineitem(s, d)),
       """SELECT l_returnflag, l_linestatus,
@@ -621,10 +845,7 @@ object RelationalQueries {
         ev.filter(col("event_type") === "purchase"),
         horizonSeconds = 3600, joinType = "left_outer")
     },
-      """WITH c AS (SELECT user_id, event_id AS click_id, ts AS click_ts
-        |  FROM events WHERE event_type = 'click'),
-        |p AS (SELECT user_id, event_id AS purchase_id, ts AS purchase_ts
-        |  FROM events WHERE event_type = 'purchase')
+      s"""WITH $clickPurchaseCtes
         |SELECT p.user_id, p.purchase_id, p.purchase_ts,
         |  c.click_id, c.click_ts
         |FROM p LEFT JOIN c ON c.user_id = p.user_id
@@ -722,18 +943,7 @@ object RelationalQueries {
           round(col("l_quantity") * 100).cast(LongType)
             .as("qty_cents")),
         "price_cents", "qty_cents"),
-      """WITH t AS (SELECT
-        |  CAST(round(l_extendedprice * 100) AS BIGINT) AS price_cents,
-        |  CAST(round(l_quantity * 100) AS BIGINT) AS qty_cents
-        |  FROM lineitem),
-        |c AS (SELECT price_cents, max(qty_cents) AS qty_cents
-        |  FROM t GROUP BY 1)
-        |SELECT price_cents, qty_cents FROM (
-        |  SELECT price_cents, qty_cents,
-        |    max(qty_cents) OVER (ORDER BY price_cents DESC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS mq
-        |  FROM c)
-        |WHERE mq IS NULL OR qty_cents > mq""".stripMargin),
+      skylineOracle),
     // partition-pruned scan: events re-laid-out partitionBy
     // (event_type); the equality filter prunes to ONE directory at
     // planning time (PartitionFilters, PartitionedScanSpec) — the
@@ -816,18 +1026,7 @@ object RelationalQueries {
         "price_cents", "qty_cents")
     },
       // the incremental path must land on the full-corpus frontier
-      """WITH t AS (SELECT
-        |  CAST(round(l_extendedprice * 100) AS BIGINT) AS price_cents,
-        |  CAST(round(l_quantity * 100) AS BIGINT) AS qty_cents
-        |  FROM lineitem),
-        |c AS (SELECT price_cents, max(qty_cents) AS qty_cents
-        |  FROM t GROUP BY 1)
-        |SELECT price_cents, qty_cents FROM (
-        |  SELECT price_cents, qty_cents,
-        |    max(qty_cents) OVER (ORDER BY price_cents DESC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS mq
-        |  FROM c)
-        |WHERE mq IS NULL OR qty_cents > mq""".stripMargin),
+      skylineOracle),
     // skew-mitigated join: salted fact-dim join, row-identical to the
     // plain join (the oracle IS the plain join)
     QuerySpec("salted_join", (s, d) =>
@@ -903,21 +1102,12 @@ object RelationalQueries {
     // to the user's latest click at-or-before it — merge-based (one
     // shuffle + per-key sort), never an inequality join
     QuerySpec("asof_join", (s, d) => {
-      val ev = events(s, d)
-      AsOf.asofJoin(
-        ev.filter(col("event_type") === "click")
-          .select(col("user_id"), col("event_id").as("click_id"),
-            col("ts").as("click_ts")),
-        ev.filter(col("event_type") === "purchase")
-          .select(col("user_id"), col("event_id").as("purchase_id"),
-            col("ts").as("purchase_ts")),
+      val (clicks, purchases) = clicksAndPurchases(events(s, d))
+      AsOf.asofJoin(clicks, purchases,
         key = "user_id", buildTs = "click_ts", probeTs = "purchase_ts",
         buildTie = "click_id")
     },
-      """WITH c AS (SELECT user_id, event_id AS click_id, ts AS click_ts
-        |  FROM events WHERE event_type = 'click'),
-        |p AS (SELECT user_id, event_id AS purchase_id, ts AS purchase_ts
-        |  FROM events WHERE event_type = 'purchase'),
+      s"""WITH $clickPurchaseCtes,
         |j AS (SELECT p.user_id, p.purchase_id, p.purchase_ts,
         |    c.click_id, c.click_ts,
         |    row_number() OVER (PARTITION BY p.purchase_id
@@ -930,24 +1120,15 @@ object RelationalQueries {
     // EITHER direction (exact integer |Δt|, tie → backward) — two
     // proven merge passes + a probe-keyed decision join
     QuerySpec("asof_nearest", (s, d) => {
-      val ev = events(s, d)
-      AsOf.asofJoinNearest(
-        ev.filter(col("event_type") === "click")
-          .select(col("user_id"), col("event_id").as("click_id"),
-            col("ts").as("click_ts")),
-        ev.filter(col("event_type") === "purchase")
-          .select(col("user_id"), col("event_id").as("purchase_id"),
-            col("ts").as("purchase_ts")),
+      val (clicks, purchases) = clicksAndPurchases(events(s, d))
+      AsOf.asofJoinNearest(clicks, purchases,
         key = "user_id", buildTs = "click_ts", probeTs = "purchase_ts",
         buildTie = "click_id", probeId = "purchase_id")
     },
       // both directional winners brute-forced with the kernels' exact
       // tie orders (backward: max ts then max id; forward: min ts then
       // min id), then the op's decision predicate verbatim
-      """WITH c AS (SELECT user_id, event_id AS click_id, ts AS click_ts
-        |  FROM events WHERE event_type = 'click'),
-        |p AS (SELECT user_id, event_id AS purchase_id, ts AS purchase_ts
-        |  FROM events WHERE event_type = 'purchase'),
+      s"""WITH $clickPurchaseCtes,
         |bk AS (SELECT purchase_id, click_id AS b_id, click_ts AS b_ts
         |  FROM (SELECT p.purchase_id, c.click_id, c.click_ts,
         |    row_number() OVER (PARTITION BY p.purchase_id
@@ -983,21 +1164,12 @@ object RelationalQueries {
     // EARLIEST click at-or-after it — the mirror merge (flipped frame,
     // first() carry), e.g. "next touchpoint after conversion"
     QuerySpec("asof_join_forward", (s, d) => {
-      val ev = events(s, d)
-      AsOf.asofJoinForward(
-        ev.filter(col("event_type") === "click")
-          .select(col("user_id"), col("event_id").as("click_id"),
-            col("ts").as("click_ts")),
-        ev.filter(col("event_type") === "purchase")
-          .select(col("user_id"), col("event_id").as("purchase_id"),
-            col("ts").as("purchase_ts")),
+      val (clicks, purchases) = clicksAndPurchases(events(s, d))
+      AsOf.asofJoinForward(clicks, purchases,
         key = "user_id", buildTs = "click_ts", probeTs = "purchase_ts",
         buildTie = "click_id")
     },
-      """WITH c AS (SELECT user_id, event_id AS click_id, ts AS click_ts
-        |  FROM events WHERE event_type = 'click'),
-        |p AS (SELECT user_id, event_id AS purchase_id, ts AS purchase_ts
-        |  FROM events WHERE event_type = 'purchase'),
+      s"""WITH $clickPurchaseCtes,
         |j AS (SELECT p.user_id, p.purchase_id, p.purchase_ts,
         |    c.click_id, c.click_ts,
         |    row_number() OVER (PARTITION BY p.purchase_id
@@ -1041,13 +1213,7 @@ object RelationalQueries {
         .agg(count(lit(1)).as("n_sessions"),
           countDistinct(col("user_id")).as("n_users"))
     },
-      """WITH l AS (SELECT user_id, ts, event_id,
-        |  lag(epoch_us(ts)) OVER (PARTITION BY user_id
-        |    ORDER BY ts, event_id) AS prev_us FROM events),
-        |f AS (SELECT user_id, ts, event_id,
-        |  CASE WHEN prev_us IS NULL
-        |        OR epoch_us(ts) - prev_us >= 1800000000 THEN 1
-        |  ELSE 0 END AS new_sess FROM l),
+      s"""WITH ${OracleSql.sessionStarts()},
         |s AS (SELECT user_id, ts,
         |  sum(new_sess) OVER (PARTITION BY user_id
         |    ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS sess_id
@@ -1493,16 +1659,7 @@ object RelationalQueries {
       graft.ops.TimeSeries.arrivalDispersion(events(s, d)),
       // same dense-hourly CTE family; D = (n*S2 - S1^2)/((n-1)*S1),
       // integer numerator/denominator, sums CAST from HUGEINT, one division
-      """WITH e AS (SELECT (epoch_us(ts) - 1704067200000000)
-        |    // 3600000000 AS h, event_type FROM events),
-        |cnt AS (SELECT h, event_type, count(*) AS c FROM e
-        |  GROUP BY 1, 2),
-        |b AS (SELECT min(h) AS lo, max(h) AS hi FROM e),
-        |grid AS (SELECT g.h, t.event_type FROM
-        |  (SELECT unnest(generate_series(lo, hi)) AS h FROM b) g,
-        |  (SELECT DISTINCT event_type FROM events) t),
-        |d AS (SELECT grid.h, grid.event_type, COALESCE(cnt.c, 0) AS c
-        |  FROM grid LEFT JOIN cnt USING (h, event_type))
+      s"""WITH ${denseHours("d")}
         |SELECT event_type, count(*) AS n_hours,
         |  CAST(sum(c) AS BIGINT) AS s1, CAST(sum(c*c) AS BIGINT) AS s2,
         |  CAST(count(*)*sum(c*c) - sum(c)*sum(c) AS DOUBLE)
@@ -1512,16 +1669,7 @@ object RelationalQueries {
     // event-type pair, zero-filled over the global hour range
     QuerySpec("series_corr", (s, d) =>
       graft.ops.TimeSeries.seriesCorr(events(s, d)),
-      """WITH e AS (SELECT (epoch_us(ts) - 1704067200000000)
-        |    // 3600000000 AS h, event_type FROM events),
-        |cnt AS (SELECT h, event_type, count(*) AS c FROM e
-        |  GROUP BY 1, 2),
-        |b AS (SELECT min(h) AS lo, max(h) AS hi FROM e),
-        |grid AS (SELECT g.h, t.event_type FROM
-        |  (SELECT unnest(generate_series(lo, hi)) AS h FROM b) g,
-        |  (SELECT DISTINCT event_type FROM events) t),
-        |d AS (SELECT grid.h, grid.event_type, COALESCE(cnt.c, 0) AS c
-        |  FROM grid LEFT JOIN cnt USING (h, event_type)),
+      s"""WITH ${denseHours("d")},
         |p AS (SELECT a.event_type AS type_a, b2.event_type AS type_b,
         |    a.c AS x, b2.c AS y
         |  FROM d a JOIN d b2 ON a.h = b2.h
@@ -1539,16 +1687,7 @@ object RelationalQueries {
     // midranks exact at 2x integer scale
     QuerySpec("series_spearman", (s, d) =>
       graft.ops.TimeSeries.seriesSpearman(events(s, d)),
-      """WITH e AS (SELECT (epoch_us(ts) - 1704067200000000)
-        |    // 3600000000 AS h, event_type FROM events),
-        |cnt AS (SELECT h, event_type, count(*) AS c FROM e
-        |  GROUP BY 1, 2),
-        |b AS (SELECT min(h) AS lo, max(h) AS hi FROM e),
-        |grid AS (SELECT g.h, t.event_type FROM
-        |  (SELECT unnest(generate_series(lo, hi)) AS h FROM b) g,
-        |  (SELECT DISTINCT event_type FROM events) t),
-        |d AS (SELECT grid.h, grid.event_type, COALESCE(cnt.c, 0) AS c
-        |  FROM grid LEFT JOIN cnt USING (h, event_type)),
+      s"""WITH ${denseHours("d")},
         |rk AS (SELECT event_type, h,
         |    rank() OVER (PARTITION BY event_type ORDER BY c) * 2
         |      + count(*) OVER (PARTITION BY event_type, c) - 1
@@ -1571,16 +1710,7 @@ object RelationalQueries {
     // bounded-heap exec
     QuerySpec("cusum_changepoint", (s, d) =>
       graft.ops.TimeSeries.cusumChangepoint(events(s, d)),
-      """WITH e AS (SELECT (epoch_us(ts) - 1704067200000000)
-        |    // 3600000000 AS h, event_type FROM events),
-        |cnt AS (SELECT h, event_type, count(*) AS c FROM e
-        |  GROUP BY 1, 2),
-        |b AS (SELECT min(h) AS lo, max(h) AS hi FROM e),
-        |grid AS (SELECT g.h, t.event_type FROM
-        |  (SELECT unnest(generate_series(lo, hi)) AS h FROM b) g,
-        |  (SELECT DISTINCT event_type FROM events) t),
-        |d AS (SELECT grid.h, grid.event_type, COALESCE(cnt.c, 0) AS c
-        |  FROM grid LEFT JOIN cnt USING (h, event_type)),
+      s"""WITH ${denseHours("d")},
         |r AS (SELECT *,
         |    count(*) OVER (PARTITION BY event_type) AS n_hours,
         |    sum(c) OVER (PARTITION BY event_type) AS total FROM d),
@@ -1604,21 +1734,8 @@ object RelationalQueries {
       graft.ops.TimeSeries.seriesAcf(events(s, d)),
       // same dense-hourly CTE as series_corr; n-scaled deviations, the
       // lag pairing as an equi-join on h + lag, DECIMAL(38,0) products
-      """WITH e AS (SELECT (epoch_us(ts) - 1704067200000000)
-        |    // 3600000000 AS h, event_type FROM events),
-        |cnt AS (SELECT h, event_type, count(*) AS c FROM e
-        |  GROUP BY 1, 2),
-        |b AS (SELECT min(h) AS lo, max(h) AS hi FROM e),
-        |grid AS (SELECT g.h, t.event_type FROM
-        |  (SELECT unnest(generate_series(lo, hi)) AS h FROM b) g,
-        |  (SELECT DISTINCT event_type FROM events) t),
-        |dense AS (SELECT grid.h, grid.event_type, COALESCE(cnt.c, 0) AS c
-        |  FROM grid LEFT JOIN cnt USING (h, event_type)),
-        |st AS (SELECT event_type, count(*) AS n_hours,
-        |    sum(c) AS total FROM dense GROUP BY 1),
-        |d AS (SELECT dense.event_type, h,
-        |    c * n_hours - total AS dev FROM dense
-        |  JOIN st USING (event_type)),
+      s"""WITH ${denseHours("dense")},
+        |$hourDevCtes,
         |p AS (SELECT d.event_type, k.lag,
         |    CAST(d.dev AS DECIMAL(38,0))
         |      * CAST(d2.dev AS DECIMAL(38,0)) AS prod
@@ -1642,21 +1759,8 @@ object RelationalQueries {
     QuerySpec("series_ess", (s, d) =>
       graft.ops.TimeSeries.seriesEss(events(s, d)),
       // the series_acf moments; lag-ordered fold to τ, one division
-      """WITH e AS (SELECT (epoch_us(ts) - 1704067200000000)
-        |    // 3600000000 AS h, event_type FROM events),
-        |cnt AS (SELECT h, event_type, count(*) AS c FROM e
-        |  GROUP BY 1, 2),
-        |b AS (SELECT min(h) AS lo, max(h) AS hi FROM e),
-        |grid AS (SELECT g.h, t.event_type FROM
-        |  (SELECT unnest(generate_series(lo, hi)) AS h FROM b) g,
-        |  (SELECT DISTINCT event_type FROM events) t),
-        |dense AS (SELECT grid.h, grid.event_type, COALESCE(cnt.c, 0) AS c
-        |  FROM grid LEFT JOIN cnt USING (h, event_type)),
-        |st AS (SELECT event_type, count(*) AS n_hours,
-        |    sum(c) AS total FROM dense GROUP BY 1),
-        |d AS (SELECT dense.event_type, h,
-        |    c * n_hours - total AS dev FROM dense
-        |  JOIN st USING (event_type)),
+      s"""WITH ${denseHours("dense")},
+        |$hourDevCtes,
         |p AS (SELECT d.event_type, k.lag,
         |    CAST(d.dev AS DECIMAL(38,0))
         |      * CAST(d2.dev AS DECIMAL(38,0)) AS prod
@@ -1810,16 +1914,7 @@ object RelationalQueries {
     // series — exact integer products, one division per cell
     QuerySpec("seasonal_profile", (s, d) =>
       graft.ops.TimeSeries.seasonalProfile(events(s, d)),
-      """WITH e AS (SELECT (epoch_us(ts) - 1704067200000000)
-        |    // 3600000000 AS h, event_type FROM events),
-        |cnt AS (SELECT h, event_type, count(*) AS c FROM e
-        |  GROUP BY 1, 2),
-        |b AS (SELECT min(h) AS lo, max(h) AS hi FROM e),
-        |grid AS (SELECT g.h, t.event_type FROM
-        |  (SELECT unnest(generate_series(lo, hi)) AS h FROM b) g,
-        |  (SELECT DISTINCT event_type FROM events) t),
-        |dense AS (SELECT grid.h, grid.event_type, COALESCE(cnt.c, 0) AS c
-        |  FROM grid LEFT JOIN cnt USING (h, event_type)),
+      s"""WITH ${denseHours("dense")},
         |st AS (SELECT event_type, count(*) AS n_hours,
         |    sum(c) AS total FROM dense GROUP BY 1)
         |SELECT dense.event_type, h % 24 AS hod,
@@ -1838,14 +1933,7 @@ object RelationalQueries {
       graft.ops.TimeSeries.seasonalAnomaly(events(s, d)),
       // the same dense grid; the 3-sigma test as exact integer products
       // on both sides of the inequality
-      """WITH e AS (SELECT (epoch_us(ts) - 1704067200000000)
-        |    // 3600000000 AS h, event_type FROM events),
-        |cnt AS (SELECT h, event_type, count(*) AS c FROM e
-        |  GROUP BY 1, 2),
-        |b AS (SELECT min(h) AS lo, max(h) AS hi FROM e),
-        |grid AS (SELECT g.h, t.event_type FROM
-        |  (SELECT unnest(generate_series(lo, hi)) AS h FROM b) g,
-        |  (SELECT DISTINCT event_type FROM events) t),
+      s"""WITH $hourGridCtes,
         |dense AS (SELECT grid.h, grid.event_type,
         |  CAST(COALESCE(cnt.c, 0) AS BIGINT) AS c
         |  FROM grid LEFT JOIN cnt USING (h, event_type)),
@@ -1902,7 +1990,7 @@ object RelationalQueries {
       graft.ops.TimeSeries.interpolateGaps(events(s, d)),
       // same dense grid, same carry-forward/back windows, same fixed
       // IEEE interpolation tree
-      """WITH e AS (SELECT event_type,
+      s"""WITH e AS (SELECT event_type,
         |  (epoch_us(ts) - 1704067200000000) // 600000000 AS h,
         |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
         |obs AS (SELECT event_type, h, CAST(sum(c) AS BIGINT) AS s,
@@ -1910,7 +1998,7 @@ object RelationalQueries {
         |b AS (SELECT min(h) AS lo, max(h) AS hi FROM e),
         |grid AS (SELECT t.event_type, g.h FROM
         |  (SELECT DISTINCT event_type FROM events) t,
-        |  (SELECT unnest(generate_series(lo, hi)) AS h FROM b) g),
+        |  $gridSteps),
         |j AS (SELECT grid.event_type, grid.h, obs.s, obs.n
         |  FROM grid LEFT JOIN obs USING (event_type, h)),
         |w AS (SELECT event_type, h, n,
@@ -1946,16 +2034,7 @@ object RelationalQueries {
     // winner decided by an integer compare
     QuerySpec("forecast_backtest", (s, d) =>
       graft.ops.TimeSeries.forecastBacktest(events(s, d)),
-      """WITH e AS (SELECT (epoch_us(ts) - 1704067200000000)
-        |    // 3600000000 AS h, event_type FROM events),
-        |cnt AS (SELECT h, event_type, count(*) AS c FROM e
-        |  GROUP BY 1, 2),
-        |b AS (SELECT min(h) AS lo, max(h) AS hi FROM e),
-        |grid AS (SELECT g.h, t.event_type FROM
-        |  (SELECT unnest(generate_series(lo, hi)) AS h FROM b) g,
-        |  (SELECT DISTINCT event_type FROM events) t),
-        |dense AS (SELECT grid.h, grid.event_type, COALESCE(cnt.c, 0) AS c
-        |  FROM grid LEFT JOIN cnt USING (h, event_type)),
+      s"""WITH ${denseHours("dense")},
         |lg AS (SELECT event_type, c,
         |    lag(c, 1) OVER w AS pn, lag(c, 24) OVER w AS ps
         |  FROM dense WINDOW w AS (PARTITION BY event_type ORDER BY h))
@@ -2021,40 +2100,12 @@ object RelationalQueries {
     // the day-domain-bounded census in ONE written-down IEEE order
     // the oracle's ordered list_reduce replays
     QuerySpec("km_conversion", (s, d) => {
-      val w = 3L
-      val e = events(s, d).select(col("user_id"), col("event_type"),
-        expr("unix_micros(ts) div 86400000000L").as("day"))
-      val f0 = e.groupBy(col("user_id")).agg(min(col("day")).as("f"))
-      val p0 = e.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id")).agg(min(col("day")).as("p"))
-      val users = f0.join(p0, Seq("user_id"), "left_outer")
-        .select(
-          when(col("p").isNotNull && col("p") - col("f") <= w,
-            col("p") - col("f")).otherwise(w).as("dur"),
-          (col("p").isNotNull && col("p") - col("f") <= w)
-            .as("converted"))
+      val users = activationCohort(events(s, d))
       graft.ops.Eval.kaplanMeier(users, "dur", "converted")
     },
       // the same census, risk-set cumsum, and ordered product fold
-      """WITH e AS (SELECT user_id, event_type,
-        |  epoch_us(ts) // 86400000000 AS day FROM events),
-        |f0 AS (SELECT user_id, min(day) AS f FROM e GROUP BY 1),
-        |p0 AS (SELECT user_id, min(day) AS p FROM e
-        |  WHERE event_type = 'purchase' GROUP BY 1),
-        |du AS (SELECT
-        |  CASE WHEN p IS NOT NULL AND p - f <= 3 THEN p - f
-        |       ELSE 3 END AS t,
-        |  p IS NOT NULL AND p - f <= 3 AS ev
-        |  FROM f0 LEFT JOIN p0 USING (user_id)),
-        |c AS (SELECT t, count(*) AS n_at,
-        |  CAST(sum(CASE WHEN ev THEN 1 ELSE 0 END) AS BIGINT) AS d
-        |  FROM du GROUP BY 1),
-        |r AS (SELECT t, n_at, d,
-        |  CAST((SELECT sum(n_at) FROM c)
-        |    - coalesce(sum(n_at) OVER (ORDER BY t
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |    AS BIGINT) AS n_risk
-        |  FROM c),
+      s"""WITH ${cohortCtes()},
+        |$riskSetCtes,
         |ev2 AS (SELECT t, n_risk, d FROM r WHERE d > 0),
         |rn AS (SELECT t, n_risk, d,
         |  row_number() OVER (ORDER BY t) AS k FROM ev2)
@@ -2068,41 +2119,13 @@ object RelationalQueries {
     // censoring-proof one-number effect summary; product + area folds
     // driver-side in the written-down order, prefix-replayed oracle
     QuerySpec("km_rmst", (s, d) => {
-      val w = 3L
-      val e = events(s, d).select(col("user_id"), col("event_type"),
-        expr("unix_micros(ts) div 86400000000L").as("day"))
-      val f0 = e.groupBy(col("user_id")).agg(min(col("day")).as("f"))
-      val p0 = e.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id")).agg(min(col("day")).as("p"))
-      val users = f0.join(p0, Seq("user_id"), "left_outer")
-        .select(
-          when(col("p").isNotNull && col("p") - col("f") <= w,
-            col("p") - col("f")).otherwise(w).as("dur"),
-          (col("p").isNotNull && col("p") - col("f") <= w)
-            .as("converted"))
-      graft.ops.Eval.rmst(users, "dur", "converted", tau = w)
+      val users = activationCohort(events(s, d))
+      graft.ops.Eval.rmst(users, "dur", "converted", tau = 3L)
     },
       // the same census; per-grid-day survival via prefix products
       // (j = event days <= k), area by the day-ordered fold
-      """WITH e AS (SELECT user_id, event_type,
-        |  epoch_us(ts) // 86400000000 AS day FROM events),
-        |f0 AS (SELECT user_id, min(day) AS f FROM e GROUP BY 1),
-        |p0 AS (SELECT user_id, min(day) AS p FROM e
-        |  WHERE event_type = 'purchase' GROUP BY 1),
-        |du AS (SELECT
-        |  CASE WHEN p IS NOT NULL AND p - f <= 3 THEN p - f
-        |       ELSE 3 END AS t,
-        |  p IS NOT NULL AND p - f <= 3 AS ev
-        |  FROM f0 LEFT JOIN p0 USING (user_id)),
-        |c AS (SELECT t, count(*) AS n_at,
-        |  CAST(sum(CASE WHEN ev THEN 1 ELSE 0 END) AS BIGINT) AS d
-        |  FROM du GROUP BY 1),
-        |r AS (SELECT t, n_at, d,
-        |  CAST((SELECT sum(n_at) FROM c)
-        |    - coalesce(sum(n_at) OVER (ORDER BY t
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |    AS BIGINT) AS n_risk
-        |  FROM c),
+      s"""WITH ${cohortCtes()},
+        |$riskSetCtes,
         |evx AS (SELECT t, n_risk, d FROM r WHERE d > 0 AND t < 3),
         |pl AS (SELECT coalesce(list(1.0 - CAST(d AS DOUBLE)
         |    / CAST(n_risk AS DOUBLE) ORDER BY t), []) AS ps FROM evx),
@@ -2123,33 +2146,13 @@ object RelationalQueries {
     // parity (the A/B assignment): one χ²₁ row (o1, e1, var, chi2),
     // folds driver-side in the written-down order like km_conversion
     QuerySpec("km_logrank", (s, d) => {
-      val w = 3L
-      val e = events(s, d).select(col("user_id"), col("event_type"),
-        expr("unix_micros(ts) div 86400000000L").as("day"))
-      val f0 = e.groupBy(col("user_id")).agg(min(col("day")).as("f"))
-      val p0 = e.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id")).agg(min(col("day")).as("p"))
-      val users = f0.join(p0, Seq("user_id"), "left_outer")
-        .select(col("user_id"),
-          when(col("p").isNotNull && col("p") - col("f") <= w,
-            col("p") - col("f")).otherwise(w).as("dur"),
-          (col("p").isNotNull && col("p") - col("f") <= w)
-            .as("converted"))
+      val users = activationCohort(events(s, d))
       graft.ops.Eval.logRank(users, pmod(col("user_id"), lit(2)) === 0,
         "dur", "converted")
     },
       // the same census; risk sets by cumulative subtraction; E and V
       // folded by ordered list_reduce in the op's per-term op order
-      """WITH e AS (SELECT user_id, event_type,
-        |  epoch_us(ts) // 86400000000 AS day FROM events),
-        |f0 AS (SELECT user_id, min(day) AS f FROM e GROUP BY 1),
-        |p0 AS (SELECT user_id, min(day) AS p FROM e
-        |  WHERE event_type = 'purchase' GROUP BY 1),
-        |du AS (SELECT user_id % 2 = 0 AS a,
-        |  CASE WHEN p IS NOT NULL AND p - f <= 3 THEN p - f
-        |       ELSE 3 END AS t,
-        |  p IS NOT NULL AND p - f <= 3 AS ev
-        |  FROM f0 LEFT JOIN p0 USING (user_id)),
+      s"""WITH ${cohortCtes(" user_id % 2 = 0 AS a,")},
         |c AS (SELECT t, count(*) AS n_at,
         |  CAST(sum(CASE WHEN a THEN 1 ELSE 0 END) AS BIGINT)
         |    AS n_at_a,
@@ -2250,37 +2253,7 @@ object RelationalQueries {
         col("user_id") % 3L),
       // Cramer fit on the train split, written-down residuals, ceil
       // rank selection, exact coverage ratio
-      """WITH pu AS (SELECT user_id,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-        |    AS y,
-        |  count(*) AS x1,
-        |  CAST(count(DISTINCT epoch_us(ts) // 86400000000) AS BIGINT)
-        |    AS x2
-        |  FROM events GROUP BY 1),
-        |m AS (SELECT count(*) AS n,
-        |  sum(CAST(x1 AS HUGEINT)) AS s1,
-        |  sum(CAST(x2 AS HUGEINT)) AS s2,
-        |  sum(CAST(y AS HUGEINT)) AS sy,
-        |  sum(CAST(x1 AS HUGEINT) * x1) AS s11,
-        |  sum(CAST(x1 AS HUGEINT) * x2) AS s12,
-        |  sum(CAST(x2 AS HUGEINT) * x2) AS s22,
-        |  sum(CAST(x1 AS HUGEINT) * y) AS s1y,
-        |  sum(CAST(x2 AS HUGEINT) * y) AS s2y
-        |  FROM pu WHERE user_id % 3 = 0),
-        |dd AS (SELECT *,
-        |  CAST(n AS HUGEINT) * (s11 * s22 - s12 * s12)
-        |    - s1 * (s1 * s22 - s12 * s2)
-        |    + s2 * (s1 * s12 - s11 * s2) AS det,
-        |  sy * (s11 * s22 - s12 * s12)
-        |    - s1 * (s1y * s22 - s12 * s2y)
-        |    + s2 * (s1y * s12 - s11 * s2y) AS d0,
-        |  CAST(n AS HUGEINT) * (s1y * s22 - s12 * s2y)
-        |    - sy * (s1 * s22 - s12 * s2)
-        |    + s2 * (s1 * s2y - s1y * s2) AS d1,
-        |  CAST(n AS HUGEINT) * (s11 * s2y - s1y * s12)
-        |    - s1 * (s1 * s2y - s1y * s2)
-        |    + sy * (s1 * s12 - s11 * s2) AS d2
-        |  FROM m),
+      s"""WITH ${olsCramerCtes(" WHERE user_id % 3 = 0", "dd")},
         |cf AS (SELECT CAST(n AS BIGINT) AS n_train,
         |  CAST(d0 AS DOUBLE) / CAST(det AS DOUBLE) AS b0,
         |  CAST(d1 AS DOUBLE) / CAST(det AS DOUBLE) AS b1,
@@ -2623,32 +2596,8 @@ object RelationalQueries {
         round(col("value") * 100).cast(LongType)),
       // same smoothed bins; each term's divisions/subtractions and the
       // DetLn replay run in the op's order; bin-ordered fold
-      {
-        val lnr = OracleSql.detLn("(cr + 1) * (nc + b)")
-        val lnc = OracleSql.detLn("(cc + 1) * (nr + b)")
-        s"""WITH r AS (SELECT
-           |  epoch_us(ts) < 1705276800000000 AS rf,
-           |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
-           |mm AS (SELECT min(c) AS lo, max(c) - min(c) + 1 AS width
-           |  FROM r),
-           |bn AS (SELECT ((c - lo) * 10) // width AS bin,
-           |  sum(CASE WHEN rf THEN 1 ELSE 0 END) AS cr,
-           |  sum(CASE WHEN NOT rf THEN 1 ELSE 0 END) AS cc
-           |  FROM r, mm GROUP BY 1),
-           |tot AS (SELECT CAST(count(*) AS BIGINT) AS b,
-           |  CAST(sum(cr) AS BIGINT) AS nr,
-           |  CAST(sum(cc) AS BIGINT) AS nc FROM bn),
-           |terms AS (SELECT bin,
-           |  (CAST(cr + 1 AS DOUBLE) / CAST(nr + b AS DOUBLE)
-           |   - CAST(cc + 1 AS DOUBLE) / CAST(nc + b AS DOUBLE))
-           |  * (($lnr) - ($lnc)) AS term
-           |  FROM bn, tot)
-           |SELECT b AS n_bins, nr AS n_ref, nc AS n_cur,
-           |  (SELECT list_reduce(list_prepend(0.0,
-           |     (SELECT list(term ORDER BY bin) FROM terms)),
-           |     (x, y) -> x + y)) AS psi
-           |FROM tot""".stripMargin
-      }),
+      s"""${psiSql("CAST(round(value * 100) AS BIGINT)")}
+         |FROM tot""".stripMargin),
     // the multi-feature monitoring SWEEP over the same split: one PSI
     // row per feature (spend, hour-of-day, dow, payload k) — the
     // "which input drifted" table a model monitor actually pages on;
@@ -2673,31 +2622,9 @@ object RelationalQueries {
     },
       // the psi_drift replay once per feature expression, UNION ALL
       {
-        val lnr = OracleSql.detLn("(cr + 1) * (nc + b)")
-        val lnc = OracleSql.detLn("(cc + 1) * (nr + b)")
         def one(nm: String, valueExpr: String): String =
           s"""SELECT * FROM (
-             |WITH r AS (SELECT
-             |  epoch_us(ts) < 1705276800000000 AS rf,
-             |  $valueExpr AS c FROM events),
-             |mm AS (SELECT min(c) AS lo, max(c) - min(c) + 1 AS width
-             |  FROM r),
-             |bn AS (SELECT ((c - lo) * 10) // width AS bin,
-             |  sum(CASE WHEN rf THEN 1 ELSE 0 END) AS cr,
-             |  sum(CASE WHEN NOT rf THEN 1 ELSE 0 END) AS cc
-             |  FROM r, mm GROUP BY 1),
-             |tot AS (SELECT CAST(count(*) AS BIGINT) AS b,
-             |  CAST(sum(cr) AS BIGINT) AS nr,
-             |  CAST(sum(cc) AS BIGINT) AS nc FROM bn),
-             |terms AS (SELECT bin,
-             |  (CAST(cr + 1 AS DOUBLE) / CAST(nr + b AS DOUBLE)
-             |   - CAST(cc + 1 AS DOUBLE) / CAST(nc + b AS DOUBLE))
-             |  * (($lnr) - ($lnc)) AS term
-             |  FROM bn, tot)
-             |SELECT b AS n_bins, nr AS n_ref, nc AS n_cur,
-             |  (SELECT list_reduce(list_prepend(0.0,
-             |     (SELECT list(term ORDER BY bin) FROM terms)),
-             |     (x, y) -> x + y)) AS psi,
+             |${psiSql(valueExpr)},
              |  '$nm' AS feature
              |FROM tot)""".stripMargin
         Seq(
@@ -2712,41 +2639,13 @@ object RelationalQueries {
     // cohort: the survival trio's third member — sum fold of d/n in
     // ascending-t order beside km_conversion's product
     QuerySpec("na_hazard", (s, d) => {
-      val w = 3L
-      val e = events(s, d).select(col("user_id"), col("event_type"),
-        expr("unix_micros(ts) div 86400000000L").as("day"))
-      val f0 = e.groupBy(col("user_id")).agg(min(col("day")).as("f"))
-      val p0 = e.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id")).agg(min(col("day")).as("p"))
-      val users = f0.join(p0, Seq("user_id"), "left_outer")
-        .select(
-          when(col("p").isNotNull && col("p") - col("f") <= w,
-            col("p") - col("f")).otherwise(w).as("dur"),
-          (col("p").isNotNull && col("p") - col("f") <= w)
-            .as("converted"))
+      val users = activationCohort(events(s, d))
       graft.ops.Eval.nelsonAalen(users, "dur", "converted")
     },
       // the km census with the product fold swapped for the hazard SUM
       // fold, same ordered prefix list_reduce
-      """WITH e AS (SELECT user_id, event_type,
-        |  epoch_us(ts) // 86400000000 AS day FROM events),
-        |f0 AS (SELECT user_id, min(day) AS f FROM e GROUP BY 1),
-        |p0 AS (SELECT user_id, min(day) AS p FROM e
-        |  WHERE event_type = 'purchase' GROUP BY 1),
-        |du AS (SELECT
-        |  CASE WHEN p IS NOT NULL AND p - f <= 3 THEN p - f
-        |       ELSE 3 END AS t,
-        |  p IS NOT NULL AND p - f <= 3 AS ev
-        |  FROM f0 LEFT JOIN p0 USING (user_id)),
-        |c AS (SELECT t, count(*) AS n_at,
-        |  CAST(sum(CASE WHEN ev THEN 1 ELSE 0 END) AS BIGINT) AS d
-        |  FROM du GROUP BY 1),
-        |r AS (SELECT t, n_at, d,
-        |  CAST((SELECT sum(n_at) FROM c)
-        |    - coalesce(sum(n_at) OVER (ORDER BY t
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |    AS BIGINT) AS n_risk
-        |  FROM c),
+      s"""WITH ${cohortCtes()},
+        |$riskSetCtes,
         |ev2 AS (SELECT t, n_risk, d FROM r WHERE d > 0),
         |rn AS (SELECT t, n_risk, d,
         |  row_number() OVER (ORDER BY t) AS k FROM ev2)
@@ -2763,10 +2662,7 @@ object RelationalQueries {
       graft.ops.TimeSeries.theilSen(events(s, d)),
       // bounded day-domain census; slope/intercept by rank selection
       // under the written-down total orders — comparisons only
-      """WITH daily AS (SELECT epoch_us(ts) // 86400000000 AS day,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-        |    AS cents
-        |  FROM events GROUP BY 1),
+      s"""WITH $dailyCentsCte,
         |pr AS (SELECT a.day AS di, b.day AS dj,
         |  CAST(b.cents - a.cents AS DOUBLE)
         |    / CAST(b.day - a.day AS DOUBLE) AS sl
@@ -2795,10 +2691,7 @@ object RelationalQueries {
       graft.ops.TimeSeries.mannKendall(events(s, d)),
       // the same daily census; S from the pair walk, ties grouped on
       // equal totals, z replaying the op's exact (s∓1)/sqrt(var18/18)
-      """WITH daily AS (SELECT epoch_us(ts) // 86400000000 AS day,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-        |    AS cents
-        |  FROM events GROUP BY 1),
+      s"""WITH $dailyCentsCte,
         |p AS (SELECT CASE WHEN b.cents > a.cents THEN 1
         |    WHEN b.cents < a.cents THEN -1 ELSE 0 END AS sg
         |  FROM daily a JOIN daily b ON a.day < b.day),
@@ -2829,10 +2722,7 @@ object RelationalQueries {
       graft.ops.TimeSeries.runsTest(events(s, d)),
       // rank-selected lower median, median-equal days dropped, run
       // boundaries under the day order, z in the op's op order
-      """WITH daily AS (SELECT epoch_us(ts) // 86400000000 AS day,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-        |    AS cents
-        |  FROM events GROUP BY 1),
+      s"""WITH $dailyCentsCte,
         |r AS (SELECT day, cents,
         |  row_number() OVER (ORDER BY cents, day) AS rn,
         |  (SELECT CAST(count(*) AS BIGINT) FROM daily) AS nd
@@ -2866,21 +2756,8 @@ object RelationalQueries {
       graft.ops.TimeSeries.durbinWatson(events(s, d)),
       // dense-grid deviations as in series_acf; num/den DECIMAL
       // products, one division
-      """WITH e AS (SELECT (epoch_us(ts) - 1704067200000000)
-        |    // 3600000000 AS h, event_type FROM events),
-        |cnt AS (SELECT h, event_type, count(*) AS c FROM e
-        |  GROUP BY 1, 2),
-        |b AS (SELECT min(h) AS lo, max(h) AS hi FROM e),
-        |grid AS (SELECT g.h, t.event_type FROM
-        |  (SELECT unnest(generate_series(lo, hi)) AS h FROM b) g,
-        |  (SELECT DISTINCT event_type FROM events) t),
-        |dense AS (SELECT grid.h, grid.event_type, COALESCE(cnt.c, 0) AS c
-        |  FROM grid LEFT JOIN cnt USING (h, event_type)),
-        |st AS (SELECT event_type, count(*) AS n_hours,
-        |    sum(c) AS total FROM dense GROUP BY 1),
-        |d AS (SELECT dense.event_type, h,
-        |    c * n_hours - total AS dev FROM dense
-        |  JOIN st USING (event_type)),
+      s"""WITH ${denseHours("dense")},
+        |$hourDevCtes,
         |l AS (SELECT event_type, dev,
         |  lag(dev) OVER (PARTITION BY event_type ORDER BY h) AS prev
         |  FROM d),
@@ -2902,10 +2779,7 @@ object RelationalQueries {
       graft.ops.TimeSeries.xmrChart(events(s, d)),
       // daily census; moving-range sum via lag, limits in the op's
       // written order, verdicts by double comparison
-      """WITH daily AS (SELECT epoch_us(ts) // 86400000000 AS day,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-        |    AS cents
-        |  FROM events GROUP BY 1),
+      s"""WITH $dailyCentsCte,
         |l AS (SELECT day, cents,
         |  lag(cents) OVER (ORDER BY day) AS prev FROM daily),
         |t AS (SELECT CAST(count(*) AS BIGINT) AS n,
@@ -3277,26 +3151,12 @@ object RelationalQueries {
         round(col("value") * 100).cast(LongType)),
       // exact moments as HUGEINT sums; theta / means / dx each one
       // division; adj and lift replay the op's written-down order
-      """WITH pu AS (SELECT user_id, max(user_id % 2) AS arm,
-        |  coalesce(sum(CASE WHEN epoch_us(ts) < 1705276800000000
-        |    THEN CAST(round(value * 100) AS BIGINT) END), 0) AS x,
-        |  coalesce(sum(CASE WHEN epoch_us(ts) >= 1705276800000000
-        |    THEN CAST(round(value * 100) AS BIGINT) END), 0) AS y
-        |  FROM events GROUP BY 1),
+      s"""WITH $abUsersCte,
         |w AS (SELECT count(*) AS n,
         |  sum(CAST(x AS HUGEINT)) AS sx, sum(CAST(y AS HUGEINT)) AS sy,
         |  sum(CAST(x AS HUGEINT) * x) AS sxx,
         |  sum(CAST(x AS HUGEINT) * y) AS sxy,
-        |  sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS n_a,
-        |  sum(CASE WHEN arm = 0 THEN CAST(x AS HUGEINT) ELSE 0 END)
-        |    AS sx_a,
-        |  sum(CASE WHEN arm = 0 THEN CAST(y AS HUGEINT) ELSE 0 END)
-        |    AS sy_a,
-        |  sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS n_b,
-        |  sum(CASE WHEN arm = 1 THEN CAST(x AS HUGEINT) ELSE 0 END)
-        |    AS sx_b,
-        |  sum(CASE WHEN arm = 1 THEN CAST(y AS HUGEINT) ELSE 0 END)
-        |    AS sy_b
+        |  $abArmSums
         |  FROM pu),
         |t AS (SELECT *,
         |  CAST(CAST(n AS HUGEINT) * sxy - sx * sy AS DOUBLE)
@@ -3330,23 +3190,7 @@ object RelationalQueries {
         Seq("event_type")),
       // identical integer bucket/lower ladders, identical ceil-rank
       // arithmetic — every number exact
-      s"""WITH v AS (SELECT event_type,
-         |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
-         |bk AS (SELECT event_type, ${OracleSql.qBucket("c")}
-         |  AS bucket FROM v),
-         |sk AS (SELECT event_type, bucket, count(*) AS cnt FROM bk
-         |  GROUP BY 1, 2),
-         |cu AS (SELECT event_type, bucket, cnt,
-         |  sum(cnt) OVER (PARTITION BY event_type ORDER BY bucket
-         |    ROWS UNBOUNDED PRECEDING) AS cum,
-         |  sum(cnt) OVER (PARTITION BY event_type) AS n,
-         |  ${OracleSql.qLower("bucket")} AS lb FROM sk)
-         |SELECT event_type, CAST(max(n) AS BIGINT) AS n,
-         |  min(CASE WHEN cum >= (n * 1 + 1) // 2 THEN lb END) AS p50,
-         |  min(CASE WHEN cum >= (n * 9 + 9) // 10 THEN lb END) AS p90,
-         |  min(CASE WHEN cum >= (n * 99 + 99) // 100 THEN lb END)
-         |    AS p99
-         |FROM cu GROUP BY 1""".stripMargin),
+      quantileSketchOracle),
     // the sketch's streaming/maintenance story end to end: daily
     // sketch shards (SketchStream batch replay; the streaming form
     // finalizes each day's shard under the watermark — spec-proven
@@ -3361,23 +3205,7 @@ object RelationalQueries {
         Seq("event_type")),
       // merge identity: day-sharded counts re-summed equal the global
       // build — the oracle IS the quantile_sketch full-data replay
-      s"""WITH v AS (SELECT event_type,
-         |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
-         |bk AS (SELECT event_type, ${OracleSql.qBucket("c")}
-         |  AS bucket FROM v),
-         |sk AS (SELECT event_type, bucket, count(*) AS cnt FROM bk
-         |  GROUP BY 1, 2),
-         |cu AS (SELECT event_type, bucket, cnt,
-         |  sum(cnt) OVER (PARTITION BY event_type ORDER BY bucket
-         |    ROWS UNBOUNDED PRECEDING) AS cum,
-         |  sum(cnt) OVER (PARTITION BY event_type) AS n,
-         |  ${OracleSql.qLower("bucket")} AS lb FROM sk)
-         |SELECT event_type, CAST(max(n) AS BIGINT) AS n,
-         |  min(CASE WHEN cum >= (n * 1 + 1) // 2 THEN lb END) AS p50,
-         |  min(CASE WHEN cum >= (n * 9 + 9) // 10 THEN lb END) AS p90,
-         |  min(CASE WHEN cum >= (n * 99 + 99) // 100 THEN lb END)
-         |    AS p99
-         |FROM cu GROUP BY 1""".stripMargin),
+      quantileSketchOracle),
     // streaming drift monitor (batch-replayed): per-day gap-weighted
     // Wasserstein-1 against the Jan-1..14 reference histogram baked
     // in as plan literals — the in-flight twin of emd_drift; per-term
@@ -3444,23 +3272,9 @@ object RelationalQueries {
         expr("unix_micros(ts) < 1705276800000000L"),
         round(col("value") * 100).cast(LongType)),
       // same per-user census as cuped; three written-down subtractions
-      """WITH pu AS (SELECT user_id, max(user_id % 2) AS arm,
-        |  coalesce(sum(CASE WHEN epoch_us(ts) < 1705276800000000
-        |    THEN CAST(round(value * 100) AS BIGINT) END), 0) AS x,
-        |  coalesce(sum(CASE WHEN epoch_us(ts) >= 1705276800000000
-        |    THEN CAST(round(value * 100) AS BIGINT) END), 0) AS y
-        |  FROM events GROUP BY 1),
+      s"""WITH $abUsersCte,
         |w AS (SELECT
-        |  sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS n_a,
-        |  sum(CASE WHEN arm = 0 THEN CAST(x AS HUGEINT) ELSE 0 END)
-        |    AS sx_a,
-        |  sum(CASE WHEN arm = 0 THEN CAST(y AS HUGEINT) ELSE 0 END)
-        |    AS sy_a,
-        |  sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS n_b,
-        |  sum(CASE WHEN arm = 1 THEN CAST(x AS HUGEINT) ELSE 0 END)
-        |    AS sx_b,
-        |  sum(CASE WHEN arm = 1 THEN CAST(y AS HUGEINT) ELSE 0 END)
-        |    AS sy_b
+        |  $abArmSums
         |  FROM pu),
         |t AS (SELECT CAST(n_a AS BIGINT) AS n_a,
         |  CAST(n_b AS BIGINT) AS n_b,
@@ -3482,12 +3296,7 @@ object RelationalQueries {
         round(col("value") * 100).cast(LongType)),
       // same deciles; per-stratum terms folded in bin order by the
       // ordered list_reduce; kept strata require both arms
-      """WITH pu AS (SELECT user_id, max(user_id % 2) AS arm,
-        |  coalesce(sum(CASE WHEN epoch_us(ts) < 1705276800000000
-        |    THEN CAST(round(value * 100) AS BIGINT) END), 0) AS x,
-        |  coalesce(sum(CASE WHEN epoch_us(ts) >= 1705276800000000
-        |    THEN CAST(round(value * 100) AS BIGINT) END), 0) AS y
-        |  FROM events GROUP BY 1),
+      s"""WITH $abUsersCte,
         |mm AS (SELECT min(x) AS lo, max(x) - min(x) + 1 AS width
         |  FROM pu),
         |st AS (SELECT ((x - lo) * 10) // width AS bin, arm, y
@@ -3669,37 +3478,7 @@ object RelationalQueries {
         col("y"), col("x1"), col("x2")),
       // exact HUGEINT moments and Cramer determinants; one double
       // division per coefficient
-      """WITH pu AS (SELECT user_id,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-        |    AS y,
-        |  count(*) AS x1,
-        |  CAST(count(DISTINCT epoch_us(ts) // 86400000000) AS BIGINT)
-        |    AS x2
-        |  FROM events GROUP BY 1),
-        |m AS (SELECT count(*) AS n,
-        |  sum(CAST(x1 AS HUGEINT)) AS s1,
-        |  sum(CAST(x2 AS HUGEINT)) AS s2,
-        |  sum(CAST(y AS HUGEINT)) AS sy,
-        |  sum(CAST(x1 AS HUGEINT) * x1) AS s11,
-        |  sum(CAST(x1 AS HUGEINT) * x2) AS s12,
-        |  sum(CAST(x2 AS HUGEINT) * x2) AS s22,
-        |  sum(CAST(x1 AS HUGEINT) * y) AS s1y,
-        |  sum(CAST(x2 AS HUGEINT) * y) AS s2y
-        |  FROM pu),
-        |d AS (SELECT *,
-        |  CAST(n AS HUGEINT) * (s11 * s22 - s12 * s12)
-        |    - s1 * (s1 * s22 - s12 * s2)
-        |    + s2 * (s1 * s12 - s11 * s2) AS det,
-        |  sy * (s11 * s22 - s12 * s12)
-        |    - s1 * (s1y * s22 - s12 * s2y)
-        |    + s2 * (s1y * s12 - s11 * s2y) AS d0,
-        |  CAST(n AS HUGEINT) * (s1y * s22 - s12 * s2y)
-        |    - sy * (s1 * s22 - s12 * s2)
-        |    + s2 * (s1 * s2y - s1y * s2) AS d1,
-        |  CAST(n AS HUGEINT) * (s11 * s2y - s1y * s12)
-        |    - s1 * (s1 * s2y - s1y * s2)
-        |    + sy * (s1 * s12 - s11 * s2) AS d2
-        |  FROM m)
+      s"""WITH ${olsCramerCtes("", "d")}
         |SELECT CAST(n AS BIGINT) AS n,
         |  CAST(d0 AS DOUBLE) / CAST(det AS DOUBLE) AS b0,
         |  CAST(d1 AS DOUBLE) / CAST(det AS DOUBLE) AS b1,
@@ -4435,6 +4214,36 @@ object RelationalQueries {
              |    AS hottest_key
              |FROM j$i)""".stripMargin
         }.mkString("\nUNION ALL\n")))
+
+  /** The as-of rows' sides: each user's clicks (build side) and
+    * purchases (probe side), ids and timestamps named per side.
+    */
+  private def clicksAndPurchases(ev: DataFrame): (DataFrame, DataFrame) =
+    (ev.filter(col("event_type") === "click")
+      .select(col("user_id"), col("event_id").as("click_id"),
+        col("ts").as("click_ts")),
+     ev.filter(col("event_type") === "purchase")
+      .select(col("user_id"), col("event_id").as("purchase_id"),
+        col("ts").as("purchase_ts")))
+
+  /** The 3-day activation cohort of the survival rows: per user, the
+    * days from first event to first purchase capped at 3 (`dur`) and
+    * whether the purchase came by then (`converted`).
+    */
+  private def activationCohort(ev: DataFrame): DataFrame = {
+    val w = 3L
+    val e = ev.select(col("user_id"), col("event_type"),
+      expr("unix_micros(ts) div 86400000000L").as("day"))
+    val f0 = e.groupBy(col("user_id")).agg(min(col("day")).as("f"))
+    val p0 = e.filter(col("event_type") === "purchase")
+      .groupBy(col("user_id")).agg(min(col("day")).as("p"))
+    f0.join(p0, Seq("user_id"), "left_outer")
+      .select(col("user_id"),
+        when(col("p").isNotNull && col("p") - col("f") <= w,
+          col("p") - col("f")).otherwise(w).as("dur"),
+        (col("p").isNotNull && col("p") - col("f") <= w)
+          .as("converted"))
+  }
 
   /** Hive-style partitioned layout of events (partitionBy event_type)
     * written once per dataset — the directory-partitioning

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import graft.SparkEntry
 
@@ -34,12 +33,23 @@ import graft.SparkEntry
   *  - `smoke [query sfDir]` smoke-runs the flagship entry query
   *    (rows > 0, the contract's smoke check), or prints a row's
   *    formatted plan and its row count.
+  *  - `audit [sfDir]` scans every row's physical plan for
+  *    scale-smells — nested-loop/cartesian joins where a hash join
+  *    should be, scans without pushed filters — one `AUDIT` line per
+  *    row, and runs [[graft.plans.PlanChecks]] over the OPTIMIZED
+  *    logical plan: degenerate (constant-key) equi joins must carry a
+  *    structural bound on one side, and explicit broadcast hints must
+  *    not cover a raw fact-table scan (the r13 margin_mine shape, a
+  *    constant-key join of two unbounded label halves, passed the
+  *    text greps "bnlj=0 cart=0"; these catch it). Each violation
+  *    prints a `FLAG` line; the close-gate rule is
+  *    `AUDIT-SUMMARY flags=0` over the whole registry.
   *
-  * Usage: runMain graft.tools.Probe <plan|rows|noop|smoke> [args...]
+  * Usage: runMain graft.tools.Probe <plan|rows|noop|smoke|audit> [args...]
   */
 object Probe {
   def main(args: Array[String]): Unit = {
-    val usage = "usage: Probe <plan|rows|noop|smoke> [args...]"
+    val usage = "usage: Probe <plan|rows|noop|smoke|audit> [args...]"
     require(args.nonEmpty, usage)
     val rest = args.tail
     args.head match {
@@ -47,18 +57,9 @@ object Probe {
       case "rows" => rows(rest)
       case "noop" => noop(rest)
       case "smoke" => smoke(rest)
+      case "audit" => audit(rest)
       case other => throw new IllegalArgumentException(s"$usage (got $other)")
     }
-  }
-
-  private def session(cpus: String, logLevel: String): SparkSession = {
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel(logLevel)
-    spark
   }
 
   private def time(body: => Unit): Double = {
@@ -72,7 +73,7 @@ object Probe {
       "usage: Probe plan <sfDir> <tag> <suffix> <query>...")
     val (sfDir, tag, suffix, names) =
       (args(0), args(1), args(2), args.drop(3))
-    val spark = session("8", "ERROR")
+    val spark = SparkEntry.session("8", "ERROR")
     val dir = Paths.get("plans", tag)
     Files.createDirectories(dir)
     for (name <- names) {
@@ -88,7 +89,8 @@ object Probe {
     require(args.length == 2, "usage: Probe rows <sfDir> <q1,q2,...>")
     val dir = args(0)
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
-    val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), "WARN")
+    val spark =
+      SparkEntry.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), "WARN")
     System.setProperty("graft.ivf.cells.skipWrite", "true")
     val show = sys.env.get("SPARK_GRAFT_SHOW").contains("1")
     names.foreach { n =>
@@ -109,7 +111,7 @@ object Probe {
     // bench conditions: oracle-input writes off (Bench sets the
     // same flag — the sweep judges the BENCH's fidelity)
     System.setProperty("graft.ivf.cells.skipWrite", "true")
-    val spark = session("32", "ERROR")
+    val spark = SparkEntry.session("32", "ERROR")
     val rows = SparkEntry.queries.toSeq.sortBy(_._1).map {
       case (name, fn) =>
         try {
@@ -149,7 +151,7 @@ object Probe {
   }
 
   private def smoke(args: Array[String]): Unit = {
-    val spark = session("8", "WARN")
+    val spark = SparkEntry.session("8", "WARN")
     args.headOption match {
       case None =>
         val df = SparkEntry.entry(spark)
@@ -161,6 +163,52 @@ object Probe {
         df.explain("formatted")
         println(s"$name rows: ${df.count()}")
     }
+    spark.stop()
+  }
+
+  private def audit(args: Array[String]): Unit = {
+    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
+    val spark = SparkEntry.session("8", "WARN")
+    var flags = 0
+    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+      try {
+        val df = fn(spark, sfDir)
+        val degAll = graft.plans.PlanChecks.degenerateJoins(df)
+        val degBad = degAll.filterNot(_.bounded)
+        val bcast = graft.plans.PlanChecks.unboundedBroadcastHints(df)
+        degBad.foreach { d =>
+          flags += 1; println(s"FLAG DEGEN $name $d")
+        }
+        bcast.foreach { t =>
+          flags += 1; println(s"FLAG BCAST $name raw fact scan '$t' under broadcast hint")
+        }
+        val plan = df.queryExecution.executedPlan.toString()
+        val bnlj =
+          plan.linesIterator.count(_.contains("BroadcastNestedLoopJoin"))
+        val cart = plan.linesIterator.count(_.contains("CartesianProduct"))
+        val bhj = plan.linesIterator.count(_.contains("BroadcastHashJoin"))
+        val smj = plan.linesIterator.count(_.contains("SortMergeJoin")) +
+          plan.linesIterator.count(_.contains("ShuffledHashJoin"))
+        val pushed = plan.linesIterator
+          .count(l => l.contains("PushedFilters: [") &&
+            !l.contains("PushedFilters: []"))
+        val topk = plan.linesIterator.count(_.contains("GroupedTopK ["))
+        // the shuffle budget: real shuffles only — a ReusedExchange is
+        // the optimizer sharing one shuffle between consumers (free),
+        // and a BroadcastExchange moves only the small side (not a
+        // shuffle of the big table), so neither counts
+        val exch = plan.linesIterator.count(l =>
+          l.contains("Exchange ") && !l.contains("ReusedExchange") &&
+            !l.contains("BroadcastExchange"))
+        println(f"AUDIT $name%-22s bnlj=$bnlj cart=$cart bhj=$bhj " +
+          f"shuffleJoin=$smj pushedScans=$pushed groupedTopK=$topk " +
+          f"exchanges=$exch degen=${degAll.size} " +
+          f"degenUnbounded=${degBad.size} bcastFact=${bcast.size}")
+      } catch {
+        case e: Throwable => println(s"AUDIT $name ERROR ${e.getMessage}")
+      }
+    }
+    println(s"AUDIT-SUMMARY flags=$flags")
     spark.stop()
   }
 }

@@ -4,7 +4,7 @@ import graft.SparkSuite
 import graft.SparkEntry
 
 /** Plan-quality gate, enforced by `sbt test` rather than the manual
-  * PlanAudit tool: no registered query may plan a nested-loop or
+  * `Probe audit` scan: no registered query may plan a nested-loop or
   * cartesian join — the two shapes that turn a 100 TB run into a
   * cross product. The brute-force similarity baselines pass because
   * their non-equi predicate lives in a post-join filter, leaving a

@@ -31,6 +31,19 @@ class RegistrySpec extends SparkSuite {
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 
+  test("every oracle renders to SQL with no uninterpolated fragment") {
+    // a shared fragment spliced into a literal that lacks the `s`
+    // interpolator survives as `$name` / `${...}` text, which only
+    // DuckDB would reject
+    LlmQueries.tagDataset("/root/testdata/sf0.001")
+    val bad = SparkEntry.oracleSql.toSeq.sortBy(_._1).collect {
+      case (name, sql)
+          if sql.trim.isEmpty || "\\$[A-Za-z_{]".r.findFirstIn(sql).nonEmpty =>
+        name
+    }
+    assert(bad.isEmpty, s"oracles with empty or unrendered SQL: $bad")
+  }
+
   test("evaluation barriers survive optimization under count() pruning") {
     // r14: barrier v1 (`xxhash64(*).isNotNull`) was constant-folded by
     // NullPropagation and the bench silently went back to timing
