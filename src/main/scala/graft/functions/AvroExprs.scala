@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, Generator, UnaryExpression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -23,13 +22,10 @@ import graft.engine.AvroOcf
   */
 case class AvroOcfExplode(child: Expression, schema: StructType,
                           permissive: Boolean = false)
-    extends UnaryExpression with Generator with CodegenFallback {
+    extends UnaryExpression with Generator with CodegenFallback
+    with ExpectsInputTypes {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.catalogString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(BinaryType)
   override def elementSchema: StructType = schema
   override def prettyName: String = "graft_avro_ocf_explode"
 
@@ -98,13 +94,10 @@ object AvroOcfExplode {
   * not protocol — errors: log-and-continue, never kill the stream).
   */
 case class AvroOcfExplodeDlq(child: Expression, schema: StructType)
-    extends UnaryExpression with Generator with CodegenFallback {
+    extends UnaryExpression with Generator with CodegenFallback
+    with ExpectsInputTypes {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.catalogString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(BinaryType)
   override def elementSchema: StructType =
     StructType(schema.fields :+
       StructField("decode_error", StringType, nullable = true))

@@ -1,10 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Nondeterministic, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, Nondeterministic, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.types.{BooleanType, DataType}
+import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
 
 /** Always-true evaluation barrier over a hash of a frame's output
   * columns — the bench-fidelity filter `Queries.evalBarrier` wraps
@@ -33,8 +33,9 @@ import org.apache.spark.sql.types.{BooleanType, DataType}
   * changes, Verify output is byte-identical.
   */
 case class EvalBarrier(child: Expression)
-    extends UnaryExpression with Nondeterministic {
+    extends UnaryExpression with Nondeterministic with ExpectsInputTypes {
 
+  override def inputTypes: Seq[DataType] = Seq(LongType)
   override def nullable: Boolean = false
   override def dataType: DataType = BooleanType
   override def prettyName: String = "graft_eval_barrier"

@@ -1,10 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
@@ -176,30 +174,19 @@ object GraftBloom {
 }
 
 /** `bloom.mightContain(hash)` as a codegen'd Catalyst expression: the
-  * filter rides into the plan as a reference object (broadcast with
-  * the task binary), so the probe is a handful of mask-and-test ops
-  * inside whole-stage codegen — no UDF boxing, no shuffle.
+  * filter rides into the plan inside the kernel's reference object
+  * (broadcast with the task binary), so the probe is a handful of
+  * mask-and-test ops inside whole-stage codegen — no UDF boxing, no
+  * shuffle.
   */
 case class BloomMightContain(child: Expression, bloom: GraftBloomFilter)
-    extends UnaryExpression {
+    extends UnaryKernel[Long] {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${other.catalogString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(LongType)
   override def dataType: DataType = BooleanType
   override def prettyName: String = "graft_bloom_might_contain"
 
-  override protected def nullSafeEval(input: Any): Any =
-    bloom.mightContain(input.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bloom", bloom,
-      classOf[GraftBloomFilter].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.mightContain($c);")
-  }
+  def compute(x: Long): Boolean = bloom.mightContain(x)
 
   override protected def withNewChildInternal(newChild: Expression)
       : BloomMightContain = copy(child = newChild)

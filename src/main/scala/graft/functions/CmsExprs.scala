@@ -4,12 +4,11 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream,
   DataInputStream, DataOutputStream}
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Count–min sketch (Cormode & Muthukrishnan '05) as a
@@ -62,9 +61,7 @@ object CountMin {
     }
   }
 
-  /** Point estimate from an eval'd sketch (called from generated
-    * code by [[CmsEstimate]]).
-    */
+  /** Point estimate from an eval'd sketch ([[CmsEstimate]]). */
   def estimate(tbl: ArrayData, term: UTF8String, widthLog2: Int,
                depth: Int): Long = {
     val b = baseHash(term); val step = h2(b)
@@ -90,7 +87,7 @@ case class CmsSketch(
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[Array[Long]]
-  with UnaryLike[Expression] {
+  with UnaryLike[Expression] with ExpectsInputTypes {
 
   require(widthLog2 >= 4 && widthLog2 <= 24, "widthLog2 in [4, 24]")
   require(depth >= 1 && depth <= 16, "depth in [1, 16]")
@@ -131,6 +128,7 @@ case class CmsSketch(
     buf
   }
 
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(LongType, false)
   override def nullable: Boolean = false
   override def prettyName: String = "graft_cms_sketch"
@@ -144,7 +142,7 @@ case class CmsSketch(
 }
 
 /** Point-frequency probe of an eval'd [[CmsSketch]] table: min over
-  * the depth rows — codegen'd to one static call, no per-row
+  * the depth rows — one generated call per row, no per-row
   * interpretation.
   */
 case class CmsEstimate(
@@ -152,19 +150,14 @@ case class CmsEstimate(
     right: Expression,
     widthLog2: Int,
     depth: Int)
-  extends BinaryExpression {
+  extends BinaryKernel[ArrayData, UTF8String] {
 
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(LongType), StringType)
   override def dataType: DataType = LongType
 
-  override protected def nullSafeEval(tbl: Any, term: Any): Any =
-    CountMin.estimate(tbl.asInstanceOf[ArrayData],
-      term.asInstanceOf[UTF8String], widthLog2, depth)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (tbl, term) =>
-      s"${ev.value} = graft.functions.CountMin.estimate(" +
-        s"$tbl, $term, $widthLog2, $depth);")
+  def compute(tbl: ArrayData, term: UTF8String): Long =
+    CountMin.estimate(tbl, term, widthLog2, depth)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CmsEstimate =

@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Hilbert-curve index as a fused codegen kernel.
@@ -12,7 +11,7 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * level's (x, y) ~5×; one analyzer transform destroys the sharing
   * and the canonicalization walk goes ~5^bits — at bits=8 that is
   * heap-exhausting. The kernel keeps it what it is: a ~5·bits-step
-  * integer loop, one static call in generated code.
+  * integer loop, one call in generated code.
   */
 object HilbertCurve {
   /** xy2d over a 2^bits × 2^bits grid (inputs masked to the grid). */
@@ -41,19 +40,14 @@ object HilbertCurve {
 }
 
 case class HilbertIndex(left: Expression, right: Expression, bits: Int)
-  extends BinaryExpression {
+  extends BinaryKernel[Long, Long] {
 
   require(bits >= 1 && bits <= 31, "bits in [1, 31]")
 
+  override def inputTypes: Seq[DataType] = Seq(LongType, LongType)
   override def dataType: DataType = LongType
 
-  override protected def nullSafeEval(x: Any, y: Any): Any =
-    HilbertCurve.index(x.asInstanceOf[Long], y.asInstanceOf[Long], bits)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) =>
-      s"${ev.value} = graft.functions.HilbertCurve.index($x, $y, $bits);")
+  def compute(x: Long, y: Long): Long = HilbertCurve.index(x, y, bits)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): HilbertIndex =

@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -15,14 +13,10 @@ import org.apache.spark.sql.types._
 case class NearestCentroids(child: Expression,
                             centroids: Array[Array[Long]],
                             nProbe: Int)
-    extends UnaryExpression {
+    extends UnaryKernel[ArrayData] {
   require(centroids.nonEmpty && nProbe >= 1)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<bigint>, got ${other.catalogString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
   override def dataType: DataType =
     ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "graft_nearest_centroids"
@@ -66,16 +60,6 @@ case class NearestCentroids(child: Expression,
       r += 1
     }
     new GenericArrayData(out)
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("nearestCentroids", this,
-      classOf[NearestCentroids].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
   }
 
   override protected def withNewChildInternal(newChild: Expression)

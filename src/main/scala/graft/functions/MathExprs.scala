@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 
@@ -69,46 +69,29 @@ object QSketchImpl {
     else (4L + b % 4L) << ((b / 4L).toInt - 2)
 }
 
-case class QBucket(child: Expression) extends UnaryExpression {
+case class QBucket(child: Expression) extends UnaryKernel[Long] {
+  override def inputTypes: Seq[DataType] = Seq(LongType)
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_qsketch_bucket"
-  override protected def nullSafeEval(x: Any): Any =
-    QSketchImpl.bucket(x.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x =>
-      s"${ev.value} = graft.functions.QSketchImpl.bucket($x);")
+  def compute(x: Long): Long = QSketchImpl.bucket(x)
   override protected def withNewChildInternal(
       newChild: Expression): QBucket = copy(child = newChild)
 }
 
-case class QLower(child: Expression) extends UnaryExpression {
+case class QLower(child: Expression) extends UnaryKernel[Long] {
+  override def inputTypes: Seq[DataType] = Seq(LongType)
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_qsketch_lower"
-  override protected def nullSafeEval(x: Any): Any =
-    QSketchImpl.lower(x.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x =>
-      s"${ev.value} = graft.functions.QSketchImpl.lower($x);")
+  def compute(b: Long): Long = QSketchImpl.lower(b)
   override protected def withNewChildInternal(
       newChild: Expression): QLower = copy(child = newChild)
 }
 
-case class DetLn(child: Expression) extends UnaryExpression {
+/** Not a [[UnaryKernel]]: its null rule differs (n < 1 gives NULL). */
+case class DetLn(child: Expression)
+    extends UnaryExpression with ExpectsInputTypes {
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case LongType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-          .TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-          .TypeCheckFailure(
-            s"$prettyName requires bigint, got ${other.catalogString}")
-    }
-
+  override def inputTypes: Seq[DataType] = Seq(LongType)
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
   override def prettyName: String = "graft_det_ln"

@@ -1,11 +1,35 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+/** Fixed-width reads at byte offset `i` of a container header — the
+  * one byte reader of the image, audio and video decoders. Unsigned
+  * unless named `s`; callers bounds-check before reading.
+  */
+private object HeaderBytes {
+  def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
+  def be16(b: Array[Byte], i: Int): Long =
+    ((u8(b, i) << 8) | u8(b, i + 1)).toLong
+  def be32(b: Array[Byte], i: Int): Long =
+    (u8(b, i).toLong << 24) | (u8(b, i + 1) << 16) |
+      (u8(b, i + 2) << 8) | u8(b, i + 3)
+  def be64(b: Array[Byte], i: Int): Long = (be32(b, i) << 32) | be32(b, i + 4)
+  def le16(b: Array[Byte], i: Int): Long =
+    (u8(b, i) | (u8(b, i + 1) << 8)).toLong
+  def le24(b: Array[Byte], i: Int): Long =
+    (u8(b, i) | (u8(b, i + 1) << 8) | (u8(b, i + 2) << 16)).toLong
+  def le32s(b: Array[Byte], i: Int): Int =
+    u8(b, i) | (u8(b, i + 1) << 8) | (u8(b, i + 2) << 16) |
+      (u8(b, i + 3) << 24)
+  def le32(b: Array[Byte], i: Int): Long = le32s(b, i).toLong & 0xffffffffL
+  /** The four ASCII chars of `s` at `i` (a RIFF/ISO-BMFF 4cc). */
+  def tag(b: Array[Byte], i: Int, s: String): Boolean =
+    b(i) == s.charAt(0) && b(i + 1) == s.charAt(1) &&
+      b(i + 2) == s.charAt(2) && b(i + 3) == s.charAt(3)
+}
 
 /** Real byte-level image-header parsing for the multimodal pipeline
   * (N5): no codec library, just the container byte layout — exactly
@@ -27,23 +51,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * conservatively to (0, 0, "bin") — never an exception.
   */
 object ImageHeaders {
+  import HeaderBytes._
 
   final val PngSig: Array[Byte] = Array(0x89, 0x50, 0x4e, 0x47, 0x0d,
     0x0a, 0x1a, 0x0a).map(_.toByte)
-
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-  private def be16(b: Array[Byte], i: Int): Long =
-    ((u8(b, i) << 8) | u8(b, i + 1)).toLong
-  private def be32(b: Array[Byte], i: Int): Long =
-    (u8(b, i).toLong << 24) | (u8(b, i + 1) << 16) |
-      (u8(b, i + 2) << 8) | u8(b, i + 3)
-  private def le16(b: Array[Byte], i: Int): Long =
-    (u8(b, i) | (u8(b, i + 1) << 8)).toLong
-  private def le24(b: Array[Byte], i: Int): Long =
-    (u8(b, i) | (u8(b, i + 1) << 8) | (u8(b, i + 2) << 16)).toLong
-  private def le32s(b: Array[Byte], i: Int): Int =
-    u8(b, i) | (u8(b, i + 1) << 8) | (u8(b, i + 2) << 16) |
-      (u8(b, i + 3) << 24)
 
   /** (width, height, fmt); (0, 0, "bin") when not a parseable image. */
   def decode(b: Array[Byte]): (Long, Long, String) = {
@@ -85,8 +96,7 @@ object ImageHeaders {
   private def decodeTiff(b: Array[Byte]): (Long, Long, String) = {
     val le = b(0) == 'I'
     def u16at(i: Int): Long = if (le) le16(b, i) else be16(b, i)
-    def u32at(i: Int): Long =
-      if (le) le32s(b, i).toLong & 0xffffffffL else be32(b, i)
+    def u32at(i: Int): Long = if (le) le32(b, i) else be32(b, i)
     val ifd = u32at(4)
     if (ifd < 8L || ifd + 2L > b.length) return (0L, 0L, "bin")
     val n = u16at(ifd.toInt).toInt
@@ -122,7 +132,7 @@ object ImageHeaders {
       (1L + le24(b, 24), 1L + le24(b, 27), "webp")
     else if (b(12) == 'V' && b(13) == 'P' && b(14) == '8' &&
         b(15) == 'L' && b.length >= 25 && u8(b, 20) == 0x2f) {
-      val bits = le32s(b, 21).toLong & 0xffffffffL
+      val bits = le32(b, 21)
       (1L + (bits & 0x3fff), 1L + ((bits >> 14) & 0x3fff), "webp")
     }
     else if (b(12) == 'V' && b(13) == 'P' && b(14) == '8' &&
@@ -172,16 +182,7 @@ object ImageHeaders {
   * lives in the first chunk headers.
   */
 object AudioHeaders {
-
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-  private def le16(b: Array[Byte], i: Int): Long =
-    (u8(b, i) | (u8(b, i + 1) << 8)).toLong
-  private def le32(b: Array[Byte], i: Int): Long =
-    u8(b, i).toLong | (u8(b, i + 1).toLong << 8) |
-      (u8(b, i + 2).toLong << 16) | (u8(b, i + 3).toLong << 24)
-  private def tag(b: Array[Byte], i: Int, s: String): Boolean =
-    b(i) == s.charAt(0) && b(i + 1) == s.charAt(1) &&
-      b(i + 2) == s.charAt(2) && b(i + 3) == s.charAt(3)
+  import HeaderBytes._
 
   /** (channels, sampleRate, bitsPerSample, nSamples, fmt);
     * zeros + "bin" when not parseable WAV.
@@ -230,18 +231,7 @@ object AudioHeaders {
   * file. Non-MP4 or truncated input decodes to zeros with fmt "bin".
   */
 object VideoHeaders {
-
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-  private def be16(b: Array[Byte], i: Int): Long =
-    ((u8(b, i) << 8) | u8(b, i + 1)).toLong
-  private def be32(b: Array[Byte], i: Int): Long =
-    (u8(b, i).toLong << 24) | (u8(b, i + 1) << 16) |
-      (u8(b, i + 2) << 8) | u8(b, i + 3)
-  private def be64(b: Array[Byte], i: Int): Long =
-    (be32(b, i) << 32) | be32(b, i + 4)
-  private def tag(b: Array[Byte], i: Int, s: String): Boolean =
-    b(i) == s.charAt(0) && b(i + 1) == s.charAt(1) &&
-      b(i + 2) == s.charAt(2) && b(i + 3) == s.charAt(3)
+  import HeaderBytes._
 
   /** Find a box by 4cc within [from, until); returns (payloadStart,
     * payloadEnd) or null. Skips unknown boxes by declared size;
@@ -309,14 +299,10 @@ object VideoHeaders {
 }
 
 /** binary → struct<duration_ms, width, height, fmt>. */
-case class VideoHeaderDecode(child: Expression) extends UnaryExpression {
+case class VideoHeaderDecode(child: Expression)
+    extends UnaryKernel[Array[Byte]] {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.catalogString}")
-  }
-
+  override def inputTypes: Seq[DataType] = Seq(BinaryType)
   override def dataType: DataType = StructType(Seq(
     StructField("duration_ms", LongType, nullable = false),
     StructField("width", LongType, nullable = false),
@@ -324,28 +310,17 @@ case class VideoHeaderDecode(child: Expression) extends UnaryExpression {
     StructField("fmt", StringType, nullable = false)))
   override def prettyName: String = "graft_video_header"
 
-  override protected def nullSafeEval(input: Any): Any =
-    VideoHeaders.decodeRow(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val kernel = VideoHeaders.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $kernel.decodeRow($c);")
-  }
+  def compute(b: Array[Byte]): InternalRow = VideoHeaders.decodeRow(b)
 
   override protected def withNewChildInternal(newChild: Expression)
       : VideoHeaderDecode = copy(child = newChild)
 }
 
 /** binary → struct<channels, sample_rate, bits, n_samples, fmt>. */
-case class AudioHeaderDecode(child: Expression) extends UnaryExpression {
+case class AudioHeaderDecode(child: Expression)
+    extends UnaryKernel[Array[Byte]] {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.catalogString}")
-  }
-
+  override def inputTypes: Seq[DataType] = Seq(BinaryType)
   override def dataType: DataType = StructType(Seq(
     StructField("channels", LongType, nullable = false),
     StructField("sample_rate", LongType, nullable = false),
@@ -354,45 +329,27 @@ case class AudioHeaderDecode(child: Expression) extends UnaryExpression {
     StructField("fmt", StringType, nullable = false)))
   override def prettyName: String = "graft_audio_header"
 
-  override protected def nullSafeEval(input: Any): Any =
-    AudioHeaders.decodeRow(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val kernel = AudioHeaders.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $kernel.decodeRow($c);")
-  }
+  def compute(b: Array[Byte]): InternalRow = AudioHeaders.decodeRow(b)
 
   override protected def withNewChildInternal(newChild: Expression)
       : AudioHeaderDecode = copy(child = newChild)
 }
 
 /** binary → struct<width: bigint, height: bigint, fmt: string>, one
-  * static-call codegen kernel per row (stays inside whole-stage
-  * codegen; no Scala UDF serialization).
+  * codegen'd call per row (stays inside whole-stage codegen; no Scala
+  * UDF serialization).
   */
-case class ImageHeaderDecode(child: Expression) extends UnaryExpression {
+case class ImageHeaderDecode(child: Expression)
+    extends UnaryKernel[Array[Byte]] {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.catalogString}")
-  }
-
+  override def inputTypes: Seq[DataType] = Seq(BinaryType)
   override def dataType: DataType = StructType(Seq(
     StructField("width", LongType, nullable = false),
     StructField("height", LongType, nullable = false),
     StructField("fmt", StringType, nullable = false)))
   override def prettyName: String = "graft_image_header"
 
-  override protected def nullSafeEval(input: Any): Any =
-    ImageHeaders.decodeRow(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val kernel = ImageHeaders.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $kernel.decodeRow($c);")
-  }
+  def compute(b: Array[Byte]): InternalRow = ImageHeaders.decodeRow(b)
 
   override protected def withNewChildInternal(newChild: Expression)
       : ImageHeaderDecode = copy(child = newChild)

@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -39,14 +37,10 @@ object PqCodebooks {
   */
 case class PqEncode(child: Expression,
                     codebooks: Array[Array[Array[Long]]])
-    extends UnaryExpression {
+    extends UnaryKernel[ArrayData] {
   require(codebooks.nonEmpty && codebooks.forall(_.nonEmpty))
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<bigint>, got ${other.catalogString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
   override def dataType: DataType =
     ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "graft_pq_encode"
@@ -83,16 +77,6 @@ case class PqEncode(child: Expression,
     new GenericArrayData(out)
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("pqEncode", this,
-      classOf[PqEncode].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
-  }
-
   override protected def withNewChildInternal(newChild: Expression)
       : PqEncode = copy(child = newChild)
 }
@@ -103,13 +87,9 @@ case class PqEncode(child: Expression,
   */
 case class PqReconNorm(child: Expression,
                        codebooks: Array[Array[Array[Long]]])
-    extends UnaryExpression {
+    extends UnaryKernel[ArrayData] {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(IntegerType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<int> codes, got ${other.catalogString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(IntegerType))
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_pq_recon_norm"
 
@@ -124,16 +104,6 @@ case class PqReconNorm(child: Expression,
     nn
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("pqReconNorm", this,
-      classOf[PqReconNorm].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
-  }
-
   override protected def withNewChildInternal(newChild: Expression)
       : PqReconNorm = copy(child = newChild)
 }
@@ -145,16 +115,10 @@ case class PqReconNorm(child: Expression,
   */
 case class PqAdcDot(left: Expression, right: Expression,
                     codebooks: Array[Array[Array[Long]]])
-    extends BinaryExpression {
+    extends BinaryKernel[ArrayData, ArrayData] {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(IntegerType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<int>, array<bigint>), got " +
-          s"(${l.catalogString}, ${r.catalogString})")
-    }
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(IntegerType), ArrayType(LongType))
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_pq_adc_dot"
 
@@ -175,17 +139,6 @@ case class PqAdcDot(left: Expression, right: Expression,
       s += 1
     }
     adc
-  }
-
-  override protected def nullSafeEval(l: Any, r: Any): Any =
-    compute(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("pqAdcDot", this,
-      classOf[PqAdcDot].getName)
-    nullSafeCodeGen(ctx, ev,
-      (l, r) => s"${ev.value} = $self.compute($l, $r);")
   }
 
   override protected def withNewChildrenInternal(

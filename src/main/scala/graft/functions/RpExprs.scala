@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -24,14 +22,10 @@ import org.apache.spark.sql.types._
   * preserved within the JL distortion bound. Pure map, zero shuffle.
   */
 case class RademacherProject(child: Expression, outDim: Int, inDim: Int)
-    extends UnaryExpression {
+    extends UnaryKernel[ArrayData] {
   require(outDim >= 1 && inDim >= 1)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<bigint>, got ${other.catalogString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
   override def dataType: DataType =
     ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_rademacher_project"
@@ -63,16 +57,6 @@ case class RademacherProject(child: Expression, outDim: Int, inDim: Int)
       j += 1
     }
     new GenericArrayData(out)
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("rademacherProject", this,
-      classOf[RademacherProject].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
   }
 
   override protected def withNewChildInternal(newChild: Expression)

@@ -2,11 +2,10 @@ package graft.functions
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.ops.TextOps
 
@@ -66,14 +65,10 @@ object SigKernels {
   * Broder's minwise hashing + LSH banding as surveyed in PAPERS.md).
   */
 case class MinHashBands(child: Expression, numPerms: Int, bands: Int)
-    extends UnaryExpression {
+    extends UnaryKernel[ArrayData] {
   require(numPerms % bands == 0, "numPerms must be a multiple of bands")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<bigint>, got ${other.catalogString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_minhash_bands"
 
@@ -120,17 +115,6 @@ case class MinHashBands(child: Expression, numPerms: Int, bands: Int)
     new GenericArrayData(out)
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("minhashBands", this,
-      classOf[MinHashBands].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = $self.compute($c);")
-  }
-
   override protected def withNewChildInternal(newChild: Expression)
       : MinHashBands = copy(child = newChild)
 }
@@ -143,13 +127,9 @@ case class MinHashBands(child: Expression, numPerms: Int, bands: Int)
   * at angle θ (Charikar's SimHash rounding scheme — see PAPERS.md).
   */
 case class HyperplaneBands(child: Expression, bands: Int, rowsPerBand: Int)
-    extends UnaryExpression {
+    extends UnaryKernel[ArrayData] {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<bigint>, got ${other.catalogString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_hyperplane_bands"
 
@@ -179,17 +159,6 @@ case class HyperplaneBands(child: Expression, bands: Int, rowsPerBand: Int)
       bi += 1
     }
     new GenericArrayData(out)
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("hyperplaneBands", this,
-      classOf[HyperplaneBands].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = $self.compute($c);")
   }
 
   override protected def withNewChildInternal(newChild: Expression)
@@ -223,18 +192,14 @@ case class HyperplaneBands(child: Expression, bands: Int, rowsPerBand: Int)
   * consumers dedupe after their verify.
   */
 case class DeletionHashes(child: Expression, maxDist: Int)
-    extends UnaryExpression {
+    extends UnaryKernel[UTF8String] {
   require(maxDist == 1 || maxDist == 2, "FastSS here supports k in {1,2}")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.catalogString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_deletion_hashes"
 
-  def compute(s: org.apache.spark.unsafe.types.UTF8String): ArrayData = {
+  def compute(s: UTF8String): ArrayData = {
     // CODE POINTS, not bytes: deleting one byte of a multi-byte char
     // is not a character edit, and a 1-char substitution of such a
     // char would have NO shared byte-deletion variant at k=1 — the
@@ -281,17 +246,6 @@ case class DeletionHashes(child: Expression, maxDist: Int)
       }
     }
     new GenericArrayData(out)
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("deletionHashes", this,
-      classOf[DeletionHashes].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = $self.compute($c);")
   }
 
   override protected def withNewChildInternal(newChild: Expression)

@@ -6,7 +6,7 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream,
 import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -40,7 +40,7 @@ case class MisraGries(
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[mutable.HashMap[String, Long]]
-  with UnaryLike[Expression] {
+  with UnaryLike[Expression] with ExpectsInputTypes {
 
   require(capacity > 0, "capacity must be positive")
 
@@ -114,6 +114,7 @@ case class MisraGries(
     buf
   }
 
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(StringType, false)
   override def nullable: Boolean = false
   override def prettyName: String = "graft_mg_candidates"

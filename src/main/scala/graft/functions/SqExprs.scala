@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -31,14 +29,10 @@ import org.apache.spark.sql.types._
   * and safe. One codegen loop per row.
   */
 case class Sq8Encode(child: Expression, maxs: Array[Long])
-    extends UnaryExpression {
+    extends UnaryKernel[ArrayData] {
   require(maxs.nonEmpty && maxs.forall(_ > 0))
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<bigint>, got ${other.catalogString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_sq8_encode"
 
@@ -56,16 +50,6 @@ case class Sq8Encode(child: Expression, maxs: Array[Long])
       i += 1
     }
     new GenericArrayData(out)
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("sq8encode", this,
-      classOf[Sq8Encode].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
   }
 
   override protected def withNewChildInternal(newChild: Expression)
@@ -86,17 +70,11 @@ case class Sq8Encode(child: Expression, maxs: Array[Long])
   */
 case class ScaledDot(left: Expression, right: Expression,
                      maxs: Array[Long])
-    extends BinaryExpression {
+    extends BinaryKernel[ArrayData, ArrayData] {
   require(maxs.nonEmpty)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires two array<bigint>, got " +
-          s"${l.catalogString}, ${r.catalogString}")
-    }
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(LongType), ArrayType(LongType))
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_scaled_dot"
 
@@ -111,17 +89,6 @@ case class ScaledDot(left: Expression, right: Expression,
       i += 1
     }
     acc
-  }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("scaledDot", this,
-      classOf[ScaledDot].getName)
-    nullSafeCodeGen(ctx, ev,
-      (a, b) => s"${ev.value} = $self.compute($a, $b);")
   }
 
   override protected def withNewChildrenInternal(

@@ -1,10 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -56,14 +55,10 @@ object TextHash {
   * the text is shorter than n (mirrors TextOps.charGrams).
   */
 case class HashedCharGrams(child: Expression, n: Int)
-    extends UnaryExpression {
+    extends UnaryKernel[UTF8String] {
   require(n > 0)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.catalogString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_hashed_char_grams"
 
@@ -76,16 +71,6 @@ case class HashedCharGrams(child: Expression, n: Int)
     var i = 0
     while (i < m) { hs(i) = TextHash.hashChars(s, i, i + n); i += 1 }
     TextHash.toArrayData(hs, TextHash.sortDedupe(hs, m))
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("hashedCharGrams", this,
-      classOf[HashedCharGrams].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
   }
 
   override protected def withNewChildInternal(newChild: Expression)
@@ -102,15 +87,11 @@ case class HashedCharGrams(child: Expression, n: Int)
   * vocabulary inlined longest-first.
   */
 case class WordPieces(child: Expression, vocab: Seq[String])
-    extends UnaryExpression {
+    extends UnaryKernel[UTF8String] {
   require(vocab.nonEmpty && vocab.forall(_.nonEmpty) &&
     vocab == vocab.distinct, "non-empty distinct vocab")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.catalogString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "graft_word_pieces"
 
@@ -152,16 +133,6 @@ case class WordPieces(child: Expression, vocab: Seq[String])
     new GenericArrayData(out.toArray[Any])
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("wordPieces", this,
-      classOf[WordPieces].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
-  }
-
   override protected def withNewChildInternal(newChild: Expression)
       : WordPieces = copy(child = newChild)
 }
@@ -187,15 +158,11 @@ case class WordPieces(child: Expression, vocab: Seq[String])
   * trained-model-as-artifact shape as the IVF centroids.
   */
 case class BpeEncode(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression {
+    extends UnaryKernel[UTF8String] {
   require(merges.nonEmpty && merges == merges.distinct,
     "non-empty distinct merge table")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.catalogString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "graft_bpe_encode"
 
@@ -251,16 +218,6 @@ case class BpeEncode(child: Expression, merges: Seq[(String, String)])
     new GenericArrayData(out.toArray[Any])
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("bpeEncode", this,
-      classOf[BpeEncode].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
-  }
-
   override protected def withNewChildInternal(newChild: Expression)
       : BpeEncode = copy(child = newChild)
 }
@@ -273,14 +230,10 @@ case class BpeEncode(child: Expression, merges: Seq[(String, String)])
   * Empty array when the text has fewer than k tokens.
   */
 case class HashedWordShingles(child: Expression, k: Int)
-    extends UnaryExpression {
+    extends UnaryKernel[UTF8String] {
   require(k > 0)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.catalogString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_hashed_word_shingles"
 
@@ -311,16 +264,6 @@ case class HashedWordShingles(child: Expression, k: Int)
     TextHash.toArrayData(hs, TextHash.sortDedupe(hs, m))
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("hashedWordShingles", this,
-      classOf[HashedWordShingles].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
-  }
-
   override protected def withNewChildInternal(newChild: Expression)
       : HashedWordShingles = copy(child = newChild)
 }
@@ -335,13 +278,9 @@ case class HashedWordShingles(child: Expression, k: Int)
   * candidates straight in. One codegen loop per row; the DuckDB
   * oracle recomputes the same fold with list arithmetic.
   */
-case class LuhnValid(child: Expression) extends UnaryExpression {
+case class LuhnValid(child: Expression) extends UnaryKernel[UTF8String] {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.catalogString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = BooleanType
   override def prettyName: String = "graft_luhn_valid"
 
@@ -363,15 +302,6 @@ case class LuhnValid(child: Expression) extends UnaryExpression {
     sum % 10 == 0
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("luhn", this, classOf[LuhnValid].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
-  }
-
   override protected def withNewChildInternal(newChild: Expression)
       : LuhnValid = copy(child = newChild)
 }
@@ -382,14 +312,10 @@ case class LuhnValid(child: Expression) extends UnaryExpression {
   * (TextOps.polyHash), as one codegen loop per row.
   */
 case class PolyHash31(child: Expression, m: Long)
-    extends UnaryExpression {
+    extends UnaryKernel[UTF8String] {
   require(m > 0)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.catalogString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_poly_hash"
 
@@ -403,16 +329,6 @@ case class PolyHash31(child: Expression, m: Long)
       i += 1
     }
     acc
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("polyHash", this,
-      classOf[PolyHash31].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
   }
 
   override protected def withNewChildInternal(newChild: Expression)
@@ -430,13 +346,9 @@ case class PolyHash31(child: Expression, m: Long)
   * explode-chars + per-doc-aggregate plan. Code points (not UTF-16
   * units) so counts match SQL substr/length semantics on all inputs.
   */
-case class CharSimpson(child: Expression) extends UnaryExpression {
+case class CharSimpson(child: Expression) extends UnaryKernel[UTF8String] {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.catalogString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_char_simpson"
 
@@ -455,16 +367,6 @@ case class CharSimpson(child: Expression) extends UnaryExpression {
     num
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("charSimpson", this,
-      classOf[CharSimpson].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
-  }
-
   override protected def withNewChildInternal(newChild: Expression)
       : CharSimpson = copy(child = newChild)
 }
@@ -479,13 +381,9 @@ case class CharSimpson(child: Expression) extends UnaryExpression {
   * oracle interpolates, bit-identical to the unfused
   * explode + 64-column aggregate it replaces.
   */
-case class SimHash64(child: Expression) extends UnaryExpression {
+case class SimHash64(child: Expression) extends UnaryKernel[UTF8String] {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.catalogString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_simhash64"
 
@@ -532,16 +430,6 @@ case class SimHash64(child: Expression) extends UnaryExpression {
     new GenericArrayData(Array(lo, hi))
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("simhash64", this,
-      classOf[SimHash64].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
-  }
-
   override protected def withNewChildInternal(newChild: Expression)
       : SimHash64 = copy(child = newChild)
 }
@@ -558,14 +446,10 @@ object SimHash64 {
   * of the multimodal pipeline (N5), one codegen loop per row.
   */
 case class ByteHistogram(child: Expression, nBuckets: Int)
-    extends UnaryExpression {
+    extends UnaryKernel[Array[Byte]] {
   require(nBuckets > 0)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.catalogString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(BinaryType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_byte_histogram"
 
@@ -579,16 +463,6 @@ case class ByteHistogram(child: Expression, nBuckets: Int)
     new GenericArrayData(h)
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("byteHistogram", this,
-      classOf[ByteHistogram].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
-  }
-
   override protected def withNewChildInternal(newChild: Expression)
       : ByteHistogram = copy(child = newChild)
 }
@@ -598,16 +472,10 @@ case class ByteHistogram(child: Expression, nBuckets: Int)
   * of HashedCharGrams / HashedWordShingles).
   */
 case class SortedLongIntersectCount(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryKernel[ArrayData, ArrayData] {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<bigint>, array<bigint>), got " +
-          s"(${l.catalogString}, ${r.catalogString})")
-    }
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(LongType), ArrayType(LongType))
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_sorted_intersect_count"
 
@@ -627,17 +495,6 @@ case class SortedLongIntersectCount(left: Expression, right: Expression)
     c
   }
 
-  override protected def nullSafeEval(l: Any, r: Any): Any =
-    compute(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("sortedIntersect", this,
-      classOf[SortedLongIntersectCount].getName)
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = $self.compute($a, $b);")
-  }
-
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): SortedLongIntersectCount =
     copy(left = newLeft, right = newRight)
@@ -649,16 +506,10 @@ case class SortedLongIntersectCount(left: Expression, right: Expression)
   * mismatched lengths take the common prefix).
   */
 case class QuantizedDot(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryKernel[ArrayData, ArrayData] {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<bigint>, array<bigint>), got " +
-          s"(${l.catalogString}, ${r.catalogString})")
-    }
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(LongType), ArrayType(LongType))
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_qdot"
 
@@ -668,17 +519,6 @@ case class QuantizedDot(left: Expression, right: Expression)
     var dot = 0L
     while (i < n) { dot += a.getLong(i) * b.getLong(i); i += 1 }
     dot
-  }
-
-  override protected def nullSafeEval(l: Any, r: Any): Any =
-    compute(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("qdot", this,
-      classOf[QuantizedDot].getName)
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = $self.compute($a, $b);")
   }
 
   override protected def withNewChildrenInternal(newLeft: Expression,
@@ -699,13 +539,9 @@ case class QuantizedDot(left: Expression, right: Expression)
   * exact STRING (never a hash), so counts are bit-identical to the
   * relational DuckDB oracle by construction.
   */
-case class RepetitionStats(child: Expression) extends UnaryExpression {
+case class RepetitionStats(child: Expression) extends UnaryKernel[UTF8String] {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.catalogString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_repetition_stats"
 
@@ -743,16 +579,6 @@ case class RepetitionStats(child: Expression) extends UnaryExpression {
       Array(nTokens, distinct.size.toLong, nBigrams, top))
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("repstats", this,
-      classOf[RepetitionStats].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
-  }
-
   override protected def withNewChildInternal(newChild: Expression)
       : RepetitionStats = copy(child = newChild)
 }
@@ -768,14 +594,10 @@ case class RepetitionStats(child: Expression) extends UnaryExpression {
   */
 case class LangIdVote(child: Expression,
                       markers: Seq[(String, Seq[String])])
-    extends UnaryExpression {
+    extends UnaryKernel[UTF8String] {
   require(markers.nonEmpty && markers.forall(_._2.nonEmpty))
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.catalogString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = StringType
   override def prettyName: String = "graft_langid_vote"
 
@@ -841,16 +663,6 @@ case class LangIdVote(child: Expression,
     LangIdVote.unknown // unreachable: best > 0 came from some counts(l)
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("langid", this,
-      classOf[LangIdVote].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
-  }
-
   override protected def withNewChildInternal(newChild: Expression)
       : LangIdVote = copy(child = newChild)
 }
@@ -870,14 +682,10 @@ object LangIdVote {
   * weight table a per-task array (a real model would broadcast it).
   */
 case class HashedLinearScore(child: Expression, weights: Array[Long])
-    extends UnaryExpression {
+    extends UnaryKernel[UTF8String] {
   require(weights.nonEmpty)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.catalogString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_linear_score"
 
@@ -896,16 +704,6 @@ case class HashedLinearScore(child: Expression, weights: Array[Long])
       i += 1
     }
     acc
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("linearScore", this,
-      classOf[HashedLinearScore].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
   }
 
   override protected def withNewChildInternal(newChild: Expression)
@@ -932,14 +730,10 @@ case class HashedLinearScore(child: Expression, weights: Array[Long])
   * a regex pass over every document.
   */
 case class TokenQualityStats(child: Expression, stopwords: Seq[String])
-    extends UnaryExpression {
+    extends UnaryKernel[UTF8String] {
   require(stopwords.nonEmpty)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.catalogString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_quality_stats"
 
@@ -997,16 +791,6 @@ case class TokenQualityStats(child: Expression, stopwords: Seq[String])
       nTok, distinct.size.toLong, nStop, alpha, nAlphaWords))
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("qualityStats", this,
-      classOf[TokenQualityStats].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
-  }
-
   override protected def withNewChildInternal(newChild: Expression)
       : TokenQualityStats = copy(child = newChild)
 }
@@ -1033,13 +817,9 @@ case class TokenQualityStats(child: Expression, stopwords: Seq[String])
   * no-evidence. Tokenization is `split(t, " ")` with empties kept,
   * exactly like DuckDB string_split.
   */
-case class GopherCoverage(child: Expression) extends UnaryExpression {
+case class GopherCoverage(child: Expression) extends UnaryKernel[UTF8String] {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.catalogString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_gopher_coverage"
 
@@ -1153,16 +933,6 @@ case class GopherCoverage(child: Expression) extends UnaryExpression {
     new GenericArrayData(out)
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("gopherCov", this,
-      classOf[GopherCoverage].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
-  }
-
   override protected def withNewChildInternal(newChild: Expression)
       : GopherCoverage = copy(child = newChild)
 }
@@ -1180,14 +950,10 @@ case class GopherCoverage(child: Expression) extends UnaryExpression {
   * mirroring wordShingles.
   */
 case class PolyShingleHashes(child: Expression, k: Int, m: Long)
-    extends UnaryExpression {
+    extends UnaryKernel[UTF8String] {
   require(k > 0 && m > 0)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.catalogString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_poly_shingle_hashes"
 
@@ -1227,16 +993,6 @@ case class PolyShingleHashes(child: Expression, k: Int, m: Long)
     new GenericArrayData(res)
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("polyShingles", this,
-      classOf[PolyShingleHashes].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
-  }
-
   override protected def withNewChildInternal(newChild: Expression)
       : PolyShingleHashes = copy(child = newChild)
 }
@@ -1248,14 +1004,10 @@ case class PolyShingleHashes(child: Expression, k: Int, m: Long)
   * tree. Docs shorter than k → empty array.
   */
 case class PositionalShingles(child: Expression, k: Int)
-    extends UnaryExpression {
+    extends UnaryKernel[UTF8String] {
   require(k > 0)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.catalogString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType =
     ArrayType(StringType, containsNull = false)
   override def prettyName: String = "graft_positional_shingles"
@@ -1280,16 +1032,6 @@ case class PositionalShingles(child: Expression, k: Int)
       i += 1
     }
     new GenericArrayData(out)
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("posShingles", this,
-      classOf[PositionalShingles].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
   }
 
   override protected def withNewChildInternal(newChild: Expression)
@@ -1324,16 +1066,12 @@ case class PositionalShingles(child: Expression, k: Int)
   * must not propagate NULL and silently drop null-text docs.
   */
 case class ShingleSurvivors(child: Expression, k: Int, probe: LongProbe)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
   require(k > 0)
 
   override def nullable: Boolean = false
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.catalogString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType =
     ArrayType(StringType, containsNull = false)
   override def prettyName: String = "graft_shingle_survivors"

@@ -755,7 +755,7 @@ object TextOps {
     * Plan shape: the 1-row sketch joins the top-k frame through the
     * single-bucket non-foldable-key equi-join (the scoredPairs
     * pattern — stays BroadcastHashJoin, never BNLJ); the probe is a
-    * codegen'd static call. Nothing is collected to the driver.
+    * codegen'd kernel call. Nothing is collected to the driver.
     */
   def cmsFrequencyCheck(docs: DataFrame, textCol: String,
                         widthLog2: Int = 14, depth: Int = 4,

@@ -410,7 +410,8 @@ object TimeSeries {
     * hours weigh the denominator (an index over only-active hours
     * overstates quiet slots). index = (c_hod·n_hours) / (T·n_hod):
     * all exact BIGINT products, one double division; h is hours since
-    * 2024-01-01 UTC so h mod 24 IS the UTC hour of day.
+    * 2024-01-01 UTC so pmod(h, 24) IS the UTC hour of day (floored, so
+    * hours before the origin land in 0..23 too).
     */
   def seasonalProfile(events: DataFrame): DataFrame = {
     val dense = denseHourly(events)
@@ -419,7 +420,7 @@ object TimeSeries {
     dense
       .withColumn("n_hours", count(lit(1)).over(byType))
       .withColumn("total", sum(col("c")).over(byType))
-      .groupBy(col("event_type"), (col("h") % 24L).as("hod"))
+      .groupBy(col("event_type"), pmod(col("h"), lit(24L)).as("hod"))
       .agg(count(lit(1)).as("n_hod_hours"),
         sum(col("c")).as("events_at_hod"),
         max(col("n_hours")).as("n_hours"),

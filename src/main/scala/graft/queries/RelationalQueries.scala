@@ -1917,7 +1917,7 @@ object RelationalQueries {
       s"""WITH ${denseHours("dense")},
         |st AS (SELECT event_type, count(*) AS n_hours,
         |    sum(c) AS total FROM dense GROUP BY 1)
-        |SELECT dense.event_type, h % 24 AS hod,
+        |SELECT dense.event_type, ((h % 24) + 24) % 24 AS hod,
         |  count(*) AS n_hod_hours,
         |  CAST(sum(c) AS BIGINT) AS events_at_hod,
         |  CAST(sum(c) * max(n_hours) AS DOUBLE)

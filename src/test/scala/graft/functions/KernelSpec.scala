@@ -618,4 +618,136 @@ class KernelSpec extends SparkSuite {
     assert(df(9170L).contains(DetLnImpl.eval(9170L)))
     assert(df(1L << 40).contains(DetLnImpl.eval(1L << 40)))
   }
+
+  test("QBucket, QLower, HilbertIndex and CmsEstimate reject a wrong " +
+    "input type at analysis (DATATYPE_MISMATCH), not at run time") {
+    val one = spark.range(1)
+    Seq(
+      "qBucket(int literal)" -> GraftFunctions.qBucket(lit(5)),
+      "qBucket(int column)" -> GraftFunctions.qBucket(col("id").cast("int")),
+      "qBucket(string)" -> GraftFunctions.qBucket(lit("x")),
+      "qLower(string)" -> GraftFunctions.qLower(lit("x")),
+      "hilbertIndex(double, double)" ->
+        GraftFunctions.hilbertIndex(lit(1.5), lit(2.5), 4),
+      "cmsEstimate(string, string)" ->
+        GraftFunctions.cmsEstimate(lit("x"), lit("y"), 4, 2)
+    ).foreach { case (what, c) =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        one.select(c).collect())
+      assert(e.getCondition.startsWith("DATATYPE_MISMATCH"),
+        s"$what: ${e.getMessage}")
+    }
+  }
+
+  test("every row kernel: interpreted eval equals generated code, " +
+    "NULL inputs included") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+    import org.apache.spark.sql.graft.Bridge
+    import org.apache.spark.sql.types._
+
+    def le(v: Int, n: Int) = Array.tabulate(n)(i => (v >> (8 * i)).toByte)
+    val png = ImageHeaders.PngSig ++ le(13, 4).reverse ++ "IHDR".getBytes ++
+      le(256, 4).reverse ++ le(64, 4).reverse
+    val gif = "GIF89a".getBytes ++ le(10, 2) ++ le(20, 2)
+    val wav = "RIFF".getBytes ++ le(36 + 8, 4) ++ "WAVE".getBytes ++
+      "fmt ".getBytes ++ le(16, 4) ++ le(1, 2) ++ le(2, 2) ++
+      le(8000, 4) ++ le(32000, 4) ++ le(4, 2) ++ le(16, 2) ++
+      "data".getBytes ++ le(8, 4) ++ Array.fill[Byte](8)(7)
+    val str = StringType -> Seq("the quick brown fox the quick", "",
+      "a  b", "héllo wörld héllo wörld", "4539148803436467",
+      "der die das the", null)
+    val bin = BinaryType -> Seq(png, gif, wav, Array[Byte](1, 2, 3),
+      Array.emptyByteArray, null)
+    val long = LongType -> Seq(0L, 1L, 5L, 1000L, 1L << 40, -3L, null)
+    val longs = ArrayType(LongType) ->
+      Seq(Seq(1L, 2L, 3L), Seq(3L, -1L, 7L), Seq.empty[Long], null)
+    val codes = ArrayType(IntegerType) ->
+      Seq(Seq(0, 1), Seq(1, 0), Seq.empty[Int], null)
+    val cmsTable = ArrayType(LongType) ->
+      Seq((0L until 32L), Seq.fill(32)(3L), null)
+    val bloomBits = new Array[Long](16)
+    GraftBloomFilter.addInPlace(bloomBits, 3, 5L)
+    val cb = Array(Array(Array(0L, 0L), Array(1L, 1L)),
+      Array(Array(0L), Array(5L)))
+
+    type In = (DataType, Seq[Any])
+    def un(in: In)(f: Expression => Expression) =
+      (Seq(in), (es: Seq[Expression]) => f(es(0)))
+    def bi(l: In, r: In)(f: (Expression, Expression) => Expression) =
+      (Seq(l, r), (es: Seq[Expression]) => f(es(0), es(1)))
+    val cases = Seq(
+      un(long)(BloomMightContain(_, GraftBloomFilter(bloomBits, 3))),
+      bi(cmsTable, str)(CmsEstimate(_, _, 4, 2)),
+      bi(long, long)(HilbertIndex(_, _, 8)),
+      un(longs)(NearestCentroids(_,
+        Array(Array(1L, 0L, 0L), Array(0L, 1L, 0L)), 1)),
+      un(long)(QBucket(_)),
+      un(long)(QLower(_)),
+      un(bin)(ImageHeaderDecode(_)),
+      un(bin)(AudioHeaderDecode(_)),
+      un(bin)(VideoHeaderDecode(_)),
+      un(longs)(PqEncode(_, cb)),
+      un(codes)(PqReconNorm(_, cb)),
+      bi(codes, longs)(PqAdcDot(_, _, cb)),
+      un(longs)(RademacherProject(_, 2, 3)),
+      un(longs)(MinHashBands(_, 4, 2)),
+      un(longs)(HyperplaneBands(_, 2, 3)),
+      un(str)(DeletionHashes(_, 2)),
+      un(longs)(Sq8Encode(_, Array(10L, 10L, 10L))),
+      bi(longs, longs)(ScaledDot(_, _, Array(10L, 10L, 10L))),
+      un(str)(HashedCharGrams(_, 3)),
+      un(str)(WordPieces(_, TextOps.wordPieceVocab)),
+      un(str)(BpeEncode(_, Seq(("t", "h"), ("th", "e")))),
+      un(str)(HashedWordShingles(_, 2)),
+      un(str)(LuhnValid(_)),
+      un(str)(PolyHash31(_, 1000000007L)),
+      un(str)(CharSimpson(_)),
+      un(str)(SimHash64(_)),
+      un(bin)(ByteHistogram(_, 8)),
+      bi(longs, longs)(SortedLongIntersectCount(_, _)),
+      bi(longs, longs)(QuantizedDot(_, _)),
+      un(str)(RepetitionStats(_)),
+      un(str)(LangIdVote(_, TextOps.langMarkers)),
+      un(str)(HashedLinearScore(_, Array(1L, -2L, 3L))),
+      un(str)(TokenQualityStats(_, Seq("the", "a"))),
+      un(str)(GopherCoverage(_)),
+      un(str)(PolyShingleHashes(_, 2, 1000L)),
+      un(str)(PositionalShingles(_, 2)),
+      un(long)(DetLn(_)),
+      un(str)(ShingleSurvivors(_, 2, AcceptAllProbe)))
+    assert(cases.size == 38)
+
+    // the generated-code side must really be generated: no fallback
+    withSQLConf("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+        "spark.sql.codegen.fallback" -> "false") {
+      cases.foreach { case (ins, build) =>
+        val tuples = ins.map(_._2).foldLeft(Seq(Seq.empty[Any])) {
+          (acc, vs) => for (a <- acc; v <- vs) yield a :+ v
+        }
+        val interpreted = tuples.map { vs =>
+          val k = build(ins.zip(vs).map { case ((t, _), v) =>
+            Literal.create(v, t) })
+          assert(k.checkInputDataTypes().isSuccess, k)
+          CatalystTypeConverters.convertToScala(
+            k.eval(InternalRow.empty), k.dataType)
+        }
+        val schema = StructType(StructField("i", IntegerType) +:
+          ins.indices.map(j => StructField(s"c$j", ins(j)._1)))
+        val rows = tuples.zipWithIndex.map { case (vs, i) => Row(i +: vs: _*) }
+        // an RDD source: a local relation would be folded interpreted
+        val k = build(ins.indices.map(j => Bridge.expression(col(s"c$j"))))
+        val generated = spark.createDataFrame(
+            spark.sparkContext.parallelize(rows, 2), schema)
+          .select(col("i"), Bridge.column(k))
+          .collect().sortBy(_.getInt(0)).map(_.get(1)).toSeq
+        interpreted.zip(generated).zip(tuples).foreach {
+          case ((a, b), vs) =>
+            assert(a == b, s"${k.prettyName}(${vs.mkString(", ")}): " +
+              s"interpreted $a, generated $b")
+        }
+      }
+    }
+  }
 }

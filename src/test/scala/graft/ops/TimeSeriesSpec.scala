@@ -248,6 +248,25 @@ class TimeSeriesSpec extends SparkSuite {
     assert(out(0L)._3 > 1.0 && out(5L)._3 < 1.0)
   }
 
+  test("seasonalProfile: an hour before the 2024 grid origin folds " +
+    "into the same 0..23 hour of day") {
+    val s = spark
+    import s.implicits._
+    // the same clock hour on either side of 2024-01-01: h = -19 and 5.
+    // Whole-hour timestamps: hoursSince2024 truncates toward zero, so
+    // a mid-hour event before the origin lands one hour late (see
+    // CHANGES.md) — that is a separate bucketing rule from the fold.
+    val out = TimeSeries.seasonalProfile(Seq(
+        (ts("2023-12-31 05:00:00"), 1L, "a"),
+        (ts("2024-01-01 05:00:00"), 2L, "a"))
+        .toDF("ts", "event_id", "event_type"))
+      .collect()
+      .map(r => r.getLong(1) -> ((r.getLong(2), r.getLong(3)))).toMap
+    assert(out.keySet.forall(h => h >= 0L && h < 24L), out.keySet)
+    assert(out.size == 24)
+    assert(out(5L) == ((2L, 2L)), "one row per clock hour")
+  }
+
   test("forecastBacktest: periodic series — seasonal-naive wins " +
     "with zero error, scored hours are the paired tail") {
     val s = spark
